@@ -121,42 +121,45 @@ def cmd_run_load(spark: SparkSession, cfg: dict) -> dict[str, int]:
 
     res = run_load(vcf, genes, samples, vstore, dstore, map_key=cfg["map_key"])
     out: dict[str, int] = {}
-    # optional batch audit BEFORE anything is appended — the stand-in for
-    # the Oracle schema's own constraints. "check": report counts;
-    # "strict": refuse the whole batch (one batch = one transaction, so
-    # refusing before the first append leaves both stores untouched).
-    mode = cfg.get("constraints")
-    if mode in ("check", "strict"):
-        from hrdp_variant_load_pipeline_spark.operators.quality import (
-            check_constraints,
-        )
-
-        report = check_constraints(res.new_variants, _LOAD_CONSTRAINTS).collect()
-        for r in report:
-            out[f"constraint[{r['rule']}]"] = int(r["violations"])
-        bad = [r for r in report if not r["ok"]]
-        if bad and mode == "strict":
-            res.release()
-            raise ValueError(
-                "load refused (constraints=strict): "
-                + ", ".join(f"{r['rule']}={r['violations']}" for r in bad)
+    try:
+        # optional batch audit BEFORE anything is appended — the stand-in for
+        # the Oracle schema's own constraints. "check": report counts;
+        # "strict": refuse the whole batch (one batch = one transaction, so
+        # refusing before the first append leaves both stores untouched).
+        mode = cfg.get("constraints")
+        if mode in ("check", "strict"):
+            from hrdp_variant_load_pipeline_spark.operators.quality import (
+                check_constraints,
             )
-    # optional per-store append clustering, e.g. {"append_cluster_by":
-    # {"variant_store": ["chromosome", "start_pos"]}} — each batch's
-    # files then cover disjoint key ranges and genic-QC's range-scoped
-    # probes prune them via footer stats WITHOUT waiting for the next
-    # --compactStores pass (which applies the same clustering store-wide
-    # via compact_sort_by). Costs one batch-bounded range shuffle.
-    clu = cfg.get("append_cluster_by") or {}
-    append_to_store(
-        res.new_variants, cfg["variant_store"], cluster_by=clu.get("variant_store")
-    )
-    append_to_store(
-        res.new_sample_details,
-        cfg["detail_store"],
-        cluster_by=clu.get("detail_store"),
-    )
-    out.update(load_metrics(res))
+
+            report = check_constraints(res.new_variants, _LOAD_CONSTRAINTS).collect()
+            for r in report:
+                out[f"constraint[{r['rule']}]"] = int(r["violations"])
+            bad = [r for r in report if not r["ok"]]
+            if bad and mode == "strict":
+                raise ValueError(
+                    "load refused (constraints=strict): "
+                    + ", ".join(f"{r['rule']}={r['violations']}" for r in bad)
+                )
+        # optional per-store append clustering, e.g. {"append_cluster_by":
+        # {"variant_store": ["chromosome", "start_pos"]}} — each batch's
+        # files then cover disjoint key ranges and genic-QC's range-scoped
+        # probes prune them via footer stats WITHOUT waiting for the next
+        # --compactStores pass (which applies the same clustering store-wide
+        # via compact_sort_by). Costs one batch-bounded range shuffle.
+        clu = cfg.get("append_cluster_by") or {}
+        variants_entered = append_to_store(
+            res.new_variants, cfg["variant_store"], cluster_by=clu.get("variant_store")
+        )
+        sample_details_entered = append_to_store(
+            res.new_sample_details,
+            cfg["detail_store"],
+            cluster_by=clu.get("detail_store"),
+        )
+        out.update(load_metrics(res, variants_entered, sample_details_entered))
+    finally:
+        # the counters read res.matched's cache, so release only after them
+        res.release()
     return out
 
 
@@ -199,11 +202,20 @@ def cmd_genic_qc(spark: SparkSession, cfg: dict) -> dict[str, int]:
     scope = None
     if cfg.get("input_dir"):
         scope = scope_from_vcf(_vcf_input(spark, cfg))
-    updates = genic_qc(store, genes, map_key=cfg["map_key"], scope=scope)
-    n = updates.count()
-    if n:
-        repaired = merge_update(store, updates, "rgd_id", ["genic_status"])
-        _atomic_replace_store(repaired, cfg["variant_store"])
+    # the merged scope stays cached through both the count and the repair
+    # write, so neither re-scans the VCF
+    cached: list = []
+    updates = genic_qc(
+        store, genes, map_key=cfg["map_key"], scope=scope, cache_registry=cached
+    )
+    try:
+        n = updates.count()
+        if n:
+            repaired = merge_update(store, updates, "rgd_id", ["genic_status"])
+            _atomic_replace_store(repaired, cfg["variant_store"])
+    finally:
+        for df in cached:
+            df.unpersist()
     return {"genic_status_updated": n}
 
 

@@ -41,6 +41,13 @@ Faithfully-reproduced quirks (SURVEY.md §1.4, verified against the Java):
 Divergences from crash behavior (documented, not reproduced): unknown
 sample columns and null/zero depths crash the reference (NPE /
 ArithmeticException); here they drop the row / yield null.
+
+Run counters (A1): the reference increments them as it inserts
+(HrdpVariants.java:116-133). Here they come from work the load already
+does: the rows-entered counts from the two store appends
+(``sources.store.append_to_store`` returns what it wrote), the dedup hits
+and end_pos drift from one aggregate over the persisted ``matched`` frame
+(``load_metrics``). Nothing re-executes the load plan to count it.
 """
 
 from __future__ import annotations
@@ -68,12 +75,18 @@ SPECIES_TYPE_KEY = 3  # rat (HrdpVariants.java:309)
 
 @dataclass
 class LoadResult:
-    """Outputs of one load run (all lazy DataFrames)."""
+    """Outputs of one load run (all lazy DataFrames).
+
+    ``matched`` is the persisted dedup result every output reads (one row
+    per line-allele, ``is_new`` plus the matched store row's id and
+    end_pos); ``load_metrics`` aggregates it, so read the counters before
+    ``release()``."""
 
     new_variants: DataFrame  # VARIANT schema → variant + variant_map_data sinks
     end_pos_updates: DataFrame  # (rgd_id, end_pos) drift, detected-not-applied
     new_sample_details: DataFrame  # VARIANT_SAMPLE_DETAIL schema
     all_line_variants: DataFrame  # internal: new+existing per line (for QC/tests)
+    matched: DataFrame  # persisted candidates-vs-store match (in ``cached``)
     cached: tuple = ()  # frames run_load persisted; released via release()
 
     def release(self) -> None:
@@ -84,6 +97,16 @@ class LoadResult:
         consumed after release() recompute from source."""
         for df in self.cached:
             df.unpersist()
+
+
+def _end_pos_drift():
+    """A re-seen variant whose stored end_pos differs from the parsed one
+    (detected, not applied: HrdpVariants.java:121)."""
+    return (
+        ~F.col("is_new")
+        & (F.col("store_end_pos") != F.col("end_pos"))
+        & (F.col("end_pos") != 0)
+    )
 
 
 def parse_variants(vcf: DataFrame, genes: DataFrame, map_key: int) -> DataFrame:
@@ -322,14 +345,7 @@ def run_load(
     # occurrence), not one per line-allele
     new_variants = canon_ids.select(*variant_cols)
 
-    end_pos_updates = (
-        with_ids.filter(
-            ~F.col("is_new")
-            & (F.col("store_end_pos") != F.col("end_pos"))
-            & (F.col("end_pos") != 0)
-        )
-        .select(F.col("rgd_id"), F.col("end_pos"))
-    )
+    end_pos_updates = existing_rows.filter(_end_pos_drift()).select("rgd_id", "end_pos")
 
     # ---- per-sample detail rows -------------------------------------------
     # j = position in the per-line new++existing list (new first, each in
@@ -434,17 +450,33 @@ def run_load(
         end_pos_updates=end_pos_updates,
         new_sample_details=details,
         all_line_variants=line_variants,
+        matched=matched,
         cached=tuple(cache_registry),
     )
 
 
-def load_metrics(result: LoadResult) -> dict[str, int]:
-    """Run counters (A1): the reference logs variants entered / sample rows
-    created / dedup hits per run (HrdpVariants.java:116-133). One aggregate
-    per output instead of incrementing driver-side counters in a loop."""
+def load_metrics(
+    result: LoadResult, variants_entered: int, sample_details_entered: int
+) -> dict[str, int]:
+    """Run counters (A1): variants entered, sample rows created, dedup hits
+    and end_pos drift per run (HrdpVariants.java:116-133).
+
+    ``variants_entered`` / ``sample_details_entered`` are the row counts
+    the two store appends returned. The other two come from ONE aggregate
+    over the persisted ``result.matched``, so call this before
+    ``result.release()``. ``coalesce(1)`` keeps the aggregate exchange-free:
+    one job and one task over the cache, with or without AQE."""
+    row = (
+        result.matched.coalesce(1)
+        .agg(
+            F.count(F.when(~F.col("is_new"), 1)).alias("existing_matched"),
+            F.count(F.when(_end_pos_drift(), 1)).alias("end_pos_drift_detected"),
+        )
+        .collect()[0]
+    )
     return {
-        "variants_entered": result.new_variants.count(),
-        "sample_details_entered": result.new_sample_details.count(),
-        "existing_matched": result.all_line_variants.filter(~F.col("is_new")).count(),
-        "end_pos_drift_detected": result.end_pos_updates.count(),
+        "variants_entered": variants_entered,
+        "sample_details_entered": sample_details_entered,
+        "existing_matched": row["existing_matched"],
+        "end_pos_drift_detected": row["end_pos_drift_detected"],
     }

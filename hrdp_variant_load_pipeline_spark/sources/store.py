@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 _VERSION_RE = re.compile(r"^v_(\d{8})$")
 COMMIT_MARKER = "_COMMITTED"
@@ -277,11 +277,16 @@ def append_to_store(
     allow_schema_drift: bool = False,
     cluster_by: list[str] | None = None,
     cluster_partitions: int | None = None,
-) -> str:
+) -> int:
     """Append rows to the CURRENT store location (version dir when the
-    store is versioned, the root for legacy/new flat stores). Appends are
-    file-granular like the reference's batched inserts; use
-    ``commit_store_version`` when replace-visibility is required.
+    store is versioned, the root for legacy/new flat stores) and return
+    the number of rows appended. Appends are file-granular like the
+    reference's batched inserts; use ``commit_store_version`` when
+    replace-visibility is required.
+
+    The row count is observed on the write itself (``DataFrame.observe``),
+    so it costs no extra job: a caller that reports how much it loaded
+    never re-executes the appended plan to count it.
 
     ``cluster_by`` enforces KEY-RANGE CLUSTERING on the appended file
     set: the batch is range-repartitioned then sorted within partitions
@@ -331,8 +336,13 @@ def append_to_store(
                     f"{df.schema.simpleString()}; pass "
                     "allow_schema_drift=True for deliberate widening"
                 )
-    df.write.mode("append").parquet(target)
-    return target
+    # observed here, ABOVE cluster_by's range exchange: the exchange's
+    # sampling job runs the plan below it, and an observation placed there
+    # would count the sampled rows too. Unnamed, so each call's metric name
+    # is unique even when one append's plan reads another's output.
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("append").parquet(target)
+    return obs.get["rows"]
 
 
 def z_order_key(

@@ -411,3 +411,32 @@ def test_append_cluster_by_stacks_disjoint_per_batch(spark, tmp_path):
     # monotonic batches here, so global disjointness must hold as well
     for (_, prev_hi), (lo, _) in zip(ranges, ranges[1:]):
         assert prev_hi < lo, ranges
+
+
+@pytest.mark.parametrize(
+    "cluster_by, cluster_partitions",
+    [(None, None), (["doc"], None), (["doc"], 3)],
+)
+def test_append_returns_rows_appended(spark, tmp_path, cluster_by, cluster_partitions):
+    """append_to_store returns exactly the rows it wrote. With cluster_by,
+    the range exchange's sampling job runs the plan below it, so a count
+    taken there would see rows twice; the store's own row count is the
+    oracle, for a filled batch and for an empty one."""
+    store = str(tmp_path / "store")
+    df = (
+        spark.range(0, 250)
+        .select(F.col("id").alias("doc"), (F.col("id") % 5).alias("v"))
+        .repartition(4, "v")
+    )
+    n = append_to_store(
+        df, store, cluster_by=cluster_by, cluster_partitions=cluster_partitions
+    )
+    assert n == 250 == spark.read.parquet(store).count()
+    # a second append into the same location counts only its own rows
+    n2 = append_to_store(
+        df.filter("v = 0"), store, cluster_by=cluster_by, cluster_partitions=cluster_partitions
+    )
+    assert n2 == 50
+    assert spark.read.parquet(store).count() == 300
+    assert append_to_store(df.limit(0), store, cluster_by=cluster_by) == 0
+    assert spark.read.parquet(store).count() == 300

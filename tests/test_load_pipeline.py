@@ -222,15 +222,86 @@ def test_genic_qc_drift(spark, vcf_dir, dims):
     assert lower_updates == {i: "INTERGENIC" for i in mt_ids}
 
 
-def test_load_metrics(spark, vcf_dir, dims):
+def _load_into(res, variant_dir, detail_dir):
+    """Append one load's outputs the way ``cli.cmd_run_load`` does and
+    return its run counters."""
     from hrdp_variant_load_pipeline_spark.plans.load import load_metrics
+    from hrdp_variant_load_pipeline_spark.sources.store import append_to_store
 
+    return load_metrics(
+        res,
+        append_to_store(res.new_variants, variant_dir),
+        append_to_store(res.new_sample_details, detail_dir),
+    )
+
+
+def test_load_metrics(spark, vcf_dir, dims, tmp_path):
+    """Every --runLoad counter equals a direct count of what the load
+    wrote or detected: a fresh load into empty stores, then a re-load
+    against a store whose end_pos drifted on every variant, so both dedup
+    hits and drift are non-zero."""
+    fresh = run(spark, vcf_dir, dims)
+    try:
+        m = _load_into(fresh, str(tmp_path / "v1"), str(tmp_path / "d1"))
+        stored_details = spark.read.parquet(str(tmp_path / "d1")).count()
+        assert stored_details > 0
+        assert m == {
+            "variants_entered": spark.read.parquet(str(tmp_path / "v1")).count(),
+            "sample_details_entered": stored_details,
+            "existing_matched": 0,  # empty store
+            "end_pos_drift_detected": 0,
+        }
+        assert m["variants_entered"] == 5
+    finally:
+        fresh.release()
+
+    first = run(spark, vcf_dir, dims)
+    drifted_store = first.new_variants.withColumn("end_pos", F.col("end_pos") + F.lit(7))
+    again = run(spark, vcf_dir, dims, drifted_store, first.new_sample_details)
+    try:
+        seen = again.all_line_variants.filter(~F.col("is_new")).count()
+        drift = again.end_pos_updates.count()
+        m = _load_into(again, str(tmp_path / "v2"), str(tmp_path / "d2"))
+        assert m == {
+            "variants_entered": spark.read.parquet(str(tmp_path / "v2")).count(),
+            "sample_details_entered": spark.read.parquet(str(tmp_path / "d2")).count(),
+            "existing_matched": seen,
+            "end_pos_drift_detected": drift,
+        }
+        # all five line-alleles re-seen, every one with drifted end_pos
+        assert (m["variants_entered"], m["sample_details_entered"]) == (0, 0)
+        assert m["existing_matched"] == m["end_pos_drift_detected"] == 5
+    finally:
+        again.release()
+        first.release()
+
+
+def test_load_metrics_runs_one_job(spark, vcf_dir, dims, tmp_path):
+    """The counters never re-execute the load plan: after the appends,
+    load_metrics is one aggregate over the cached match, i.e. exactly one
+    Spark job, counted under its own job group through the status tracker
+    (the way the benchmark's spans count a layer's jobs)."""
+    from hrdp_variant_load_pipeline_spark.plans.load import load_metrics
+    from hrdp_variant_load_pipeline_spark.sources.store import append_to_store
+
+    sc = spark.sparkContext
     res = run(spark, vcf_dir, dims)
-    m = load_metrics(res)
-    assert m["variants_entered"] == 5
-    assert m["sample_details_entered"] == res.new_sample_details.count()
-    assert m["existing_matched"] == 0  # empty store
-    assert m["end_pos_drift_detected"] == 0
+    try:
+        nv = append_to_store(res.new_variants, str(tmp_path / "v"))
+        nd = append_to_store(res.new_sample_details, str(tmp_path / "d"))
+        group = "test_load_metrics_runs_one_job"
+        sc.setJobGroup(group, group)
+        try:
+            m = load_metrics(res, nv, nd)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # job events reach the status store through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        assert m["variants_entered"] == 5
+    finally:
+        res.release()
 
 
 def test_intra_batch_dedup_across_files(spark, tmp_path, dims):
