@@ -202,12 +202,15 @@ def cmd_genic_qc(spark: SparkSession, cfg: dict) -> dict[str, int]:
     scope = None
     if cfg.get("input_dir"):
         scope = scope_from_vcf(_vcf_input(spark, cfg))
-    # the merged scope stays cached through both the count and the repair
-    # write, so neither re-scans the VCF
+    # the merged scope and the updates stay cached through both the count
+    # and the repair write, so the write re-scans neither the VCF nor the
+    # store and rebuilds no broadcast. The count stays: n == 0 skips the
+    # write at the fixpoint.
     cached: list = []
     updates = genic_qc(
         store, genes, map_key=cfg["map_key"], scope=scope, cache_registry=cached
-    )
+    ).persist()
+    cached.append(updates)
     try:
         n = updates.count()
         if n:

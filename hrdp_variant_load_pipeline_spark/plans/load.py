@@ -80,7 +80,11 @@ class LoadResult:
     ``matched`` is the persisted dedup result every output reads (one row
     per line-allele, ``is_new`` plus the matched store row's id and
     end_pos); ``load_metrics`` aggregates it, so read the counters before
-    ``release()``."""
+    ``release()``. ``matched`` stays valid through both appends: a store
+    append is invisible to plans built before it
+    (``sources.store.append_to_store``), so the detail build and the
+    counters see the stores as the load probed them, not the variants it
+    has just appended."""
 
     new_variants: DataFrame  # VARIANT schema → variant + variant_map_data sinks
     end_pos_updates: DataFrame  # (rgd_id, end_pos) drift, detected-not-applied

@@ -26,6 +26,17 @@ Legacy flat stores (parquet files directly under the root) are read as
 version 0; the first versioned commit migrates them — the flat files are
 deleted only after the new version's marker exists.
 
+Isolation: a write never changes what an already-built plan reads. Spark
+re-caches every cached plan whose root path starts with a path it has just
+written (``CacheManager.recacheByPath``), which re-lists the files under
+that root. Commits stage a new version directory that no reader has
+resolved; appends stage into ``<target>/.append-<uuid>`` and only then
+rename their files into ``<target>``. Neither write path is a prefix of a
+reader's root, so a plan built before the write keeps its cache and its
+file listing, and a new ``read_store`` sees the written rows. A load that
+probes a store at its start therefore inserts against that state through
+all its appends, as the reference's one-transaction run does.
+
 A real table format (Delta/Iceberg) implements the same
 newest-committed-snapshot protocol with richer metadata; this is the
 dependency-free core of it.
@@ -34,6 +45,7 @@ dependency-free core of it.
 from __future__ import annotations
 
 import re
+import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -284,6 +296,14 @@ def append_to_store(
     reference's batched inserts; use ``commit_store_version`` when
     replace-visibility is required.
 
+    The batch is written to a staging directory ``<target>/.append-<uuid>``
+    (dot prefix: hidden from Spark and Hadoop listings), its data files are
+    renamed into ``<target>``, and the staging directory is deleted, also
+    when the write fails, so a failed Spark write adds no file. Staging
+    keeps the append invisible to plans built before it (module
+    docstring): the caller's frames that read this store, cached or not,
+    still see the store as it was.
+
     The row count is observed on the write itself (``DataFrame.observe``),
     so it costs no extra job: a caller that reports how much it loaded
     never re-executes the appended plan to count it.
@@ -341,7 +361,19 @@ def append_to_store(
     # would count the sampled rows too. Unnamed, so each call's metric name
     # is unique even when one append's plan reads another's output.
     obs = Observation()
-    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("append").parquet(target)
+    # no reader's root path starts with the staging path, so Spark's
+    # post-write re-cache touches no plan built before this append
+    staging = f"{target}/.append-{uuid.uuid4().hex}"
+    try:
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.parquet(staging)
+        for name, is_dir in _list_names(fs, jvm, staging):
+            if is_dir or name.startswith((".", "_")):
+                continue
+            src, dst = f"{staging}/{name}", f"{target}/{name}"
+            if not fs.rename(_jpath(jvm, src), _jpath(jvm, dst)):
+                raise RuntimeError(f"could not move staged file {src} to {dst}")
+    finally:
+        fs.delete(_jpath(jvm, staging), True)
     return obs.get["rows"]
 
 

@@ -20,7 +20,6 @@ import fnmatch
 import gzip
 import io
 import os
-import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -158,10 +157,6 @@ def unpivot_samples(df: DataFrame) -> DataFrame:
         F.col("cell_struct.sample_names").alias("sample_name"),
         F.col("cell_struct.sample_cells").alias("cell"),
     )
-
-
-def vcf_path_basename(path: str) -> str:
-    return posixpath.basename(path)
 
 
 def restage_to_parquet(

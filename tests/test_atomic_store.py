@@ -440,3 +440,38 @@ def test_append_returns_rows_appended(spark, tmp_path, cluster_by, cluster_parti
     assert spark.read.parquet(store).count() == 300
     assert append_to_store(df.limit(0), store, cluster_by=cluster_by) == 0
     assert spark.read.parquet(store).count() == 300
+
+
+def test_append_leaves_plans_built_before_it_unchanged(spark, tmp_path):
+    """An append is invisible to frames planned before it: a persisted,
+    materialized frame over the store keeps its rows (the append must not
+    re-cache it against the new files), while a fresh read sees them."""
+    store = str(tmp_path / "store")
+    commit_store_version(spark.range(5), store)
+    before = read_store(spark, store).filter(F.col("id") >= 0).persist()
+    try:
+        assert before.count() == 5
+        assert append_to_store(spark.range(100, 103), store) == 3
+        assert before.count() == 5
+        assert read_store(spark, store).count() == 8
+        target = resolve_store(spark, store).removeprefix("file:")
+        assert not [k for k in os.listdir(target) if k.startswith(".append-")]
+    finally:
+        before.unpersist()
+
+
+def test_failed_append_leaves_no_staging_and_keeps_prior_files(spark, tmp_path):
+    """A write that fails during execution (an ANSI cast error in a task)
+    removes its staging directory and adds nothing to the target."""
+    store = str(tmp_path / "store")
+    commit_store_version(spark.range(5), store)
+    target = resolve_store(spark, store).removeprefix("file:")
+    files = sorted(os.listdir(target))
+    # not constant-foldable: the cast fails inside the write's tasks
+    poison = spark.range(3).select(
+        F.concat(F.lit("x"), F.col("id").cast("string")).cast("long").alias("id")
+    )
+    with pytest.raises(Exception):
+        append_to_store(poison, store)
+    assert sorted(os.listdir(target)) == files
+    assert read_store(spark, store).count() == 5

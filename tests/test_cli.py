@@ -69,6 +69,74 @@ def test_cli_load_then_qc(spark, tmp_path):
     assert os.path.exists(str(tmp_path / "cfg.json"))
 
 
+INC_HEADER = (
+    "##fileformat=VCFv4.2\n"
+    "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\tS2\n"
+)
+INC_CHR1 = "chr1\t100\trs1\tA\tG\t50\tPASS\t.\tGT:AD:DP\t0/1:5,5:10\t0/1:4,6:10\n"
+
+
+def test_cli_incremental_load_counts_and_indexes_against_prior_store(spark, tmp_path):
+    """A second drop whose multi-allelic line mixes a stored allele with a
+    new one. The reference probes the store once per line and inserts
+    against that state (HrdpVariants.java:116-133, DAO.java:68-119): the
+    new allele T comes first in the line's new++existing list, so it takes
+    AD[1] and the stored G takes AD[2]. The variant append must not make
+    the rest of the load see T as already stored."""
+    from pyspark.sql import functions as F
+
+    from hrdp_variant_load_pipeline_spark.sources.store import read_store
+
+    genes_path = str(tmp_path / "genes")
+    spark.createDataFrame([(1, "1", 50, 150, "ACTIVE", 372)], schemas.GENE).write.parquet(
+        genes_path
+    )
+    cfg = {
+        "map_key": 372,
+        "samples": {"S1": 1, "S2": 2},
+        "genes_path": genes_path,
+        "variant_store": str(tmp_path / "variants"),
+        "detail_store": str(tmp_path / "details"),
+    }
+
+    def drop(name, body):
+        vdir = tmp_path / name
+        vdir.mkdir()
+        with gzip.open(vdir / "BN_X_2020_v1_PASS.vcf.gz", "wt") as f:
+            f.write(INC_HEADER + body)
+        return {**cfg, "input_dir": str(vdir)}
+
+    m1 = cmd_run_load(
+        spark,
+        drop(
+            "drop1",
+            INC_CHR1 + "chrM\t300\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP\t0/0:10,0:10\t0/1:3,7:10\n",
+        ),
+    )
+    assert (m1["variants_entered"], m1["sample_details_entered"]) == (2, 3)
+
+    m2 = cmd_run_load(
+        spark,
+        drop(
+            "drop2",
+            INC_CHR1
+            + "chrM\t300\t.\tA\tG,T\t50\tPASS\t.\tGT:AD:DP\t1/2:0,12,13:25\t0/1:5,9,0:14\n"
+            + "chr1\t500\t.\tT\tC\t50\tPASS\t.\tGT:AD:DP\t0/1:4,6:10\t1/1:0,8:8\n",
+        ),
+    )
+    assert m2["variants_entered"] == 2
+    assert m2["existing_matched"] == 2
+    assert m2["sample_details_entered"] == 5
+
+    v = read_store(spark, cfg["variant_store"]).filter(F.col("start_pos") == 300)
+    d = read_store(spark, cfg["detail_store"])
+    freq = {
+        (r["var_nuc"], r["sample_id"]): r["var_freq"]
+        for r in d.join(v, "rgd_id").select("var_nuc", "sample_id", "var_freq").collect()
+    }
+    assert freq == {("G", 2): 7, ("G", 1): 13, ("T", 1): 12, ("T", 2): 9}
+
+
 def test_cli_restage_first_load(spark, tmp_path):
     """With restage_dir set, the first load writes splittable parquet and
     later loads read it instead of re-scanning gzip (deleting the raw

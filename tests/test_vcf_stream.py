@@ -121,3 +121,53 @@ def test_streaming_max_files_per_trigger_bounds_batches(spark, tmp_path):
     stored = spark.read.parquet(vstore)
     assert stored.count() == 3
     assert stored.select("rgd_id").distinct().count() == 3
+
+
+def test_streaming_multi_allelic_mix_indexes_depth_by_j(spark, tmp_path):
+    """A later micro-batch whose multi-allelic line mixes an allele stored
+    by an earlier batch (G) with a new one (T). The new allele comes first
+    in the line's new++existing list, so T takes AD[1] and G AD[2]
+    (HrdpVariants.java:478-479) — the batch's own variant append must not
+    turn T into a stored allele before its details are built."""
+    from pyspark.sql import functions as F
+
+    from hrdp_variant_load_pipeline_spark.sources.store import read_store
+
+    vdir = str(tmp_path / "landing")
+    os.makedirs(vdir)
+    vstore = str(tmp_path / "variants")
+    dstore = str(tmp_path / "details")
+    ckpt = str(tmp_path / "ckpt")
+
+    genes = spark.createDataFrame([(1, "1", 50, 150, "ACTIVE", 372)], schemas.GENE)
+    samples = spark.createDataFrame(
+        [(1, "S1", "U", 380, 372, None, None, None), (2, "S2", "U", 380, 372, None, None, None)],
+        schemas.SAMPLE,
+    )
+    header = HEADER.replace("\tS1\n", "\tS1\tS2\n")
+
+    def write(name, line):
+        with gzip.open(os.path.join(vdir, name), "wt") as f:
+            f.write(header + line)
+
+    write("A_X_2020_v1_PASS.vcf.gz", "chr2\t300\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP\t0/1:3,7:10\t0/0:9,0:9\n")
+    query = stream_vcf_loader(
+        spark, vdir, genes, samples, vstore, dstore, map_key=372, checkpoint_dir=ckpt
+    )
+    try:
+        query.processAllAvailable()
+        write(
+            "B_Y_2020_v1_PASS.vcf.gz",
+            "chr2\t300\t.\tA\tG,T\t50\tPASS\t.\tGT:AD:DP\t1/2:0,12,13:25\t0/2:5,9,4:18\n",
+        )
+        query.processAllAvailable()
+    finally:
+        query.stop()
+
+    d = read_store(spark, dstore).join(read_store(spark, vstore), "rgd_id")
+    freq = {
+        (r["var_nuc"], r["sample_id"]): r["var_freq"]
+        for r in d.select("var_nuc", "sample_id", "var_freq").collect()
+    }
+    assert freq == {("G", 1): 7, ("T", 1): 12, ("G", 2): 4, ("T", 2): 9}
+    assert read_store(spark, vstore).filter(F.col("start_pos") == 300).count() == 2
