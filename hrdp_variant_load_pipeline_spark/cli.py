@@ -41,6 +41,7 @@ from hrdp_variant_load_pipeline_spark import schemas
 from hrdp_variant_load_pipeline_spark.operators.upsert import merge_update
 from hrdp_variant_load_pipeline_spark.plans.genic_qc import genic_qc, scope_from_vcf
 from hrdp_variant_load_pipeline_spark.plans.load import load_metrics, run_load
+from hrdp_variant_load_pipeline_spark.runtime import release
 from hrdp_variant_load_pipeline_spark.session import get_spark, tune_for_input
 from hrdp_variant_load_pipeline_spark.sources.config import load_config, samples_dimension
 from hrdp_variant_load_pipeline_spark.sources.store import (
@@ -217,8 +218,7 @@ def cmd_genic_qc(spark: SparkSession, cfg: dict) -> dict[str, int]:
             repaired = merge_update(store, updates, "rgd_id", ["genic_status"])
             _atomic_replace_store(repaired, cfg["variant_store"])
     finally:
-        for df in cached:
-            df.unpersist()
+        release(*cached)
     return {"genic_status_updated": n}
 
 

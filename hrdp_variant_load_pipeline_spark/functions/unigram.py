@@ -27,6 +27,8 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from hrdp_variant_load_pipeline_spark.runtime import release
+
 #: characters never merged into pieces (word boundaries are pre-split)
 _WS = r"\s+"
 
@@ -159,7 +161,7 @@ def learn_unigram(
             # model-sized collect: <= seed_size + alphabet rows
             rows = seeded.collect()
         finally:
-            allp.unpersist()
+            release(allp)
         total = sum(r["w"] for r in rows)
         logp = {r["piece"]: math.log(r["w"] / total) for r in rows}
 
@@ -217,7 +219,7 @@ def learn_unigram(
             ),
         )
     finally:
-        words.unpersist()
+        release(words)
 
 
 def unigram_tokenize(

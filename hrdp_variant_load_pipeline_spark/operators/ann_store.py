@@ -39,6 +39,7 @@ from hrdp_variant_load_pipeline_spark.operators.similarity import (
     _norm_sql,
     _rank_topk,
 )
+from hrdp_variant_load_pipeline_spark.runtime import snapshot
 from hrdp_variant_load_pipeline_spark.sources.store import (
     append_to_store,
     read_store,
@@ -129,7 +130,9 @@ def ivf_store_topk(
         f"`{vec_col}` AS q_vec",
         f"{_norm_sql(f'`{vec_col}`')} AS q_norm",
     )
-    probes = (
+    # probe set is model-sized; compute once for both the driver-side
+    # bucket collect and the join below
+    probes = snapshot(
         q.crossJoin(F.broadcast(_cent_array(centroids)))
         .selectExpr(
             "query_id",
@@ -138,9 +141,8 @@ def ivf_store_topk(
             f"explode(slice(array_sort({_cent_scored_sql('q_vec', 'q_norm')}),"
             f" 1, {nprobe})) AS __p",
         )
-        .selectExpr("query_id", "q_vec", "q_norm", "__p.cent_id AS bucket")
-        .localCheckpoint()  # probe set is model-sized; compute once for
-        # both the driver-side bucket collect and the join below
+        .selectExpr("query_id", "q_vec", "q_norm", "__p.cent_id AS bucket"),
+        reliable=False,
     )
     needed = sorted(
         {r["bucket"] for r in probes.select("bucket").distinct().collect()}
@@ -244,15 +246,14 @@ def ivfpq_store_topk(
     coarse = _collect_codebooks(coarse_codebook)[0]
     cb = _collect_codebooks(codebooks)
     m, n_codes = len(cb), len(cb[0])
-    q = (
+    # model-sized: one compute feeds the driver bucket collect and the join
+    q = snapshot(
         queries.select(
             F.col(id_col).alias("query_id"),
             _lut_expr(cb, vec_col).alias("__lut"),
             coarse_probes_expr(coarse, vec_col, nprobe).alias("__probes"),
-        )
-        .select("query_id", "__lut", F.explode("__probes").alias("bucket"))
-        .localCheckpoint()  # model-sized: one compute feeds the driver
-        # bucket collect and the join
+        ).select("query_id", "__lut", F.explode("__probes").alias("bucket")),
+        reliable=False,
     )
     needed = sorted(
         {r["bucket"] for r in q.select("bucket").distinct().collect()}
@@ -333,8 +334,9 @@ def incremental_semantic_dedup(
             "already exist on the input — rename/drop them first (same "
             "rule as semantic_dedup)"
         )
-    new_vectors = new_vectors.localCheckpoint()  # stable batch: its plan
-    # must not re-read the store the append below mutates
+    # stable batch: its plan must not re-read the store the append below
+    # mutates
+    new_vectors = snapshot(new_vectors, reliable=False)
     spark = new_vectors.sparkSession
     # (0) replay probe: batch ids already ingested are duplicates by
     # definition. Bounded batches push their id set INTO the scan as an
@@ -416,7 +418,7 @@ def incremental_semantic_dedup(
     # call (or the caller, in the append_kept=False preview flow) is
     # about to mutate — a lazy plan re-evaluated after the append would
     # find every kept row's own copy and flag 100% duplicates
-    flagged = flagged.localCheckpoint()
+    flagged = snapshot(flagged, reliable=False)
     if append_kept:
         kept = flagged.filter(~F.col("is_semantic_dup")).select(
             id_col, vec_col
@@ -577,12 +579,12 @@ def delete_from_ann_store(
         "vec_id",
         "left_anti",
     )
-    present = (
+    present = snapshot(
         read_store(spark, store_dir, schema="vec_id BIGINT")
         .select("vec_id")
         .join(F.broadcast(fresh), "vec_id", "left_semi")
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        reliable=False,
     )
     n = present.count()
     if n:
@@ -616,7 +618,7 @@ def vacuum_ann_store(
         commit_store_version,
     )
 
-    tomb = _ann_tombstones(spark, store_dir).distinct().localCheckpoint()
+    tomb = snapshot(_ann_tombstones(spark, store_dir).distinct(), reliable=False)
     if not tomb.take(1):
         return 0
     tomb_hinted = _hint_if_small(spark, tomb, f"{store_dir}/{_TOMB}")
@@ -626,17 +628,17 @@ def vacuum_ann_store(
         live = idx.join(tomb_hinted, "vec_id", "left_anti")
         keys = sort_by or ["bucket", "vec_id"]
         live = live.repartitionByRange(*keys).sortWithinPartitions(*keys)
-        # localCheckpoint BEFORE the commit: live's lineage reads the
-        # store the commit supersedes (same rule as every store-mutating
-        # path)
-        commit_store_version(live.localCheckpoint(), store_dir)
+        # snapshot BEFORE the commit: live's lineage reads the store the
+        # commit supersedes (same rule as every store-mutating path)
+        commit_store_version(snapshot(live, reliable=False), store_dir)
     # registry migration AFTER the purge commit (a crash in between
     # leaves the tombstones standing, so nothing is forgotten); the
     # anti-join makes a replayed migration append nothing
     consumed_path = f"{store_dir}/{_CONSUMED}"
-    fresh_ids = tomb.join(
-        _ids_at(spark, consumed_path), "vec_id", "left_anti"
-    ).localCheckpoint()
+    fresh_ids = snapshot(
+        tomb.join(_ids_at(spark, consumed_path), "vec_id", "left_anti"),
+        reliable=False,
+    )
     if fresh_ids.take(1):
         fresh_ids.write.mode("append").parquet(consumed_path)
     fs, jvm = _fs(spark, store_dir)

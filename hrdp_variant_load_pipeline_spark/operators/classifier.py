@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from hrdp_variant_load_pipeline_spark.runtime import release
+
 
 def _standardization(df: DataFrame, feature_cols: list[str]) -> dict:
     row = df.agg(
@@ -80,7 +82,7 @@ def train_logreg(
                 w[j] -= lr * (grad_row[f"g{j}"] / n + l2 * w[j])
             b -= lr * grad_row["gb"] / n
     finally:
-        data.unpersist()
+        release(data)
     return {
         "weights": dict(zip(feature_cols, w)),
         "bias": b,

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from hrdp_variant_load_pipeline_spark.runtime import shuffle_partitions
+
 
 def chunk_documents(
     df: DataFrame,
@@ -131,8 +133,7 @@ def densify_ids(
         raise ValueError(f"densify_ids: column {orig_col!r} already exists")
     spark = df.sparkSession
     if partitions is None:
-        sp = spark.conf.get("spark.sql.shuffle.partitions", "32")
-        partitions = max(1, int(sp) if str(sp).isdigit() else 32)
+        partitions = shuffle_partitions(spark)
     # job 1: O(partitions) driver rows of (count, max id, null count) per
     # range, in range order (equal ids compare equal -> never split
     # across ranges). The null guard rides this same aggregate — a

@@ -19,81 +19,14 @@ Everything is built from built-in expressions — no Python UDFs.
 from __future__ import annotations
 
 import functools
-import threading
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-#: serializes every registry-diff window in this module: the diff
-#: attributes "RDDs that appeared since the snapshot" to the current call,
-#: so two concurrent diffing calls (or one racing a persist from another
-#: thread, e.g. the streaming loader's per-batch caches) could claim — and
-#: later release — each other's RDDs. For a victim localCheckpoint the data
-#: is unrecoverable. The lock closes the intra-module race; persists from
-#: OTHER code during the (tight, checkpoint-to-snapshot) window remain the
-#: caller's responsibility and are documented on each function.
-_REGISTRY_LOCK = threading.Lock()
-
-
-def _persistent_rdd_ids(sc) -> set[int]:
-    """Ids of all currently-persisted RDDs (includes localCheckpoint data,
-    which Dataset.unpersist() can NOT release — it only touches the SQL
-    cache manager)."""
-    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-
-class CheckpointHandle:
-    """Caller-side release handle for checkpoint-backed frames.
-
-    ``Dataset.unpersist`` cannot free checkpoint RDDs, so the handle
-    releases them by id through the JVM persistent-RDD registry. Exposes
-    ``unpersist()`` to match the ``LoadResult.cached`` protocol — append
-    it to any cache_registry and release with the rest.
-    """
-
-    def __init__(self, sc, ids: set[int]):
-        self._sc = sc
-        self._ids = ids
-
-    def unpersist(self, blocking: bool = False) -> None:
-        _unpersist_rdd_ids(self._sc, self._ids)
-
-
-def resolve_reliable(df: DataFrame, reliable: bool | None) -> bool:
-    """Resolve an operator's ``reliable`` argument: ``None`` (the default)
-    means "reliable iff the session has a checkpoint dir configured"
-    (``sc.setCheckpointDir``). A deployment that provisioned durable
-    checkpoint storage gets fault-tolerant reliable checkpoints without
-    touching every call site; a bare local session keeps the fast
-    executor-local blocks. An explicit True/False always wins."""
-    if reliable is not None:
-        return bool(reliable)
-    return df.sparkSession.sparkContext.getCheckpointDir() is not None
-
-
-def _truncate_lineage(df: DataFrame, reliable: bool, eager: bool = True) -> DataFrame:
-    """Checkpoint ``df`` to cut plan lineage.
-
-    ``reliable=False`` → ``localCheckpoint``: executor-local blocks, fast,
-    but NOT fault-tolerant — after lineage truncation a lost executor kills
-    the job instead of recomputing. Fine on local[n]; on a real cluster
-    pass ``reliable=True`` (requires ``sc.setCheckpointDir``) so round
-    state lives in the checkpoint directory and survives executor loss.
-    Reliable checkpoint files accumulate until job end unless
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true``.
-    """
-    return df.checkpoint(eager=eager) if reliable else df.localCheckpoint(eager=eager)
-
-
-def _unpersist_rdd_ids(sc, ids: set[int]) -> None:
-    """Release specific persisted RDDs by id via the JVM registry — the
-    only handle that reaches checkpoint RDDs. Only ever called on ids this
-    module created itself (diff against a pre-snapshot), so concurrent
-    caches owned by other operators are never touched."""
-    m = sc._jsc.getPersistentRDDs()
-    for k in ids:
-        r = m.get(k)
-        if r is not None:
-            r.unpersist()
+from hrdp_variant_load_pipeline_spark.runtime import (
+    release,
+    shuffle_partitions,
+    snapshot,
+)
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -413,14 +346,12 @@ def minhash_lsh_pairs(
     The returned frame is EAGER (checkpointed at call time) so the large
     persisted doc/shingle frame can be dropped before returning — the
     trade for composing into lazy plans is a pinned (small) pair set.
-    Pass ``cache_registry`` to receive a ``CheckpointHandle`` that releases
-    that pair set once consumed (``spark.catalog.clearCache()`` cannot free
-    checkpoint RDDs); without it the pair set lives until session end.
-    ``reliable=True`` checkpoints to the cluster checkpoint dir instead of
-    executor-local blocks (see ``_truncate_lineage``).
+    Pass ``cache_registry`` to receive that pair-set snapshot for release
+    once consumed (the registry protocol in ``runtime``); without it the
+    pair set lives until session end.
+    ``reliable`` selects the snapshot mode (see ``runtime.snapshot``).
     """
     spark = df.sparkSession
-    reliable = resolve_reliable(df, reliable)
     src = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__text"))
     # single-file/tiny inputs arrive as 1 partition; the shingle+md5 work is
     # CPU-bound, so spread it at full parallelism (no-op at real scale where
@@ -477,18 +408,13 @@ def minhash_lsh_pairs(
     # frame can be released NOW instead of leaking for the session lifetime
     # — in a long-lived session each minhash call would otherwise pin a
     # full copy of the corpus shingles in the cache
-    sc = spark.sparkContext
     try:
-        with _REGISTRY_LOCK:
-            before = _persistent_rdd_ids(sc)
-            out = _truncate_lineage(result, reliable)
-            if cache_registry is not None:
-                cache_registry.append(
-                    CheckpointHandle(sc, _persistent_rdd_ids(sc) - before)
-                )
+        out = snapshot(result, reliable=reliable)
+        if cache_registry is not None:
+            cache_registry.append(out)
         return out
     finally:
-        docs.unpersist()
+        release(docs)
 
 
 def connected_components(
@@ -498,6 +424,7 @@ def connected_components(
     max_iter: int = 25,
     reliable: bool | None = None,
     skew: dict | None = None,
+    cache_registry: list | None = None,
 ) -> DataFrame:
     """Cluster near-duplicate pairs into components: (doc, cluster) where
     cluster = min doc id reachable — the step that turns pairwise dedup
@@ -511,19 +438,14 @@ def connected_components(
     ``reliable=True`` checkpoints rounds to the cluster checkpoint dir
     (``sc.setCheckpointDir``) so a lost executor recomputes instead of
     killing the job — use it on real clusters; executor-local blocks are
-    the fast default for local[n] (see ``_truncate_lineage``).
+    the fast default for local[n] (see ``runtime.snapshot``).
 
-    Storage hygiene: each round's checkpoint supersedes the previous one,
-    and ``Dataset.unpersist`` cannot release checkpoint RDDs — so superseded
-    rounds are released by id through the JVM persistent-RDD registry,
-    diffed against a pre-round snapshot. The module-wide ``_REGISTRY_LOCK``
-    serializes these diff windows, so concurrent calls into this module
-    cannot claim each other's RDDs; a persist issued by OTHER code during
-    a round's (checkpoint → snapshot) window could still be mis-attributed
-    and released — callers running foreign persists concurrently with this
-    loop on the same SparkContext should serialize externally. Only the
-    final round's checkpoint — the returned frame's backing data — stays,
-    owned by the caller. ``edges`` is unpersisted on exit.
+    Storage hygiene: each round's snapshot supersedes the previous one,
+    which is released through its own frame (``runtime.release``). Only
+    the final round's snapshot — the returned frame's backing data —
+    stays, owned by the caller: pass ``cache_registry`` to receive it for
+    release (the registry protocol in ``runtime``). ``edges`` is released
+    on exit.
 
     ``skew`` routes each round's edges ⋈ labels join through
     ``operators.skew.adaptive_salted_join`` (keys forwarded verbatim,
@@ -538,106 +460,94 @@ def connected_components(
     one hot-key detection pass per round, so leave it off unless the
     pair distribution is actually hub-heavy.
     """
-    sc = pairs.sparkSession.sparkContext
-    reliable = resolve_reliable(pairs, reliable)
-    with _REGISTRY_LOCK:
-        seen = _persistent_rdd_ids(sc)
-        # pre-partition the symmetrized edge set by the per-round join
-        # key (r16, depth drill): one exchange now, zero edge exchanges
-        # in every round — the persisted frame's hashpartitioning(dst)
-        # satisfies each round's join requirement. On the shallow
-        # (1-round) in-repo fixtures this is cost-neutral; on deep
-        # components it is paid back every round.
-        sp = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        edges = (
-            pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-            .unionByName(
-                pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-            )
-            .distinct()
-            .repartition(sp, "dst")
-            .persist()
+    # pre-partition the symmetrized edge set by the per-round join key
+    # (r16, depth drill): one exchange now, zero edge exchanges in every
+    # round — the persisted frame's hashpartitioning(dst) satisfies each
+    # round's join requirement. On the shallow (1-round) in-repo fixtures
+    # this is cost-neutral; on deep components it is paid back every round.
+    edges = (
+        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        .unionByName(
+            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
         )
-        try:
-            # materialize edges BEFORE the first checkpoint so its cached RDD
-            # id lands in the snapshot, not in the first round's diff (it must
-            # not be released until the loop ends)
-            edges.count()
-            seen |= _persistent_rdd_ids(sc)
-            # seed with the FIRST propagation round directly: with identity
-            # labels, round 1's neighbor-min is just min(dst) per src, so
-            # label₀ = least(node, min neighbor) is one aggregate — no join,
-            # and one fewer loop round for every input (edges are
-            # symmetrized, so every node appears as src)
-            labels = _truncate_lineage(
-                edges.groupBy("src").agg(
-                    F.least(F.col("src"), F.min("dst")).alias("label")
-                ).select(F.col("src").alias("node"), "label"),
-                reliable,
-            )
-            prev_round = _persistent_rdd_ids(sc) - seen
-            seen |= prev_round
-            lbl_type = labels.schema["label"].dataType
-            for _ in range(max_iter):
-                if skew:
-                    from hrdp_variant_load_pipeline_spark.operators.skew import (
-                        adaptive_salted_join,
-                    )
+        .distinct()
+        .repartition(shuffle_partitions(pairs.sparkSession), "dst")
+        .persist()
+    )
+    try:
+        # build the edge cache in its own job, ahead of the seed round
+        edges.count()
+        # seed with the FIRST propagation round directly: with identity
+        # labels, round 1's neighbor-min is just min(dst) per src, so
+        # label₀ = least(node, min neighbor) is one aggregate — no join,
+        # and one fewer loop round for every input (edges are
+        # symmetrized, so every node appears as src)
+        labels = snapshot(
+            edges.groupBy("src").agg(
+                F.least(F.col("src"), F.min("dst")).alias("label")
+            ).select(F.col("src").alias("node"), "label"),
+            reliable=reliable,
+        )
+        prev_round = labels
+        lbl_type = labels.schema["label"].dataType
+        for _ in range(max_iter):
+            if skew:
+                from hrdp_variant_load_pipeline_spark.operators.skew import (
+                    adaptive_salted_join,
+                )
 
-                    stepped_join = adaptive_salted_join(
-                        edges,
-                        labels.withColumnRenamed("node", "dst"),
-                        ["dst"],
-                        **skew,
-                    )
-                else:
-                    stepped_join = edges.join(
-                        labels, edges.dst == labels.node
-                    )
-                # union-form round (r16, adopted from the depth drill):
-                # the neighbor rows and each node's own label row union
-                # into ONE aggregate — min(label) is the propagation,
-                # max(__self) (non-null only on the self row) carries the
-                # previous label for convergence detection. 2 exchanges
-                # per round (labels into the join + the src aggregate;
-                # edges are pre-partitioned) vs the previous join +
-                # groupBy + label-carry join at 3 — measured per-round
-                # 2.50 -> 2.00 s on 32-deep path components (1.24M
-                # edges), value-identical, and tied on the shallow
-                # star/pair fixtures every in-repo caller produces.
-                neighbor = stepped_join.select(
-                    "src", "label", F.lit(None).cast(lbl_type).alias("__self")
+                stepped_join = adaptive_salted_join(
+                    edges,
+                    labels.withColumnRenamed("node", "dst"),
+                    ["dst"],
+                    **skew,
                 )
-                self_rows = labels.select(
-                    F.col("node").alias("src"),
-                    "label",
-                    F.col("label").alias("__self"),
+            else:
+                stepped_join = edges.join(labels, edges.dst == labels.node)
+            # union-form round (r16, adopted from the depth drill): the
+            # neighbor rows and each node's own label row union into ONE
+            # aggregate — min(label) is the propagation, max(__self)
+            # (non-null only on the self row) carries the previous label
+            # for convergence detection. 2 exchanges per round (labels
+            # into the join + the src aggregate; edges are
+            # pre-partitioned) vs the previous join + groupBy +
+            # label-carry join at 3 — measured per-round 2.50 -> 2.00 s
+            # on 32-deep path components (1.24M edges), value-identical,
+            # and tied on the shallow star/pair fixtures every in-repo
+            # caller produces.
+            neighbor = stepped_join.select(
+                "src", "label", F.lit(None).cast(lbl_type).alias("__self")
+            )
+            self_rows = labels.select(
+                F.col("node").alias("src"),
+                "label",
+                F.col("label").alias("__self"),
+            )
+            stepped = snapshot(
+                neighbor.unionByName(self_rows)
+                .groupBy("src")
+                .agg(
+                    F.min("label").alias("label"),
+                    F.max("__self").alias("__old"),
                 )
-                stepped = _truncate_lineage(
-                    neighbor.unionByName(self_rows)
-                    .groupBy("src")
-                    .agg(
-                        F.min("label").alias("label"),
-                        F.max("__self").alias("__old"),
-                    )
-                    .select(F.col("src").alias("node"), "__old", "label"),
-                    reliable,
-                    # lazy checkpoint: the convergence count below materializes
-                    # it — ONE job per round, not checkpoint-job + count-job
-                    eager=False,
-                )
-                changed = (
-                    stepped.filter(F.col("__old") != F.col("label")).limit(1).count()
-                )
-                this_round = _persistent_rdd_ids(sc) - seen
-                seen |= this_round
-                labels = stepped.drop("__old")
-                _unpersist_rdd_ids(sc, prev_round)  # superseded round
-                prev_round = this_round
-                if changed == 0:
-                    break
-        finally:
-            edges.unpersist()
+                .select(F.col("src").alias("node"), "__old", "label"),
+                reliable=reliable,
+                # lazy: the convergence count below materializes it —
+                # ONE job per round, not checkpoint-job + count-job
+                eager=False,
+            )
+            changed = (
+                stepped.filter(F.col("__old") != F.col("label")).limit(1).count()
+            )
+            labels = stepped.drop("__old")
+            release(prev_round)  # superseded round
+            prev_round = stepped
+            if changed == 0:
+                break
+        if cache_registry is not None:
+            cache_registry.append(prev_round)
+    finally:
+        release(edges)
     return labels.select(F.col("node").alias("doc"), F.col("label").alias("cluster"))
 
 
@@ -933,13 +843,10 @@ def incremental_minhash_dedup(
             # lazy plan for inspection/composition; caller must consume it
             # before nb's persist is dropped by session cache churn
             return out
-        out = _truncate_lineage(out, resolve_reliable(new_docs, None))
-        return out
+        return snapshot(out)
     finally:
         if materialize:
-            nb.unpersist()
-            if cands is not None:
-                cands.unpersist()
+            release(nb, cands)
 
 
 def _merge_removed_intervals(spans: DataFrame) -> DataFrame:

@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from hrdp_variant_load_pipeline_spark.runtime import snapshot
+
 
 #: modulus combining the two word hashes of a bigram bucket (prime, <2^40
 #: — the same decorrelating modulus family as operators/dedup.MINHASH_P)
@@ -201,6 +203,7 @@ def bucket_logratio(
     salt: str = "dsir",
     raw_buckets_col: str | None = None,
     target_buckets_col: str | None = None,
+    cache_registry: list | None = None,
 ) -> DataFrame:
     """Per-bucket log importance ratio
     ``ln p_target(b) - ln p_raw(b)`` over the FULL bucket domain
@@ -211,6 +214,7 @@ def bucket_logratio(
     :func:`featurize` columns on the respective side (when the target is
     a slice OF the featurized pool — the common in-pipeline case — both
     sides then ride one cached gram pass).
+    ``cache_registry`` receives the two count snapshots (``runtime``).
     """
     dom = target.sparkSession.range(n_buckets).select(
         F.col("id").alias("bucket")
@@ -222,9 +226,11 @@ def bucket_logratio(
     # plan a second time beside the dom-join execution (same pathology
     # as lm_doc_score's derived broadcasts, BENCH_NOTES r12)
     if not t.isStreaming:
-        t = t.localCheckpoint(eager=False)
+        t = snapshot(t, eager=False, reliable=False)
     if not r.isStreaming:
-        r = r.localCheckpoint(eager=False)
+        r = snapshot(r, eager=False, reliable=False)
+    if cache_registry is not None:
+        cache_registry.extend((t, r))
     tt = t.agg(F.sum("c").alias("t_total"))
     rt = r.agg(F.sum("c").alias("r_total"))
     b = float(n_buckets)

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from hrdp_variant_load_pipeline_spark.runtime import release, snapshot
+
 
 def pagerank(
     edges: DataFrame,
@@ -33,14 +35,12 @@ def pagerank(
     edge-sized. Each iteration is ONE Spark action (the dangling-mass
     scalar rides the same job as a broadcast 1-row aggregate, pinned by
     ``tests/test_graph.py``). Lineage is truncated every iteration
-    (``localCheckpoint``; pass ``reliable=True`` on a real cluster with a
-    checkpoint dir to survive executor loss).
+    (``runtime.snapshot``; pass ``reliable=True`` on a real cluster with a
+    checkpoint dir to survive executor loss), and each superseded
+    iteration's snapshot is released.
 
     Output: (vertex, rank) — deterministic for a fixed iteration count.
     """
-    from hrdp_variant_load_pipeline_spark.operators.dedup import resolve_reliable
-
-    reliable = resolve_reliable(edges, reliable)
     # loop invariants are persisted: without this every iteration re-runs
     # the edge distinct and the vertex union from source (the checkpoint
     # truncates the RANK lineage only)
@@ -55,8 +55,7 @@ def pagerank(
     )
     n = vertices.count()
     if n == 0:
-        e.unpersist()
-        vertices.unpersist()
+        release(e, vertices)
         return vertices.withColumn("rank", F.lit(0.0))
     out_deg = e.groupBy("src").agg(F.count("*").alias("deg")).persist()
     ranks = vertices.withColumn("rank", F.lit(1.0 / n))
@@ -97,11 +96,10 @@ def pagerank(
                     ).alias("rank"),
                 )
             )
-            ranks = stepped.checkpoint() if reliable else stepped.localCheckpoint()
+            prev, ranks = ranks, snapshot(stepped, reliable=reliable)
+            release(prev)
     finally:
         # failures mid-iteration must not pin the loop invariants for the
         # session lifetime
-        e.unpersist()
-        vertices.unpersist()
-        out_deg.unpersist()
+        release(e, vertices, out_deg)
     return ranks

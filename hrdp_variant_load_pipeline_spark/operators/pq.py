@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from hrdp_variant_load_pipeline_spark.runtime import release, snapshot
+
 
 def _sqdist(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -114,7 +116,8 @@ def train_pq_codebooks(
             F.coalesce("new_cvec", "cvec").alias("cvec"),
         )
         # m*n_codes rows; truncate per-iteration lineage like train_centroids
-        cents = stepped.localCheckpoint()
+        prev, cents = cents, snapshot(stepped, reliable=False)
+        release(prev)
     return cents
 
 

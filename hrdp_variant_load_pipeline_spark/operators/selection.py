@@ -29,6 +29,7 @@ from hrdp_variant_load_pipeline_spark.operators.similarity import (
     _dot_sql,
     _norm_sql,
 )
+from hrdp_variant_load_pipeline_spark.runtime import release, snapshot
 
 _ROUND = 6
 
@@ -154,7 +155,8 @@ def kcenter_greedy_carried(
     expression stays O(dim) regardless of k (no Catalyst analysis
     growth; the literal form's measured knee is ~128 centers). The cost
     is one ``localCheckpoint`` of the (id, vec, norm, min-dist) state
-    per step — corpus-sized I/O per iteration, which is why the
+    per step (released once the next step supersedes it) — corpus-sized
+    I/O per iteration, which is why the
     stateless literal form stays the default below the knee. Trajectory
     is IDENTICAL to ``kcenter_greedy`` (same 6dp rounding before every
     comparison, same smallest-id ties, same duplicate-point early stop
@@ -193,51 +195,42 @@ def kcenter_greedy_carried(
             f"(__n * {_py_norm(vec)!r}d), {_ROUND}) END"
         )
 
-    # superseded per-step states are released by registry diff —
-    # Dataset.unpersist cannot free localCheckpoint RDDs; same pattern
-    # (and same lock) as connected_components' round checkpoints
-    from hrdp_variant_load_pipeline_spark.operators.dedup import (
-        _persistent_rdd_ids,
-        _REGISTRY_LOCK,
-        _unpersist_rdd_ids,
-    )
-
-    sc = df.sparkSession.sparkContext
-    with _REGISTRY_LOCK:
-        seen = _persistent_rdd_ids(sc)
-        state = base.selectExpr(
+    # each step's snapshot supersedes the previous one: release it
+    state = snapshot(
+        base.selectExpr(
             "__id", "__v", "__n",
             f"{_dist_expr(int(seed['__id']), list(seed['__v']))} AS __d",
-        ).localCheckpoint()
-        prev_ids = _persistent_rdd_ids(sc) - seen
-        seen |= prev_ids
-        for step in range(1, k):
-            pick = state.agg(
-                F.max(
-                    F.struct(
-                        F.col("__d"),
-                        (-F.col("__id")).alias("__t"),
-                        F.col("__id"),
-                        F.col("__v"),
-                    )
-                ).alias("p")
-            ).collect()[0]["p"]
-            if pick["__d"] <= 0:
-                break
-            trajectory.append((step, int(pick["__id"]), float(pick["__d"])))
-            if step == k - 1:
-                break  # the fold below would never be read
-            state = state.selectExpr(
+        ),
+        reliable=False,
+    )
+    for step in range(1, k):
+        pick = state.agg(
+            F.max(
+                F.struct(
+                    F.col("__d"),
+                    (-F.col("__id")).alias("__t"),
+                    F.col("__id"),
+                    F.col("__v"),
+                )
+            ).alias("p")
+        ).collect()[0]["p"]
+        if pick["__d"] <= 0:
+            break
+        trajectory.append((step, int(pick["__id"]), float(pick["__d"])))
+        if step == k - 1:
+            break  # the fold below would never be read
+        prev = state
+        state = snapshot(
+            state.selectExpr(
                 "__id", "__v", "__n",
                 f"least(__d, "
                 f"{_dist_expr(int(pick['__id']), list(pick['__v']))})"
                 " AS __d",
-            ).localCheckpoint()
-            this_ids = _persistent_rdd_ids(sc) - seen
-            seen |= this_ids
-            _unpersist_rdd_ids(sc, prev_ids)
-            prev_ids = this_ids
-        _unpersist_rdd_ids(sc, prev_ids)
+            ),
+            reliable=False,
+        )
+        release(prev)
+    release(state)
     return trajectory
 
 

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from hrdp_variant_load_pipeline_spark.runtime import release, snapshot
+
 
 def dot(a: Column, b: Column) -> Column:
     prod = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
@@ -309,9 +311,6 @@ def train_centroids(
 
     Returns (cent_id, cvec) — pass as ``ivf_topk(..., centroids=...)``.
     """
-    from hrdp_variant_load_pipeline_spark.operators.dedup import resolve_reliable
-
-    reliable = resolve_reliable(corpus, reliable)
     c = corpus.select(F.col(vec_col).alias("c_vec"), norm(F.col(vec_col)).alias("c_norm"))
     w = Window.orderBy(id_col)
     cents = (
@@ -375,9 +374,11 @@ def train_centroids(
             "cent_id", F.coalesce("new_cvec", "cvec").alias("cvec")
         )
         # k rows; truncate the per-iteration lineage so n_iter rounds don't
-        # stack n_iter full assignment plans. reliable=True survives
-        # executor loss on a real cluster (needs sc.setCheckpointDir)
-        cents = stepped.checkpoint() if reliable else stepped.localCheckpoint()
+        # stack n_iter full assignment plans, and release the superseded
+        # round. reliable=True survives executor loss on a real cluster
+        # (needs sc.setCheckpointDir)
+        prev, cents = cents, snapshot(stepped, reliable=reliable)
+        release(prev)
     return cents
 
 

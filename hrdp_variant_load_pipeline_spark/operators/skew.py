@@ -15,6 +15,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from hrdp_variant_load_pipeline_spark.runtime import estimated_bytes
+
 SALT_COL = "__salt"
 
 
@@ -164,17 +166,6 @@ def adaptive_salted_join(
 SMALL_FACT_BYTES = 64 * 1024 * 1024
 
 
-def _estimated_bytes(df: DataFrame) -> int | None:
-    """Catalyst's logical size estimate for ``df`` (bytes), or None when
-    the internal accessor is unavailable — never runs a job."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — estimate only; caller falls back
-        return None
-
-
 def eager_agg_profitable(
     fact: DataFrame,
     keys: Sequence[str],
@@ -206,7 +197,7 @@ def eager_agg_profitable(
     value-identical by contract, and at that size either plan is
     trivial, so the only effect of sampling would be its own cost."""
     if small_input_bytes:
-        est_bytes = _estimated_bytes(fact)
+        est_bytes = estimated_bytes(fact)
         if est_bytes is not None and est_bytes < small_input_bytes:
             return False
     est = (

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hrdp_variant_load_pipeline_spark.operators.vocab import bm25_tokens
+from hrdp_variant_load_pipeline_spark.runtime import snapshot
 from hrdp_variant_load_pipeline_spark.sources.store import (
     append_to_store,
     read_store,
@@ -160,13 +161,12 @@ def append_text_index_batch(
         )
     if batch_key is not None and _has_marker_key(spark, store_dir, batch_key):
         return 0
-    staged = (
+    staged = snapshot(
         docs.select(
             F.col(id_col).cast("long").alias("doc_id"),
             bm25_tokens(F.col(text_col)).alias("__w"),
-        )
-        .select("doc_id", F.size("__w").cast("long").alias("dl"), "__w")
-        .localCheckpoint()
+        ).select("doc_id", F.size("__w").cast("long").alias("dl"), "__w"),
+        reliable=False,
     )
     stats = staged.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
@@ -184,8 +184,8 @@ def append_text_index_batch(
             "dl",
         )
     )
-    postings = postings.localCheckpoint()  # one tf-aggregate feeds both
-    # the inverted append and the forward (doc → term-vector) rollup
+    # one tf-aggregate feeds the inverted append and the forward rollup
+    postings = snapshot(postings, reliable=False)
     append_to_store(
         postings,
         f"{store_dir}/{_POSTINGS}",
@@ -716,18 +716,18 @@ def delete_from_text_index(
     prior = read_store(
         spark, f"{store_dir}/{_TOMBSTONES}", schema=_TOMBSTONES_SCHEMA
     ).select("doc_id")
-    fresh = req.join(prior, "doc_id", "left_anti").localCheckpoint()
+    fresh = snapshot(req.join(prior, "doc_id", "left_anti"), reliable=False)
     # ONE semi-join against the (doc-unprunable) postings serves the
     # adjustment aggregate AND the tombstone rows; dl rides every posting
     # of a doc, so the per-doc distinct is exact
     post = read_store(
         spark, f"{store_dir}/{_POSTINGS}", schema=_POSTINGS_SCHEMA
     )
-    deletable = (
+    deletable = snapshot(
         post.join(F.broadcast(fresh), "doc_id", "left_semi")
         .select("doc_id", "dl")
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        reliable=False,
     )
     adj = deletable.agg(
         F.count("*").alias("k"),
@@ -834,7 +834,7 @@ def vacuum_text_index(
     live = live.repartitionByRange("bucket", "term").sortWithinPartitions(
         "bucket", "term"
     )
-    commit_store_version(live.localCheckpoint(), f"{store_dir}/{_POSTINGS}")
+    commit_store_version(snapshot(live, reliable=False), f"{store_dir}/{_POSTINGS}")
     n_after = read_store(
         spark, f"{store_dir}/{_POSTINGS}", schema=_POSTINGS_SCHEMA
     ).count()
@@ -859,7 +859,7 @@ def vacuum_text_index(
         .repartitionByRange("doc_id")
         .sortWithinPartitions("doc_id")
     )
-    commit_store_version(fwd_live.localCheckpoint(), f"{store_dir}/{_FORWARD}")
+    commit_store_version(snapshot(fwd_live, reliable=False), f"{store_dir}/{_FORWARD}")
 
     st = _stats_summary(spark, store_dir)
     if st["nb"] is not None:  # no stats ledger -> nothing to collapse
@@ -887,7 +887,7 @@ def vacuum_text_index(
             [(st["n"], st["s"], st["nb"], None)], _STATS_SCHEMA
         )
         commit_store_version(
-            total_row.unionByName(marker_rows).localCheckpoint(),
+            snapshot(total_row.unionByName(marker_rows), reliable=False),
             f"{store_dir}/{_STATS}",
         )
     fs, jvm = _fs(spark, store_dir)
@@ -974,8 +974,8 @@ def backfill_forward_index(spark: SparkSession, store_dir: str) -> int:
         )
         .repartitionByRange("doc_id")
         .sortWithinPartitions("doc_id")
-        .localCheckpoint()
     )
+    fwd = snapshot(fwd, reliable=False)
     commit_store_version(fwd, f"{store_dir}/{_FORWARD}")
     return fwd.count()
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from hrdp_variant_load_pipeline_spark.runtime import estimated_bytes, snapshot
+
 
 def build_vocab(
     df: DataFrame,
@@ -130,10 +132,10 @@ def word_weighted_stats(
     # this operator with sibling components keeps scheduling them
     # concurrently (measured in model_ops_battery's union action at
     # sf10 — see OPTIMIZATION_r16.md).
-    wf = (
-        words.groupBy(*group_cols, "word")
-        .agg(F.count("*").alias("freq"))
-        .localCheckpoint(eager=False)
+    wf = snapshot(
+        words.groupBy(*group_cols, "word").agg(F.count("*").alias("freq")),
+        eager=False,
+        reliable=False,
     )
     stats = word_stats(wf.select("word").distinct())
     stat_cols = [c for c in stats.columns if c != "word"]
@@ -405,12 +407,12 @@ def sparse_cosine_candidates(
         )
         .filter(F.col("__k") <= max_probe_terms)
         .select("id_b", "__r")
-        # consumed twice (candidate join + the empty-probe anti-join
-        # below) and its plan embeds the corpus-wide rank_df aggregate —
-        # the lazy checkpoint materializes the query-sized table on
-        # first use so the corpus pays that aggregate once
-        .localCheckpoint(eager=False)
     )
+    # consumed twice (candidate join + the empty-probe anti-join below)
+    # and its plan embeds the corpus-wide rank_df aggregate — the lazy
+    # snapshot materializes the query-sized table on first use so the
+    # corpus pays that aggregate once
+    probe = snapshot(probe, eager=False, reliable=False)
     # candidates: one inverted pass over a's entries against the
     # (query-sized) broadcast probe table
     cands = (
@@ -510,6 +512,7 @@ def lm_doc_score(
     out_col: str = "lm_logprob",
     smoothing: str = "add_k",
     alpha: float = 0.4,
+    cache_registry: list | None = None,
 ) -> DataFrame:
     """N-gram LM document scoring over an ``ngram_counts`` table — the
     step that completes the CCNet chain (counts ≙ the KenLM seed; this is
@@ -566,6 +569,7 @@ def lm_doc_score(
     Output: input columns + ``out_col`` (double, rounded to 6; null ONLY
     for null text — a contract downstream filters rely on: a null score
     means "no text", never "text we failed to score").
+    ``cache_registry`` receives the counts and score snapshots (``runtime``).
     """
     if out_col in df.columns:
         raise ValueError(
@@ -586,7 +590,7 @@ def lm_doc_score(
     # model-sized (counts is min_count-pruned by construction): the first
     # broadcast pays the single corpus pass, the rest read the snapshot.
     if not counts.isStreaming:
-        counts = counts.localCheckpoint(eager=False)
+        counts = snapshot(counts, eager=False, reliable=False)
     scored = _lm_scored(
         df, id_col, text_col, counts, n, add_k, bos, eos, out_col,
         smoothing, alpha,
@@ -598,7 +602,9 @@ def lm_doc_score(
     # single-action caller pays only the snapshot write of 2 columns x
     # O(docs) rows during the job it already runs.
     if not scored.isStreaming:
-        scored = scored.localCheckpoint(eager=False)
+        scored = snapshot(scored, eager=False, reliable=False)
+    if cache_registry is not None:
+        cache_registry.extend((counts, scored))
     return df.join(scored, id_col, "left")
 
 
@@ -631,25 +637,6 @@ _BROADCAST_MODEL_INPUT_BYTES = 32 * 1024 * 1024
 #: exists (RDD-backed frames — e.g. createDataFrame corpora — report
 #: spark.sql.defaultSizeInBytes = Long.MaxValue, not a measurement)
 _BROADCAST_MODEL_ROWS = 1_000_000
-
-#: estimates at or above this are "no statistics", not measurements
-#: (Catalyst propagates Long.MaxValue from stat-less leaves)
-_UNRELIABLE_EST_BYTES = 1 << 60
-
-
-def _estimated_input_bytes(df: DataFrame) -> int | None:
-    """Catalyst's logical size estimate (bytes) — metadata-only, no
-    job; None when the accessor is unavailable OR the estimate is the
-    stat-less Long.MaxValue default (file-backed frames, the declared
-    query paths, always carry real file-size stats)."""
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — estimate only
-        return None
-    return None if est >= _UNRELIABLE_EST_BYTES else est
-
 
 def _lm_scored(
     df: DataFrame,
@@ -713,7 +700,7 @@ def _lm_scored(
     # whole pass). No estimate (RDD-backed corpus, a test fixture or an
     # exotic plan) falls back to the r14 exact-count gate — correct at
     # any size, just paid as a construction-time job.
-    est = _estimated_input_bytes(df)
+    est = estimated_bytes(df)
     if est is not None:
         big_model = est > _BROADCAST_MODEL_INPUT_BYTES
     else:

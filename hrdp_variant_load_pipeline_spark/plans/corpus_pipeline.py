@@ -48,23 +48,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-
-def _release_blocks(df: DataFrame) -> None:
-    """Free the executor storage behind a persisted OR localCheckpoint'd
-    frame. ``Dataset.unpersist`` only reaches CacheManager entries
-    (``.persist()``); a checkpoint's blocks belong to an internal RDD
-    that otherwise waits for ContextCleaner GC of the DataFrame — on a
-    long-lived session, repeated pipeline invocations would accumulate
-    corpus-sized MEMORY_AND_DISK blocks (r15 ADVICE). Best-effort: a
-    non-LogicalRDD plan (plain persisted frame) just takes the
-    ``unpersist`` half."""
-    df.unpersist()
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — GC remains the fallback
-        pass
+from hrdp_variant_load_pipeline_spark.runtime import release, snapshot
 
 
 @dataclass
@@ -72,9 +56,10 @@ class CorpusResult:
     """Final frames + per-stage counts. ``packed``/``shard_dir`` are None
     when the chunk/pack/output stages are disabled. ``cached`` holds the
     frames the plan left persisted (the final stage boundary) — release
-    with :meth:`unpersist_all` once outputs are materialized, same
-    contract as ``LoadResult.cached``. ``resumed_from`` names the stage
-    whose checkpoint this run restarted after (None = ran from ingest)."""
+    with :meth:`unpersist_all` once outputs are materialized (the registry
+    protocol in ``runtime``, same as ``LoadResult.cached``).
+    ``resumed_from`` names the stage whose checkpoint this run restarted
+    after (None = ran from ingest)."""
 
     docs: DataFrame
     packed: DataFrame | None
@@ -102,8 +87,7 @@ class CorpusResult:
     semantic_contamination: DataFrame | None = None
 
     def unpersist_all(self) -> None:
-        for df in self.cached:
-            df.unpersist()
+        release(*self.cached)
         self.cached.clear()
 
 
@@ -277,7 +261,7 @@ def run_corpus_pipeline(
         n = df.count()  # materialize the new pin FIRST — releasing the
         # previous one before this would force a full-lineage recompute
         if pinned:
-            pinned.pop().unpersist()
+            release(pinned.pop())
         # always recorded: the count is computed regardless, and the
         # checkpoint marker + shard manifest need it even when the
         # caller asked not to REPORT counts (collect_counts gates only
@@ -299,7 +283,7 @@ def run_corpus_pipeline(
                 {"stage": stage, "idx": idx, "fingerprint": fingerprint,
                  "counts_so_far": dict(counts)},
             )
-            df.unpersist()
+            release(df)
             df = spark.read.parquet(path).persist()  # disk-backed lineage
         pinned.append(df)
         return df
@@ -309,8 +293,9 @@ def run_corpus_pipeline(
     # ticked stages are count/pin/checkpoint boundaries; unticked ones
     # are row-local transforms folded into the next boundary's lineage
     plan: list[tuple[str, object, bool]] = []
-    # intra-stage caches a build wants released only AFTER its boundary
-    # materializes (e.g. the DSIR featurized pool)
+    # intra-stage caches and snapshots a build wants released only AFTER
+    # its boundary materializes (e.g. the DSIR featurized pool; operators
+    # append theirs through their cache_registry parameter)
     stage_scratch: list[DataFrame] = []
 
     def _b_ingest(_docs: DataFrame | None) -> DataFrame:
@@ -441,9 +426,12 @@ def run_corpus_pipeline(
 
         def _b_fuzzy(docs: DataFrame) -> DataFrame:
             fz = dd["fuzzy"]
+            # the pair set (and, in cluster mode, the final label round)
+            # are snapshots read until the stage boundary materializes
             pairs = DD.minhash_lsh_pairs(
                 docs, id_col, text_col,
                 verify_threshold=float(fz.get("threshold", 0.8)),
+                cache_registry=stage_scratch,
             )
             canonical = fz.get("canonical", "pair")
             if canonical == "cluster":
@@ -457,7 +445,7 @@ def run_corpus_pipeline(
                 # plan-only and value-identical, so it is NOT part of
                 # the checkpoint fingerprint).
                 clusters = DD.connected_components(
-                    pairs, skew=cfg.get("skew")
+                    pairs, skew=cfg.get("skew"), cache_registry=stage_scratch
                 )
                 drop = (
                     clusters.filter(F.col("doc") != F.col("cluster"))
@@ -494,6 +482,7 @@ def run_corpus_pipeline(
             scored = lm_doc_score(
                 docs, id_col, text_col, counts_tbl,
                 smoothing=lm_cfg.get("smoothing", "stupid_backoff"),
+                cache_registry=stage_scratch,
             )
             if lm_cfg.get("drop_tail", True):
                 tiers = perplexity_buckets(scored, "lm_logprob")
@@ -530,14 +519,15 @@ def run_corpus_pipeline(
                 # this stage's input pin, which later stages release — a
                 # lazy frame would re-execute the whole upstream chain
                 # when the caller finally evaluates it
-                contamination_out.append(
+                contamination_out.append(snapshot(
                     contamination_report(
                         docs, bench, id_col, text_col,
                         bench_id_col=dec.get("bench_id_col", id_col),
                         bench_text_col=dec.get("bench_text_col"),
                         n=int(dec.get("n", 8)),
-                    ).localCheckpoint()
-                )
+                    ),
+                    reliable=False,
+                ))
             return decontaminate(
                 docs, bench, id_col, text_col,
                 bench_text_col=dec.get("bench_text_col"),
@@ -627,7 +617,7 @@ def run_corpus_pipeline(
             # contamination report) and so the anti-join's broadcast
             # ships a computed frame instead of running the whole probe
             # inside the broadcast-exchange thread's timeout
-            hits = hits.localCheckpoint()
+            hits = snapshot(hits, reliable=False)
             if rdec.get("report", False):
                 retrieval_out.append(hits)
             flagged = hits.select(
@@ -673,8 +663,10 @@ def run_corpus_pipeline(
             # construction-time jobs — measured WORSE: sf10 arm eager
             # 40.4 s vs lazy 37.0 s vs unshared 51.6 s; in the
             # many-component battery eager was a 45% REGRESSION)
-            vocab = build_vocab(docs, text_col, max_vocab=max_vocab).localCheckpoint(
-                eager=False
+            vocab = snapshot(
+                build_vocab(docs, text_col, max_vocab=max_vocab),
+                eager=False,
+                reliable=False,
             )
             # the bench-id disjointness mapping below (-(id)-1) is only
             # collision-free when corpus ids are non-negative — a
@@ -732,10 +724,11 @@ def run_corpus_pipeline(
             # eager=False for the same scheduling reason as the vocab
             # above; with n_a passed in (below) nothing materializes
             # until the probe job itself runs.
-            a_vecs = (
+            a_vecs = snapshot(
                 dv.select(id_col, "tfidf_idx", "tfidf_val")
-                .withColumnRenamed(id_col, "doc_id")
-                .localCheckpoint(eager=False)
+                .withColumnRenamed(id_col, "doc_id"),
+                eager=False,
+                reliable=False,
             )
             b_vecs = bv.withColumnRenamed("__bid", "doc_id")
             if mpt is None:
@@ -760,15 +753,14 @@ def run_corpus_pipeline(
             # materialize before the anti-join broadcast (same rule as
             # the retrieval stage: never run the probe inside the
             # broadcast-exchange thread's timeout)
-            hits = hits.localCheckpoint()
+            hits = snapshot(hits, reliable=False)
             # the vector/vocab snapshots are fully consumed once `hits`
             # materializes (the line above) — release their executor
             # blocks after the stage boundary instead of waiting for
             # driver GC (r15 ADVICE: a_vecs is a corpus-sized slim
             # table, and repeated pipeline runs in one session would
             # accumulate such blocks)
-            stage_scratch.append(vocab)
-            stage_scratch.append(a_vecs)
+            stage_scratch.extend((vocab, a_vecs))
             if sdec.get("report", False):
                 semantic_out.append(hits)
             flagged = hits.select(F.col("id_a").alias(id_col)).distinct()
@@ -806,6 +798,7 @@ def run_corpus_pipeline(
                 target, feat, text_col, n_buckets=n_buckets,
                 raw_buckets_col="_dsir_buckets",
                 target_buckets_col=target_bcol,
+                cache_registry=stage_scratch,
             )
             scored = dsir_log_weight(
                 feat, lr, text_col, n_buckets, buckets_col="_dsir_buckets"
@@ -920,16 +913,15 @@ def run_corpus_pipeline(
             docs = build(docs)
             if ticked:
                 docs = tick(i, stage, docs)
-                while stage_scratch:
-                    _release_blocks(stage_scratch.pop())
+                release(*stage_scratch)
+                stage_scratch.clear()
                 timings[stage] = round(time.monotonic() - t0, 3)
                 t0 = time.monotonic()
     except BaseException:
         # a stage failure must not strand executor memory behind a frame
         # the caller never gets a handle to (the crash case the
         # checkpointing exists for)
-        for df in (*pinned, *stage_scratch):
-            _release_blocks(df)
+        release(*pinned, *stage_scratch)
         raise
 
     # ---- 9. chunk + pack + shard export ------------------------------
@@ -950,8 +942,7 @@ def run_corpus_pipeline(
                 approx=(rep_cfg == "approx"),  # the 100 TB sketch shape
             )
     except BaseException:
-        for df in pinned:
-            df.unpersist()
+        release(*pinned)
         raise
 
     return CorpusResult(

@@ -23,6 +23,7 @@ from hrdp_variant_load_pipeline_spark.operators.interval_join import (
     interval_join_binned,
     with_exists_flag,
 )
+from hrdp_variant_load_pipeline_spark.runtime import release
 
 #: above this many (merged) scope ranges the semi-join switches from
 #: broadcast to the binned equi-join — a forced broadcast of a
@@ -159,7 +160,7 @@ def genic_qc(
         else:
             # releasing now means the merge recomputes once when the caller
             # materializes — the persist served the strategy-picking count
-            merged.unpersist()
+            release(merged)
 
     active_genes = genes.filter(F.col("object_status") == "ACTIVE")
     if "map_key" in genes.columns:

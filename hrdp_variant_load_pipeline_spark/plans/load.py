@@ -65,6 +65,7 @@ from hrdp_variant_load_pipeline_spark.functions.normalize import (
 )
 from hrdp_variant_load_pipeline_spark.functions.zygosity import zygosity_struct
 from hrdp_variant_load_pipeline_spark.operators.interval_join import with_exists_flag
+from hrdp_variant_load_pipeline_spark.runtime import release
 from hrdp_variant_load_pipeline_spark.sources.vcf import unpivot_samples
 
 #: columns that uniquely identify one VCF data line
@@ -98,9 +99,9 @@ class LoadResult:
         have been materialized (written / collected): repeated loads in a
         long-lived session — the streaming loader runs one per micro-batch
         — accumulate cached partitions without bound otherwise. Outputs
-        consumed after release() recompute from source."""
-        for df in self.cached:
-            df.unpersist()
+        consumed after release() recompute from source. The registry
+        protocol is described in ``runtime``."""
+        release(*self.cached)
 
 
 def _end_pos_drift():

@@ -16,6 +16,7 @@ from hrdp_variant_load_pipeline_spark.functions import text as TXT
 from hrdp_variant_load_pipeline_spark.operators import dedup as DD
 from hrdp_variant_load_pipeline_spark.operators import multimodal as MM
 from hrdp_variant_load_pipeline_spark.operators import similarity as SIM
+from hrdp_variant_load_pipeline_spark.runtime import snapshot
 from hrdp_variant_load_pipeline_spark.sources.tables import (
     normalize_ts,
     spread_for_cpu,
@@ -490,15 +491,14 @@ def corpus_prep_battery(spark: SparkSession, sf: str) -> DataFrame:
     # decomposition measured the sample+shingle-join chain at ~7s, paid
     # twice without the pin; the pinned slice is the sampled fraction of
     # the corpus (bounded by the mixture fractions), not the corpus
-    clean = (
-        decontaminate(sampled, bench, "doc_id", "text", n=8)
-        .withColumn(
+    clean = snapshot(
+        decontaminate(sampled, bench, "doc_id", "text", n=8).withColumn(
             "n_tok",
             F.size(
                 F.filter(F.split("text", r"\s+"), lambda t: t != "")
             ).cast("long"),
-        )
-        .localCheckpoint()
+        ),
+        reliable=False,
     )
     # mixture: rebalance languages to the _PREP_BUDGET token budget; the
     # fractions derive from the cleaned corpus's own per-language token

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hrdp_variant_load_pipeline_spark.runtime import snapshot
 from hrdp_variant_load_pipeline_spark.sources.tables import table
 
 REGISTRY: dict[str, tuple] = {}
@@ -101,12 +102,11 @@ def scd2_battery(spark: SparkSession, sf: str) -> DataFrame:
     # re-executed the orders scan 29 times (measured); checkpointed it
     # scans once per merge. This mirrors production, where each merge
     # lands in the dimension store before the next batch reads it.
-    h1 = scd2_merge(
-        empty, updates(F.col("o_orderdate") < cut), ["o_custkey"], ["o_orderpriority"]
-    ).localCheckpoint()
-    h2 = scd2_merge(
-        h1, updates(F.col("o_orderdate") >= cut), ["o_custkey"], ["o_orderpriority"]
-    ).localCheckpoint()
+    keys = (["o_custkey"], ["o_orderpriority"])
+    h1 = scd2_merge(empty, updates(F.col("o_orderdate") < cut), *keys)
+    h1 = snapshot(h1, reliable=False)
+    h2 = scd2_merge(h1, updates(F.col("o_orderdate") >= cut), *keys)
+    h2 = snapshot(h2, reliable=False)
     hist_rows = h2.select(
         F.lit("history").alias("component"),
         F.col("o_custkey").alias("k"),
@@ -399,9 +399,8 @@ def model_ops_battery(spark: SparkSession, sf: str) -> DataFrame:
     # decomposition pass runs once; eager=False (r16) so it
     # materializes inside the union action alongside the other
     # components instead of as a blocking construction-time job
-    tok_agg = word_weighted_stats(
-        d, "text", ["lang"], _word_stats
-    ).localCheckpoint(eager=False)
+    tok_agg = word_weighted_stats(d, "text", ["lang"], _word_stats)
+    tok_agg = snapshot(tok_agg, eager=False, reliable=False)
     bpe = tok_agg.select(
         F.lit("bpe").alias("component"),
         F.col("n_docs").alias("k"),
@@ -425,7 +424,7 @@ def model_ops_battery(spark: SparkSession, sf: str) -> DataFrame:
     # 50 rows, consumed twice (tf + df branches): snapshot so the
     # explode + token aggregate + TakeOrdered subtree runs once;
     # eager=False for the same scheduling reason as tok_agg above
-    vocab = build_vocab(d, "text", max_vocab=50).localCheckpoint(eager=False)
+    vocab = snapshot(build_vocab(d, "text", max_vocab=50), eager=False, reliable=False)
     vocab_tf = vocab.select(
         F.lit("vocab_tf").alias("component"),
         F.col("rank").cast("long").alias("k"),
@@ -1105,9 +1104,8 @@ def corpus_stats_battery(spark: SparkSession, sf: str) -> DataFrame:
     # twice in the same action. Lazily checkpointed so the ngtop branch
     # of the main action reads the same snapshot lm_doc_score's internal
     # pin materializes, instead of re-running the corpus ngram pass.
-    counts = ngram_counts(docs, "text", n=2, min_count=_CS_LM_MIN).localCheckpoint(
-        eager=False
-    )
+    counts = ngram_counts(docs, "text", n=2, min_count=_CS_LM_MIN)
+    counts = snapshot(counts, eager=False, reliable=False)
     ng = counts.filter(F.col("count") >= _CS_NG_MIN)
     ngtop = (
         ng.select(F.array_join("gram", " ").alias("s"), F.col("count").alias("n"))
@@ -1135,9 +1133,8 @@ def corpus_stats_battery(spark: SparkSession, sf: str) -> DataFrame:
     # the snapshot materializes inside the battery's union action where
     # the scheduler overlaps it with the sibling components, instead of
     # as a blocking construction-time job
-    vecs = tfidf_vectors(
-        docs, "doc_id", "text", vocab, n_docs=n_corpus
-    ).localCheckpoint(eager=False)
+    vecs = tfidf_vectors(docs, "doc_id", "text", vocab, n_docs=n_corpus)
+    vecs = snapshot(vecs, eager=False, reliable=False)
     cos = sparse_cosine_pairs(
         vecs,
         vecs.filter(F.col("doc_id") < _CS_TFIDF_Q),
@@ -1158,7 +1155,8 @@ def corpus_stats_battery(spark: SparkSession, sf: str) -> DataFrame:
     # full LM pass before the union action is even built
     lm_scored = lm_doc_score(
         docs, "doc_id", "text", counts, smoothing="stupid_backoff"
-    ).select("doc_id", "lm_logprob").localCheckpoint(eager=False)
+    ).select("doc_id", "lm_logprob")
+    lm_scored = snapshot(lm_scored, eager=False, reliable=False)
     lm = lm_scored.select(
         F.lit("lmscore").alias("component"),
         F.col("doc_id").alias("k"),
@@ -1344,7 +1342,8 @@ def corpus_stats_battery(spark: SparkSession, sf: str) -> DataFrame:
     dl = featurize(
         table(spark, sf, "documents").select("doc_id", "text", "lang"),
         "text", _CS_DSIR_B, salt=_CS_DSIR_SALT,
-    ).localCheckpoint(eager=False)
+    )
+    dl = snapshot(dl, eager=False, reliable=False)
     lr = bucket_logratio(
         dl.filter(F.col("lang") == "en"), dl, "text",
         n_buckets=_CS_DSIR_B, salt=_CS_DSIR_SALT,
@@ -1352,14 +1351,11 @@ def corpus_stats_battery(spark: SparkSession, sf: str) -> DataFrame:
     )
     # drop the text before checkpointing — both consumers need only
     # (doc_id, logw), so the materialized reuse point stays id-sized
-    scored = (
-        dsir_log_weight(
-            dl, lr, "text", _CS_DSIR_B, salt=_CS_DSIR_SALT,
-            buckets_col="_dsir_buckets",
-        )
-        .select("doc_id", "dsir_logw")
-        .localCheckpoint(eager=False)
-    )
+    scored = dsir_log_weight(
+        dl, lr, "text", _CS_DSIR_B, salt=_CS_DSIR_SALT,
+        buckets_col="_dsir_buckets",
+    ).select("doc_id", "dsir_logw")
+    scored = snapshot(scored, eager=False, reliable=False)
     dsir = scored.select(
         F.lit("dsir").alias("component"),
         F.col("doc_id").alias("k"),
@@ -1423,14 +1419,14 @@ def corpus_stats_battery(spark: SparkSession, sf: str) -> DataFrame:
     # jobs — measured 136.8 → 198.9 s at sf10 (eager) vs 129.0 s
     # (lazy, vs 136.8 unshared, r15 protocol). Values are checkpoint-
     # invariant; storage is O(vector bytes) ≪ O(text).
-    sd_vocab = build_vocab(d2, "text", max_vocab=_SD_VOCAB).localCheckpoint(
-        eager=False
-    )
+    sd_vocab = build_vocab(d2, "text", max_vocab=_SD_VOCAB)
+    sd_vocab = snapshot(sd_vocab, eager=False, reliable=False)
     # n_corpus (one parquet metadata count, computed once above) is
     # reused here: |d2| == |documents| (row-preserving projection)
     dv2 = tfidf_vectors(d2, "doc_id", "text", sd_vocab, n_docs=n_corpus).select(
         "doc_id", "tfidf_idx", "tfidf_val"
-    ).localCheckpoint(eager=False)
+    )
+    dv2 = snapshot(dv2, eager=False, reliable=False)
     words = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
     bench = (
         table(spark, sf, "documents")
@@ -1727,7 +1723,7 @@ def iterative_ts_battery(spark: SparkSession, sf: str) -> DataFrame:
     # count project from the same user-sized aggregate.
     from hrdp_variant_load_pipeline_spark.queries_ml import events_user_trend
 
-    ut = events_user_trend(spark, sf).localCheckpoint(eager=False)
+    ut = snapshot(events_user_trend(spark, sf), eager=False, reliable=False)
     nulls = (F.lit(None).cast("timestamp"), F.lit(None).cast("boolean"))
     ut_slope = ut.select(
         F.lit("utrend").alias("component"),

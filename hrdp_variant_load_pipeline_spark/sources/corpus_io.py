@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from hrdp_variant_load_pipeline_spark.runtime import shuffle_partitions
+
 #: documents-table JSONL schema (mirrors the parquet testdata contract)
 DOC_SCHEMA = "doc_id BIGINT, text STRING, lang STRING"
 
@@ -108,8 +110,7 @@ def write_shards(
     """
     spark = df.sparkSession
     if n_shards is None:
-        sp = spark.conf.get("spark.sql.shuffle.partitions", "32")
-        n_shards = max(1, int(sp) if sp.isdigit() else 32)
+        n_shards = shuffle_partitions(spark)
     out = df.repartitionByRange(n_shards, shard_col)
     out = out.sortWithinPartitions(
         shard_col, *( [order_col] if order_col else [] )

@@ -49,6 +49,8 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from hrdp_variant_load_pipeline_spark.runtime import shuffle_partitions
+
 _VERSION_RE = re.compile(r"^v_(\d{8})$")
 COMMIT_MARKER = "_COMMITTED"
 #: committed versions kept besides the current one (in-flight readers of
@@ -266,8 +268,7 @@ def compact_store(
     if target is None:
         return None
     if target_partitions is None:
-        sp = spark.conf.get("spark.sql.shuffle.partitions", "32")
-        target_partitions = max(1, int(sp) if sp.isdigit() else 32)
+        target_partitions = shuffle_partitions(spark)
     # always merge schemas: a compaction is the rewrite that re-unifies a
     # drift-widened store (and it reads every file anyway, so the footer
     # cost is already paid) — a sampled-footer read here could silently

@@ -30,6 +30,7 @@ from hrdp_variant_load_pipeline_spark.operators.dedup import (
     banded_signatures,
     incremental_minhash_dedup,
 )
+from hrdp_variant_load_pipeline_spark.runtime import release, snapshot
 from hrdp_variant_load_pipeline_spark.sources.corpus_io import (
     DOC_SCHEMA,
     split_jsonl_lines,
@@ -122,14 +123,13 @@ def stream_corpus_ingest(
 
         # eval-sized by contract; materialized once so every micro-batch
         # reuses the same snapshot instead of re-shingling the benchmark
-        bench_shingles = (
+        bench_shingles = snapshot(
             decon_benchmark.select(
                 F.explode(
                     shingle_array(F.col(text_col), decon_n)
                 ).alias("__shingle")
-            )
-            .distinct()
-            .localCheckpoint()
+            ).distinct(),
+            reliable=False,
         )
 
     _sid_cache: dict = {}
@@ -165,7 +165,7 @@ def stream_corpus_ingest(
             n_all = gated.count()
             docs = gated.filter(F.col("__q")).drop("__q").persist()
             n_rej = n_all - docs.count()
-            gated.unpersist()
+            release(gated)
         else:
             docs = docs.persist()
         n_cont = 0
@@ -189,7 +189,7 @@ def stream_corpus_ingest(
             )
             docs = pre.join(contaminated, id_col, "left_anti").persist()
             n_cont = n_before - docs.count()
-            pre.unpersist()
+            release(pre)
         try:
             n_quar = quarantine.count()
             if n_quar:
@@ -199,10 +199,11 @@ def stream_corpus_ingest(
                 existing = read_store(
                     spark, quarantine_dir, schema="raw STRING, batch_id BIGINT"
                 ).filter(F.col("batch_id") == batch_id)
-                fresh_q = tagged.join(
-                    existing, ["raw", "batch_id"], "left_anti"
-                ).localCheckpoint()  # pinned BEFORE the append mutates its input
+                fresh_q = tagged.join(existing, ["raw", "batch_id"], "left_anti")
+                # pinned BEFORE the append mutates its input
+                fresh_q = snapshot(fresh_q, reliable=False)
                 append_to_store(fresh_q, quarantine_dir)
+                release(fresh_q)
             store_ids = read_store(
                 spark, docs_store_dir, schema=schema
             ).select(id_col)
@@ -225,7 +226,7 @@ def stream_corpus_ingest(
             fresh = docs.join(hit_ids, id_col, "left_anti").persist()
             n_fresh = fresh.count()
             if n_fresh == 0:
-                fresh.unpersist()
+                release(fresh)
                 if on_batch is not None:
                     on_batch(
                         batch_id,
@@ -261,7 +262,8 @@ def stream_corpus_ingest(
             # accepted against the post-append store (empty fresh set, no
             # index rows). Checkpointing pins the rows first; the appends
             # then cannot feed back into their own input.
-            accepted = fresh.join(drop, id_col, "left_anti").localCheckpoint()
+            accepted = fresh.join(drop, id_col, "left_anti")
+            accepted = snapshot(accepted, reliable=False)
             n_acc = accepted.count()
             if n_acc:
                 # index FIRST, docs second: a crash between the two leaves
@@ -299,7 +301,7 @@ def stream_corpus_ingest(
                         batch_key=f"{_stream_id()}-{batch_id}",
                     )
                 append_to_store(accepted, docs_store_dir, cluster_by=[id_col])
-            fresh.unpersist()
+            release(fresh, accepted, pairs)
             if on_batch is not None:
                 on_batch(
                     batch_id,
@@ -312,7 +314,7 @@ def stream_corpus_ingest(
                     },
                 )
         finally:
-            docs.unpersist()
+            release(docs)
 
     reader = (
         spark.readStream.option("recursiveFileLookup", "true")

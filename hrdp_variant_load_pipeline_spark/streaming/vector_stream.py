@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from hrdp_variant_load_pipeline_spark.operators.similarity import (
     incremental_topk,
 )
+from hrdp_variant_load_pipeline_spark.runtime import release, snapshot
 from hrdp_variant_load_pipeline_spark.sources.store import (
     commit_store_version,
     read_store,
@@ -55,7 +56,7 @@ def stream_topk_maintain(
     schema is ``brute_force_topk``'s (query_id, neighbor_id, cosine,
     rank).
     """
-    q = queries.select(id_col, vec_col).localCheckpoint()
+    q = snapshot(queries.select(id_col, vec_col), reliable=False)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         prev = read_store(spark, topk_store_dir, schema=_TOPK_SCHEMA)
@@ -64,7 +65,7 @@ def stream_topk_maintain(
         )
         # pin the fold BEFORE committing: its lineage reads the store
         # version the commit housekeeping may delete (KEEP_PREVIOUS)
-        folded = folded.localCheckpoint()
+        folded = snapshot(folded, reliable=False)
         commit_store_version(folded, topk_store_dir)
         if on_batch is not None:
             on_batch(
@@ -72,6 +73,7 @@ def stream_topk_maintain(
                 {"batch_vectors": batch_df.count(),
                  "topk_rows": folded.count()},
             )
+        release(folded)  # the next batch folds from the committed store
 
     reader = spark.readStream.schema(vec_schema)
     if max_files_per_trigger is not None:

@@ -720,6 +720,40 @@ def test_fuzzy_cluster_canonical_and_skew_config(spark, tmp_path):
         run("bogus")
 
 
+def test_chain_runs_leave_no_snapshot_persisted(spark, tmp_path):
+    """After ``unpersist_all()`` a chain run leaves no RDD persisted that
+    was not persisted before it: the LM gate's count/score snapshots, DSIR's
+    bucket-count snapshots and the fuzzy stage's pair set (plus, in
+    cluster mode, the final label round) go through the stage's scratch
+    registry and are released after its boundary. Two runs per fuzzy
+    mode, so snapshots cannot pile up across runs in one session. (The
+    set may SHRINK meanwhile: the context cleaner frees garbage-collected
+    frames of earlier tests.)"""
+    sc = spark.sparkContext
+
+    def persisted_ids():
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+    base = persisted_ids()
+    for canonical in ("pair", "cluster"):
+        cfg = {
+            "input": {"format": "parquet", "path": f"{SF_DIR}/documents.parquet"},
+            "dedup": {
+                "exact": True,
+                "fuzzy": {"threshold": 0.8, "canonical": canonical},
+            },
+            "lm_gate": {"min_count": 2},
+            "selection": {"dsir": {
+                "target_lang": "en", "n_buckets": 64, "keep_fraction": 0.6,
+            }},
+        }
+        for _ in range(2):
+            res = run_corpus_pipeline(spark, cfg)
+            assert res.counts["dsir_selected"] > 0
+            res.unpersist_all()
+            assert persisted_ids() - base == set(), canonical
+
+
 def test_semantic_decontaminate_catches_rewrites(spark, tmp_path):
     """Stage 6c (r14): TF-IDF-cosine decon drops a REWRITE — same
     weighted bag of words, reordered and lightly edited, so shingle
@@ -797,13 +831,11 @@ def test_semantic_decontaminate_catches_rewrites(spark, tmp_path):
 
 
 def test_release_blocks_frees_checkpoint_storage(spark):
-    """r15 ADVICE closure: _release_blocks must free the executor blocks
-    behind BOTH persist() frames and localCheckpoint'd frames (eager and
-    lazy) — Dataset.unpersist alone only reaches the CacheManager, so
-    checkpoint RDD blocks otherwise linger until driver GC."""
-    from hrdp_variant_load_pipeline_spark.plans.corpus_pipeline import (
-        _release_blocks,
-    )
+    """r15 ADVICE closure: runtime.release must free the executor blocks
+    behind BOTH persist() frames and snapshot frames (eager and lazy) —
+    Dataset.unpersist alone only reaches the CacheManager, so checkpoint
+    RDD blocks otherwise linger until driver GC."""
+    from hrdp_variant_load_pipeline_spark.runtime import release, snapshot
 
     sc = spark.sparkContext
 
@@ -813,16 +845,17 @@ def test_release_blocks_frees_checkpoint_storage(spark):
     base = persisted_ids()
     frames = [
         spark.range(100).selectExpr("id", "id * 2 AS x").persist(),
-        spark.range(100).selectExpr("id", "id * 3 AS x").localCheckpoint(),
-        spark.range(100).selectExpr("id", "id * 5 AS x").localCheckpoint(
-            eager=False
+        snapshot(spark.range(100).selectExpr("id", "id * 3 AS x"), reliable=False),
+        snapshot(
+            spark.range(100).selectExpr("id", "id * 5 AS x"),
+            eager=False,
+            reliable=False,
         ),
     ]
     for df in frames:
         df.count()  # materialize blocks (lazy forms included)
     assert len(persisted_ids() - base) >= 3
-    for df in frames:
-        _release_blocks(df)
+    release(*frames)
     assert persisted_ids() - base == set()
 
 

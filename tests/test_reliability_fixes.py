@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from hrdp_variant_load_pipeline_spark.operators.dedup import (
-    CheckpointHandle,
     connected_components,
     minhash_lsh_pairs,
 )
@@ -44,7 +43,7 @@ def ckpt_dir(spark, tmp_path):
 def test_reliable_default_follows_checkpoint_dir(spark, tmp_path):
     """reliable=None (the default) selects reliable checkpointing exactly
     when the session has a checkpoint dir configured; explicit wins."""
-    from hrdp_variant_load_pipeline_spark.operators.dedup import resolve_reliable
+    from hrdp_variant_load_pipeline_spark.runtime import resolve_reliable
 
     df = spark.range(1)
     sc = spark.sparkContext
@@ -122,21 +121,23 @@ def test_minhash_cache_registry_release(spark):
         ],
         "doc_id long, text string",
     )
+    from hrdp_variant_load_pipeline_spark.runtime import release
+
     registry: list = []
     out = minhash_lsh_pairs(docs, "doc_id", "text", cache_registry=registry)
     rows = {(r["doc_a"], r["doc_b"]) for r in out.collect()}
     assert (1, 2) in rows
-    assert len(registry) == 1 and isinstance(registry[0], CheckpointHandle)
+    # the registry holds the returned pair-set snapshot itself
+    assert len(registry) == 1 and registry[0] is out
     sc = spark.sparkContext
-    persisted_before = {
-        int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()
-    }
-    assert registry[0]._ids & persisted_before  # checkpoint data is pinned
-    registry[0].unpersist()
-    persisted_after = {
-        int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()
-    }
-    assert not (registry[0]._ids & persisted_after)  # and now released
+    pair_rdd = out._jdf.queryExecution().analyzed().rdd().id()
+
+    def persisted():
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+    assert pair_rdd in persisted()  # checkpoint data is pinned
+    release(*registry)
+    assert pair_rdd not in persisted()  # and now released
 
 
 def test_merge_update_order_col_last_wins(spark):

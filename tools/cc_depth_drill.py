@@ -1,14 +1,13 @@
-"""Deep-chain connected-components drill (r16 directive #8): every
-in-repo fixture converges the CC loop in ONE label-propagation round
-(near-dup clusters are stars/pairs), so the loop's PER-ROUND costs were
-only ever measured at the convergence-detection minimum. This drill
-stages path graphs — N disjoint chains of length L, min label = chain
-head — where min-label propagation needs L-1 rounds plus one detection
-round, and A/Bs the shipped 3-exchange round form
-(operators.dedup.connected_components) against the r15 union-form
-candidate (2 exchanges/round over dst-prepartitioned edges,
-tools/cc_roundshape_ab.cc_union_form) at that depth. Value identity is
-asserted on every rep.
+"""Deep-chain connected-components drill: every in-repo fixture converges
+the CC loop in ONE label-propagation round (near-dup clusters are
+stars/pairs), so the loop's PER-ROUND costs are only ever measured at the
+convergence-detection minimum. This drill stages path graphs — N disjoint
+chains of length L, min label = chain head — where min-label propagation
+needs L-1 rounds plus one detection round, and A/Bs the superseded
+3-exchange round form (below) against the shipped union-form
+``operators.dedup.connected_components`` (2 exchanges/round over
+dst-prepartitioned edges) at that depth. Value identity is asserted on
+every rep.
 
 Usage: python tools/cc_depth_drill.py [N_CHAINS] [CHAIN_LEN] [REPS]
 """
@@ -21,77 +20,67 @@ from pathlib import Path
 
 _HERE = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_HERE))
-sys.path.insert(0, str(_HERE / "tools"))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from cc_roundshape_ab import cc_union_form  # noqa: E402
 from hrdp_variant_load_pipeline_spark.operators import dedup as DD  # noqa: E402
+from hrdp_variant_load_pipeline_spark.runtime import release, snapshot  # noqa: E402
 from hrdp_variant_load_pipeline_spark.session import get_spark  # noqa: E402
 
 
 def cc_three_exchange_form(pairs, a_col="doc_a", b_col="doc_b", max_iter=25):
-    """The r15-shipped round shape (join + groupBy + label-carry join =
-    3 node-sized exchanges/round, edges NOT pre-partitioned) — kept here
-    as the in-session baseline the adopted union form is drilled
-    against."""
-    sc = pairs.sparkSession.sparkContext
-    with DD._REGISTRY_LOCK:
-        seen = DD._persistent_rdd_ids(sc)
-        edges = (
-            pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-            .unionByName(
-                pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-            )
-            .distinct()
-            .persist()
+    """The superseded round shape (join + groupBy + label-carry join = 3
+    node-sized exchanges/round, edges NOT pre-partitioned) — the
+    in-session baseline the shipped union form is drilled against."""
+    edges = (
+        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        .unionByName(
+            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
         )
-        try:
-            edges.count()
-            seen |= DD._persistent_rdd_ids(sc)
-            labels = DD._truncate_lineage(
-                edges.groupBy("src").agg(
-                    F.least(F.col("src"), F.min("dst")).alias("label")
-                ).select(F.col("src").alias("node"), "label"),
-                False,
+        .distinct()
+        .persist()
+    )
+    try:
+        edges.count()
+        labels = snapshot(
+            edges.groupBy("src").agg(
+                F.least(F.col("src"), F.min("dst")).alias("label")
+            ).select(F.col("src").alias("node"), "label"),
+            reliable=False,
+        )
+        prev_round = labels
+        for _ in range(max_iter):
+            neighbor_min = (
+                edges.join(labels, edges.dst == labels.node)
+                .groupBy("src")
+                .agg(F.min("label").alias("nmin"))
             )
-            prev_round = DD._persistent_rdd_ids(sc) - seen
-            seen |= prev_round
-            for _ in range(max_iter):
-                neighbor_min = (
-                    edges.join(labels, edges.dst == labels.node)
-                    .groupBy("src")
-                    .agg(F.min("label").alias("nmin"))
-                )
-                stepped = DD._truncate_lineage(
-                    labels.join(
-                        neighbor_min, labels.node == neighbor_min.src, "left"
-                    ).select(
-                        "node",
-                        F.col("label").alias("__old"),
-                        F.least(
-                            F.col("label"),
-                            F.coalesce(F.col("nmin"), F.col("label")),
-                        ).alias("label"),
-                    ),
-                    False,
-                    eager=False,
-                )
-                changed = (
-                    stepped.filter(F.col("__old") != F.col("label"))
-                    .limit(1)
-                    .count()
-                )
-                this_round = DD._persistent_rdd_ids(sc) - seen
-                seen |= this_round
-                labels = stepped.drop("__old")
-                DD._unpersist_rdd_ids(sc, prev_round)
-                prev_round = this_round
-                if changed == 0:
-                    break
-        finally:
-            edges.unpersist()
+            stepped = snapshot(
+                labels.join(
+                    neighbor_min, labels.node == neighbor_min.src, "left"
+                ).select(
+                    "node",
+                    F.col("label").alias("__old"),
+                    F.least(
+                        F.col("label"),
+                        F.coalesce(F.col("nmin"), F.col("label")),
+                    ).alias("label"),
+                ),
+                eager=False,
+                reliable=False,
+            )
+            changed = (
+                stepped.filter(F.col("__old") != F.col("label")).limit(1).count()
+            )
+            labels = stepped.drop("__old")
+            release(prev_round)
+            prev_round = stepped
+            if changed == 0:
+                break
+    finally:
+        release(edges)
     return labels.select(F.col("node").alias("doc"), F.col("label").alias("cluster"))
+
 
 N_CHAINS = int(sys.argv[1]) if len(sys.argv) > 1 else 150_000
 CHAIN_LEN = int(sys.argv[2]) if len(sys.argv) > 2 else 16
@@ -152,10 +141,13 @@ def main() -> None:
     cur_t, old_t, ref = [], [], None
     for _ in range(REPS):
         eo, do = run(
-            lambda p: cc_three_exchange_form(p, max_iter=max_iter), "r15form"
+            lambda p: cc_three_exchange_form(p, max_iter=max_iter), "3-exchange"
         )
         ec, dc = run(
-            lambda p: DD.connected_components(p, max_iter=max_iter), "adopted"
+            lambda p: DD.connected_components(
+                p, max_iter=max_iter, reliable=False
+            ),
+            "union-form",
         )
         ref = ref or do
         assert do == ref and dc == ref, "VALUE MISMATCH between CC forms"
@@ -164,9 +156,9 @@ def main() -> None:
     rounds = CHAIN_LEN  # L-1 propagation + 1 detection
     print(
         f"RESULT depth={CHAIN_LEN} edges={n} rounds~{rounds}\n"
-        f"RESULT r15form best={min(old_t):.3f} per-round~"
+        f"RESULT 3-exchange best={min(old_t):.3f} per-round~"
         f"{min(old_t) / rounds:.3f} all={[round(t, 3) for t in old_t]}\n"
-        f"RESULT adopted best={min(cur_t):.3f} per-round~"
+        f"RESULT union-form best={min(cur_t):.3f} per-round~"
         f"{min(cur_t) / rounds:.3f} all={[round(t, 3) for t in cur_t]}"
     )
     spark.stop()
