@@ -59,10 +59,6 @@ from hrdp_variant_load_pipeline_spark.sources.vcf import (
 )
 
 
-def _read_store(spark: SparkSession, path: str, schema) -> DataFrame:
-    return read_store(spark, path, schema)
-
-
 def _vcf_input(spark: SparkSession, cfg: dict) -> DataFrame:
     """Parsed VCF rows for this run, restaged when ``restage_dir`` is set.
 
@@ -117,8 +113,8 @@ def cmd_run_load(spark: SparkSession, cfg: dict) -> dict[str, int]:
     vcf = _vcf_input(spark, cfg)
     genes = spark.read.parquet(cfg["genes_path"])
     samples = samples_dimension(spark, cfg["samples"], cfg["map_key"])
-    vstore = _read_store(spark, cfg["variant_store"], schemas.VARIANT)
-    dstore = _read_store(spark, cfg["detail_store"], schemas.VARIANT_SAMPLE_DETAIL)
+    vstore = read_store(spark, cfg["variant_store"], schemas.VARIANT)
+    dstore = read_store(spark, cfg["detail_store"], schemas.VARIANT_SAMPLE_DETAIL)
 
     res = run_load(vcf, genes, samples, vstore, dstore, map_key=cfg["map_key"])
     out: dict[str, int] = {}
@@ -164,18 +160,6 @@ def cmd_run_load(spark: SparkSession, cfg: dict) -> dict[str, int]:
     return out
 
 
-def _atomic_replace_store(df: DataFrame, store_path: str) -> None:
-    """Replace a store with ``df`` under the reference's Oracle-transaction
-    visibility guarantee (one batch = one commit, ``DAO.java:142-163``):
-    a reader sees the previous version until the instant the new one is
-    committed — never a partial store, never an empty path. Implemented as
-    a versioned-directory commit whose only visibility step is a single
-    atomic marker-file create (``sources/store.py``); the round-5
-    double-rename swap still had a no-store window between its renames.
-    """
-    commit_store_version(df, store_path)
-
-
 def cmd_compact(spark: SparkSession, cfg: dict) -> dict[str, int]:
     """Fold per-batch append files in both stores into one coalesced
     version each (``sources/store.py:compact_store``). The reference's
@@ -216,7 +200,7 @@ def cmd_genic_qc(spark: SparkSession, cfg: dict) -> dict[str, int]:
         n = updates.count()
         if n:
             repaired = merge_update(store, updates, "rgd_id", ["genic_status"])
-            _atomic_replace_store(repaired, cfg["variant_store"])
+            commit_store_version(repaired, cfg["variant_store"])
     finally:
         release(*cached)
     return {"genic_status_updated": n}

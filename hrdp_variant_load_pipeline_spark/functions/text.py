@@ -348,105 +348,6 @@ def normalize_text(
     return out
 
 
-def train_lang_profiles(
-    df: DataFrame, text_col: str, lang_col: str, top_n: int = 200
-) -> dict[str, dict[str, float]]:
-    """Per-language DISCRIMINATIVE character-trigram profiles, trained as
-    ONE distributed aggregate.
-
-    The cluster reduces the corpus to (lang, trigram, count) — bounded by
-    languages × distinct trigrams, not corpus bytes. Driver-side, each
-    language keeps the ``top_n`` trigrams by (its normalized frequency −
-    the mean of the OTHER languages' normalized frequencies): shared
-    vocabulary cancels out and the profile latches onto what actually
-    separates the languages (the Cavnar–Trenkle rank profile fails when
-    corpora share most of their trigrams — e.g. code-mixed or templated
-    text — because the dominant trigrams are identical everywhere).
-    Model size: languages × top_n floats (KBs), inlined as literals.
-
-    The whole selection runs CLUSTER-side — normalized frequencies, the
-    cross-language mean (via one per-trigram sum: mean-of-others =
-    (sum − own) / (n_langs − 1)), and a per-language top-N window — so
-    the only collects are model-sized by construction: one row per
-    language (the totals) and languages × top_n profile rows. The raw
-    (lang × distinct-trigram) table, which is corpus-like for CJK/web
-    corpora, never reaches the driver.
-    """
-    from pyspark.sql import Window
-
-    tri = df.select(
-        F.col(lang_col).alias("lang"),
-        F.explode(_char_trigrams(F.col(text_col))).alias("g"),
-    )
-    counts = tri.groupBy("lang", "g").agg(F.count("*").alias("c"))
-    totals = counts.groupBy("lang").agg(F.sum("c").alias("tot"))
-    langs = sorted(r["lang"] for r in totals.collect())  # one row per language
-    if not langs:
-        return {}
-    norm = counts.join(totals, "lang").select(
-        "lang", "g", (F.col("c") / F.col("tot")).alias("f")
-    )
-    sums = norm.groupBy("g").agg(F.sum("f").alias("s"))
-    n_others = float(max(len(langs) - 1, 1))
-    diff = norm.join(sums, "g").select(
-        "lang",
-        "g",
-        (F.col("f") - (F.col("s") - F.col("f")) / F.lit(n_others)).alias("wt"),
-    )
-    win = Window.partitionBy("lang").orderBy(F.desc("wt"), F.asc("g"))
-    top = (
-        diff.filter(F.col("wt") > 0)
-        .withColumn("rn", F.row_number().over(win))
-        .filter(F.col("rn") <= top_n)
-    )
-    profiles: dict[str, dict[str, float]] = {lang: {} for lang in langs}
-    for r in top.collect():
-        profiles[r["lang"]][r["g"]] = r["wt"]
-    return profiles
-
-
-def _char_trigrams(text: Column) -> Column:
-    lt = F.lower(text)
-    n = F.length(lt)
-    return F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(1), n - 2), lambda i: F.substring(lt, i, 3)
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def lang_predict_trigram(
-    text: Column, profiles: dict[str, dict[str, float]]
-) -> Column:
-    """Score a document against every language profile row-locally: the
-    sum of profile weights of its trigrams (cosine against the profile up
-    to the doc's own norm — rank-equivalent per doc). The model inlines
-    as literal maps; prediction is a single codegen'd expression, no
-    join, no shuffle. Ties and empty docs resolve to the
-    lexicographically LARGEST language name (``array_max`` over
-    (score, lang) structs) — deterministic, which is the property that
-    matters for replay.
-    """
-    grams = _char_trigrams(text)
-    scored = []
-    for lang in sorted(profiles):
-        m = F.create_map(
-            *[x for g, w in sorted(profiles[lang].items()) for x in (F.lit(g), F.lit(w))]
-        )
-        score = F.aggregate(
-            grams,
-            F.lit(0.0),
-            lambda acc, g: acc + F.coalesce(m[g], F.lit(0.0)),  # noqa: B023
-        )
-        scored.append(F.struct(score.alias("s"), F.lit(lang).alias("lang")))
-    # array_max on (score, lang) structs: max score, ties -> LAST lang in
-    # sort order; invert by taking max over (score, reversed-rank) — keep
-    # it simple and deterministic: highest score, then lexicographically
-    # LARGEST lang. Documented determinism is what matters for replay.
-    return F.array_max(F.array(*scored))["lang"]
-
-
 def compression_ratio(df, text_col: str, out_col: str = "compression_ratio"):
     """zlib compressed-size / raw-size per document — the classic
     "too repetitive / too random" quality signal (Gopher-family rules):

@@ -4,8 +4,6 @@ from hrdp_variant_load_pipeline_spark.operators.interval_join import (
     overlap_predicate,
 )
 from hrdp_variant_load_pipeline_spark.operators.upsert import (
-    anti_join_new,
-    assign_surrogate_ids,
     merge_update,
 )
 
@@ -13,7 +11,5 @@ __all__ = [
     "interval_join",
     "interval_join_binned",
     "overlap_predicate",
-    "anti_join_new",
-    "assign_surrogate_ids",
     "merge_update",
 ]

@@ -172,122 +172,6 @@ def ivf_store_topk(
     return _rank_topk(scored, k)
 
 
-# ---------------------------------------------------------------- IVF-PQ
-# the billion-scale shape: the store holds PQ CODES (m small ints per
-# vector), not raw embeddings — index bytes per vector drop from 8*dim
-# to ~m, and probes score candidates by ADC against a broadcast LUT
-
-
-def append_ivfpq_batch(
-    vectors: DataFrame,
-    coarse_codebook: DataFrame,
-    codebooks: DataFrame,
-    store_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cluster_partitions: int | None = None,
-) -> int:
-    """Bucket-assign + PQ-encode a vector batch (both row-local literal
-    arithmetic — the corpus never shuffles) and append (bucket, id,
-    codes) to the store clustered by bucket. Codebooks must be the SAME
-    every call; retraining means a rebuild."""
-    from hrdp_variant_load_pipeline_spark.operators.pq import (
-        _collect_codebooks,
-        coarse_bucket_expr,
-        pq_encode,
-    )
-
-    coarse = _collect_codebooks(coarse_codebook)[0]
-    enc = pq_encode(
-        vectors.withColumn("__bucket", coarse_bucket_expr(coarse, vec_col)),
-        codebooks,
-        id_col=id_col,
-        vec_col=vec_col,
-    ).select(
-        F.col("__bucket").alias("bucket"),
-        F.col(id_col).alias("vec_id"),
-        "pq_codes",
-    )
-    n = enc.count()
-    append_to_store(
-        enc, store_dir, cluster_by=["bucket"],
-        cluster_partitions=cluster_partitions,
-    )
-    return n
-
-
-def ivfpq_store_topk(
-    spark: SparkSession,
-    store_dir: str,
-    queries: DataFrame,
-    coarse_codebook: DataFrame,
-    codebooks: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
-    """ADC top-k over the persisted code store, reading ONLY the probed
-    buckets (static ``bucket IN`` filter pushed to parquet, same
-    contract as :func:`ivf_store_topk`). Matches ``pq.ivfpq_topk``'s
-    schema, rounding, and tie rules exactly (pinned).
-
-    Output: (query_id, neighbor_id, approx_dist, rank).
-    """
-    from pyspark.sql import Window
-
-    from hrdp_variant_load_pipeline_spark.operators.pq import (
-        _collect_codebooks,
-        _lut_expr,
-        adc_score_expr,
-        coarse_probes_expr,
-    )
-
-    coarse = _collect_codebooks(coarse_codebook)[0]
-    cb = _collect_codebooks(codebooks)
-    m, n_codes = len(cb), len(cb[0])
-    # model-sized: one compute feeds the driver bucket collect and the join
-    q = snapshot(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            _lut_expr(cb, vec_col).alias("__lut"),
-            coarse_probes_expr(coarse, vec_col, nprobe).alias("__probes"),
-        ).select("query_id", "__lut", F.explode("__probes").alias("bucket")),
-        reliable=False,
-    )
-    needed = sorted(
-        {r["bucket"] for r in q.select("bucket").distinct().collect()}
-    )
-    idx = _live_vectors(
-        spark,
-        store_dir,
-        read_store(
-            spark,
-            store_dir,
-            schema="bucket INT, vec_id BIGINT, pq_codes ARRAY<INT>",
-        ).filter(F.col("bucket").isin(needed)),
-    )
-    score = adc_score_expr(m, n_codes)
-    return (
-        idx.join(F.broadcast(q), "bucket")
-        .where("vec_id != query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(score, 6).alias("approx_dist"),
-        )
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.asc("approx_dist"), F.asc("neighbor_id")
-                )
-            ),
-        )
-        .where(F.col("rank") <= k)
-    )
-
-
 # ------------------------------------------------ incremental semantic dedup
 def incremental_semantic_dedup(
     new_vectors: DataFrame,
@@ -429,47 +313,6 @@ def incremental_semantic_dedup(
     return flagged
 
 
-def describe_ivf_index(spark: SparkSession, store_dir: str) -> dict:
-    """Index health report: the two numbers that degrade probes.
-
-    * BUCKET SKEW — a hot bucket makes every probe touching it scan its
-      whole row set (``max_bucket_frac``; the SemDeDup/IVF fix is more
-      centroids, i.e. smaller buckets);
-    * FRAGMENTATION — appends tile the bucket domain per batch, so
-      ``files_per_bucket`` grows with append count until a
-      ``compact_store(sort_by=["bucket", "vec_id"])`` re-tiles.
-
-    One bucket-keyed aggregate (n_centroids-sized result) + one file
-    listing; works on both the raw-vector and PQ-code stores.
-    """
-    idx = read_store(spark, store_dir)
-    # project the file name BEFORE aggregating: input_file_name() is
-    # non-deterministic and rejected inside aggregate arguments
-    rows = (
-        idx.select("bucket", F.input_file_name().alias("__f"))
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n"),
-            F.count_distinct("__f").alias("nf"),
-        )
-        .collect()
-    )
-    n_total = sum(r["n"] for r in rows)
-    max_bucket = max((r["n"] for r in rows), default=0)
-    return {
-        "n_vectors": int(n_total),
-        "n_buckets_used": len(rows),
-        "max_bucket_rows": int(max_bucket),
-        "max_bucket_frac": (
-            round(max_bucket / n_total, 6) if n_total else 0.0
-        ),
-        "files_per_bucket_max": max((r["nf"] for r in rows), default=0),
-        "files_per_bucket_avg": (
-            round(sum(r["nf"] for r in rows) / len(rows), 2) if rows else 0.0
-        ),
-    }
-
-
 # --------------------------------------------------------------- deletion
 # Tombstones live under `<store>/_tombstones`: the underscore prefix makes
 # the directory invisible to the index's own parquet scans (Hadoop's
@@ -558,10 +401,9 @@ def delete_from_ann_store(
     ids: DataFrame,
     id_col: str = "vec_id",
 ) -> int:
-    """Logical deletion for the persisted IVF / IVF-PQ index: tombstone
-    vector ids so probes (``ivf_store_topk`` / ``ivfpq_store_topk`` and
-    therefore ``incremental_semantic_dedup``'s history matching) exclude
-    them — the removal path when SemDeDup-flagged or taken-down
+    """Logical deletion for the persisted IVF index: tombstone vector
+    ids so probes (``ivf_store_topk`` and therefore
+    ``incremental_semantic_dedup``'s history matching) exclude them — the removal path when SemDeDup-flagged or taken-down
     documents must stop matching, without rewriting the clustered store.
 
     Ids not present in the store, or already tombstoned, are ignored —

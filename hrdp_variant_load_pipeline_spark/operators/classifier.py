@@ -99,21 +99,3 @@ def apply_logreg(model: dict, out_digits: int = 6) -> Column:
         z = z + F.lit(w) * ((F.coalesce(F.col(c), F.lit(mu)) - F.lit(mu)) / F.lit(sd))
     return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), out_digits)
 
-
-def quality_classifier_score(
-    df: DataFrame,
-    labeled: DataFrame,
-    feature_cols: list[str],
-    label_col: str = "label",
-    out_col: str = "clf_score",
-    **train_kw,
-) -> tuple[DataFrame, dict]:
-    """Convenience composition: train on ``labeled``, score ``df``;
-    returns (scored frame, model)."""
-    if out_col in df.columns:
-        raise ValueError(
-            f"quality_classifier_score: output column {out_col!r} already "
-            "exists on the input — pass a different out_col"
-        )
-    model = train_logreg(labeled, feature_cols, label_col, **train_kw)
-    return df.withColumn(out_col, apply_logreg(model)), model

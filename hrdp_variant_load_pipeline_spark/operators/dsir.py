@@ -340,17 +340,6 @@ def dsir_resample(
     )
 
 
-def dsir_select_topk(
-    scored: DataFrame, k: int, id_col: str, logw_col: str = "dsir_logw"
-) -> DataFrame:
-    """Deterministic hard top-k by weight (the no-noise variant some
-    pipelines use). Same TakeOrderedAndProject shape as dsir_resample —
-    right when k is human-sized; for corpus-fraction selection use
-    :func:`dsir_select_fraction`.
-    """
-    return scored.orderBy(F.col(logw_col).desc(), F.col(id_col)).limit(k)
-
-
 def dsir_select_fraction(
     scored: DataFrame,
     fraction: float,

@@ -216,112 +216,3 @@ def pq_topk(
         .where(F.col("rank") <= k)
     )
 
-
-def _lut_expr(cb: list[list[list[float]]], vec_col: str) -> Column:
-    parts = []
-    for j, codes in enumerate(cb):
-        d_sub = len(codes[0])
-        sl = F.slice(F.col(vec_col), j * d_sub + 1, d_sub)
-        parts.extend(_sqdist(sl, _lit_vec(c)) for c in codes)
-    return F.array(*parts)
-
-
-def coarse_bucket_expr(coarse: list[list[float]], vec_col: str):
-    """Nearest coarse-centroid id for a vector column — row-local literal
-    arithmetic (shared by ivfpq_topk and the persisted IVF-PQ store)."""
-    cdists = F.array(*[_sqdist(F.col(vec_col), _lit_vec(c)) for c in coarse])
-    return (F.array_position(cdists, F.array_min(cdists)) - 1).cast("int")
-
-
-def coarse_probes_expr(coarse: list[list[float]], vec_col: str, nprobe: int):
-    """Array of the ``nprobe`` nearest coarse-centroid ids for a query
-    vector column — row-local sort+slice."""
-    nb = len(coarse)
-    cdists = F.array(*[_sqdist(F.col(vec_col), _lit_vec(c)) for c in coarse])
-    idxs = F.sequence(F.lit(0), F.lit(nb - 1))
-    scored = F.transform(
-        idxs, lambda i: F.struct(F.get(cdists, i).alias("d"), i.alias("b"))
-    )
-    return F.transform(
-        F.slice(F.array_sort(scored), 1, min(nprobe, nb)),
-        lambda s: s["b"].cast("int"),
-    )
-
-
-def adc_score_expr(m: int, n_codes: int, lut_col: str = "__lut",
-                   codes_col: str = "pq_codes"):
-    """ADC distance: fold the m codes through the broadcast per-query
-    LUT (m*n_codes doubles)."""
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.get(F.col(lut_col), s * n_codes + F.get(F.col(codes_col), s)),
-    )
-
-
-def ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    coarse_codebook: DataFrame,
-    codebooks: DataFrame,
-    nprobe: int = 2,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-PQ: the coarse quantizer restricts candidates to ``nprobe``
-    probed buckets, PQ codes score them by ADC — together the standard
-    billion-scale recipe (candidate count bounded by the inverted file,
-    per-candidate cost by the code length).
-
-    ``coarse_codebook`` is just a one-subspace PQ codebook
-    (``train_pq_codebooks(corpus, m=1, n_codes=n_buckets)``) — full-vector
-    L2 k-means, the same metric the sub-quantizers use. This variant
-    encodes raw vectors rather than centroid residuals (classic IVFADC
-    subtracts the centroid first; raw encoding trades a little accuracy
-    for reusing one corpus-wide codebook verbatim).
-
-    Scale shape: bucket assignment AND encoding are row-local literal
-    arithmetic — the corpus is never shuffled or joined to index; the
-    query side (ids × nprobe probes, with the m×n_codes LUT) broadcasts
-    into a bucket equi-join, and ranking reuses the per-query window.
-
-    Output: (query_id, neighbor_id, approx_dist, rank).
-    """
-    coarse = _collect_codebooks(coarse_codebook)[0]
-    cb = _collect_codebooks(codebooks)
-    m, n_codes = len(cb), len(cb[0])
-
-    enc = pq_encode(
-        corpus.withColumn("__bucket", coarse_bucket_expr(coarse, vec_col)),
-        codebooks,
-        id_col=id_col,
-        vec_col=vec_col,
-    ).select(F.col(id_col).alias("neighbor_id"), "__bucket", "pq_codes")
-
-    # explode must be the select's top-level expression (no nesting)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _lut_expr(cb, vec_col).alias("__lut"),
-        coarse_probes_expr(coarse, vec_col, nprobe).alias("__probes"),
-    ).select("query_id", "__lut", F.explode("__probes").alias("__bucket"))
-    score = adc_score_expr(m, n_codes)
-    return (
-        enc.join(F.broadcast(q), "__bucket")
-        .where("neighbor_id != query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(score, 6).alias("approx_dist"),
-        )
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.asc("approx_dist"), F.asc("neighbor_id")
-                )
-            ),
-        )
-        .where(F.col("rank") <= k)
-    )

@@ -240,8 +240,9 @@ def brute_force_topk_blas(
     return _rank_topk(partial, k)
 
 
-# crossover measured r14 (tools/cosine_dispatch_probe.py, local[32],
-# 10 queries, k=5, dim 64, best-of-3, parity asserted per rung):
+# crossover measured r14 (BENCH_NOTES.md "embedding_cosine_topk dispatch
+# crossover": local[32], 10 queries, k=5, dim 64, best-of-3, parity
+# asserted per rung):
 #   rows   2k     10k    25k    50k    100k   200k
 #   jvm    0.43   0.50   0.61   0.87   1.22   2.22
 #   blas   0.51   0.48   0.47   0.40   0.46   0.53
@@ -681,98 +682,6 @@ def near_dup_pairs_lsh(
         )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
-    )
-
-
-def normalize_embeddings(
-    df: DataFrame, vec_col: str = "embedding", out_col: str | None = None
-) -> DataFrame:
-    """Unit-normalize an embedding column row-locally (zero vectors pass
-    through unchanged to avoid 0/0). Cosine over unit vectors reduces to
-    a dot product — precompute once, skip the per-pair norm divisions."""
-    out = out_col or vec_col
-    n = F.sqrt(
-        F.aggregate(
-            F.transform(F.col(vec_col), lambda x: x * x),
-            F.lit(0.0),
-            lambda a, v: a + v,
-        )
-    )
-    return df.withColumn(
-        out,
-        F.when(
-            n > 0, F.transform(F.col(vec_col), lambda x: x / n)
-        ).otherwise(F.col(vec_col)),
-    )
-
-
-def truncate_embeddings(
-    df: DataFrame,
-    dim: int,
-    vec_col: str = "embedding",
-    renormalize: bool = True,
-) -> DataFrame:
-    """Matryoshka-style prefix truncation: keep the first ``dim``
-    components (MRL-trained encoders pack the most information there),
-    optionally re-unit-normalizing — the cheap accuracy/cost dial for
-    search and storage (a 4x truncation is a 4x cut in broadcast bytes,
-    dot-product FLOPs, and index size). Row-local."""
-    out = df.withColumn(vec_col, F.slice(F.col(vec_col), 1, dim))
-    return normalize_embeddings(out, vec_col) if renormalize else out
-
-
-def hard_negatives(
-    corpus: DataFrame,
-    label_col: str,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    queries: DataFrame | None = None,
-) -> DataFrame:
-    """Hard-negative mining for contrastive training: for each anchor, the
-    ``k`` most-similar items with a DIFFERENT label — the near-misses a
-    loss learns most from (random negatives are trivially separable).
-
-    Same plan shape as ``brute_force_topk`` (anchor side broadcast, one
-    per-anchor window) with the label inequality pushed into the pair
-    predicate, so same-label pairs are dropped before scoring work, not
-    after ranking (ranking after dropping would silently return
-    same-label "negatives" when fewer than k cross-label items exist —
-    instead short groups just yield fewer rows). At scale, swap the
-    corpus side for an ``ivf_topk``-bucketed variant the same way the
-    search path does.
-
-    Output: (anchor_id, negative_id, cosine, rank).
-    """
-    q = (queries if queries is not None else corpus).select(
-        F.col(id_col).alias("anchor_id"),
-        F.col(label_col).alias("anchor_label"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("negative_id"),
-        F.col(label_col).alias("c_label"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
-    )
-    return (
-        c.crossJoin(F.broadcast(q))
-        .where(
-            (F.col("negative_id") != F.col("anchor_id"))
-            & ~F.col("c_label").eqNullSafe(F.col("anchor_label"))
-        )
-        .selectExpr(
-            "anchor_id",
-            "negative_id",
-            f"round({_dot_sql('q_vec', 'c_vec')} / (q_norm * c_norm), 6) AS cosine",
-        )
-        .selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY anchor_id "
-            "ORDER BY cosine DESC, negative_id ASC) AS rank",
-        )
-        .where(f"rank <= {k}")
     )
 
 

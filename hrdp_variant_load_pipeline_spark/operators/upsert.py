@@ -22,43 +22,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def anti_join_new(incoming: DataFrame, store: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Rows of ``incoming`` whose key is absent from ``store``.
-
-    Null-safe on every key (the reference compares ref/var nucleotides with
-    null-tolerant equality, rgdcore Utils.stringsAreEqual).
-    """
-    cond = None
-    for k in keys:
-        c = incoming[k].eqNullSafe(store[k])
-        cond = c if cond is None else cond & c
-    return incoming.join(store, cond, "left_anti")
-
-
-def assign_surrogate_ids(
-    df: DataFrame,
-    order_by: Sequence[str],
-    base_id: int,
-    id_col: str = "rgd_id",
-) -> DataFrame:
-    """Deterministic, parallel surrogate-key allocation (S9).
-
-    ``row_number()`` over an explicit total order + scalar offset replaces
-    the reference's serial Oracle sequence. The single-window (no
-    partitionBy) plan is a rank over one sorted exchange; at extreme scale
-    switch to zipWithIndex-style per-partition offsets — kept simple here
-    because new-variant batches are small relative to the scan.
-    """
-    w = Window.orderBy(*order_by)
-    return df.withColumn(id_col, (F.row_number().over(w) + F.lit(base_id)).cast("long"))
-
-
 def assign_surrogate_ids_scalable(
     df: DataFrame,
     order_by: Sequence,
     base_id: int,
     id_col: str = "rgd_id",
-    num_partitions: int | None = None,
     cache_registry: list | None = None,
 ) -> DataFrame:
     """Surrogate-key allocation without the single-partition sort.
@@ -69,7 +37,7 @@ def assign_surrogate_ids_scalable(
     adds per-partition offsets computed from a tiny one-row-per-partition
     aggregate. The partitioned frame is persisted so the offset pass and
     the id pass see identical partition ids. Result ids are identical to
-    the global-window version for any total order.
+    a global ``row_number()`` window for any total order.
 
     The internal persist outlives this call (the returned frame reads it
     lazily); pass ``cache_registry`` to receive the persisted frame and
@@ -77,9 +45,8 @@ def assign_surrogate_ids_scalable(
     sessions (streaming micro-batches) leak cache otherwise.
     """
     spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
     ranged = (
-        df.repartitionByRange(n, *order_by)
+        df.repartitionByRange(spark.sparkContext.defaultParallelism, *order_by)
         .sortWithinPartitions(*order_by)
         .withColumn("__pid", F.spark_partition_id())
         .persist()
@@ -264,7 +231,6 @@ def scd2_lookup(
     fact_ts_col: str,
     from_col: str = "effective_from",
     to_col: str = "effective_to",
-    broadcast_history: bool = True,
 ) -> DataFrame:
     """Point-in-time enrichment against an SCD2 history: each fact row
     joins the dimension version valid AT its timestamp
@@ -274,15 +240,10 @@ def scd2_lookup(
     non-overlapping and contiguous, so the residual range predicate
     matches at most one version per key — the join stays 1:1 and facts
     before a key's first version get nulls (left join). Dimension
-    histories are dimension-sized, so the default broadcasts them and the
-    fact table never shuffles; pass ``broadcast_history=False`` for a
-    genuinely large history (equi-join on keys + residual range, AQE
-    sizing the build side).
+    histories are dimension-sized, so the history is broadcast and the
+    fact table never shuffles.
     """
     ks = list(keys)
-    h = history
-    if broadcast_history:
-        h = F.broadcast(h)
     ts = F.col(fact_ts_col)
     # the range predicate must be part of the JOIN condition, not a
     # post-filter: filtered afterwards, a fact older than its key's first
@@ -293,4 +254,4 @@ def scd2_lookup(
     )
     for k in ks:
         cond = cond & (facts[k] == history[k])
-    return facts.join(h, cond, "left").drop(*[history[k] for k in ks])
+    return facts.join(F.broadcast(history), cond, "left").drop(*[history[k] for k in ks])

@@ -154,7 +154,7 @@ def parse_variants(vcf: DataFrame, genes: DataFrame, map_key: int) -> DataFrame:
     cand = lines.select(
         *LINE_KEY,
         "rs_id",
-        F.col("multi").alias("is_copy") if "multi" in lines.columns else multi.alias("is_copy"),
+        multi.alias("is_copy"),
         F.posexplode(alleles).alias("allele_idx", "allele"),
     ).select(
         *LINE_KEY,
@@ -265,8 +265,6 @@ def run_load(
     next_rgd_id: int | None = None,
 ) -> LoadResult:
     """Full ``--runLoad`` equivalent. All outputs are lazy DataFrames."""
-    spark = vcf.sparkSession
-
     cand = parse_variants(vcf, genes, map_key)
     matched = _dedup_against_store(cand, variant_store)
 
@@ -275,7 +273,8 @@ def run_load(
         next_rgd_id = (row["m"] or 0) + 1
 
     # id allocation (S9): only NEW rows get ids, via the range-partitioned
-    # parallel allocator — never a global single-partition window
+    # parallel allocator — never a global single-partition window.
+    # Imported at call time: perfbench's tracer wraps the module attribute.
     from hrdp_variant_load_pipeline_spark.operators.upsert import (
         assign_surrogate_ids_scalable,
     )
@@ -449,7 +448,6 @@ def run_load(
         )
     )
 
-    _ = spark
     return LoadResult(
         new_variants=new_variants,
         end_pos_updates=end_pos_updates,

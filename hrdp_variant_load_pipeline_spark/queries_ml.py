@@ -595,7 +595,7 @@ def embedding_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
     # 10k corpus rows (no Python-worker/Arrow startup — the r13 BLAS
     # adoption cost sf0.1 1.60x), the Arrow/BLAS batch-dot form above
     # (0.24x the JVM form at the 200k-row staged sf10). Crossover
-    # measured in tools/cosine_dispatch_probe.py; both forms bit-equal.
+    # recorded in BENCH_NOTES.md; both forms bit-equal.
     e = table(spark, sf, "embeddings")
     return SIM.brute_force_topk_auto(e, e.filter(F.col("vec_id") < 10), k=5)
 

@@ -2,9 +2,9 @@
 
 The reference writes four Oracle tables through hand-rolled batched JDBC
 (10 000-row insert batches, ``DAO.java:68-119``; 5 000-row update batches,
-``DAO.java:142-163``). The engine's native store is partitioned Parquet
-(or Delta where available); JDBC stays supported for sink compatibility
-with the same batching.
+``DAO.java:142-163``). The engine's native stores are the versioned
+parquet stores of ``sources/store.py``; JDBC stays supported for sink
+compatibility with the same batching.
 
 ``variant`` + ``variant_map_data`` are materialized from the engine's
 unified variant DataFrame only at the sink boundary — they are 1:1 on
@@ -45,17 +45,6 @@ def rgd_ids_registry(variants: DataFrame) -> DataFrame:
         F.lit("ACTIVE").alias("object_status"),
         "species_type_key",
     )
-
-
-def write_parquet_store(
-    df: DataFrame, path: str, partition_by: list[str] | None = None, mode: str = "append"
-) -> None:
-    """Engine-native sink: Parquet partitioned by e.g. (map_key, chromosome)
-    so downstream interval joins and QC scans prune partitions."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
 
 
 def write_jdbc(

@@ -378,59 +378,6 @@ def append_to_store(
     return obs.get["rows"]
 
 
-def z_order_key(
-    df: DataFrame, cols: list[str], bits: int = 12, out_col: str = "z_key"
-) -> DataFrame:
-    """Append an interleaved-bit Z-order key over ``cols`` — the
-    multi-dimension complement to ``compact_store(sort_by=...)``.
-
-    A 1-D sort clusters perfectly on its leading column and not at all on
-    the others; sorting by the Z-curve key keeps EVERY listed dimension's
-    values locally narrow per file, so footer min/max stats prune
-    multi-predicate probes (chromosome AND position range; time AND user)
-    on all of them at once. This is the same design as Delta/Iceberg's
-    OPTIMIZE ZORDER, reduced to its dependency-free core.
-
-    Each column is min/max-normalized (one tiny driver-side aggregate)
-    into ``bits`` uniform buckets, then bit-interleaved row-locally with
-    shift/or arithmetic — no shuffle here; the range shuffle happens in
-    the compaction that sorts by the key. Uniform bucketing trades the
-    quantile pass real table formats do for zero extra jobs; heavily
-    skewed columns cluster less evenly but correctness (pruning validity)
-    is unaffected. Null values bucket to 0.
-    """
-    if bits * len(cols) > 63:
-        raise ValueError(
-            f"bits({bits}) * columns({len(cols)}) exceeds the 63-bit key "
-            "budget: Spark's shiftleft wraps shift amounts mod 64, which "
-            "would silently scramble the curve — lower bits or split the "
-            "column set"
-        )
-    agg = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"__lo_{c}") for c in cols],
-        *[F.max(F.col(c).cast("double")).alias(f"__hi_{c}") for c in cols],
-    ).collect()[0]
-    n = len(cols)
-    buckets = (1 << bits) - 1
-    z = F.lit(0).cast("long")
-    for i, c in enumerate(cols):
-        lo, hi = agg[f"__lo_{c}"], agg[f"__hi_{c}"]
-        span = (hi - lo) if (hi is not None and lo is not None and hi > lo) else 1.0
-        v = F.floor(
-            (F.coalesce(F.col(c).cast("double"), F.lit(lo or 0.0)) - F.lit(lo or 0.0))
-            / F.lit(span)
-            * buckets
-        ).cast("long")
-        v = F.least(F.greatest(v, F.lit(0)), F.lit(buckets))
-        for b in range(bits):
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(v, b).bitwiseAND(F.lit(1)), b * n + i
-                )
-            )
-    return df.withColumn(out_col, z)
-
-
 def describe_store(spark: SparkSession, root: str) -> dict:
     """Operational introspection without scanning data: retained versions,
     current version's file count / bytes / row count — all from listings

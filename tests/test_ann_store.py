@@ -75,37 +75,6 @@ def test_index_files_are_bucket_disjoint(spark, tmp_path):
     assert all(hi - lo <= 4 for lo, hi in spans), spans
 
 
-def test_ivfpq_store_probe_matches_ivfpq_topk(spark, tmp_path):
-    """The code store (bucket, id, pq_codes) probed by ADC must equal
-    pq.ivfpq_topk over the same corpus + codebooks, across a two-batch
-    incremental build; the probe's bucket filter reaches the scan."""
-    from hrdp_variant_load_pipeline_spark.operators.ann_store import (
-        append_ivfpq_batch,
-        ivfpq_store_topk,
-    )
-    from hrdp_variant_load_pipeline_spark.operators.pq import (
-        ivfpq_topk,
-        train_pq_codebooks,
-    )
-
-    e = spark.read.parquet(EMB)
-    coarse = train_pq_codebooks(e, m=1, n_codes=8, n_iter=3)
-    cb = train_pq_codebooks(e, m=4, n_codes=16, n_iter=3)
-    store = str(tmp_path / "ivfpq")
-    n1 = append_ivfpq_batch(e.filter(F.col("vec_id") % 2 == 0), coarse, cb, store)
-    n2 = append_ivfpq_batch(e.filter(F.col("vec_id") % 2 == 1), coarse, cb, store)
-    assert n1 + n2 == e.count()
-    queries = e.filter(F.col("vec_id") < 6)
-    probe = ivfpq_store_topk(spark, store, queries, coarse, cb, k=5, nprobe=2)
-    got = sorted(map(tuple, probe.collect()))
-    want = sorted(map(tuple, ivfpq_topk(
-        e, queries, coarse, cb, nprobe=2, k=5
-    ).collect()))
-    assert got == want and got
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [In(bucket" in plan.replace("\n", " "), plan
-
-
 def test_compaction_preserves_probe_results(spark, tmp_path):
     """Per-append clustering fragments across MANY appends (each append's
     files tile the bucket domain independently); periodic
@@ -189,30 +158,6 @@ def test_incremental_semantic_dedup_vs_history_and_replay(spark, tmp_path):
         assert got[20_002] is True  # larger id is the duplicate
 
 
-def test_describe_ivf_index_reports_skew_and_fragmentation(spark, tmp_path):
-    from hrdp_variant_load_pipeline_spark.operators.ann_store import (
-        describe_ivf_index,
-    )
-    from hrdp_variant_load_pipeline_spark.sources.store import compact_store
-
-    e = spark.read.parquet(EMB)
-    cents = train_centroids(e, n_centroids=8, n_iter=3)
-    store = str(tmp_path / "ivf")
-    for i in range(3):  # 3 appends -> fragmented tiling
-        append_ivf_batch(e.filter(F.col("vec_id") % 3 == i), cents, store)
-    d = describe_ivf_index(spark, store)
-    assert d["n_vectors"] == e.count()
-    assert 1 <= d["n_buckets_used"] <= 8
-    assert 0 < d["max_bucket_frac"] <= 1.0
-    frag_before = d["files_per_bucket_max"]
-    assert frag_before >= 2  # multiple appends tile independently
-    compact_store(spark, store, target_partitions=2,
-                  sort_by=["bucket", "vec_id"])
-    d2 = describe_ivf_index(spark, store)
-    assert d2["n_vectors"] == d["n_vectors"]
-    assert d2["files_per_bucket_max"] <= frag_before  # re-tiled
-
-
 def test_delete_tombstones_vectors_and_matches_filtered_recompute(
     spark, tmp_path
 ):
@@ -253,38 +198,6 @@ def test_delete_tombstones_vectors_and_matches_filtered_recompute(
         reingest, cents, store, append_kept=False
     )
     assert [r.is_semantic_dup for r in flagged.collect()] == [True]
-
-
-def test_delete_applies_to_ivfpq_probe_too(spark, tmp_path):
-    """The second probe path: after deletion the ADC probe equals
-    ivfpq_topk over the surviving corpus."""
-    from hrdp_variant_load_pipeline_spark.operators.ann_store import (
-        append_ivfpq_batch,
-        delete_from_ann_store,
-        ivfpq_store_topk,
-    )
-    from hrdp_variant_load_pipeline_spark.operators.pq import (
-        ivfpq_topk,
-        train_pq_codebooks,
-    )
-
-    e = spark.read.parquet(EMB)
-    coarse = train_pq_codebooks(e, m=1, n_codes=8, n_iter=3)
-    cb = train_pq_codebooks(e, m=4, n_codes=16, n_iter=3)
-    store = str(tmp_path / "ivfpq")
-    append_ivfpq_batch(e, coarse, cb, store)
-    victims = e.filter(F.col("vec_id") % 6 == 0).select("vec_id")
-    assert delete_from_ann_store(spark, store, victims) == victims.count()
-    queries = e.filter(F.col("vec_id") < 6)
-    got = sorted(map(tuple, ivfpq_store_topk(
-        spark, store, queries, coarse, cb, k=5, nprobe=2
-    ).collect()))
-    want = sorted(map(tuple, ivfpq_topk(
-        e.filter(F.col("vec_id") % 6 != 0), queries, coarse, cb,
-        nprobe=2, k=5,
-    ).collect()))
-    assert got == want and got
-    assert all(t[1] % 6 != 0 for t in got)
 
 
 def test_vacuum_purges_rows_but_keeps_consumed_ids(spark, tmp_path):

@@ -16,7 +16,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from hrdp_variant_load_pipeline_spark.cli import _atomic_replace_store
 from hrdp_variant_load_pipeline_spark.sources.store import (
     COMMIT_MARKER,
     append_to_store,
@@ -41,7 +40,7 @@ def test_failed_write_leaves_original_store_readable(spark, tmp_path):
         F.assert_true(F.col("id") < 0).alias("boom"), F.col("id")
     )
     with pytest.raises(Exception):
-        _atomic_replace_store(poison, store)
+        commit_store_version(poison, store)
 
     out = read_store(spark, store)
     assert out.count() == 10
@@ -53,7 +52,7 @@ def test_successful_swap_replaces_content(spark, tmp_path):
     _mk_flat(spark, store)
 
     new = spark.range(3).withColumn("tag", F.lit("repaired"))
-    _atomic_replace_store(new, store)
+    commit_store_version(new, store)
 
     out = read_store(spark, store)
     assert out.count() == 3
@@ -66,7 +65,7 @@ def test_successful_swap_replaces_content(spark, tmp_path):
 
 def test_first_write_with_no_existing_store(spark, tmp_path):
     store = str(tmp_path / "store")
-    _atomic_replace_store(spark.range(4), store)
+    commit_store_version(spark.range(4), store)
     assert read_store(spark, store).count() == 4
 
 
@@ -118,7 +117,7 @@ def test_stale_temp_dirs_from_prior_crash_are_cleared(spark, tmp_path):
     store = str(tmp_path / "store")
     _mk_flat(spark, store)
     os.makedirs(store + "/.v_00000001.writing")
-    _atomic_replace_store(spark.range(2), store)
+    commit_store_version(spark.range(2), store)
     assert read_store(spark, store).count() == 2
     assert not any(k.endswith(".writing") for k in os.listdir(store))
 
@@ -270,67 +269,6 @@ def _interleave_ref(vals, bits):
     return z
 
 
-def test_z_order_key_matches_bit_interleave_reference(spark):
-    from hrdp_variant_load_pipeline_spark.sources.store import z_order_key
-
-    # x, y already in [0, 2^4): min/max normalization maps value v of the
-    # observed span [0, 15] to bucket floor(v/15*15) = v
-    df = spark.createDataFrame(
-        [(x, y) for x in range(16) for y in range(16)], "x long, y long"
-    )
-    out = z_order_key(df, ["x", "y"], bits=4)
-    for r in out.collect():
-        assert r["z_key"] == _interleave_ref([r["x"], r["y"]], 4), (r["x"], r["y"])
-
-
-def test_z_order_compaction_clusters_both_dimensions(spark, tmp_path):
-    """After a z-sorted compaction, EVERY file's min/max range is narrow in
-    BOTH dimensions; a 1-D sort on x leaves y's per-file spread at ~the
-    global spread. This is exactly the footer-stats property that lets a
-    2-predicate probe skip files on either dimension."""
-    import pyarrow.parquet as pq
-
-    from hrdp_variant_load_pipeline_spark.sources.store import (
-        compact_store,
-        z_order_key,
-    )
-
-    n = 64
-    grid = spark.createDataFrame(
-        [(x, y, x * n + y) for x in range(n) for y in range(n)],
-        "x long, y long, payload long",
-    )
-
-    def spreads(path, col):
-        out = []
-        for f in os.listdir(path):
-            if not f.startswith("part-"):
-                continue
-            md = pq.ParquetFile(os.path.join(path, f)).metadata
-            cols = {md.schema.column(i).name: i for i in range(len(md.schema))}
-            st = [
-                md.row_group(g).column(cols[col]).statistics
-                for g in range(md.num_row_groups)
-            ]
-            out.append(max(s.max for s in st) - min(s.min for s in st))
-        return out
-
-    zstore = str(tmp_path / "zstore")
-    commit_store_version(z_order_key(grid, ["x", "y"], bits=6), zstore)
-    zpath = compact_store(spark, zstore, target_partitions=16, sort_by=["z_key"])
-
-    xstore = str(tmp_path / "xstore")
-    commit_store_version(grid, xstore)
-    xpath = compact_store(spark, xstore, target_partitions=16, sort_by=["x"])
-
-    # z-order: both dimensions narrow per file (Z-curve cell ~ n/4 here)
-    assert max(spreads(zpath, "x")) <= n / 2
-    assert max(spreads(zpath, "y")) <= n / 2
-    # 1-D sort: x narrow but y spans ~everything in every file
-    assert max(spreads(xpath, "x")) <= n / 2
-    assert min(spreads(xpath, "y")) >= n - 1
-
-
 def test_describe_store_reports_versions_files_rows(spark, tmp_path):
     from hrdp_variant_load_pipeline_spark.sources.store import describe_store
 
@@ -345,16 +283,6 @@ def test_describe_store_reports_versions_files_rows(spark, tmp_path):
     commit_store_version(spark.range(10), store)
     d2 = describe_store(spark, store)
     assert d2["versions_retained"] == [1, 2] and d2["n_rows"] == 10
-
-
-def test_z_order_key_rejects_bit_budget_overflow(spark):
-    import pytest
-
-    from hrdp_variant_load_pipeline_spark.sources.store import z_order_key
-
-    df = spark.createDataFrame([(1, 2, 3, 4, 5, 6)], "a long, b long, c long, d long, e long, f long")
-    with pytest.raises(ValueError, match="63-bit"):
-        z_order_key(df, ["a", "b", "c", "d", "e", "f"], bits=12)
 
 
 def _file_ranges(spark, path, key):

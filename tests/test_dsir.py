@@ -15,7 +15,6 @@ from hrdp_variant_load_pipeline_spark.operators.dsir import (
     bucket_logratio,
     dsir_log_weight,
     dsir_resample,
-    dsir_select_topk,
     featurize,
     hashed_ngram_buckets,
 )
@@ -169,7 +168,10 @@ def test_topk_and_resample_are_deterministic_and_weight_driven(spark, frames):
     scored = dsir_log_weight(raw, lr, "text", B)
     want = _py_weights()
 
-    top3 = [r["doc_id"] for r in dsir_select_topk(scored, 3, "doc_id").collect()]
+    top3 = [
+        r["doc_id"]
+        for r in scored.orderBy(F.desc("dsir_logw"), "doc_id").limit(3).collect()
+    ]
     expect_order = sorted(want, key=lambda k: (-want[k], k))[:3]
     assert top3 == expect_order
 

@@ -124,75 +124,6 @@ def test_ivf_recall_at_5_on_real_embeddings(spark):
     assert recalls[3] >= recalls[2], recalls
 
 
-def test_normalize_and_truncate_embeddings(spark):
-    from hrdp_variant_load_pipeline_spark.operators.similarity import (
-        normalize_embeddings,
-        truncate_embeddings,
-    )
-    from hrdp_variant_load_pipeline_spark.sources.tables import table
-
-    e = table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    normed = normalize_embeddings(e)
-    for r in normed.limit(20).collect():
-        assert abs(sum(x * x for x in r.embedding) - 1.0) < 1e-9
-    # zero vector passes through
-    z = spark.createDataFrame([(1, [0.0, 0.0])], "vec_id long, embedding array<double>")
-    assert normalize_embeddings(z).first().embedding == [0.0, 0.0]
-    tr = truncate_embeddings(e, 16)
-    for r in tr.limit(20).collect():
-        assert len(r.embedding) == 16
-        assert abs(sum(x * x for x in r.embedding) - 1.0) < 1e-9
-
-
-def test_truncated_search_still_finds_exact_duplicate(spark):
-    """The MRL dial: after 4x truncation an exact-duplicate vector must
-    still retrieve its original at rank 1 (cosine 1 on any prefix)."""
-    from hrdp_variant_load_pipeline_spark.operators.similarity import (
-        truncate_embeddings,
-    )
-    from hrdp_variant_load_pipeline_spark.sources.tables import table
-
-    e = table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    te = truncate_embeddings(e, 16)
-    probe = te.filter(F.col("vec_id") == 3).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    top = brute_force_topk(te, probe, k=1).collect()
-    assert top[0]["neighbor_id"] == 3 and top[0]["cosine"] > 0.9999
-
-
-def test_hard_negatives_exclude_same_label(spark):
-    from hrdp_variant_load_pipeline_spark.operators.similarity import (
-        hard_negatives,
-    )
-    from hrdp_variant_load_pipeline_spark.sources.tables import table
-
-    e = table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    labels = {r.vec_id: r.label for r in e.select("vec_id", "label").collect()}
-    out = hard_negatives(
-        e, "label", k=3, queries=e.filter(F.col("vec_id") < 10)
-    ).collect()
-    assert {r["anchor_id"] for r in out} == set(range(10))
-    for r in out:
-        assert labels[r["negative_id"]] != labels[r["anchor_id"]]
-        assert 1 <= r["rank"] <= 3
-    # hardest negative first
-    by_anchor: dict = {}
-    for r in out:
-        by_anchor.setdefault(r["anchor_id"], []).append(r)
-    for rows in by_anchor.values():
-        ranked = sorted(rows, key=lambda r: r["rank"])
-        assert all(
-            a["cosine"] >= b["cosine"] for a, b in zip(ranked, ranked[1:])
-        )
-
-
 def test_incremental_topk_equals_full_recompute(spark):
     """Folding corpus batches through incremental_topk must reproduce
     brute_force_topk over the union EXACTLY (same rounding/tie rules),

@@ -168,61 +168,3 @@ def test_codebooks_roundtrip_through_parquet(spark, tmp_path):
     enc_a = {r["vec_id"]: r["pq_codes"] for r in pq_encode(e, cb).collect()}
     enc_b = {r["vec_id"]: r["pq_codes"] for r in pq_encode(e, reread).collect()}
     assert enc_a == enc_b
-
-
-def test_ivfpq_matches_pq_on_probed_buckets_and_prunes(spark):
-    """IVF-PQ == plain PQ restricted to the probed buckets: with nprobe =
-    n_buckets (probe everything) results equal pq_topk exactly; with
-    nprobe=1 the candidate set shrinks but self-cluster hits survive."""
-    from hrdp_variant_load_pipeline_spark.operators.pq import ivfpq_topk
-
-    e = _embeddings(spark)
-    coarse = train_pq_codebooks(e, dim=64, m=1, n_codes=4, n_iter=3)
-    cb = train_pq_codebooks(e, dim=64, m=4, n_codes=8, n_iter=2)
-    q = e.filter(F.col("vec_id") < 5)
-
-    full = ivfpq_topk(e, q, coarse, cb, nprobe=4, k=3)
-    plain = pq_topk(pq_encode(e, cb), q, cb, k=3)
-    assert {tuple(r) for r in full.collect()} == {tuple(r) for r in plain.collect()}
-
-    pruned = ivfpq_topk(e, q, coarse, cb, nprobe=1, k=3)
-    rows = pruned.collect()
-    assert 0 < len(rows) <= 5 * 3
-
-
-def test_ivfpq_corpus_never_shuffled(spark):
-    """Plan guard: bucket assignment + encoding are row-local — no
-    Exchange may sit between the corpus scan and the bucket join's
-    probe side (the only exchanges are the query broadcast and the
-    final rank window)."""
-    from hrdp_variant_load_pipeline_spark.operators.pq import ivfpq_topk
-
-    e = _embeddings(spark)
-    coarse = train_pq_codebooks(e, dim=64, m=1, n_codes=4, n_iter=1)
-    cb = train_pq_codebooks(e, dim=64, m=4, n_codes=8, n_iter=1)
-    plan = (
-        ivfpq_topk(e, e.filter(F.col("vec_id") < 3), coarse, cb, nprobe=2, k=3)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    join_at = plan.index("BroadcastHashJoin")
-    scan_at = plan.index("Scan parquet", join_at)
-    probe_side = plan[join_at:scan_at]
-    assert "Exchange hashpartitioning" not in probe_side
-
-
-def test_ivfpq_respects_custom_column_names(spark):
-    """Regression: ivfpq_topk must forward id_col/vec_col to pq_encode —
-    a renamed embedding column used to crash (or silently encode an
-    unrelated default-named column)."""
-    from hrdp_variant_load_pipeline_spark.operators.pq import ivfpq_topk
-
-    e = _embeddings(spark).selectExpr("vec_id AS vid", "embedding AS vec")
-    coarse = train_pq_codebooks(e, id_col="vid", vec_col="vec", dim=64, m=1, n_codes=4, n_iter=1)
-    cb = train_pq_codebooks(e, id_col="vid", vec_col="vec", dim=64, m=4, n_codes=8, n_iter=1)
-    out = ivfpq_topk(
-        e, e.filter(F.col("vid") < 3), coarse, cb,
-        nprobe=4, k=2, id_col="vid", vec_col="vec",
-    )
-    assert out.count() == 3 * 2

@@ -178,54 +178,6 @@ def test_normalize_text_matches_duckdb(spark):
     assert got == want
 
 
-class TestTrigramLangId:
-    def _corpus(self, spark):
-        # two "languages" with genuinely distinct character distributions
-        rows = []
-        a_words = ["aba", "bab", "abba", "baab", "ab"]
-        b_words = ["zyz", "yzy", "zzyy", "yyzz", "zy"]
-        for i in range(40):
-            rows.append((i, "aa", " ".join(a_words[(i + j) % 5] for j in range(12))))
-            rows.append((100 + i, "bb", " ".join(b_words[(i + j) % 5] for j in range(12))))
-        return spark.createDataFrame(rows, "doc_id long, lang string, text string")
-
-    def test_trained_profiles_classify_held_out_docs(self, spark):
-        from hrdp_variant_load_pipeline_spark.functions.text import (
-            lang_predict_trigram,
-            train_lang_profiles,
-        )
-
-        d = self._corpus(spark)
-        train = d.filter(F.col("doc_id") % 2 == 0)
-        test = d.filter(F.col("doc_id") % 2 == 1)
-        prof = train_lang_profiles(train, "text", "lang", top_n=50)
-        assert set(prof) == {"aa", "bb"}
-        # discriminative training: no shared trigram survives in both
-        assert not (set(prof["aa"]) & set(prof["bb"]))
-        pred = test.select(
-            "lang", lang_predict_trigram(F.col("text"), prof).alias("p")
-        )
-        n = pred.count()
-        assert n > 0
-        assert pred.filter("lang = p").count() == n  # fully separable -> 100%
-
-    def test_prediction_is_row_local(self, spark):
-        from hrdp_variant_load_pipeline_spark.functions.text import (
-            lang_predict_trigram,
-            train_lang_profiles,
-        )
-
-        d = self._corpus(spark)
-        prof = train_lang_profiles(d, "text", "lang", top_n=20)
-        plan = (
-            d.select(lang_predict_trigram(F.col("text"), prof).alias("p"))
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Exchange" not in plan and "Join" not in plan
-
-
 def test_normalize_text_masks_uppercase_urls_and_emails(spark):
     """Regression: masking runs BEFORE lowercasing, so the patterns must
     be case-insensitive — uppercase schemes used to escape."""
@@ -236,21 +188,6 @@ def test_normalize_text_masks_uppercase_urls_and_emails(spark):
     )
     got = df.select(normalize_text(F.col("t")).alias("n")).first().n
     assert got == "visit <url> or <url> mail <email>"
-
-
-def test_train_lang_profiles_identical_corpora_yield_empty_profiles(spark):
-    """Languages whose corpora are indistinguishable have NO positive
-    discriminative trigrams — both profiles must still be present (empty),
-    not silently missing (the cluster-side top-N must not drop languages)."""
-    from hrdp_variant_load_pipeline_spark.functions.text import (
-        train_lang_profiles,
-    )
-
-    rows = [(1, "same shared text here", "aa"), (2, "same shared text here", "bb")]
-    d = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    prof = train_lang_profiles(d, "text", "lang", top_n=10)
-    assert set(prof) == {"aa", "bb"}
-    assert prof["aa"] == {} and prof["bb"] == {}
 
 
 def test_compression_ratio_separates_spam_noise_prose(spark):

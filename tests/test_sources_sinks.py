@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import functions as F
-
 from hrdp_variant_load_pipeline_spark import schemas
 from hrdp_variant_load_pipeline_spark.sources.config import (
     SAMPLE_DEFAULTS,
@@ -15,7 +13,6 @@ from hrdp_variant_load_pipeline_spark.sources.config import (
 from hrdp_variant_load_pipeline_spark.sources.sinks import (
     rgd_ids_registry,
     split_variant_sinks,
-    write_parquet_store,
 )
 
 
@@ -66,18 +63,6 @@ def test_rgd_ids_registry(spark):
     reg = rgd_ids_registry(_variant_rows(spark))
     rows = reg.collect()
     assert all(r["object_key"] == 6 and r["object_status"] == "ACTIVE" for r in rows)
-
-
-def test_write_parquet_store_partitioned(spark, tmp_path):
-    path = str(tmp_path / "store")
-    write_parquet_store(
-        _variant_rows(spark), path, partition_by=["map_key", "chromosome"], mode="overwrite"
-    )
-    back = spark.read.parquet(path)
-    assert back.count() == 2
-    # partition pruning: a chromosome filter must prune to one directory
-    pruned = back.filter(F.col("chromosome") == "1")
-    assert pruned.count() == 1
 
 
 class TestScd2Merge:
