@@ -23,14 +23,15 @@ Cheap row-local gates run BEFORE expensive corpus-wide stages so
 rejected docs never pay shingling or shuffles, mirroring the measured
 stage costs in BENCH_NOTES.md.
 
-Metrics: every enabled stage boundary persists and materializes its
-frame once (chained pin/release — exactly one stage cached at a time),
-which is what keeps the chain O(stages) instead of O(stages^2): stage
-counts AND the internal actions several stages perform (the DSIR
-log-ratio collect, the mixture-plan collect) would otherwise each
-re-execute the whole upstream lineage. ``collect_counts`` only
-controls whether the per-stage counts are REPORTED; the
-materialization is inherent to the pinning and happens either way.
+Metrics: every enabled stage boundary is materialized by ONE action
+that also counts it, and leaves ONE cached copy (chained pin/release —
+exactly one stage pinned at a time). A checkpointed boundary's action
+is its parquet write, counted on the way through (``DataFrame.observe``);
+the pin is the committed files read back. Any other boundary is a
+``persist()`` + ``count()``. The pinning keeps the chain O(stages)
+instead of O(stages^2): the internal actions several stages perform
+(the DSIR log-ratio collect, the mixture-plan collect) would otherwise
+each re-execute the whole upstream lineage.
 
 Crash resume: an optional ``checkpoint`` config block commits stage
 frames to parquet behind atomic markers (the versioned-store commit
@@ -46,9 +47,14 @@ import hashlib
 import json
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from hrdp_variant_load_pipeline_spark.runtime import release, snapshot
+from hrdp_variant_load_pipeline_spark.sources.store import (
+    _fs,
+    _jpath,
+    write_small_file,
+)
 
 
 @dataclass
@@ -102,33 +108,31 @@ _STAGE_KEYS = (
     "mixture",
 )
 
+#: config keys downstream of the stage frames (or plan-only, like
+#: ``skew``), never fingerprinted
+_OUTPUT_KEYS = ("chunk", "pack", "output", "checkpoint", "report", "skew")
+
+#: stage-block keys the fingerprint ignores: the report flags are
+#: audit-only (the stage FRAME is byte-identical with or without the
+#: audit, so toggling one must not invalidate a days-long run's
+#: checkpoints), and index_dir is a storage location, not a semantics
+#: knob (the dropped set is identical wherever the scratch index lands)
+_AUDIT_ONLY_KEYS = {
+    "decontaminate": ("report",),
+    "retrieval_decontaminate": ("report", "index_dir"),
+    "semantic_decontaminate": ("report",),
+}
+
 _MARKER = "_STAGE_COMMITTED.json"
 
 
 def _cfg_fingerprint(cfg: dict) -> str:
     payload = {k: cfg[k] for k in _STAGE_KEYS if k in cfg}
-    if isinstance(payload.get("decontaminate"), dict):
-        # the report flag is audit-only — the stage FRAME is byte-identical
-        # with or without it, so toggling it must not invalidate a
-        # days-long run's checkpoints
-        payload["decontaminate"] = {
-            k: v for k, v in payload["decontaminate"].items() if k != "report"
-        }
-    if isinstance(payload.get("retrieval_decontaminate"), dict):
-        # report is audit-only; index_dir is a storage location, not a
-        # semantics knob — the dropped set is identical wherever the
-        # scratch index lands
-        payload["retrieval_decontaminate"] = {
-            k: v
-            for k, v in payload["retrieval_decontaminate"].items()
-            if k not in ("report", "index_dir")
-        }
-    if isinstance(payload.get("semantic_decontaminate"), dict):
-        payload["semantic_decontaminate"] = {
-            k: v
-            for k, v in payload["semantic_decontaminate"].items()
-            if k != "report"
-        }
+    for stage, ignored in _AUDIT_ONLY_KEYS.items():
+        if isinstance(payload.get(stage), dict):
+            payload[stage] = {
+                k: v for k, v in payload[stage].items() if k not in ignored
+            }
     return hashlib.md5(
         json.dumps(payload, sort_keys=True).encode()
     ).hexdigest()
@@ -138,18 +142,12 @@ def _ck_write_marker(spark: SparkSession, path: str, payload: dict) -> None:
     """One atomic create commits the stage (the store-commit pattern,
     sources/store.py:192): data files without a marker are invisible to
     resume, so a crash mid-write just recomputes the stage."""
-    from hrdp_variant_load_pipeline_spark.sources.store import (
-        write_small_file,
-    )
-
     write_small_file(
         spark, path, json.dumps(payload).encode(), overwrite=False
     )
 
 
 def _ck_read_marker(spark: SparkSession, path: str) -> dict | None:
-    from hrdp_variant_load_pipeline_spark.sources.store import _fs, _jpath
-
     fs, jvm = _fs(spark, path)
     jp = _jpath(jvm, path)
     if not fs.exists(jp):
@@ -205,9 +203,7 @@ def _ingest(spark: SparkSession, cfg: dict) -> tuple[DataFrame, DataFrame | None
     raise ValueError(f"run_corpus_pipeline: unknown input format {fmt!r}")
 
 
-def run_corpus_pipeline(
-    spark: SparkSession, cfg: dict, collect_counts: bool = True
-) -> CorpusResult:
+def run_corpus_pipeline(spark: SparkSession, cfg: dict) -> CorpusResult:
     """Run the configured curation chain; see module docstring for the
     stage order. Unknown top-level config keys raise (a typo'd stage
     name silently skipping a GATE would ship uncurated data — same
@@ -224,18 +220,12 @@ def run_corpus_pipeline(
     driver-side actions (DSIR collect, mixture plan) either. Any edit
     to a stage-semantics key changes the fingerprint and invalidates
     every checkpoint; edits to chunk/pack/output never do (they are
-    downstream of the stage frames). Checkpointed stages also read
-    back from the committed parquet, truncating lineage — a later
+    downstream of the stage frames). A checkpointed stage's parquet
+    write is its one action (it also counts the rows), and the stage is
+    pinned from the committed files, truncating lineage — a later
     stage failure retries from files, not from a recomputed chain.
     """
-    known = {
-        "input", "id_col", "text_col", "lang_col", "normalize", "pii",
-        "langid", "gates", "dedup", "lm_gate", "decontaminate",
-        "retrieval_decontaminate", "semantic_decontaminate", "selection",
-        "mixture", "chunk", "pack", "output", "checkpoint", "report",
-        "skew",
-    }
-    unknown = set(cfg) - known
+    unknown = set(cfg) - set(_STAGE_KEYS) - set(_OUTPUT_KEYS)
     if unknown:
         raise ValueError(
             f"run_corpus_pipeline: unknown config keys {sorted(unknown)}"
@@ -257,34 +247,33 @@ def run_corpus_pipeline(
         return f"{ck_dir}/{idx:02d}_{stage}"
 
     def tick(idx: int, stage: str, df: DataFrame) -> DataFrame:
-        df = df.persist()
-        n = df.count()  # materialize the new pin FIRST — releasing the
-        # previous one before this would force a full-lineage recompute
-        if pinned:
-            release(pinned.pop())
-        # always recorded: the count is computed regardless, and the
-        # checkpoint marker + shard manifest need it even when the
-        # caller asked not to REPORT counts (collect_counts gates only
-        # CorpusResult.counts, at return)
-        counts[stage] = n
+        # one action materializes and counts the boundary; the previous
+        # pin is released only after it, or that action would recompute
+        # the whole lineage above the previous boundary
         if ck_dir and (ck_stages is None or stage in ck_stages):
             path = _ck_path(idx, stage)
-            from hrdp_variant_load_pipeline_spark.sources.store import (
-                _fs,
-                _jpath,
-            )
-
             fs, jvm = _fs(spark, path)
             fs.delete(_jpath(jvm, f"{path}/{_MARKER}"), False)  # invalidate
-            df.write.mode("overwrite").parquet(path)  # from the cache
+            # the write counts what it commits: an unnamed Observation on
+            # the unpersisted frame (see sources.store.append_to_store)
+            obs = Observation()
+            df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite"
+            ).parquet(path)
+            counts[stage] = obs.get["rows"]
             _ck_write_marker(
                 spark,
                 f"{path}/{_MARKER}",
                 {"stage": stage, "idx": idx, "fingerprint": fingerprint,
                  "counts_so_far": dict(counts)},
             )
-            release(df)
-            df = spark.read.parquet(path).persist()  # disk-backed lineage
+            # disk-backed lineage, cached by the next boundary's action
+            df = spark.read.parquet(path).persist()
+        else:
+            df = df.persist()
+            counts[stage] = df.count()
+        if pinned:
+            release(pinned.pop())
         pinned.append(df)
         return df
 
@@ -300,9 +289,8 @@ def run_corpus_pipeline(
 
     def _b_ingest(_docs: DataFrame | None) -> DataFrame:
         docs, quarantine = _ingest(spark, cfg)
-        if collect_counts and quarantine is not None:
-            # opt-in: unlike stage counts (free — the boundary is
-            # materialized anyway), this is an EXTRA pass over the input
+        if quarantine is not None:
+            # unlike the stage counts, an extra pass over the input
             counts["quarantined"] = quarantine.count()
         return docs
 
@@ -562,10 +550,6 @@ def run_corpus_pipeline(
             )
             from hrdp_variant_load_pipeline_spark.operators.vocab import (
                 bm25_tokens,
-            )
-            from hrdp_variant_load_pipeline_spark.sources.store import (
-                _fs,
-                _jpath,
             )
 
             idx_dir = rdec.get("index_dir") or (
@@ -928,7 +912,7 @@ def run_corpus_pipeline(
     try:
         packed, shard_dir = _chunk_pack_export(
             spark, cfg, docs, counts, fingerprint, id_col, text_col,
-            lang_col, collect_counts, pinned,
+            lang_col, pinned,
         )
         report = None
         rep_cfg = cfg.get("report", False)
@@ -947,7 +931,7 @@ def run_corpus_pipeline(
 
     return CorpusResult(
         docs=docs, packed=packed,
-        counts=counts if collect_counts else {},
+        counts=counts,
         shard_dir=shard_dir, cached=pinned, resumed_from=resumed_from,
         timings=timings, report=report,
         contamination=contamination_out[0] if contamination_out else None,
@@ -969,7 +953,6 @@ def _chunk_pack_export(
     id_col: str,
     text_col: str,
     lang_col: str,
-    collect_counts: bool,
     pinned: list[DataFrame] | None = None,
 ) -> tuple[DataFrame | None, str | None]:
     """Stage 9 (output side): chunk → pack → seeded-shuffle shard export.
@@ -1061,8 +1044,7 @@ def _chunk_pack_export(
             order_col="chunk_uid",
             partition_col=part_col,
         )
-        if collect_counts:
-            counts["chunks_packed"] = packed.count()
+        counts["chunks_packed"] = packed.count()
         out = cfg.get("output")
         if out is not None:
             from hrdp_variant_load_pipeline_spark.sources.corpus_io import (

@@ -19,10 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from hrdp_variant_load_pipeline_spark.operators.interval_join import (
-    interval_join_binned,
-    with_exists_flag,
-)
+from hrdp_variant_load_pipeline_spark.operators.interval_join import interval_join_binned
+from hrdp_variant_load_pipeline_spark.plans.load import placed_lines, with_genic_status
 from hrdp_variant_load_pipeline_spark.runtime import release
 
 #: above this many (merged) scope ranges the semi-join switches from
@@ -77,18 +75,9 @@ def scope_from_vcf(vcf: DataFrame) -> DataFrame:
     Distinct ranges only: N lines at the same locus probe once. The result
     is bounded by the batch's line count, so ``genic_qc`` broadcasts it.
     """
-    from hrdp_variant_load_pipeline_spark.functions.normalize import (
-        is_unplaced_contig,
-        normalize_allele,
-        normalize_chromosome,
-    )
+    from hrdp_variant_load_pipeline_spark.functions.normalize import normalize_allele
 
-    lines = vcf.filter(~is_unplaced_contig(F.col("chrom"))).select(
-        normalize_chromosome(F.col("chrom")).alias("chromosome"),
-        "pos",
-        "ref",
-        "alt",
-    )
+    lines = placed_lines(vcf).select("chromosome", "pos", "ref", "alt")
     n = normalize_allele(
         F.col("ref"), F.col("ref"), F.col("alt"), F.col("pos"), F.lit(False)
     )
@@ -162,25 +151,15 @@ def genic_qc(
             # materializes — the persist served the strategy-picking count
             release(merged)
 
-    active_genes = genes.filter(F.col("object_status") == "ACTIVE")
-    if "map_key" in genes.columns:
-        active_genes = active_genes.filter(F.col("map_key") == map_key)
-    active_genes = active_genes.select(
-        "chromosome", F.col("start_pos").alias("g_start"), F.col("stop_pos").alias("g_stop")
-    )
-
     # point probe (start, start): GenicQc.java:232
-    probed = with_exists_flag(
+    recomputed = with_genic_status(
         variants.withColumn("__qs", F.col("start_pos")).withColumn(
             "__qe", F.col("start_pos")
         ),
-        active_genes,
-        flag="__genic",
-        probe_keys=("chromosome", "__qs", "__qe"),
-        interval_keys=("chromosome", "g_start", "g_stop"),
-    )
-    recomputed = probed.withColumn(
-        "new_genic_status", F.when(F.col("__genic"), "GENIC").otherwise("INTERGENIC")
+        genes,
+        map_key,
+        ("chromosome", "__qs", "__qe"),
+        status_col="new_genic_status",
     )
     drifted = recomputed.filter(
         ~F.upper(F.coalesce(F.col("genic_status"), F.lit("")))

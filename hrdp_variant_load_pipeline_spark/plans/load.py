@@ -114,6 +114,38 @@ def _end_pos_drift():
     )
 
 
+def placed_lines(vcf: DataFrame) -> DataFrame:
+    """VCF lines on placed contigs, with the normalized ``chromosome``."""
+    return vcf.filter(~is_unplaced_contig(F.col("chrom"))).withColumn(
+        "chromosome", normalize_chromosome(F.col("chrom"))
+    )
+
+
+def with_genic_status(
+    probes: DataFrame,
+    genes: DataFrame,
+    map_key: int,
+    probe_keys: tuple[str, str, str],
+    status_col: str = "genic_status",
+) -> DataFrame:
+    """Add ``status_col``: GENIC when the (chromosome, start, stop) probe
+    overlaps an ACTIVE gene of ``map_key`` (of any map when ``genes`` has
+    no ``map_key`` column), else INTERGENIC. ``with_exists_flag`` is
+    single-pass over the probe side, so callers need no persist."""
+    active = genes.filter(F.col("object_status") == "ACTIVE")
+    if "map_key" in genes.columns:
+        active = active.filter(F.col("map_key") == map_key)
+    flagged = with_exists_flag(
+        probes,
+        active.select("chromosome", "start_pos", "stop_pos"),
+        flag="__genic",
+        probe_keys=probe_keys,
+    )
+    return flagged.withColumn(
+        status_col, F.when(F.col("__genic"), "GENIC").otherwise("INTERGENIC")
+    ).drop("__genic")
+
+
 def parse_variants(vcf: DataFrame, genes: DataFrame, map_key: int) -> DataFrame:
     """Normalize + explode VCF lines into candidate variants.
 
@@ -121,11 +153,7 @@ def parse_variants(vcf: DataFrame, genes: DataFrame, map_key: int) -> DataFrame:
     ``allele_idx``, the normalized variant struct fields, probe columns and
     ``genic_status``.
     """
-    lines = (
-        vcf.filter(~is_unplaced_contig(F.col("chrom")))
-        .withColumn("chromosome", normalize_chromosome(F.col("chrom")))
-        .withColumn("rs_id", null_if_dot(F.col("vcf_id")))
-    )
+    lines = placed_lines(vcf).withColumn("rs_id", null_if_dot(F.col("vcf_id")))
 
     multi = F.col("ref").contains(",") | F.col("alt").contains(",")
     need_copy_ref = F.col("ref").contains(",")
@@ -191,25 +219,9 @@ def parse_variants(vcf: DataFrame, genes: DataFrame, map_key: int) -> DataFrame:
         }
     )
 
-    active_genes = genes.filter(F.col("object_status") == "ACTIVE")
-    if "map_key" in genes.columns:
-        active_genes = active_genes.filter(F.col("map_key") == map_key)
-    active_genes = active_genes.select("chromosome", "start_pos", "stop_pos")
-
-    # with_exists_flag is single-pass over its probe side — no persist or
-    # materialization needed here; the scan → normalize chain runs once
-    flagged = with_exists_flag(
-        cand,
-        active_genes,
-        flag="__genic",
-        probe_keys=("chromosome", "q_start", "q_stop"),
-        interval_keys=("chromosome", "start_pos", "stop_pos"),
-    )
     return (
-        flagged.withColumn(
-            "genic_status", F.when(F.col("__genic"), "GENIC").otherwise("INTERGENIC")
-        )
-        .drop("__genic", "q_start", "q_stop")
+        with_genic_status(cand, genes, map_key, ("chromosome", "q_start", "q_stop"))
+        .drop("q_start", "q_stop")
         .withColumn("map_key", F.lit(map_key))
         .withColumn("species_type_key", F.lit(SPECIES_TYPE_KEY))
     )
@@ -360,9 +372,9 @@ def run_load(
     line_variants = with_ids.withColumn("j", F.row_number().over(w_j) - 1)
 
     cells = unpivot_samples(
-        vcf.filter(~is_unplaced_contig(F.col("chrom")))
-        .withColumn("chromosome", normalize_chromosome(F.col("chrom")))
-        .select("source_file", "chromosome", "pos", "ref", "alt", "sample_names", "sample_cells")
+        placed_lines(vcf).select(
+            "source_file", "chromosome", "pos", "ref", "alt", "sample_names", "sample_cells"
+        )
     )
     sample_dim = samples.select(
         F.col("analysis_name").alias("sample_name"), "sample_id", "gender"

@@ -12,6 +12,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _cpus() -> tuple[str, int]:
+    """``SPARK_GRAFT_CPUS`` as the local master's core spec and as the
+    default shuffle-partition count (32 when it is not a number)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    return cpus, int(cpus) if cpus.isdigit() else 32
+
+
 def get_spark(
     app_name: str = "hrdp_variant_load_pipeline_spark",
     shuffle_partitions: int | None = None,
@@ -26,9 +33,9 @@ def get_spark(
     caller can override any default (the shuffle-audit tool re-enables
     the UI this way to read per-stage exchange metrics).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, default_sp = _cpus()
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = default_sp
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -68,18 +75,20 @@ def get_spark(
 MEDIUM_INPUT_BYTES = 1024**3
 
 
-def _profile_for_size(size: int, default_sp: int) -> dict[str, str]:
-    """Map an input byte count to the runtime profile (see
-    ``tune_for_input`` for the measured rationale)."""
-    if size < MEDIUM_INPUT_BYTES:
-        return {
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": str(max(8, default_sp // 2)),
-        }
-    return {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.shuffle.partitions": str(default_sp),
+def _apply_profile(spark: SparkSession, size: int) -> dict[str, str]:
+    """Set the runtime profile for an input byte count on the session and
+    return it (see ``tune_for_input`` for the measured rationale)."""
+    default_sp = _cpus()[1]
+    small = size < MEDIUM_INPUT_BYTES
+    conf = {
+        "spark.sql.adaptive.enabled": "false" if small else "true",
+        "spark.sql.shuffle.partitions": str(
+            max(8, default_sp // 2) if small else default_sp
+        ),
     }
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    return conf
 
 
 def _dir_bytes(path: str, cap: int) -> int:
@@ -122,13 +131,7 @@ def tune_for_input(spark: SparkSession, input_dir: str) -> dict[str, str]:
     Both knobs are runtime-settable so the switch is safe mid-session.
     Returns the settings applied (for logging/tests).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    default_sp = int(cpus) if cpus.isdigit() else 32
-    size = _dir_bytes(input_dir, cap=MEDIUM_INPUT_BYTES)
-    conf = _profile_for_size(size, default_sp)
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    return conf
+    return _apply_profile(spark, _dir_bytes(input_dir, cap=MEDIUM_INPUT_BYTES))
 
 
 def tune_for_tables(
@@ -148,8 +151,6 @@ def tune_for_tables(
     """
     if tables is None:
         return tune_for_input(spark, input_dir)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    default_sp = int(cpus) if cpus.isdigit() else 32
     size = 0
     for t in tables:
         path = os.path.join(input_dir, f"{t}.parquet")
@@ -170,7 +171,4 @@ def tune_for_tables(
         size += _dir_bytes(path, cap=MEDIUM_INPUT_BYTES)
         if size >= MEDIUM_INPUT_BYTES:
             break
-    conf = _profile_for_size(size, default_sp)
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    return conf
+    return _apply_profile(spark, size)

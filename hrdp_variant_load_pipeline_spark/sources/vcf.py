@@ -66,6 +66,21 @@ def _read_header_line(fpath: str) -> str | None:
     return None
 
 
+def _refuse_colliding_names(paths) -> None:
+    """Lines find their file's header by basename (``source_file``), so
+    two inputs with one name would pair every line of either file with
+    both files' sample names."""
+    by_name: dict[str, list[str]] = {}
+    for p in paths:
+        by_name.setdefault(p.rsplit("/", 1)[-1], []).append(p)
+    clashes = {n: sorted(ps) for n, ps in by_name.items() if len(ps) > 1}
+    if clashes:
+        raise ValueError(
+            f"read_vcf: input files share a file name: {clashes}; rename "
+            "them or read each directory on its own"
+        )
+
+
 def read_vcf(
     spark: SparkSession,
     path: str,
@@ -78,6 +93,7 @@ def read_vcf(
     Returns columns: the 9 fixed VCF fields, ``sample_cells``
     (array<string>, one per sample column), ``sample_names``
     (array<string>, aligned with cells), ``source_file`` (basename).
+    Raises ``ValueError`` when two input files share a basename.
     """
     reader = spark.read
     if recursive:
@@ -87,35 +103,33 @@ def read_vcf(
     # headers sit at each file's head: read them driver-side (O(files),
     # bounded bytes per file) instead of filtering a distributed scan that
     # reads the whole corpus to find one line per file. Falls back to the
-    # distributed scan for non-local stores or colliding basenames.
+    # distributed scan for non-local stores.
     local_files = (
         _list_local_files(path, glob if recursive else "*", recursive)
         if "://" not in path
         else []
     )
-    basenames = [os.path.basename(p) for p in local_files]
-    if local_files and len(set(basenames)) == len(basenames):
+    if local_files:
+        _refuse_colliding_names(local_files)
         sample_map = []
         for p in local_files:
             header = _read_header_line(p)
             if header is not None:
                 sample_map.append((os.path.basename(p), header.split("\t")[9:]))
-        header_df = spark.createDataFrame(
-            sample_map or [("", [])], "source_file string, sample_names array<string>"
-        )
     else:
         header_rows = (
             raw.filter(F.col("value").startswith("#CHROM"))
             .select("source_path", "value")
             .collect()
         )
+        _refuse_colliding_names({r["source_path"] for r in header_rows})
         sample_map = [
             (r["source_path"].rsplit("/", 1)[-1], r["value"].split("\t")[9:])
             for r in header_rows
         ]
-        header_df = spark.createDataFrame(
-            sample_map or [("", [])], "source_file string, sample_names array<string>"
-        )
+    header_df = spark.createDataFrame(
+        sample_map or [("", [])], "source_file string, sample_names array<string>"
+    )
 
     fields = F.split(F.col("value"), "\t")
     data = (

@@ -211,6 +211,96 @@ def test_checkpoint_fingerprint_invalidates_on_semantics_change(
     r2.unpersist_all()
 
 
+def test_fingerprint_of_every_audit_only_block_is_pinned():
+    """Every audit-only key is stripped, and the hash is the one earlier
+    releases wrote into their markers: a changed hash would stop every
+    existing checkpoint from resuming."""
+    from hrdp_variant_load_pipeline_spark.plans.corpus_pipeline import (
+        _cfg_fingerprint,
+    )
+
+    cfg = {
+        "input": {"format": "parquet", "path": "docs"},
+        "gates": {"min_quality": 0.3},
+        "dedup": {"exact": True},
+        "decontaminate": {"path": "bench", "n": 8, "report": True},
+        "retrieval_decontaminate": {
+            "path": "bench", "k": 5, "report": True, "index_dir": "idx",
+        },
+        "semantic_decontaminate": {
+            "path": "bench", "min_cosine": 0.8, "report": True,
+        },
+        "chunk": {"chunk_tokens": 64},
+        "checkpoint": {"dir": "ck"},
+    }
+    assert _cfg_fingerprint(cfg) == "921264c035fb641ca336bb538b5d4a0c"
+    stripped = {
+        **cfg,
+        "decontaminate": {"path": "bench", "n": 8},
+        "retrieval_decontaminate": {"path": "bench", "k": 5},
+        "semantic_decontaminate": {"path": "bench", "min_cosine": 0.8},
+    }
+    assert _cfg_fingerprint(stripped) == _cfg_fingerprint(cfg)
+
+
+def test_checkpointed_stage_is_counted_by_its_write(
+    spark, tmp_path, monkeypatch
+):
+    """A checkpointed boundary is materialized by the parquet write that
+    commits it: ``tick`` calls no ``DataFrame.count()``, and the rows the
+    writes count equal the counts of the same chain run without a
+    checkpoint, per stage and in every stage's marker."""
+    import inspect
+    import json
+
+    docs_dir = str(tmp_path / "docs")
+    spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
+        F.col("doc_id") % 2 == 0
+    ).write.parquet(docs_dir)
+    cfg = {
+        "input": {"format": "parquet", "path": docs_dir},
+        "gates": {
+            "min_quality": 0.3,
+            "gopher": {"min_words": 5, "min_stopword_hits": 0},
+        },
+        "dedup": {"exact": True},
+    }
+    # the session's concrete DataFrame class defines its own count()
+    frame_cls = type(spark.range(0))
+    real_count = frame_cls.count
+    callers = []
+
+    def spy(self):
+        callers.append(inspect.currentframe().f_back.f_code.co_name)
+        return real_count(self)
+
+    monkeypatch.setattr(frame_cls, "count", spy)
+    plain = run_corpus_pipeline(spark, cfg)
+    want = dict(plain.counts)
+    plain.unpersist_all()
+    assert list(want) == [
+        "ingested", "quality_gate", "gopher_gate", "exact_dedup"
+    ]
+    assert callers.count("tick") == len(want)  # the uncheckpointed branch
+
+    callers.clear()
+    ck_dir = tmp_path / "ck"
+    res = run_corpus_pipeline(spark, {**cfg, "checkpoint": {"dir": str(ck_dir)}})
+    monkeypatch.undo()
+    assert "tick" not in callers
+    assert res.counts == want
+    res.unpersist_all()
+
+    stages = list(want)
+    for name in sorted(os.listdir(ck_dir)):
+        marker = json.loads(
+            (ck_dir / name / "_STAGE_COMMITTED.json").read_text()
+        )
+        done = stages[: stages.index(marker["stage"]) + 1]
+        assert marker["counts_so_far"] == {s: want[s] for s in done}
+    assert len(os.listdir(ck_dir)) == len(stages)
+
+
 def test_checkpoint_stage_subset_resumes_at_listed_stage(spark, tmp_path):
     docs_dir = str(tmp_path / "docs")
     spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
@@ -700,7 +790,7 @@ def test_fuzzy_cluster_canonical_and_skew_config(spark, tmp_path):
         }
         if skew is not None:
             cfg["skew"] = skew
-        res = run_corpus_pipeline(spark, cfg, collect_counts=False)
+        res = run_corpus_pipeline(spark, cfg)
         ids = {r.doc_id for r in res.docs.select("doc_id").collect()}
         res.unpersist_all()
         return ids

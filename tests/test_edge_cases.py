@@ -531,3 +531,29 @@ def test_connected_components_skew_routing_identical(spark):
     assert skewed == base
     assert all(c == 0 for d, c in base if d <= 40)
     assert all(c == 50 for d, c in base if d >= 50)
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_vcf_inputs_with_one_file_name_are_refused(spark, tmp_path, scheme):
+    """Lines find their sample names by file basename: ``a/x.vcf.gz`` and
+    ``b/x.vcf.gz`` would pair every line with both headers. Both header
+    paths (driver-side listing, and the distributed scan a URI takes)
+    refuse such an input; renamed, each line keeps its own samples."""
+    for sub, sample, pos in (("a", "S1", 100), ("b", "S2", 200)):
+        (tmp_path / sub).mkdir()
+        with gzip.open(tmp_path / sub / "x.vcf.gz", "wt") as f:
+            f.write(
+                "##fileformat=VCFv4.2\n"
+                f"#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\t{sample}\n"
+                f"chr1\t{pos}\t.\tA\tG\t50\tPASS\t.\tGT\t0/1\n"
+            )
+    with pytest.raises(ValueError, match="share a file name") as err:
+        read_vcf(spark, f"{scheme}{tmp_path}")
+    assert "a/x.vcf.gz" in str(err.value) and "b/x.vcf.gz" in str(err.value)
+
+    (tmp_path / "b" / "x.vcf.gz").rename(tmp_path / "b" / "y.vcf.gz")
+    rows = read_vcf(spark, f"{scheme}{tmp_path}").collect()
+    assert sorted((r["pos"], tuple(r["sample_names"])) for r in rows) == [
+        (100, ("S1",)),
+        (200, ("S2",)),
+    ]
