@@ -40,7 +40,11 @@ from pyspark.sql import DataFrame, SparkSession
 from hrdp_variant_load_pipeline_spark import schemas
 from hrdp_variant_load_pipeline_spark.operators.upsert import merge_update
 from hrdp_variant_load_pipeline_spark.plans.genic_qc import genic_qc, scope_from_vcf
-from hrdp_variant_load_pipeline_spark.plans.load import load_metrics, run_load
+from hrdp_variant_load_pipeline_spark.plans.load import (
+    first_free_rgd_id,
+    load_metrics,
+    run_load,
+)
 from hrdp_variant_load_pipeline_spark.runtime import release
 from hrdp_variant_load_pipeline_spark.session import get_spark, tune_for_input
 from hrdp_variant_load_pipeline_spark.sources.config import load_config, samples_dimension
@@ -49,6 +53,7 @@ from hrdp_variant_load_pipeline_spark.sources.store import (
     commit_store_version,
     compact_store,
     describe_store,
+    read_parquet,
     read_store,
 )
 from hrdp_variant_load_pipeline_spark.sources.tables import register_catalog_namespaces
@@ -111,12 +116,20 @@ _LOAD_CONSTRAINTS = [
 
 def cmd_run_load(spark: SparkSession, cfg: dict) -> dict[str, int]:
     vcf = _vcf_input(spark, cfg)
-    genes = spark.read.parquet(cfg["genes_path"])
+    genes = read_parquet(spark, cfg["genes_path"])
     samples = samples_dimension(spark, cfg["samples"], cfg["map_key"])
     vstore = read_store(spark, cfg["variant_store"], schemas.VARIANT)
     dstore = read_store(spark, cfg["detail_store"], schemas.VARIANT_SAMPLE_DETAIL)
 
-    res = run_load(vcf, genes, samples, vstore, dstore, map_key=cfg["map_key"])
+    res = run_load(
+        vcf,
+        genes,
+        samples,
+        vstore,
+        dstore,
+        map_key=cfg["map_key"],
+        next_rgd_id=first_free_rgd_id(vstore, cfg["variant_store"]),
+    )
     out: dict[str, int] = {}
     try:
         # optional batch audit BEFORE anything is appended — the stand-in for
@@ -145,9 +158,11 @@ def cmd_run_load(spark: SparkSession, cfg: dict) -> dict[str, int]:
         # --compactStores pass (which applies the same clustering store-wide
         # via compact_sort_by). Costs one batch-bounded range shuffle.
         clu = cfg.get("append_cluster_by") or {}
-        variants_entered = append_to_store(
-            res.new_variants, cfg["variant_store"], cluster_by=clu.get("variant_store")
-        )
+        variants_entered = 0
+        if res.n_new:  # a batch of stored variants appends none
+            variants_entered = append_to_store(
+                res.new_variants, cfg["variant_store"], cluster_by=clu.get("variant_store")
+            )
         sample_details_entered = append_to_store(
             res.new_sample_details,
             cfg["detail_store"],
@@ -182,7 +197,7 @@ def cmd_compact(spark: SparkSession, cfg: dict) -> dict[str, int]:
 
 
 def cmd_genic_qc(spark: SparkSession, cfg: dict) -> dict[str, int]:
-    genes = spark.read.parquet(cfg["genes_path"])
+    genes = read_parquet(spark, cfg["genes_path"])
     store = read_store(spark, cfg["variant_store"], schemas.VARIANT)
     scope = None
     if cfg.get("input_dir"):

@@ -7,8 +7,9 @@ batch UPDATEs (DAO.java:142-163). Set-oriented Spark equivalents:
 
 * existence probe → one anti/left join of the whole batch against the
   store (single shuffle or broadcast, not N round trips);
-* ``rgd_ids_seq.nextval`` → ``row_number()`` over a deterministic order +
-  the store's current max id (parallel, deterministic — NOT
+* ``rgd_ids_seq.nextval`` → window id assignment: ``row_number()`` inside
+  order-preserving buckets + the rows of the buckets before + the store's
+  current max id, from one aggregate (parallel, deterministic — NOT
   ``monotonically_increasing_id``, whose values depend on partitioning);
 * keyed UPDATE → MERGE emulation: anti-join the store against the updates,
   union the updated rows back (Delta MERGE when available).
@@ -18,56 +19,68 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def assign_surrogate_ids_scalable(
     df: DataFrame,
     order_by: Sequence,
+    buckets: Sequence[Column],
     base_id: int,
     id_col: str = "rgd_id",
     cache_registry: list | None = None,
-) -> DataFrame:
-    """Surrogate-key allocation without the single-partition sort.
+) -> tuple[DataFrame, int]:
+    """Number the rows of ``df`` ``base_id + 1, base_id + 2, …`` in
+    ``order_by`` order; return the numbered frame and the number of ids.
 
-    A no-partitionBy window funnels every row through ONE task — fine for
-    small new-row batches, fatal at 100 TB. This variant range-partitions
-    on the order keys (parallel sort), ranks within each partition, and
-    adds per-partition offsets computed from a tiny one-row-per-partition
-    aggregate. The partitioned frame is persisted so the offset pass and
-    the id pass see identical partition ids. Result ids are identical to
-    a global ``row_number()`` window for any total order.
+    ``buckets`` are columns whose ascending tuple order coarsens
+    ``order_by``: every row of a lower bucket sorts before every row of a
+    higher one (a leading order key, or a monotone function of one). Each
+    row is ranked inside its bucket by a window partitioned on the bucket,
+    so no task sorts more than its buckets. ONE collect returns every
+    bucket's row count and the number of rows in the buckets before it,
+    computed by a window over the small counts frame (an ``orderBy`` would
+    start a range-sampling job). A row's id is ``base_id + offset + rank``:
+    the same ids as a global ``row_number()`` window over ``order_by``,
+    with no single-partition sort.
 
-    The internal persist outlives this call (the returned frame reads it
-    lazily); pass ``cache_registry`` to receive the persisted frame and
-    ``unpersist()`` it once the result has been materialized — long-lived
-    sessions (streaming micro-batches) leak cache otherwise.
+    The ranked frame is persisted, so the counts and the ids read the same
+    ranks, and it outlives this call (the returned frame reads it lazily):
+    pass ``cache_registry`` to receive it and release it once the result
+    has been materialized.
     """
     spark = df.sparkSession
-    ranged = (
-        df.repartitionByRange(spark.sparkContext.defaultParallelism, *order_by)
-        .sortWithinPartitions(*order_by)
-        .withColumn("__pid", F.spark_partition_id())
+    keys = [f"__b{i}" for i in range(len(buckets))]
+    ranked = (
+        df.withColumns(dict(zip(keys, buckets)))
+        .withColumn(
+            "__rank", F.row_number().over(Window.partitionBy(*keys).orderBy(*order_by))
+        )
         .persist()
     )
     if cache_registry is not None:
-        cache_registry.append(ranged)
-    counts = ranged.groupBy("__pid").count().orderBy("__pid").collect()
-    offsets, acc = [], 0
-    for r in counts:
-        offsets.append((r["__pid"], acc))
-        acc += r["count"]
-    offset_df = spark.createDataFrame(offsets or [(0, 0)], "__pid int, __offset long")
-    w = Window.partitionBy("__pid").orderBy(*order_by)
-    return (
-        ranged.join(F.broadcast(offset_df), "__pid")
-        .withColumn(
-            id_col,
-            (F.row_number().over(w) + F.col("__offset") + F.lit(base_id)).cast("long"),
-        )
-        .drop("__pid", "__offset")
+        cache_registry.append(ranked)
+    before = Window.orderBy(*keys).rowsBetween(Window.unboundedPreceding, -1)
+    counts = ranked.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
+    rows = counts.withColumn(
+        "__offset", F.coalesce(F.sum("__n").over(before), F.lit(0)).cast("long")
+    ).collect()
+    offsets = spark.createDataFrame(
+        [[*(r[k] for k in keys), r["__offset"]] for r in rows],
+        StructType(
+            [StructField(f"__o{i}", counts.schema[k].dataType) for i, k in enumerate(keys)]
+            + [StructField("__offset", LongType())]
+        ),
     )
+    on = [ranked[k].eqNullSafe(offsets[f"__o{i}"]) for i, k in enumerate(keys)]
+    numbered = (
+        ranked.join(F.broadcast(offsets), on)
+        .withColumn(id_col, (F.lit(base_id) + F.col("__offset") + F.col("__rank")).cast("long"))
+        .drop(*keys, *offsets.columns, "__rank")
+    )
+    return numbered, sum(r["__n"] for r in rows)
 
 
 def merge_update(

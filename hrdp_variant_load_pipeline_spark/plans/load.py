@@ -10,8 +10,10 @@ Spark lifecycle: one text scan → narrow transforms (filter / normalize /
 posexplode) → broadcast interval join (genes) → two anti/left joins against
 the target tables (replacing ~N JDBC round trips with two set-oriented
 joins — the single biggest algorithmic win, SURVEY.md §4) → window id
-assignment → three appends. Two to three stages end-to-end; AQE handles
-partition sizing and skew.
+assignment (ranks inside position buckets + one aggregate of the bucket
+sizes, ``operators.upsert.assign_surrogate_ids_scalable``) → two appends,
+the variant append skipped when the batch has no new variant. Two to three
+stages end-to-end; AQE handles partition sizing and skew.
 
 Faithfully-reproduced quirks (SURVEY.md §1.4, verified against the Java):
 
@@ -66,12 +68,18 @@ from hrdp_variant_load_pipeline_spark.functions.normalize import (
 from hrdp_variant_load_pipeline_spark.functions.zygosity import zygosity_struct
 from hrdp_variant_load_pipeline_spark.operators.interval_join import with_exists_flag
 from hrdp_variant_load_pipeline_spark.runtime import release
+from hrdp_variant_load_pipeline_spark.sources.store import footer_max
 from hrdp_variant_load_pipeline_spark.sources.vcf import unpivot_samples
 
 #: columns that uniquely identify one VCF data line
 LINE_KEY = ["source_file", "chromosome", "pos", "ref", "alt"]
 
 SPECIES_TYPE_KEY = 3  # rat (HrdpVariants.java:309)
+
+#: width in bases of the position buckets the id allocator ranks within:
+#: ``(source_file, chromosome, pos div ID_BUCKET_BASES)`` coarsens the id
+#: order, and a bucket of one file's 1 Mb window is small enough to sort
+ID_BUCKET_BASES = 1_000_000
 
 
 @dataclass
@@ -85,13 +93,15 @@ class LoadResult:
     append is invisible to plans built before it
     (``sources.store.append_to_store``), so the detail build and the
     counters see the stores as the load probed them, not the variants it
-    has just appended."""
+    has just appended. ``n_new`` is 0 when every variant of the batch is
+    already stored: the caller then skips the variant append."""
 
     new_variants: DataFrame  # VARIANT schema → variant + variant_map_data sinks
     end_pos_updates: DataFrame  # (rgd_id, end_pos) drift, detected-not-applied
     new_sample_details: DataFrame  # VARIANT_SAMPLE_DETAIL schema
     all_line_variants: DataFrame  # internal: new+existing per line (for QC/tests)
     matched: DataFrame  # persisted candidates-vs-store match (in ``cached``)
+    n_new: int = 0  # rows of new_variants, counted by the id allocator
     cached: tuple = ()  # frames run_load persisted; released via release()
 
     def release(self) -> None:
@@ -267,6 +277,20 @@ def _dedup_against_store(cand: DataFrame, store: DataFrame) -> DataFrame:
     )
 
 
+def first_free_rgd_id(variant_store: DataFrame, root: str | None = None) -> int:
+    """One above the store's max ``rgd_id`` (1 for an empty store). With the
+    store's ``root``, the max comes from the parquet footers of its current
+    version (``sources.store.footer_max``: no Spark job); without it, or
+    when a column chunk carries no statistics, from an aggregate over
+    ``variant_store``."""
+    known, m = (False, None)
+    if root is not None:
+        known, m = footer_max(variant_store.sparkSession, root, "rgd_id")
+    if not known:
+        m = variant_store.agg(F.max("rgd_id")).collect()[0][0]
+    return (m or 0) + 1
+
+
 def run_load(
     vcf: DataFrame,
     genes: DataFrame,
@@ -276,23 +300,24 @@ def run_load(
     map_key: int,
     next_rgd_id: int | None = None,
 ) -> LoadResult:
-    """Full ``--runLoad`` equivalent. All outputs are lazy DataFrames."""
+    """Full ``--runLoad`` equivalent. All outputs are lazy DataFrames; the
+    id allocator's one aggregate runs here. ``next_rgd_id`` defaults to
+    ``first_free_rgd_id(variant_store)``."""
     cand = parse_variants(vcf, genes, map_key)
     matched = _dedup_against_store(cand, variant_store)
 
     if next_rgd_id is None:
-        row = variant_store.agg(F.max("rgd_id").alias("m")).collect()[0]
-        next_rgd_id = (row["m"] or 0) + 1
+        next_rgd_id = first_free_rgd_id(variant_store)
 
-    # id allocation (S9): only NEW rows get ids, via the range-partitioned
-    # parallel allocator — never a global single-partition window.
+    # id allocation (S9): only NEW rows get ids, ranked inside position
+    # buckets — never a global single-partition window.
     # Imported at call time: perfbench's tracer wraps the module attribute.
     from hrdp_variant_load_pipeline_spark.operators.upsert import (
         assign_surrogate_ids_scalable,
     )
 
-    # diamond reuse: matched feeds the allocator's range-sampling pass, the
-    # new branch, and the existing branch — persist so the scan → normalize
+    # diamond reuse: matched feeds the allocator's ranked frame, the new
+    # branch, and the existing branch — persist so the scan → normalize
     # → genic join → dedup chain runs once, not 3-4 times. Tracked in
     # LoadResult.cached; callers release once outputs are materialized.
     cache_registry: list = []
@@ -328,19 +353,26 @@ def run_load(
         .filter(F.col("__occ") == 1)
         .drop("__occ")
     )
-    canon_ids = assign_surrogate_ids_scalable(
+    canon_ids, n_new = assign_surrogate_ids_scalable(
         canon,
         order_by=["source_file", "chromosome", "pos", "allele_idx", "var_nuc"],
+        buckets=[
+            F.col("source_file"),
+            F.col("chromosome"),
+            F.expr(f"pos div {ID_BUCKET_BASES}"),
+        ],
         base_id=next_rgd_id - 1,
         cache_registry=cache_registry,
     )
-    new_rows = news.join(
-        canon_ids.select("__vkey", "rgd_id"), "__vkey", "inner"
-    ).drop("__vkey")
     existing_rows = matched.filter(~F.col("is_new")).withColumn(
         "rgd_id", F.col("store_rgd_id").cast("long")
     )
-    with_ids = new_rows.unionByName(existing_rows)
+    with_ids = existing_rows
+    if n_new:
+        new_rows = news.join(
+            canon_ids.select("__vkey", "rgd_id"), "__vkey", "inner"
+        ).drop("__vkey")
+        with_ids = new_rows.unionByName(existing_rows)
 
     variant_cols = [
         "rgd_id",
@@ -466,6 +498,7 @@ def run_load(
         new_sample_details=details,
         all_line_variants=line_variants,
         matched=matched,
+        n_new=n_new,
         cached=tuple(cache_registry),
     )
 

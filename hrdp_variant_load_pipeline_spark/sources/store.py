@@ -44,10 +44,12 @@ dependency-free core of it.
 
 from __future__ import annotations
 
+import json
 import re
 import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from hrdp_variant_load_pipeline_spark.runtime import shuffle_partitions
 
@@ -130,6 +132,126 @@ def resolve_store(
     return None
 
 
+def _data_files(fs, jvm, path: str, strict: bool = True) -> list | None:
+    """The parquet data files directly under ``path`` (or ``path`` itself
+    when it is a file), sorted by path string — the order in which Spark's
+    schema inference picks its one footer. Hidden and ``_``-prefixed names
+    are skipped, as Spark's file listing skips them. ``strict``: None when
+    the listing also holds a summary file or a subdirectory, whose content
+    a Spark read of ``path`` takes in but these files do not show."""
+    p = _jpath(jvm, path)
+    if not fs.exists(p):
+        return []
+    files = []
+    for st in fs.listStatus(p):
+        name = st.getPath().getName()
+        if strict and name in ("_metadata", "_common_metadata"):
+            return None
+        if name.startswith((".", "_")):
+            continue
+        if st.isDirectory():
+            if strict:
+                return None
+            continue
+        files.append(st)
+    return sorted(files, key=lambda st: st.getPath().toString())
+
+
+def _footers(spark: SparkSession, files: list):
+    """Yield the parquet footer (``ParquetMetadata``) of each file status,
+    read on the driver through Hadoop: works on any Hadoop filesystem, runs
+    no job. The reader is the one Spark's parquet scans use; it reads only
+    the footer (``ParquetFileReader.open`` also sets up a row-group reader
+    and took ~10x longer per file). Each JVM call is a gateway round trip,
+    so the classes are looked up once, not per file."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    read_footer = (
+        jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader.readFooter
+    )
+    input_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus
+    no_filter = jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+    for st in files:
+        yield read_footer(input_file(st, conf), no_filter)
+
+
+def _blocks(footer) -> list:
+    """The row groups of a footer. Indexed reads: iterating a JVM list from
+    Python costs several gateway round trips per element."""
+    blocks = footer.getBlocks()
+    return [blocks.get(i) for i in range(blocks.size())]
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, from the footer of
+    the same first data file its inference reads, without the one-task job
+    that inference runs. None when there is no data file, or when the
+    directory holds summary files or subdirectories."""
+    fs, jvm = _fs(spark, path)
+    files = _data_files(fs, jvm, path)
+    if not files:
+        return None
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter = parquet.ParquetToSparkSchemaConverter(
+        spark._jsparkSession.sessionState().conf()
+    )
+    footer = jvm.org.apache.parquet.hadoop.Footer(
+        files[0].getPath(), next(_footers(spark, files[:1]))
+    )
+    # Spark's own reader: the schema Spark wrote into the footer's
+    # key-value metadata when present, else the converted parquet schema;
+    # a file relation reads every field as nullable
+    jschema = parquet.ParquetFileFormat.readSchemaFromFooter(footer, converter)
+    return StructType.fromJson(json.loads(jschema.asNullable().json()))
+
+
+def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from the footer
+    (``footer_schema``) instead of inferred by a Spark job; the frame is the
+    same. ``merge_schema=True`` keeps Spark's merging inference."""
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    elif (schema := footer_schema(spark, path)) is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(path)
+
+
+def footer_max(spark: SparkSession, root: str, column: str) -> tuple[bool, object]:
+    """Max of top-level numeric ``column`` in the current version of the
+    store at ``root``, from the column-chunk statistics of its parquet
+    footers (no job). Returns ``(True, max)`` — max None when the store is
+    absent or the column holds no value — or ``(False, None)`` when a chunk
+    carries no statistics and only an aggregate can tell."""
+    target = resolve_store(spark, root)
+    if target is None:
+        return True, None
+    fs, jvm = _fs(spark, target)
+    files = _data_files(fs, jvm, target)
+    if files is None:
+        return False, None
+    best, at = None, 0
+    for footer in _footers(spark, files):
+        for block in _blocks(footer):
+            if block.getRowCount() == 0:
+                continue
+            chunks = block.getColumns()
+            # the chunk's position is the same in every file of one schema:
+            # check the last one before searching
+            if at >= chunks.size() or chunks.get(at).getPath().toDotString() != column:
+                names = [chunks.get(i).getPath().toDotString() for i in range(chunks.size())]
+                if column not in names:
+                    return False, None
+                at = names.index(column)
+            stats = chunks.get(at).getStatistics()
+            if stats.isEmpty():
+                return False, None
+            if stats.hasNonNullValue():
+                v = stats.genericGetMax()
+                best = v if best is None else max(best, v)
+    return True, best
+
+
 def read_store(
     spark: SparkSession,
     root: str,
@@ -143,20 +265,21 @@ def read_store(
     what it replaced, audit a load, roll analysis back a step). Empty
     DataFrame (with ``schema``) when the store does not exist yet.
 
-    ``merge_schema=True`` unions schemas across files (columns absent in
-    older files read as null) — needed only after an
-    ``allow_schema_drift`` append widened the store. Off by default: the
-    merge reads EVERY file footer, which at 100 TB file counts is a real
-    listing/IO cost the common fixed-schema read should not pay."""
+    The reader gets the schema of the version's first data file from its
+    footer (``read_parquet``), the file Spark's inference would read, so
+    the frame is the one ``spark.read.parquet`` returns without the
+    inference job. ``merge_schema=True`` unions schemas across files
+    (columns absent in older files read as null) through Spark's merging
+    inference — needed only after an ``allow_schema_drift`` append widened
+    the store. Off by default: the merge reads EVERY file footer, which at
+    100 TB file counts is a real listing/IO cost the common fixed-schema
+    read should not pay."""
     target = resolve_store(spark, root, version)
     if target is None:
         if schema is None:
             raise FileNotFoundError(f"no committed store under {root}")
         return spark.createDataFrame([], schema)
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(target)
+    return read_parquet(spark, target, merge_schema)
 
 
 def _verify_write(fs, jvm, tmp: str, spark: SparkSession) -> None:
@@ -273,7 +396,7 @@ def compact_store(
     # drift-widened store (and it reads every file anyway, so the footer
     # cost is already paid) — a sampled-footer read here could silently
     # drop a column added by an allow_schema_drift append
-    df = spark.read.option("mergeSchema", "true").parquet(target)
+    df = read_parquet(spark, target, merge_schema=True)
     if sort_by:
         df = df.repartitionByRange(target_partitions, *sort_by).sortWithinPartitions(
             *sort_by
@@ -341,22 +464,17 @@ def append_to_store(
         df = df.sortWithinPartitions(*cluster_by)
     target = resolve_store(spark, root) or root.rstrip("/")
     fs, jvm = _fs(spark, target)
-    if not allow_schema_drift and fs.exists(_jpath(jvm, target)):
-        has_data = any(
-            not d and not n.startswith((".", "_"))
-            for n, d in _list_names(fs, jvm, target)
-        )
-        if has_data:
-            existing = spark.read.parquet(target).schema
-            if {(f.name, f.dataType) for f in existing.fields} != {
-                (f.name, f.dataType) for f in df.schema.fields
-            }:
-                raise ValueError(
-                    f"append schema drift at {target}: store has "
-                    f"{existing.simpleString()}, append has "
-                    f"{df.schema.simpleString()}; pass "
-                    "allow_schema_drift=True for deliberate widening"
-                )
+    if not allow_schema_drift:
+        existing = footer_schema(spark, target)
+        if existing is not None and {
+            (f.name, f.dataType) for f in existing.fields
+        } != {(f.name, f.dataType) for f in df.schema.fields}:
+            raise ValueError(
+                f"append schema drift at {target}: store has "
+                f"{existing.simpleString()}, append has "
+                f"{df.schema.simpleString()}; pass "
+                "allow_schema_drift=True for deliberate widening"
+            )
     # observed here, ABOVE cluster_by's range exchange: the exchange's
     # sampling job runs the plan below it, and an observation placed there
     # would count the sampled rows too. Unnamed, so each call's metric name
@@ -400,26 +518,13 @@ def describe_store(spark: SparkSession, root: str) -> dict:
     if target is None:
         return out
     fs, jvm = _fs(spark, target)
-    files = [
-        n
-        for n, is_dir in _list_names(fs, jvm, target)
-        if not is_dir and not n.startswith((".", "_"))
-    ]
-    n_bytes = 0
-    n_rows = 0
-    for n in files:
-        st = fs.getFileStatus(_jpath(jvm, f"{target}/{n}"))
-        n_bytes += st.getLen()
-    try:
-        import pyarrow.parquet as pq
-
-        local = target
-        for n in files:
-            p = f"{local}/{n}"
-            if p.startswith("file:"):
-                p = p.removeprefix("file:")
-            n_rows += pq.ParquetFile(p).metadata.num_rows
-    except Exception:  # noqa: BLE001 — non-local fs: row count unavailable
-        n_rows = -1
-    out.update(n_files=len(files), n_bytes=int(n_bytes), n_rows=int(n_rows))
+    files = _data_files(fs, jvm, target, strict=False)
+    n_rows = sum(
+        block.getRowCount() for footer in _footers(spark, files) for block in _blocks(footer)
+    )
+    out.update(
+        n_files=len(files),
+        n_bytes=int(sum(st.getLen() for st in files)),
+        n_rows=int(n_rows),
+    )
     return out

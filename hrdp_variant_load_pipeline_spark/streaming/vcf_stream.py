@@ -23,7 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hrdp_variant_load_pipeline_spark import schemas
-from hrdp_variant_load_pipeline_spark.plans.load import LoadResult, run_load
+from hrdp_variant_load_pipeline_spark.plans.load import (
+    LoadResult,
+    first_free_rgd_id,
+    run_load,
+)
 from hrdp_variant_load_pipeline_spark.sources.store import (
     append_to_store,
     read_store as _read_store,
@@ -86,9 +90,18 @@ def stream_vcf_loader(
 
         vstore = _read_store(spark, variant_store_dir, schemas.VARIANT)
         dstore = _read_store(spark, detail_store_dir, schemas.VARIANT_SAMPLE_DETAIL)
-        res = run_load(vcf, genes, samples, vstore, dstore, map_key)
+        res = run_load(
+            vcf,
+            genes,
+            samples,
+            vstore,
+            dstore,
+            map_key,
+            next_rgd_id=first_free_rgd_id(vstore, variant_store_dir),
+        )
         try:
-            append_to_store(res.new_variants, variant_store_dir)
+            if res.n_new:
+                append_to_store(res.new_variants, variant_store_dir)
             append_to_store(res.new_sample_details, detail_store_dir)
             if on_batch is not None:
                 on_batch(batch_id, res)

@@ -21,9 +21,12 @@ from hrdp_variant_load_pipeline_spark.sources.store import (
     append_to_store,
     commit_store_version,
     committed_versions,
+    footer_max,
+    footer_schema,
     read_store,
     resolve_store,
 )
+from tests.conftest import spark_jobs_of
 
 
 def _mk_flat(spark, path, tag="orig", n=10):
@@ -403,3 +406,54 @@ def test_failed_append_leaves_no_staging_and_keeps_prior_files(spark, tmp_path):
         append_to_store(poison, store)
     assert sorted(os.listdir(target)) == files
     assert read_store(spark, store).count() == 5
+
+
+def test_footer_max_tracks_commits_and_appends(spark, tmp_path):
+    """``footer_max`` equals the aggregate max of the current version after
+    a commit, an append, and a QC-style repair commit that rewrites the
+    store through ``merge_update``; an absent store has no max, and a file
+    written without column statistics is reported as unknown."""
+    from hrdp_variant_load_pipeline_spark.operators.upsert import merge_update
+
+    store = str(tmp_path / "store")
+
+    def agg_max():
+        return read_store(spark, store).agg(F.max("rgd_id")).collect()[0][0]
+
+    assert footer_max(spark, store, "rgd_id") == (True, None)
+    commit_store_version(
+        spark.range(1, 60).selectExpr("id AS rgd_id", "'A' AS s").repartition(3), store
+    )
+    assert footer_max(spark, store, "rgd_id") == (True, agg_max()) == (True, 59)
+    append_to_store(spark.range(60, 75).selectExpr("id AS rgd_id", "'A' AS s"), store)
+    assert footer_max(spark, store, "rgd_id") == (True, agg_max()) == (True, 74)
+    updates = spark.createDataFrame([(3, "B"), (70, "B")], "rgd_id long, s string")
+    commit_store_version(merge_update(read_store(spark, store), updates, "rgd_id", ["s"]), store)
+    assert footer_max(spark, store, "rgd_id") == (True, agg_max()) == (True, 74)
+
+    bare = str(tmp_path / "bare")
+    spark.range(5).selectExpr("id AS rgd_id").write.option(
+        "parquet.column.statistics.enabled", "false"
+    ).parquet(bare)
+    assert footer_max(spark, bare, "rgd_id") == (False, None)
+
+
+def test_footer_schema_is_the_inferred_schema_and_read_store_runs_no_job(spark, tmp_path):
+    """The footer schema equals what Spark's inference returns (nested and
+    non-nullable fields included), and ``read_store`` resolves its frame
+    without a Spark job."""
+    store = str(tmp_path / "store")
+    commit_store_version(
+        spark.range(20).selectExpr(
+            "id", "array(id) AS a", "named_struct('x', id) AS st",
+            "CAST(id AS DECIMAL(10, 2)) AS d", "CAST(id AS STRING) AS s",
+        ).repartition(2),
+        store,
+    )
+    target = resolve_store(spark, store)
+    assert footer_schema(spark, target) == spark.read.parquet(target).schema
+    assert footer_schema(spark, str(tmp_path / "absent")) is None
+
+    df, jobs = spark_jobs_of(spark, read_store, spark, store)
+    assert jobs == 0
+    assert df.schema == spark.read.parquet(target).schema and df.count() == 20

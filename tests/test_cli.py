@@ -8,6 +8,8 @@ import os
 
 from hrdp_variant_load_pipeline_spark import schemas
 from hrdp_variant_load_pipeline_spark.cli import cmd_genic_qc, cmd_run_load
+from hrdp_variant_load_pipeline_spark.session import tune_for_input
+from tests.conftest import spark_jobs_of
 
 VCF = """##fileformat=VCFv4.2
 #CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1
@@ -558,3 +560,52 @@ def test_cli_146_sample_production_shape(spark, tmp_path):
     # first QC pass repairs the loader/QC multi-allelic probe divergence
     # (a faithful reference quirk), second is a fixpoint
     assert out["genic_qc_fixpoint_metrics"]["genic_status_updated"] == 0
+
+
+def test_cli_load_and_qc_job_counts(spark, tmp_path):
+    """The load and QC cycle runs only the jobs its work needs: no schema
+    inference (footer schemas), no max-id aggregate (footer statistics),
+    one id-allocator aggregate, and no variant append on a re-load that
+    finds every variant stored. Counted under the profile ``cli.main``
+    picks for this input (AQE off); AQE would split stages into jobs."""
+    vdir = tmp_path / "vcfs"
+    vdir.mkdir()
+    with gzip.open(vdir / "BN_X_2020_v1_PASS.vcf.gz", "wt") as f:
+        f.write(VCF)
+    genes_path = str(tmp_path / "genes")
+    spark.createDataFrame([(1, "1", 50, 150, "ACTIVE", 372)], schemas.GENE).write.parquet(
+        genes_path
+    )
+    cfg = {
+        "map_key": 372,
+        "input_dir": str(vdir),
+        "samples": {"S1": 1},
+        "genes_path": genes_path,
+        "variant_store": str(tmp_path / "variants"),
+        "detail_store": str(tmp_path / "details"),
+    }
+    # a gene moved from position 100 to 400: the QC repair flips both variants
+    moved = str(tmp_path / "genes2")
+    spark.createDataFrame([(1, "1", 300, 450, "ACTIVE", 372)], schemas.GENE).write.parquet(
+        moved
+    )
+    qcfg = {**cfg, "genes_path": moved}
+    # the profile cli.main picks for this input, restored afterwards
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+    tune_for_input(spark, str(vdir))
+    try:
+        m, fresh = spark_jobs_of(spark, cmd_run_load, spark, cfg)
+        assert (m["variants_entered"], m["sample_details_entered"]) == (2, 2)
+        m, reload = spark_jobs_of(spark, cmd_run_load, spark, cfg)
+        assert (m["variants_entered"], m["existing_matched"]) == (0, 2)
+        q, repair = spark_jobs_of(spark, cmd_genic_qc, spark, qcfg)
+        assert q["genic_status_updated"] == 2
+        q, fixpoint = spark_jobs_of(spark, cmd_genic_qc, spark, qcfg)
+        assert q["genic_status_updated"] == 0
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    jobs = {"load": fresh, "reload": reload, "repair": repair, "fixpoint": fixpoint}
+    budget = {"load": 11, "reload": 10, "repair": 6, "fixpoint": 4}
+    assert all(jobs[k] <= budget[k] for k in budget), jobs

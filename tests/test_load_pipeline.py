@@ -23,6 +23,7 @@ from hrdp_variant_load_pipeline_spark.schemas import (
     VARIANT_SAMPLE_DETAIL,
 )
 from hrdp_variant_load_pipeline_spark.sources.vcf import read_vcf
+from tests.conftest import spark_jobs_of
 
 VCF_BODY = "\n".join(
     [
@@ -392,3 +393,68 @@ def test_intra_batch_dedup_same_pair_two_files(spark, tmp_path, dims):
     assert len(details) == 1
     # first occurrence in file order wins: A_STRAIN's var_freq=9
     assert details[0]["var_freq"] == 9
+
+
+def test_allocator_ids_equal_global_row_number_across_buckets(spark):
+    """The bucketed allocator numbers rows exactly as one global
+    ``row_number()`` over the order would, on input whose rows spread over
+    many (file, chromosome, 1 Mb) buckets and several input partitions;
+    it reports the number of ids, and an empty input gets 0."""
+    from pyspark.sql import Window
+
+    from hrdp_variant_load_pipeline_spark.operators.upsert import (
+        assign_surrogate_ids_scalable,
+    )
+    from hrdp_variant_load_pipeline_spark.runtime import release
+
+    # 7_919_993 is coprime to 9_000_000, so every position is distinct
+    rows = [
+        (f"f{i % 3}", str(1 + i % 4), (i * 7_919_993) % 9_000_000 + 1, i % 2)
+        for i in range(400)
+    ]
+    df = spark.createDataFrame(
+        rows, "source_file string, chromosome string, pos long, allele_idx int"
+    ).repartition(5)
+    order = ["source_file", "chromosome", "pos", "allele_idx"]
+    buckets = [F.col("source_file"), F.col("chromosome"), F.expr("pos div 1000000")]
+    assert df.select(*buckets).distinct().count() > 50
+    cached: list = []
+    try:
+        out, n = assign_surrogate_ids_scalable(
+            df, order_by=order, buckets=buckets, base_id=99, cache_registry=cached
+        )
+        want = df.withColumn("want", F.row_number().over(Window.orderBy(*order)) + 99)
+        got = out.join(want, order).select("rgd_id", "want").collect()
+        assert n == 400 and len(got) == 400
+        assert all(r["rgd_id"] == r["want"] for r in got)
+
+        empty, n0 = assign_surrogate_ids_scalable(
+            df.limit(0), order_by=order, buckets=buckets, base_id=99, cache_registry=cached
+        )
+        assert n0 == 0 and empty.count() == 0
+    finally:
+        release(*cached)
+
+
+def test_first_free_rgd_id_reads_footers_and_falls_back_to_aggregate(
+    spark, tmp_path, monkeypatch
+):
+    """The next id comes from the store's footer statistics without a Spark
+    job; when the footer helper reports a chunk without statistics, it
+    comes from an aggregate over the store instead, with the same value."""
+    from hrdp_variant_load_pipeline_spark.plans import load
+    from hrdp_variant_load_pipeline_spark.sources.store import (
+        commit_store_version,
+        read_store,
+    )
+
+    root = str(tmp_path / "variants")
+    assert load.first_free_rgd_id(_empty(spark, VARIANT), root) == 1
+    commit_store_version(
+        spark.range(1, 40).selectExpr("id AS rgd_id", "'x' AS tag").repartition(3), root
+    )
+    store = read_store(spark, root)
+    assert spark_jobs_of(spark, load.first_free_rgd_id, store, root) == (40, 0)
+    monkeypatch.setattr(load, "footer_max", lambda *a: (False, None))
+    value, jobs = spark_jobs_of(spark, load.first_free_rgd_id, store, root)
+    assert value == 40 and jobs >= 1
