@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from hrdp_variant_load_pipeline_spark.runtime import local_frame
+
 
 def assign_surrogate_ids_scalable(
     df: DataFrame,
@@ -46,28 +48,28 @@ def assign_surrogate_ids_scalable(
     the same ids as a global ``row_number()`` window over ``order_by``,
     with no single-partition sort.
 
-    The ranked frame is persisted, so the counts and the ids read the same
-    ranks, and it outlives this call (the returned frame reads it lazily):
-    pass ``cache_registry`` to receive it and release it once the result
-    has been materialized.
+    With ``cache_registry``, the ranked frame is persisted and appended to
+    it, so the counts and the ids read one ranking; the returned frame reads
+    it lazily, so release it once the result has been materialized. Without
+    it nothing stays persisted and the ranking runs again for the ids, so
+    ``order_by`` must then be a total order (ties would rank differently
+    between the two runs).
     """
     spark = df.sparkSession
     keys = [f"__b{i}" for i in range(len(buckets))]
-    ranked = (
-        df.withColumns(dict(zip(keys, buckets)))
-        .withColumn(
-            "__rank", F.row_number().over(Window.partitionBy(*keys).orderBy(*order_by))
-        )
-        .persist()
+    ranked = df.withColumns(dict(zip(keys, buckets))).withColumn(
+        "__rank", F.row_number().over(Window.partitionBy(*keys).orderBy(*order_by))
     )
     if cache_registry is not None:
+        ranked = ranked.persist()
         cache_registry.append(ranked)
     before = Window.orderBy(*keys).rowsBetween(Window.unboundedPreceding, -1)
     counts = ranked.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
     rows = counts.withColumn(
         "__offset", F.coalesce(F.sum("__n").over(before), F.lit(0)).cast("long")
     ).collect()
-    offsets = spark.createDataFrame(
+    offsets = local_frame(
+        spark,
         [[*(r[k] for k in keys), r["__offset"]] for r in rows],
         StructType(
             [StructField(f"__o{i}", counts.schema[k].dataType) for i, k in enumerate(keys)]

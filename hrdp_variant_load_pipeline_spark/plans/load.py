@@ -7,13 +7,18 @@ sample-column zygosity rows (JDBC existence probe per variant×sample) →
 batched inserts.
 
 Spark lifecycle: one text scan → narrow transforms (filter / normalize /
-posexplode) → broadcast interval join (genes) → two anti/left joins against
-the target tables (replacing ~N JDBC round trips with two set-oriented
-joins — the single biggest algorithmic win, SURVEY.md §4) → window id
-assignment (ranks inside position buckets + one aggregate of the bucket
-sizes, ``operators.upsert.assign_surrogate_ids_scalable``) → two appends,
-the variant append skipped when the batch has no new variant. Two to three
-stages end-to-end; AQE handles partition sizing and skew.
+posexplode) → broadcast interval join (genes) → a left join against the
+variant store, persisted as ``matched`` → window id assignment (ranks inside
+position buckets + one aggregate of the bucket sizes,
+``operators.upsert.assign_surrogate_ids_scalable``) → the detail build at
+line grain (``sample_details``: each line's sample columns cross one exchange
+as one string, or none when the line variants are broadcast; the columns
+explode after it) → an anti-join against the detail store → two appends,
+the variant append skipped when the batch has no new variant. The two joins
+against the stores replace ~N JDBC round trips — the single biggest
+algorithmic win, SURVEY.md §4. Each action is a few stages over line-grain
+rows: on the 146-sample benchmark drop a fresh load runs 8 Spark jobs and
+a re-load 7 (small-input profile).
 
 Faithfully-reproduced quirks (SURVEY.md §1.4, verified against the Java):
 
@@ -54,9 +59,10 @@ and end_pos drift from one aggregate over the persisted ``matched`` frame
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hrdp_variant_load_pipeline_spark.functions.normalize import (
@@ -69,7 +75,7 @@ from hrdp_variant_load_pipeline_spark.functions.zygosity import zygosity_struct
 from hrdp_variant_load_pipeline_spark.operators.interval_join import with_exists_flag
 from hrdp_variant_load_pipeline_spark.runtime import release
 from hrdp_variant_load_pipeline_spark.sources.store import footer_max
-from hrdp_variant_load_pipeline_spark.sources.vcf import unpivot_samples
+from hrdp_variant_load_pipeline_spark.sources.vcf import vcf_header
 
 #: columns that uniquely identify one VCF data line
 LINE_KEY = ["source_file", "chromosome", "pos", "ref", "alt"]
@@ -245,6 +251,8 @@ def _dedup_against_store(cand: DataFrame, store: DataFrame) -> DataFrame:
     (map_key, chromosome, probe_start) (DAO.java:121-128). Residual match:
     null-safe ref/var equality + exact start equality
     (HrdpVariants.java:411-414). First match in db order ≈ min rgd_id.
+    ``__copies`` counts the candidate's rows before that pick: above 1 when
+    the line occurs twice in its file or matches several stored rows.
     """
     st = store.select(
         F.col("rgd_id").alias("store_rgd_id"),
@@ -269,9 +277,10 @@ def _dedup_against_store(cand: DataFrame, store: DataFrame) -> DataFrame:
         & (F.col("probe_start") == F.col("store_start"))
     )
     joined = cand.join(st, probe & residual, "left")
-    w = Window.partitionBy(*LINE_KEY, "allele_idx").orderBy(F.col("store_rgd_id"))
+    w = Window.partitionBy(*LINE_KEY, "allele_idx")
     return (
-        joined.withColumn("__rn", F.row_number().over(w))
+        joined.withColumn("__copies", F.count(F.lit(1)).over(w))
+        .withColumn("__rn", F.row_number().over(w.orderBy(F.col("store_rgd_id"))))
         .filter(F.col("__rn") == 1)
         .drop("__rn", "store_ref", "store_var", "store_rs", "store_chrom", "store_start", "store_map_key")
     )
@@ -320,8 +329,14 @@ def run_load(
     # branch, and the existing branch — persist so the scan → normalize
     # → genic join → dedup chain runs once, not 3-4 times. Tracked in
     # LoadResult.cached; callers release once outputs are materialized.
+    # The dedup probe's own columns are dropped first: every action of the
+    # load reads the whole cached row.
     cache_registry: list = []
-    matched = matched.withColumn("is_new", F.col("store_rgd_id").isNull()).persist()
+    matched = (
+        matched.drop("is_copy", "probe_start")
+        .withColumn("is_new", F.col("store_rgd_id").isNull())
+        .persist()
+    )
     cache_registry.append(matched)
 
     # ---- intra-batch dedup of new variants --------------------------------
@@ -398,67 +413,154 @@ def run_load(
     # ---- per-sample detail rows -------------------------------------------
     # j = position in the per-line new++existing list (new first, each in
     # allele order) — the reference indexes AD by this j (HrdpVariants.java:478).
+    # __rgd_lines: the lines (copies included) that carry the row's
+    # variant; a row can repeat a detail pair only where it is > 1
     w_j = Window.partitionBy(*LINE_KEY).orderBy(
         F.when(F.col("is_new"), 0).otherwise(1), "allele_idx"
     )
-    line_variants = with_ids.withColumn("j", F.row_number().over(w_j) - 1)
+    line_variants = with_ids.withColumn(
+        "__rgd_lines", F.sum("__copies").over(Window.partitionBy("rgd_id"))
+    ).withColumn("j", F.row_number().over(w_j) - 1)
+    details = sample_details(
+        vcf, line_variants, _file_samples(vcf, samples), detail_store
+    )
 
-    cells = unpivot_samples(
-        placed_lines(vcf).select(
-            "source_file", "chromosome", "pos", "ref", "alt", "sample_names", "sample_cells"
+    return LoadResult(
+        new_variants=new_variants,
+        end_pos_updates=end_pos_updates,
+        new_sample_details=details,
+        all_line_variants=line_variants.drop("__rgd_lines"),
+        matched=matched,
+        n_new=n_new,
+        cached=tuple(cache_registry),
+    )
+
+
+def _file_samples(vcf: DataFrame, samples: DataFrame) -> Column:
+    """Per line, its file's ``struct<slots, repeats>``, a lookup of
+    ``source_file`` in a literal map built on the driver from the header
+    (``vcf_header``) and the small sample dimension — no job for a
+    ``read_vcf`` frame and a driver-local dimension (``samples_dimension``):
+    ``slots`` holds the ``(sample_id, gender)`` of each sample column, null
+    for a name the dimension lacks; ``repeats`` is 2 when two columns of the
+    file map to one sample id, else 1."""
+    by_name = {}
+    for name, sid, gender in samples.select("analysis_name", "sample_id", "gender").collect():
+        if by_name.setdefault(name, (sid, gender)) != (sid, gender):
+            raise ValueError(f"samples: analysis name {name!r} has several sample ids")
+    per_file = {}
+    for source_file, names in vcf_header(vcf):
+        slots = [by_name.get(n) for n in names]
+        ids = [s[0] for s in slots if s is not None]
+        per_file[source_file] = {
+            "slots": [s and {"sample_id": s[0], "gender": s[1]} for s in slots],
+            "repeats": 2 if len(set(ids)) < len(ids) else 1,
+        }
+    id_type = samples.schema["sample_id"].dataType.simpleString()
+    lookup = F.from_json(
+        F.lit(json.dumps(per_file)),
+        f"map<string, struct<slots: array<struct<sample_id: {id_type}, gender: string>>,"
+        " repeats: int>>",
+    )
+    return F.try_element_at(lookup, F.col("source_file"))
+
+
+def sample_details(
+    vcf: DataFrame, line_variants: DataFrame, files: Column, detail_store: DataFrame
+) -> DataFrame:
+    """One VARIANT_SAMPLE_DETAIL row per (variant, called sample column)
+    not yet in ``detail_store`` (HrdpVariants.java:465-490), built at line
+    grain: each line's sample columns cross ONE exchange, as one string, in
+    the join to ``line_variants`` (which carries ``j`` and
+    ``__rgd_lines``), and none when ``line_variants`` is broadcast; the
+    columns' ``(sample_id, gender)`` come after it from ``files`` (see
+    ``_file_samples``), and the columns explode only then.
+
+    * DP carry-forward: a column whose DP does not parse takes the DP of the
+      nearest earlier surviving column of the line (known sample, GT not
+      ``0/0`` / ``./.``), as the reference's reused loop variable does — an
+      array expression over the line's columns, not a window.
+    * First occurrence per ``(rgd_id, sample_id)`` in (file, line, column)
+      order: the reference's insert-then-probe skips a later repeat. A pair
+      can repeat only on a row whose variant sits on several lines, or
+      whose file maps two columns to one sample. Those rows alone move to
+      their id's partition, where a window
+      keeps the first occurrence. The two branches read one join input:
+      the same exchange when the join shuffles, the same broadcast of
+      ``line_variants`` (and each its own scan of the lines) when not.
+    """
+    # a left join: only line_variants may become a broadcast side (the
+    # lines' size estimate is their compressed file size, far below the
+    # text they carry); a line without variants yields no pair
+    lines = placed_lines(vcf).select(
+        *LINE_KEY,
+        F.array_join("sample_cells", "\t").alias("__cells"),
+        files["repeats"].alias("__file_repeats"),
+    )
+    lv = line_variants.select(
+        *LINE_KEY,
+        "rgd_id",
+        "j",
+        "__rgd_lines",
+        F.col("chromosome").alias("v_chrom"),
+        F.col("start_pos").alias("v_start"),
+    )
+    rows = lines.join(lv, LINE_KEY, "left")
+
+    def survives(c):
+        return c["s"].isNotNull() & F.coalesce(
+            ~F.get(c["f"], 0).isin("0/0", "./."), F.lit(False)
         )
-    )
-    sample_dim = samples.select(
-        F.col("analysis_name").alias("sample_name"), "sample_id", "gender"
-    )
-    cells = (
-        cells.join(F.broadcast(sample_dim), "sample_name", "inner")
-        .withColumn("gt", F.split(F.col("cell"), ":").getItem(0))
-        .filter(~F.col("gt").isin("0/0", "./."))
-        .withColumn("ad", F.split(F.split(F.col("cell"), ":").getItem(1), ","))
-        .withColumn("dp_raw", F.split(F.col("cell"), ":").getItem(2).try_cast("int"))
-        .withColumn(
-            "total_depth",
-            F.last("dp_raw", ignorenulls=True).over(
-                Window.partitionBy(*LINE_KEY)
-                .orderBy("col_idx")
-                .rowsBetween(Window.unboundedPreceding, 0)
+
+    def pair(c, i):
+        # the DP of the last earlier surviving column that has one
+        carried = F.try_element_at(
+            F.filter(F.slice("__dp", 1, i), lambda d: d.isNotNull()), F.lit(-1)
+        )
+        var_freq = F.try_element_at(F.split(F.get(c["f"], 1), ","), F.col("j") + 2)
+        return F.struct(
+            i.alias("col_idx"),
+            c["s"]["sample_id"].alias("sample_id"),
+            c["s"]["gender"].alias("gender"),
+            F.when(survives(c), F.coalesce(F.get("__dp", i), carried)).alias("total_depth"),
+            F.when(survives(c), var_freq.try_cast("int")).alias("var_freq"),
+        )
+
+    def explode(df: DataFrame) -> DataFrame:
+        keep = ["source_file", "pos", "ref", "alt", "rgd_id", "j", "v_chrom", "v_start"]
+        # per column: its slot (null: unknown sample) and FORMAT fields
+        cols = F.transform(
+            F.arrays_zip(files["slots"].alias("s"), F.split("__cells", "\t").alias("f")),
+            lambda c: F.struct(c["s"].alias("s"), F.split(c["f"], ":").alias("f")),
+        )
+        parsed = df.select(*keep, cols.alias("__cols")).withColumn(
+            "__dp",
+            F.transform(
+                "__cols", lambda c: F.when(survives(c), F.get(c["f"], 2).try_cast("int"))
             ),
         )
+        pairs = F.filter(F.transform("__cols", pair), lambda x: x["var_freq"] != 0)
+        return parsed.select(*keep, F.explode(pairs).alias("__p")).select(*keep, "__p.*")
+
+    # > 1 when a pair of the row can repeat. One non-key column of each join
+    # side, not a conjunction: Catalyst can neither split it nor infer it
+    # for one side through the join keys, so the split stays above the join
+    repeats = F.greatest("__rgd_lines", "__file_repeats")
+    w_pair = Window.partitionBy("rgd_id", "sample_id").orderBy(
+        "source_file", "pos", "ref", "alt", "col_idx", "j"
     )
-
-    pairs = cells.join(
-        line_variants.select(
-            *LINE_KEY,
-            "rgd_id",
-            "j",
-            F.col("chromosome").alias("v_chrom"),
-            F.col("start_pos").alias("v_start"),
-        ),
-        LINE_KEY,
-        "inner",
-    ).withColumn("var_freq", F.try_element_at(F.col("ad"), F.col("j") + 2).try_cast("int"))
-
-    pairs = pairs.filter(F.col("var_freq").isNotNull() & (F.col("var_freq") != 0))
+    firsts = (
+        explode(rows.filter(repeats > 1).repartition("rgd_id"))
+        .withColumn("__pn", F.row_number().over(w_pair))
+        .filter(F.col("__pn") == 1)
+        .drop("__pn")
+    )
+    pairs = explode(rows.filter(repeats <= 1)).unionByName(firsts)
 
     # existence check vs detail store (M3): one anti-join replaces the
     # reference's per-pair JDBC count probe (DAO.java:64-66)
     existing_pairs = detail_store.select("rgd_id", "sample_id")
     pairs = pairs.join(existing_pairs, ["rgd_id", "sample_id"], "left_anti")
-
-    # intra-batch (rgd_id, sample_id) dedup: with new-variant ids fanned
-    # across files, the same variant×sample pair can now arrive from
-    # several source files in one run; keep the first occurrence in file
-    # order (the reference's insert-then-probe would find the earlier
-    # insert and skip)
-    w_pair = Window.partitionBy("rgd_id", "sample_id").orderBy(
-        "source_file", "pos", "ref", "alt", "col_idx"
-    )
-    pairs = (
-        pairs.withColumn("__pn", F.row_number().over(w_pair))
-        .filter(F.col("__pn") == 1)
-        .drop("__pn")
-    )
 
     z = zygosity_struct(
         F.col("var_freq"),
@@ -467,7 +569,7 @@ def run_load(
         F.col("v_chrom"),
         F.col("v_start"),
     )
-    details = (
+    return (
         pairs.withColumn("z", z)
         .select(
             "rgd_id",
@@ -490,16 +592,6 @@ def run_load(
             F.col("z.zygosity_in_pseudo").alias("zygosity_in_pseudo"),
             F.lit(0).alias("quality_score"),
         )
-    )
-
-    return LoadResult(
-        new_variants=new_variants,
-        end_pos_updates=end_pos_updates,
-        new_sample_details=details,
-        all_line_variants=line_variants,
-        matched=matched,
-        n_new=n_new,
-        cached=tuple(cache_registry),
     )
 
 

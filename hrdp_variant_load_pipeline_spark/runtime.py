@@ -1,5 +1,6 @@
 """The engine's one touch point with Spark's storage runtime: snapshot and
-release a frame, estimate its size, read the shuffle-partition count.
+release a frame, estimate its size, read the shuffle-partition count, build
+a driver-local frame.
 Every checkpoint and release in the package goes through here (plain
 ``.persist()`` stays as Spark's own idiom); ``tests/test_runtime.py``
 fails on a raw ``localCheckpoint``/``checkpoint``/``unpersist`` call
@@ -18,7 +19,10 @@ snapshot the new state, release the superseded one.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 #: estimates at or above this are Catalyst's stat-less Long.MaxValue
 #: default, not measurements
@@ -72,6 +76,27 @@ def estimated_bytes(df: DataFrame) -> int | None:
     except Exception:  # noqa: BLE001 — estimate only; callers fall back
         return None
     return None if est >= _NO_STATS_BYTES else est
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A frame of driver-built ``rows`` (tuples in ``schema`` order) planned
+    as a ``LocalRelation``, through a pyarrow Table.
+
+    ``createDataFrame(list)`` plans a ``LogicalRDD`` whose size estimate is
+    ``Long.MaxValue``: joins against it cannot be planned by size, an empty
+    one is not recognised as empty, and collecting it runs a job. A
+    ``LocalRelation`` carries its real size, an empty one is removed with
+    the joins over it (``PropagateEmptyRelation``), and ``collect()`` reads
+    it on the driver without a job. Broadcasting it still costs a job:
+    Spark 4.1 builds every broadcast relation in a job of its own, whatever
+    the source (measured: 2 jobs per action for a Python list, an Arrow or
+    pandas frame, ``VALUES`` and ``inline`` alike)."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def shuffle_partitions(spark: SparkSession) -> int:

@@ -19,6 +19,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hrdp_variant_load_pipeline_spark.runtime import local_frame
 from hrdp_variant_load_pipeline_spark.schemas import SAMPLE
 
 #: reference defaults for newly-created samples (HrdpVariants.java:66-83)
@@ -44,11 +45,12 @@ def samples_dimension(
     map_key: int,
     strain_rgd_ids: dict[str, int] | None = None,
 ) -> DataFrame:
-    """Build the broadcast ``samples`` dimension from a name→id config map.
+    """Build the ``samples`` dimension from a name→id config map.
 
-    One row per sample column the VCF header may reference; joins against
-    unpivoted sample cells replace the reference's per-column JDBC lookups
-    (``HrdpVariants.java:97-110``).
+    One row per sample column the VCF header may reference; the load maps
+    header names to sample ids through it, replacing the reference's
+    per-column JDBC lookups (``HrdpVariants.java:97-110``). A driver-local
+    frame (``runtime.local_frame``): the load reads its rows without a job.
     """
     strain_rgd_ids = strain_rgd_ids or {}
     rows = [
@@ -64,4 +66,4 @@ def samples_dimension(
         )
         for name, sid in sorted(sample_ids.items())
     ]
-    return spark.createDataFrame(rows, SAMPLE)
+    return local_frame(spark, rows, SAMPLE)

@@ -51,7 +51,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-from hrdp_variant_load_pipeline_spark.runtime import shuffle_partitions
+from hrdp_variant_load_pipeline_spark.runtime import local_frame, shuffle_partitions
 
 _VERSION_RE = re.compile(r"^v_(\d{8})$")
 COMMIT_MARKER = "_COMMITTED"
@@ -263,7 +263,9 @@ def read_store(
     ``version`` (the commit protocol keeps ``KEEP_PREVIOUS`` superseded
     versions, so the previous batch stays queryable: diff a repair against
     what it replaced, audit a load, roll analysis back a step). Empty
-    DataFrame (with ``schema``) when the store does not exist yet.
+    frame with ``schema`` when the store does not exist yet: a driver-local
+    one (``runtime.local_frame``), which Catalyst knows is empty, so the joins
+    a load makes against it plan away.
 
     The reader gets the schema of the version's first data file from its
     footer (``read_parquet``), the file Spark's inference would read, so
@@ -278,7 +280,7 @@ def read_store(
     if target is None:
         if schema is None:
             raise FileNotFoundError(f"no committed store under {root}")
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return read_parquet(spark, target, merge_schema)
 
 

@@ -7,11 +7,16 @@ followed by N per-sample cells; ``.vcf.gz`` is read transparently; input
 dirs are walked recursively keeping ``*.vcf.gz``.
 
 Spark design: one distributed text scan (native gzip). Only the per-file
-header lines — a handful of rows — are collected to the driver to build the
-file → sample-name map, which re-enters the plan as a broadcast dimension.
-Data rows never leave the cluster. Gzip is unsplittable (1 task per file);
-parallelism comes from many files, which matches the reference workload
-(146 strains). For 100 TB, re-stage to bgzip/Parquet first.
+header lines — a handful of rows — are read on the driver to build the
+file → sample-name map, which enters the plan as a literal: a line's
+``sample_names`` is a lookup of its file, which needs no broadcast job and
+which a plan that does not read the names drops. The same map is recorded
+in the metadata of the ``sample_names`` column (``vcf_header`` reads it
+back), so a plan can drop the per-line names before an exchange and map the
+sample columns after it from the driver-side header. Data rows never leave
+the cluster. Gzip is unsplittable (1 task per file); parallelism comes from
+many files, which matches the reference workload (146 strains). For 100 TB,
+re-stage to bgzip/Parquet first.
 """
 
 from __future__ import annotations
@@ -19,15 +24,23 @@ from __future__ import annotations
 import fnmatch
 import gzip
 import io
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
+
+from hrdp_variant_load_pipeline_spark.sources.store import footer_schema
 
 FIXED_COLS = ("chrom", "pos", "vcf_id", "ref", "alt", "qual", "filter", "info", "format")
 
 #: stop scanning a file for its #CHROM header after this many lines
 _HEADER_SCAN_LIMIT = 10_000
+
+#: metadata key of ``sample_names`` holding every input file's header, a
+#: JSON object ``{source_file: [sample name, ...]}``
+HEADER_KEY = "vcf_header"
 
 
 def _list_local_files(path: str, glob: str, recursive: bool) -> list[str]:
@@ -127,9 +140,15 @@ def read_vcf(
             (r["source_path"].rsplit("/", 1)[-1], r["value"].split("\t")[9:])
             for r in header_rows
         ]
-    header_df = spark.createDataFrame(
-        sample_map or [("", [])], "source_file string, sample_names array<string>"
-    )
+    # a line's sample names: a lookup of its file in a literal map (folded
+    # to one constant; a plan that does not read the names drops it, and no
+    # broadcast job builds it). The header also rides in the column's
+    # metadata (see vcf_header).
+    header_json = json.dumps(dict(sample_map))
+    sample_names = F.try_element_at(
+        F.from_json(F.lit(header_json), "map<string, array<string>>"),
+        F.col("source_file"),
+    ).alias("sample_names", metadata={HEADER_KEY: header_json})
 
     fields = F.split(F.col("value"), "\t")
     data = (
@@ -150,27 +169,21 @@ def read_vcf(
     out = data.withColumn(
         "source_file", F.element_at(F.split(F.col("source_path"), "/"), -1)
     ).drop("source_path")
-    return out.join(F.broadcast(header_df), "source_file", "left")
-
-
-def unpivot_samples(df: DataFrame) -> DataFrame:
-    """Explode the aligned (sample_names, sample_cells) arrays into one row
-    per (line, sample column), keeping the 0-based column index.
-
-    Equivalent of the reference's ``for (int i = 9; i < data.length; i++)``
-    loop (HrdpVariants.java:465): ``col_idx`` here == ``i - 9`` there.
-    """
-    zipped = F.arrays_zip(F.col("sample_names"), F.col("sample_cells"))
-    exploded = df.select(
-        *[c for c in df.columns if c not in ("sample_names", "sample_cells")],
-        F.posexplode(zipped).alias("col_idx", "cell_struct"),
+    return out.select(
+        "source_file", *[c for c in out.columns if c != "source_file"], sample_names
     )
-    return exploded.select(
-        *[c for c in df.columns if c not in ("sample_names", "sample_cells")],
-        "col_idx",
-        F.col("cell_struct.sample_names").alias("sample_name"),
-        F.col("cell_struct.sample_cells").alias("cell"),
-    )
+
+
+def vcf_header(vcf: DataFrame) -> list[tuple[str, list[str]]]:
+    """``(source_file, sample names)`` of each input file of ``vcf``, on the
+    driver. A ``read_vcf`` frame, or a restage of one, carries them in the
+    ``sample_names`` metadata: no job. Any other frame pays one aggregate
+    over its lines."""
+    meta = vcf.schema["sample_names"].metadata.get(HEADER_KEY)
+    if meta is not None:
+        return list(json.loads(meta).items())
+    rows = vcf.select("source_file", "sample_names").dropDuplicates(["source_file"])
+    return [(r[0], r[1]) for r in rows.collect()]
 
 
 def restage_to_parquet(
@@ -188,5 +201,19 @@ def restage_to_parquet(
 
 def read_restaged(spark: SparkSession, path: str) -> DataFrame:
     """Read rows previously written by ``restage_to_parquet`` — same shape
-    as ``read_vcf`` output, usable anywhere a VCF DataFrame is."""
-    return spark.read.parquet(path)
+    as ``read_vcf`` output, usable anywhere a VCF DataFrame is.
+
+    The schema is the footer schema of the first ``source_file`` partition
+    (``sources.store.footer_schema``) plus the partition column, declared
+    as a string: the frame ``spark.read.parquet`` returns, without its
+    inference job. A directory without partitions falls back to inference."""
+    jvm = spark._jvm
+    pattern = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/source_file=*")
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    parts = sorted(
+        st.getPath().toString() for st in fs.globStatus(pattern) or [] if st.isDirectory()
+    )
+    schema = footer_schema(spark, parts[0]) if parts else None
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema.add("source_file", StringType())).parquet(path)

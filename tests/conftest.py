@@ -21,9 +21,11 @@ def spark():
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
-def spark_jobs_of(spark, fn, *args):
-    """``(fn(*args), n)``: n is the number of Spark jobs the call ran,
-    counted under a job group of its own through the status tracker."""
+def spark_work_of(spark, fn, *args):
+    """``(fn(*args), work)``: the Spark work the call ran, under a job group
+    of its own, read as ``perfbench/spans.spark_counts`` reads it — ``jobs``,
+    ``tasks`` of the stages run (a stage skipped for reused shuffle output
+    is not) and the ``shuffle_bytes`` those stages wrote."""
     sc = spark.sparkContext
     group = f"jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -34,4 +36,22 @@ def spark_jobs_of(spark, fn, *args):
         sc.setLocalProperty("spark.job.description", None)
     # job events reach the status store through the async listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    store = spark._jsc.sc().statusStore()
+    work = {"jobs": 0, "tasks": 0, "shuffle_bytes": 0}
+    for job_id in tracker.getJobIdsForGroup(group):
+        work["jobs"] += 1
+        info = tracker.getJobInfo(job_id)
+        for stage_id in info.stageIds if info else ():
+            st = tracker.getStageInfo(stage_id)
+            if st is None:
+                continue
+            work["tasks"] += st.numTasks
+            work["shuffle_bytes"] += store.lastStageAttempt(stage_id).shuffleWriteBytes()
+    return out, work
+
+
+def spark_jobs_of(spark, fn, *args):
+    """``(fn(*args), n)``: n is the number of Spark jobs the call ran."""
+    out, work = spark_work_of(spark, fn, *args)
+    return out, work["jobs"]

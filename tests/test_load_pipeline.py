@@ -436,6 +436,32 @@ def test_allocator_ids_equal_global_row_number_across_buckets(spark):
         release(*cached)
 
 
+def test_surrogate_ids_query_leaves_nothing_persisted(spark):
+    """The ``surrogate_ids`` query passes the allocator no cache registry,
+    so nothing stays persisted: three calls leave the persistent-RDD set as
+    it was, and each equals the global ``row_number()`` its SQL states."""
+    from pyspark.sql import Window
+
+    from hrdp_variant_load_pipeline_spark.queries_core import surrogate_ids
+    from hrdp_variant_load_pipeline_spark.sources.tables import table
+    from tests.conftest import SF_DIR
+
+    def persisted():
+        return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+    c = table(spark, SF_DIR, "customer").filter(F.col("c_mktsegment") == "MACHINERY")
+    order = Window.orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
+    want = sorted(
+        tuple(r)
+        for r in c.select("c_custkey", (F.row_number().over(order) + 90000).alias("new_id"))
+        .collect()
+    )
+    before = persisted()
+    for _ in range(3):
+        assert sorted(tuple(r) for r in surrogate_ids(spark, SF_DIR).collect()) == want
+    assert persisted() == before
+
+
 def test_first_free_rgd_id_reads_footers_and_falls_back_to_aggregate(
     spark, tmp_path, monkeypatch
 ):
@@ -458,3 +484,166 @@ def test_first_free_rgd_id_reads_footers_and_falls_back_to_aggregate(
     monkeypatch.setattr(load, "footer_max", lambda *a: (False, None))
     value, jobs = spark_jobs_of(spark, load.first_free_rgd_id, store, root)
     assert value == 40 and jobs >= 1
+
+
+def _load_dir(spark, tmp_path, name, header, lines, sample_ids):
+    """run_load over one gzip VCF ``name`` (sample columns ``header``) into
+    empty stores, with a ``samples_dimension`` built from ``sample_ids``."""
+    from hrdp_variant_load_pipeline_spark.runtime import local_frame
+    from hrdp_variant_load_pipeline_spark.sources.config import samples_dimension
+
+    d = tmp_path / name
+    d.mkdir()
+    fixed = "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT"
+    with gzip.open(d / f"{name}.vcf.gz", "wt") as f:
+        f.write("##fileformat=VCFv4.2\n" + "\t".join([fixed, *header]) + "\n")
+        f.write("".join(line + "\n" for line in lines))
+    genes = spark.createDataFrame(
+        [], "chromosome string, start_pos long, stop_pos long, object_status string"
+    )
+    return run_load(
+        read_vcf(spark, str(d)),
+        genes,
+        samples_dimension(spark, sample_ids, 372),
+        local_frame(spark, [], VARIANT),
+        local_frame(spark, [], VARIANT_SAMPLE_DETAIL),
+        map_key=372,
+        next_rgd_id=1,
+    )
+
+
+def _details(res):
+    return sorted(
+        (r["sample_id"], r["var_freq"], r["total_depth"])
+        for r in res.new_sample_details.collect()
+    )
+
+
+def test_dp_carried_across_unknown_and_hom_ref_columns(spark, tmp_path):
+    """A DP that does not parse takes the DP of the nearest earlier
+    SURVIVING column: not the unknown sample's, not the 0/0 column's."""
+    res = _load_dir(
+        spark,
+        tmp_path,
+        "dpcarry",
+        ["S1", "UNKNOWN", "S2", "S3"],
+        [
+            "chr4\t100\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP"
+            "\t0/1:5,5:12\t0/1:3,3:99\t0/0:9,1:77\t0/1:4,4:."
+        ],
+        {"S1": 381, "S2": 382, "S3": 383},
+    )
+    try:
+        assert _details(res) == [(381, 5, 12), (383, 4, 12)]
+    finally:
+        res.release()
+
+
+def test_two_header_columns_of_one_sample_keep_the_first(spark, tmp_path):
+    """Two header names mapped to one sample id: one detail row, from the
+    first column (the reference's insert-then-probe skips the second)."""
+    res = _load_dir(
+        spark,
+        tmp_path,
+        "dupcols",
+        ["A_2019", "B_2019"],
+        ["chr4\t100\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP\t0/1:1,3:10\t0/1:1,6:20"],
+        {"A_2019": 900, "B_2019": 900},
+    )
+    try:
+        assert _details(res) == [(900, 3, 10)]
+    finally:
+        res.release()
+
+
+def test_variant_on_two_lines_of_one_file_keeps_the_first(spark, tmp_path):
+    """One variant on two lines of one file (the SNV A>G, then again as the
+    first allele of A>G,T) gets one id and one detail row per sample, from
+    the first line; the second line's other allele keeps its own row."""
+    res = _load_dir(
+        spark,
+        tmp_path,
+        "twolines",
+        ["S1", "S2"],
+        [
+            "chr4\t100\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP\t0/1:1,4:9\t0/0:9,0:9",
+            "chr4\t100\t.\tA\tG,T\t50\tPASS\t.\tGT:AD:DP\t1/2:1,3,5:9\t0/1:2,2,0:4",
+        ],
+        {"S1": 381, "S2": 382},
+    )
+    try:
+        assert res.n_new == 2
+        # A>G: S1 from the first line (4, not 3), S2 only on the second;
+        # A>T: S1 from AD[3] of the second line, S2 has depth 0 there
+        assert _details(res) == [(381, 4, 9), (381, 5, 9), (382, 2, 4)]
+    finally:
+        res.release()
+
+
+def _plan_nodes(node):
+    """``(node, ancestors)`` for every node of a physical plan."""
+    out, stack = [], [(node, ())]
+    while stack:
+        n, above = stack.pop()
+        out.append((n, above))
+        kids = n.children()
+        stack.extend((kids.apply(i), (*above, n)) for i in range(kids.size()))
+    return out
+
+
+def _cls(node):
+    return node.getClass().getSimpleName()
+
+
+def _window_keys(node):
+    spec = node.partitionSpec()
+    exprs = [spec.apply(i) for i in range(spec.size())]
+    return [e.name() if _cls(e) == "AttributeReference" else None for e in exprs]
+
+
+def _reads_lines(node):
+    return any(_cls(n) == "FileSourceScanExec" for n, _ in _plan_nodes(node))
+
+
+def test_sample_details_explode_after_the_one_cell_exchange(spark, vcf_dir, dims):
+    """The detail plan, walked by node class: no shuffle above the explode
+    of the sample columns, no window partitioned on the line key over the
+    lines, and the lines cross at most one exchange, which both branches
+    of the pair dedup read (the second through a reused exchange)."""
+    from hrdp_variant_load_pipeline_spark.plans.load import LINE_KEY
+    from hrdp_variant_load_pipeline_spark.runtime import local_frame
+    from hrdp_variant_load_pipeline_spark.sources.config import samples_dimension
+
+    genes, _ = dims
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        res = run_load(
+            read_vcf(spark, vcf_dir),
+            genes,
+            samples_dimension(spark, {"ACI_EurMcwi_2019": 381, "BN_NHsdMcwi_2019": 382}, 372),
+            local_frame(spark, [], VARIANT),
+            local_frame(spark, [], VARIANT_SAMPLE_DETAIL),
+            map_key=372,
+            next_rgd_id=1000,
+        )
+        nodes = _plan_nodes(res.new_sample_details._jdf.queryExecution().executedPlan())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
+    try:
+        generates = [above for n, above in nodes if _cls(n) == "GenerateExec"]
+        assert generates
+        for above in generates:
+            assert "ShuffleExchangeExec" not in {_cls(a) for a in above}
+        for n, _ in nodes:
+            if _cls(n) == "WindowExec" and _window_keys(n) == LINE_KEY:
+                assert not _reads_lines(n)
+        line_exchanges = [
+            n for n, _ in nodes if _cls(n) == "ShuffleExchangeExec" and _reads_lines(n)
+        ]
+        assert len(line_exchanges) <= 1
+        if line_exchanges:
+            assert "ReusedExchangeExec" in {_cls(n) for n, _ in nodes}
+        assert len(res.new_sample_details.collect()) == 8
+    finally:
+        res.release()

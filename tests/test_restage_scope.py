@@ -14,6 +14,7 @@ from hrdp_variant_load_pipeline_spark.sources.vcf import (
     read_vcf,
     restage_to_parquet,
 )
+from tests.conftest import spark_jobs_of
 
 VCF = """##fileformat=VCFv4.2
 #CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1
@@ -90,3 +91,14 @@ def test_scope_from_vcf_and_scoped_qc(spark, tmp_path):
     updates = genic_qc(store, genes, map_key=372, scope=scope_from_vcf(vcf))
     rows = {r["rgd_id"]: r["genic_status"] for r in updates.collect()}
     assert rows == {1: "GENIC"}  # visited drift repaired; 2 and 3 untouched
+
+
+def test_read_restaged_takes_its_schema_from_footers(spark, tmp_path):
+    """The restaged frame is built without a Spark job (the first
+    partition's footer schema plus the declared ``source_file`` partition
+    column), and its schema is the one ``spark.read.parquet`` infers."""
+    dest = str(tmp_path / "staged")
+    restage_to_parquet(read_vcf(spark, _write_vcf(tmp_path)), dest)
+    staged, jobs = spark_jobs_of(spark, read_restaged, spark, dest)
+    assert jobs == 0
+    assert staged.schema == spark.read.parquet(dest).schema

@@ -9,10 +9,12 @@ from types import SimpleNamespace
 
 from hrdp_variant_load_pipeline_spark.runtime import (
     estimated_bytes,
+    local_frame,
     release,
     shuffle_partitions,
     snapshot,
 )
+from tests.conftest import spark_jobs_of
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "hrdp_variant_load_pipeline_spark"
 
@@ -50,6 +52,32 @@ def test_estimated_bytes_none_without_stats_positive_for_parquet(spark, tmp_path
     # pins the private optimizedPlan().stats() accessor on this Spark
     est = estimated_bytes(spark.read.parquet(path))
     assert isinstance(est, int) and est > 0
+
+
+def _plan_classes(plan) -> set[str]:
+    out, stack = set(), [plan]
+    while stack:
+        node = stack.pop()
+        out.add(node.getClass().getSimpleName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_local_frame_is_a_local_relation_with_real_stats(spark):
+    """A driver-built frame plans as a LocalRelation: a real size estimate,
+    collected without a job, and an empty one takes the joins over it out
+    of the plan."""
+    df = local_frame(spark, [("a", 1), ("b", None)], "k string, v int")
+    assert df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
+    assert 0 < estimated_bytes(df) < 1024
+    rows, jobs = spark_jobs_of(spark, df.collect)
+    assert jobs == 0 and [tuple(r) for r in rows] == [("a", 1), ("b", None)]
+    empty = local_frame(spark, [], "k string, v int")
+    probe = spark.range(10).selectExpr("CAST(id AS STRING) AS k")
+    for how in ("left_anti", "left"):
+        plan = probe.join(empty, "k", how)._jdf.queryExecution().optimizedPlan()
+        assert not any("Join" in c for c in _plan_classes(plan)), how
 
 
 def test_release_frees_only_its_own_frame(spark):
