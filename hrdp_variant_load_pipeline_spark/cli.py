@@ -202,22 +202,17 @@ def cmd_genic_qc(spark: SparkSession, cfg: dict) -> dict[str, int]:
     scope = None
     if cfg.get("input_dir"):
         scope = scope_from_vcf(_vcf_input(spark, cfg))
-    # the merged scope and the updates stay cached through both the count
-    # and the repair write, so the write re-scans neither the VCF nor the
-    # store and rebuilds no broadcast. The count stays: n == 0 skips the
-    # write at the fixpoint.
-    cached: list = []
-    updates = genic_qc(
-        store, genes, map_key=cfg["map_key"], scope=scope, cache_registry=cached
-    ).persist()
-    cached.append(updates)
+    # the updates stay cached through both the count and the repair write,
+    # so the write re-scans neither the VCF nor the store and rebuilds no
+    # broadcast. The count stays: n == 0 skips the write at the fixpoint.
+    updates = genic_qc(store, genes, map_key=cfg["map_key"], scope=scope).persist()
     try:
         n = updates.count()
         if n:
             repaired = merge_update(store, updates, "rgd_id", ["genic_status"])
             commit_store_version(repaired, cfg["variant_store"])
     finally:
-        release(*cached)
+        release(updates)
     return {"genic_status_updated": n}
 
 

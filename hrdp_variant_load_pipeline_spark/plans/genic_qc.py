@@ -8,51 +8,28 @@ deliberate divergence from the loader's range probe — and batch-UPDATE rows
 whose status drifted (case-insensitive compare).
 
 Spark design: recompute genic status for the WHOLE variant table with one
-broadcast interval join + a filtered compare — no per-line loop, no range
-re-fetch. An optional ``scope`` DataFrame (chromosome, lo, hi) restricts
-the recompute to ranges touched by a given VCF batch, reproducing the
-reference's visit set.
+broadcast interval join + a filtered compare — no per-line loop. An
+optional ``scope`` DataFrame (chromosome, lo, hi) restricts the recompute
+to the stored variants some range of a given VCF batch covers, reproducing
+the reference's visit set: each range explodes into the
+``SCOPE_BIN_BASES``-wide bins it covers, and the store joins it by ONE
+left-semi join, equi on (chromosome, bin) with ``lo <= start_pos <= hi``
+as the residual. A semi-join keeps a variant once however many ranges
+cover it, so overlapping ranges need no merge, and the planner picks the
+strategy from the scope's size: a small scope is broadcast, a large one is
+shuffled on (chromosome, bin) beside the store. Nothing is persisted.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hrdp_variant_load_pipeline_spark.operators.interval_join import interval_join_binned
 from hrdp_variant_load_pipeline_spark.plans.load import placed_lines, with_genic_status
-from hrdp_variant_load_pipeline_spark.runtime import release
 
-#: above this many (merged) scope ranges the semi-join switches from
-#: broadcast to the binned equi-join — a forced broadcast of a
-#: million-line batch scope is a driver OOM at 146-strain scale
-BROADCAST_SCOPE_MAX_RANGES = 50_000
-
-
-def merge_scope_ranges(scope: DataFrame) -> DataFrame:
-    """Coalesce (chromosome, lo, hi) ranges into disjoint per-chromosome
-    intervals (classic sweep: sort by lo, extend while the next range
-    starts at or before the running max hi + 1 — positions are integral,
-    so touching ranges merge too).
-
-    ``scope_from_vcf`` emits one range per VCF line; a 146-strain batch is
-    millions of mostly-overlapping point ranges. Merging bounds the range
-    set by the batch's distinct loci footprint instead of its line count —
-    the difference between a broadcastable scope and a driver OOM. The
-    per-chromosome window sort is one shuffle of (chromosome, lo, hi)
-    triples, nothing wider.
-    """
-    w = Window.partitionBy("chromosome").orderBy("lo", "hi")
-    prev_max = F.max("hi").over(w.rowsBetween(Window.unboundedPreceding, -1))
-    grouped = scope.select("chromosome", "lo", "hi").withColumn(
-        "__grp",
-        F.sum(
-            F.when(prev_max.isNull() | (F.col("lo") > prev_max + 1), 1).otherwise(0)
-        ).over(w),
-    )
-    return grouped.groupBy("chromosome", "__grp").agg(
-        F.min("lo").alias("lo"), F.max("hi").alias("hi")
-    ).drop("__grp")
+#: width in bases of the scope join's bins: a range joins the stored
+#: variants of each bin it covers, and a stored variant probes its own bin
+SCOPE_BIN_BASES = 1_000_000
 
 
 def scope_from_vcf(vcf: DataFrame) -> DataFrame:
@@ -72,8 +49,7 @@ def scope_from_vcf(vcf: DataFrame) -> DataFrame:
       including consulting a comma-containing REF verbatim when only REF
       is multi-allelic) and probes the normalized [start_pos, end_pos].
 
-    Distinct ranges only: N lines at the same locus probe once. The result
-    is bounded by the batch's line count, so ``genic_qc`` broadcasts it.
+    Distinct ranges only: N lines at the same locus probe once.
     """
     from hrdp_variant_load_pipeline_spark.functions.normalize import normalize_allele
 
@@ -94,62 +70,36 @@ def genic_qc(
     genes: DataFrame,
     map_key: int,
     scope: DataFrame | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Return (rgd_id, genic_status) rows that need updating (M4).
 
-    ``scope``: optional (chromosome, lo, hi) ranges; when given, only
-    stored variants with ``lo <= start_pos <= hi`` on the same chromosome
-    are re-checked (GenicQc.java:197 semantics). Apply the result with
-    ``operators.upsert.merge_update(store, updates, "rgd_id",
-    ["genic_status"])``.
-
-    ``cache_registry``: when given, the persisted merged-scope frame is
-    appended for the caller to release AFTER materializing the result
-    (``run_load``'s protocol); otherwise it is released immediately and
-    the merge recomputes once in the final job.
+    ``scope``: optional (chromosome, lo, hi) ranges, overlapping or not;
+    when given, only stored variants with ``lo <= start_pos <= hi`` for
+    some range on the same chromosome are re-checked (GenicQc.java:197
+    semantics). Apply the result with ``operators.upsert.merge_update(store,
+    updates, "rgd_id", ["genic_status"])``.
     """
     variants = variant_store.filter(F.col("map_key") == map_key)
     if scope is not None:
-        # merge the per-line ranges first (disjoint, bounded by the batch's
-        # loci footprint), then pick the join strategy by ACTUAL size: small
-        # scopes broadcast, big ones go through the binned equi-join — never
-        # a forced broadcast of an unbounded side
-        merged = merge_scope_ranges(scope).persist()
-        n_ranges = merged.count()
-        if n_ranges <= BROADCAST_SCOPE_MAX_RANGES:
-            sc = merged.select(
-                F.col("chromosome").alias("__schrom"),
-                F.col("lo").alias("__slo"),
-                F.col("hi").alias("__shi"),
-            )
-            variants = variants.join(
-                F.broadcast(sc),
-                (F.col("chromosome") == F.col("__schrom"))
-                & (F.col("start_pos") >= F.col("__slo"))
-                & (F.col("start_pos") <= F.col("__shi")),
-                "left_semi",
-            )
-        else:
-            # point probes against DISJOINT ranges hit at most one range —
-            # the inner equi-join on (chromosome, bin) is exactly a semi
-            variants = (
-                interval_join_binned(
-                    variants.withColumn("__qp", F.col("start_pos")),
-                    merged,
-                    probe_keys=("chromosome", "start_pos", "__qp"),
-                    interval_keys=("chromosome", "lo", "hi"),
-                    distinct_pairs=False,
+        # ``div`` never decreases, so lo <= start_pos <= hi puts start_pos
+        # in one of the range's bins whatever the coordinates' sign
+        ranges = scope.select(
+            F.col("chromosome").alias("__schrom"),
+            F.col("lo").alias("__slo"),
+            F.col("hi").alias("__shi"),
+            F.explode(
+                F.sequence(
+                    F.expr(f"lo div {SCOPE_BIN_BASES}"), F.expr(f"hi div {SCOPE_BIN_BASES}")
                 )
-                .select("pr.*")
-                .drop("__qp")
-            )
-        if cache_registry is not None:
-            cache_registry.append(merged)
-        else:
-            # releasing now means the merge recomputes once when the caller
-            # materializes — the persist served the strategy-picking count
-            release(merged)
+            ).alias("__sbin"),
+        )
+        variants = variants.join(
+            ranges,
+            (F.col("chromosome") == F.col("__schrom"))
+            & (F.expr(f"start_pos div {SCOPE_BIN_BASES}") == F.col("__sbin"))
+            & F.col("start_pos").between(F.col("__slo"), F.col("__shi")),
+            "left_semi",
+        )
 
     # point probe (start, start): GenicQc.java:232
     recomputed = with_genic_status(

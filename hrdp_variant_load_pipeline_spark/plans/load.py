@@ -488,6 +488,14 @@ def sample_details(
       keeps the first occurrence. The two branches read one join input:
       the same exchange when the join shuffles, the same broadcast of
       ``line_variants`` (and each its own scan of the lines) when not.
+    * The window orders by ``(source_file, pos, ref, alt, col_idx, j)``,
+      then by ``chromosome``, ``total_depth`` (nulls first) and
+      ``var_freq``. The last three only rank rows the file order cannot:
+      two lines of one file with one ``LINE_KEY`` (or, matched by rs id,
+      differing only in chromosome) whose cells differ; of those, the row
+      with the smaller depth, then the smaller allele depth, is kept. Rows
+      still tied then store the same detail row, so the pick does not
+      depend on how the shuffle orders them.
     """
     # a left join: only line_variants may become a broadcast side (the
     # lines' size estimate is their compressed file size, far below the
@@ -547,7 +555,7 @@ def sample_details(
     # for one side through the join keys, so the split stays above the join
     repeats = F.greatest("__rgd_lines", "__file_repeats")
     w_pair = Window.partitionBy("rgd_id", "sample_id").orderBy(
-        "source_file", "pos", "ref", "alt", "col_idx", "j"
+        "source_file", "pos", "ref", "alt", "col_idx", "j", "v_chrom", "total_depth", "var_freq"
     )
     firsts = (
         explode(rows.filter(repeats > 1).repartition("rgd_id"))

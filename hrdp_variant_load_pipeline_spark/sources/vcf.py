@@ -29,11 +29,16 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
+from hrdp_variant_load_pipeline_spark.runtime import local_frame
+from hrdp_variant_load_pipeline_spark.schemas import VCF_ROW
 from hrdp_variant_load_pipeline_spark.sources.store import footer_schema
 
 FIXED_COLS = ("chrom", "pos", "vcf_id", "ref", "alt", "qual", "filter", "info", "format")
+
+#: file names ``read_vcf`` keeps, in the input directory and every subdirectory
+_VCF_GLOB = "*.vcf*"
 
 #: stop scanning a file for its #CHROM header after this many lines
 _HEADER_SCAN_LIMIT = 10_000
@@ -43,21 +48,12 @@ _HEADER_SCAN_LIMIT = 10_000
 HEADER_KEY = "vcf_header"
 
 
-def _list_local_files(path: str, glob: str, recursive: bool) -> list[str]:
+def _list_local_files(path: str) -> list[str]:
     if os.path.isfile(path):
         return [path]
     out = []
-    if recursive:
-        for root, _dirs, files in os.walk(path):
-            out.extend(
-                os.path.join(root, f) for f in files if fnmatch.fnmatch(f, glob)
-            )
-    else:
-        out = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if fnmatch.fnmatch(f, glob) and os.path.isfile(os.path.join(path, f))
-        ]
+    for root, _dirs, files in os.walk(path):
+        out.extend(os.path.join(root, f) for f in files if fnmatch.fnmatch(f, _VCF_GLOB))
     return sorted(out)
 
 
@@ -94,34 +90,28 @@ def _refuse_colliding_names(paths) -> None:
         )
 
 
-def read_vcf(
-    spark: SparkSession,
-    path: str,
-    recursive: bool = True,
-    glob: str = "*.vcf*",
-) -> DataFrame:
+def read_vcf(spark: SparkSession, path: str) -> DataFrame:
     """Read VCF file(s) into rows of the VCF_ROW shape plus aligned
-    ``sample_names``.
+    ``sample_names``. ``path`` is a file or a directory, walked recursively
+    for ``*.vcf*`` files.
 
     Returns columns: the 9 fixed VCF fields, ``sample_cells``
     (array<string>, one per sample column), ``sample_names``
     (array<string>, aligned with cells), ``source_file`` (basename).
     Raises ``ValueError`` when two input files share a basename.
     """
-    reader = spark.read
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true").option("pathGlobFilter", glob)
-    raw = reader.text(path).withColumn("source_path", F.input_file_name())
+    raw = (
+        spark.read.option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", _VCF_GLOB)
+        .text(path)
+        .withColumn("source_path", F.input_file_name())
+    )
 
     # headers sit at each file's head: read them driver-side (O(files),
     # bounded bytes per file) instead of filtering a distributed scan that
     # reads the whole corpus to find one line per file. Falls back to the
     # distributed scan for non-local stores.
-    local_files = (
-        _list_local_files(path, glob if recursive else "*", recursive)
-        if "://" not in path
-        else []
-    )
+    local_files = _list_local_files(path) if "://" not in path else []
     if local_files:
         _refuse_colliding_names(local_files)
         sample_map = []
@@ -186,17 +176,27 @@ def vcf_header(vcf: DataFrame) -> list[tuple[str, list[str]]]:
     return [(r[0], r[1]) for r in rows.collect()]
 
 
-def restage_to_parquet(
-    vcf: DataFrame, dest: str, partition_by: tuple[str, ...] = ("source_file",)
-) -> None:
-    """One-time restage of parsed VCF rows to splittable Parquet.
+#: the columns of a restage as ``read_restaged`` returns them: the
+#: ``read_vcf`` columns, the partition column last, every field nullable
+_RESTAGED_EMPTY = StructType(
+    [
+        *(f for f in VCF_ROW if f.name != "source_file"),
+        StructField("sample_names", ArrayType(StringType())),
+        VCF_ROW["source_file"],
+    ]
+)
+
+
+def restage_to_parquet(vcf: DataFrame, dest: str) -> None:
+    """One-time restage of parsed VCF rows to splittable Parquet,
+    partitioned by ``source_file``.
 
     Gzip text is unsplittable (1 task/file); for repeated processing at
     scale, pay the scan once and write columnar, partitioned storage —
     every later pass gets column pruning, predicate pushdown, and
     arbitrary parallelism. ``read_restaged`` round-trips the result.
     """
-    vcf.write.mode("overwrite").partitionBy(*partition_by).parquet(dest)
+    vcf.write.mode("overwrite").partitionBy("source_file").parquet(dest)
 
 
 def read_restaged(spark: SparkSession, path: str) -> DataFrame:
@@ -206,14 +206,15 @@ def read_restaged(spark: SparkSession, path: str) -> DataFrame:
     The schema is the footer schema of the first ``source_file`` partition
     (``sources.store.footer_schema``) plus the partition column, declared
     as a string: the frame ``spark.read.parquet`` returns, without its
-    inference job. A directory without partitions falls back to inference."""
+    inference job. A restage of a drop without data lines has no partition:
+    it reads as an empty local frame of the same columns."""
     jvm = spark._jvm
     pattern = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/source_file=*")
     fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
     parts = sorted(
         st.getPath().toString() for st in fs.globStatus(pattern) or [] if st.isDirectory()
     )
-    schema = footer_schema(spark, parts[0]) if parts else None
-    if schema is None:
-        return spark.read.parquet(path)
+    if not parts:
+        return local_frame(spark, [], _RESTAGED_EMPTY)
+    schema = footer_schema(spark, parts[0])
     return spark.read.schema(schema.add("source_file", StringType())).parquet(path)

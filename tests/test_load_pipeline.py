@@ -580,6 +580,37 @@ def test_variant_on_two_lines_of_one_file_keeps_the_first(spark, tmp_path):
         res.release()
 
 
+def test_two_lines_with_one_line_key_keep_the_documented_pick(spark, tmp_path):
+    """Two lines of one file with one LINE_KEY have no file order between
+    them: per sample, the row with the smaller depth wins, then the one
+    with the smaller allele depth, under any shuffle partition count."""
+    key = "chr4\t100\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP"
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in (1, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            res = _load_dir(
+                spark,
+                tmp_path,
+                f"sameline{n}",
+                ["S1", "S2", "S3"],
+                [
+                    f"{key}\t0/1:1,4:9\t0/1:1,2:5\t0/1:1,7:8",
+                    f"{key}\t0/1:1,3:12\t0/1:1,6:3\t0/1:1,5:8",
+                ],
+                {"S1": 381, "S2": 382, "S3": 383},
+            )
+            try:
+                assert res.n_new == 1
+                # S1 from the first line (depth 9 < 12), S2 from the second
+                # (3 < 5), S3 ties on depth 8: allele depth 5 < 7
+                assert _details(res) == [(381, 4, 9), (382, 6, 3), (383, 5, 8)], n
+            finally:
+                res.release()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
 def _plan_nodes(node):
     """``(node, ancestors)`` for every node of a physical plan."""
     out, stack = [], [(node, ())]

@@ -1,6 +1,6 @@
 """Round-3 hardening: reliable checkpointing for iterative operators,
 caller-releasable minhash checkpoints, batch-order merge_update, and the
-merged/thresholded genic-QC scope join."""
+genic-QC scope join."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ from hrdp_variant_load_pipeline_spark.operators.dedup import (
 )
 from hrdp_variant_load_pipeline_spark.operators.similarity import train_centroids
 from hrdp_variant_load_pipeline_spark.operators.upsert import merge_update
+from hrdp_variant_load_pipeline_spark.runtime import local_frame
 import importlib
 
 # the plans package re-exports the genic_qc FUNCTION under the same name,
@@ -162,56 +163,129 @@ def test_merge_update_order_col_last_wins(spark):
     assert ordered == {1: 150, 2: 200}  # reference batch-order semantics
 
 
-def test_merge_scope_ranges(spark):
-    scope = spark.createDataFrame(
-        [
-            ("1", 10, 20),
-            ("1", 15, 25),  # overlaps -> [10,25]
-            ("1", 26, 30),  # touches (26 = 25+1) -> [10,30]
-            ("1", 40, 45),  # gap -> own range
-            ("2", 10, 20),  # other chromosome untouched
-        ],
-        "chromosome string, lo long, hi long",
-    )
-    got = {
-        (r["chromosome"], r["lo"], r["hi"])
-        for r in GQ.merge_scope_ranges(scope).collect()
-    }
-    assert got == {("1", 10, 30), ("1", 40, 45), ("2", 10, 20)}
+#: (rgd_id, chromosome, start_pos, genic_status, map_key) of a store that
+#: places variants inside, between and at the edges of ``QC_SCOPE``
+QC_STORE = [
+    (1, "1", 95, "INTERGENIC", 372),  # first of two overlapping ranges
+    (2, "1", 105, "INTERGENIC", 372),  # in both overlapping ranges: once
+    (3, "1", 115, "INTERGENIC", 372),  # second overlapping range only
+    (4, "1", 150, "INTERGENIC", 372),  # between ranges: never visited
+    (5, "1", 210, "INTERGENIC", 372),  # last base of a range...
+    (6, "1", 211, "INTERGENIC", 372),  # ...first base of the touching one
+    (7, "1", 221, "INTERGENIC", 372),  # one past the touching range
+    (8, "1", 999_995, "INTERGENIC", 372),  # a range across the 1 Mb edge
+    (9, "1", 1_000_005, "INTERGENIC", 372),
+    (10, "1", 1_000_011, "INTERGENIC", 372),
+    (11, "1", 5_000, "INTERGENIC", 372),  # multi-allelic [pos, pos+1]
+    (12, "1", 5_001, "INTERGENIC", 372),
+    (13, "1", 5_002, "INTERGENIC", 372),
+    (14, "2", 100, "GENIC", 372),  # another chromosome's range
+    (15, "3", 100, "GENIC", 372),  # a chromosome no range visits
+    (16, "1", 105, "INTERGENIC", 360),  # another map
+    (17, "1", 106, "genic", 372),  # the drift compare ignores case
+]
+QC_SCOPE = [
+    ("1", 90, 110),
+    ("1", 100, 120),
+    ("1", 200, 210),
+    ("1", 211, 220),
+    ("1", 999_990, 1_000_010),
+    ("1", 5_000, 5_001),
+    ("2", 90, 110),
+]
+#: ACTIVE genes (chromosome, start, stop): all of chromosome 1 the store
+#: uses, nothing on 2 or 3
+QC_GENES = [("1", 1, 2_000_000)]
 
 
-@pytest.fixture()
-def qc_frames(spark):
+def _qc_brute_force(store, scope, genes, map_key):
+    """The reference's visit set and point probe, row by row."""
+    out = set()
+    for rgd, chrom, start, status, mk in store:
+        if mk != map_key or not any(c == chrom and lo <= start <= hi for c, lo, hi in scope):
+            continue
+        genic = any(c == chrom and s <= start <= e for c, s, e in genes)
+        new = "GENIC" if genic else "INTERGENIC"
+        if status.upper() != new:
+            out.add((rgd, new))
+    return out
+
+
+def _qc_frames(spark):
     store = spark.createDataFrame(
-        [
-            (1, "1", 100, "INTERGENIC", 372),  # in gene + in scope -> drift
-            (2, "1", 500, "INTERGENIC", 372),  # out of scope -> untouched
-            (3, "2", 100, "GENIC", 372),  # in scope, not in gene -> drift
-        ],
+        QC_STORE,
         "rgd_id long, chromosome string, start_pos long, genic_status string, map_key int",
     )
     genes = spark.createDataFrame(
-        [("1", 50, 150, "ACTIVE", 372)],
+        [(c, s, e, "ACTIVE", 372) for c, s, e in QC_GENES],
         "chromosome string, start_pos long, stop_pos long, object_status string, map_key int",
     )
-    scope = spark.createDataFrame(
-        [("1", 90, 110), ("2", 90, 110)], "chromosome string, lo long, hi long"
-    )
+    # a local relation: the planner sees its real (small) size
+    scope = local_frame(spark, QC_SCOPE, "chromosome string, lo long, hi long")
     return store, genes, scope
 
 
-def test_genic_qc_scope_broadcast_and_binned_agree(spark, qc_frames, monkeypatch):
-    store, genes, scope = qc_frames
-    expect = {(1, "GENIC"), (3, "INTERGENIC")}
-    broad = {
-        (r["rgd_id"], r["genic_status"])
-        for r in GQ.genic_qc(store, genes, map_key=372, scope=scope).collect()
-    }
-    # force the binned path by dropping the broadcast threshold to zero
-    monkeypatch.setattr(GQ, "BROADCAST_SCOPE_MAX_RANGES", 0)
-    binned = {
-        (r["rgd_id"], r["genic_status"])
-        for r in GQ.genic_qc(store, genes, map_key=372, scope=scope).collect()
-    }
-    assert broad == expect
-    assert binned == expect
+@pytest.mark.parametrize("broadcast_threshold", ["10MB", "-1"])
+def test_genic_qc_scope_matches_brute_force(spark, broadcast_threshold):
+    """The scoped QC updates exactly the rows a per-range brute force
+    visits and finds drifted, once each, whether the planner broadcasts
+    the scope or shuffles it beside the store."""
+    store, genes, scope = _qc_frames(spark)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, broadcast_threshold)
+    try:
+        rows = [
+            (r["rgd_id"], r["genic_status"])
+            for r in GQ.genic_qc(store, genes, map_key=372, scope=scope).collect()
+        ]
+    finally:
+        spark.conf.set(key, saved)
+    expect = _qc_brute_force(QC_STORE, QC_SCOPE, QC_GENES, 372)
+    assert {r for r, _ in expect} == {1, 2, 3, 5, 6, 8, 9, 11, 12, 14}
+    assert len(rows) == len(set(rows))
+    assert set(rows) == expect
+
+
+def test_genic_qc_scope_is_one_broadcast_semi_join(spark, tmp_path):
+    """A small scope joins the stored variants by one broadcast left-semi
+    join with no exchange over the store scan, and building the QC frame
+    runs no job and persists nothing."""
+    from tests.conftest import spark_jobs_of
+
+    store, genes, scope = _qc_frames(spark)
+    store.write.parquet(str(tmp_path / "store"))
+    store = spark.read.parquet(str(tmp_path / "store"))
+    sc = spark.sparkContext
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        before = set(sc._jsc.getPersistentRDDs().keySet())
+        updates, jobs = spark_jobs_of(spark, GQ.genic_qc, store, genes, 372, scope)
+        plan = updates._jdf.queryExecution().executedPlan()
+        n_updates = len(updates.collect())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
+    assert jobs == 0
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == before
+    assert n_updates == len(_qc_brute_force(QC_STORE, QC_SCOPE, QC_GENES, 372))
+
+    def walk(node):
+        yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    def cls(node):
+        return node.getClass().getSimpleName()
+
+    semis = [
+        n
+        for n in walk(plan)
+        if cls(n) == "BroadcastHashJoinExec" and n.joinType().toString() == "LeftSemi"
+    ]
+    assert len(semis) == 1
+    assert semis[0].buildSide().toString() == "BuildRight"
+    streamed = [cls(n) for n in walk(semis[0].left())]
+    assert "FileSourceScanExec" in streamed
+    assert "ShuffleExchangeExec" not in streamed

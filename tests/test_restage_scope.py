@@ -102,3 +102,24 @@ def test_read_restaged_takes_its_schema_from_footers(spark, tmp_path):
     staged, jobs = spark_jobs_of(spark, read_restaged, spark, dest)
     assert jobs == 0
     assert staged.schema == spark.read.parquet(dest).schema
+
+
+def test_restage_without_data_lines_reads_as_empty_frame(spark, tmp_path):
+    """A restage of a header-only drop writes no partition; it reads back
+    as an empty frame, without a job, with the columns and types a
+    non-empty restage has (the header metadata aside: there is none)."""
+    vdir = tmp_path / "empty"
+    vdir.mkdir()
+    with gzip.open(vdir / "BN_X_2020_v1_PASS.vcf.gz", "wt") as f:
+        f.write(VCF.split("chr1")[0])
+    dest = str(tmp_path / "staged")
+    restage_to_parquet(read_vcf(spark, str(vdir)), dest)
+    staged, jobs = spark_jobs_of(spark, read_restaged, spark, dest)
+    assert jobs == 0
+    full = str(tmp_path / "full")
+    restage_to_parquet(read_vcf(spark, _write_vcf(tmp_path)), full)
+    def fields(df):
+        return [(f.name, f.dataType, f.nullable) for f in df.schema]
+
+    assert fields(staged) == fields(read_restaged(spark, full))
+    assert staged.collect() == []
