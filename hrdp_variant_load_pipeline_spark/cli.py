@@ -170,7 +170,6 @@ def cmd_run_load(spark: SparkSession, cfg: dict) -> dict[str, int]:
         )
         out.update(load_metrics(res, variants_entered, sample_details_entered))
     finally:
-        # the counters read res.matched's cache, so release only after them
         res.release()
     return out
 

@@ -7,8 +7,8 @@ batch UPDATEs (DAO.java:142-163). Set-oriented Spark equivalents:
 
 * existence probe → one anti/left join of the whole batch against the
   store (single shuffle or broadcast, not N round trips);
-* ``rgd_ids_seq.nextval`` → window id assignment: ``row_number()`` inside
-  order-preserving buckets + the rows of the buckets before + the store's
+* ``rgd_ids_seq.nextval`` → window id assignment: ``dense_rank()`` inside
+  order-preserving buckets + the ids of the buckets before + the store's
   current max id, from one aggregate (parallel, deterministic — NOT
   ``monotonically_increasing_id``, whose values depend on partitioning);
 * keyed UPDATE → MERGE emulation: anti-join the store against the updates,
@@ -33,41 +33,55 @@ def assign_surrogate_ids_scalable(
     base_id: int,
     id_col: str = "rgd_id",
     cache_registry: list | None = None,
-) -> tuple[DataFrame, int]:
+    totals: DataFrame | None = None,
+) -> tuple[DataFrame, int, dict | None]:
     """Number the rows of ``df`` ``base_id + 1, base_id + 2, …`` in
-    ``order_by`` order; return the numbered frame and the number of ids.
+    ``order_by`` order, rows that tie on ``order_by`` sharing one id; return
+    the numbered frame, the number of ids (distinct ``order_by`` tuples) and
+    the row of ``totals``.
 
     ``buckets`` are columns whose ascending tuple order coarsens
     ``order_by``: every row of a lower bucket sorts before every row of a
-    higher one (a leading order key, or a monotone function of one). Each
-    row is ranked inside its bucket by a window partitioned on the bucket,
-    so no task sorts more than its buckets. ONE collect returns every
-    bucket's row count and the number of rows in the buckets before it,
-    computed by a window over the small counts frame (an ``orderBy`` would
-    start a range-sampling job). A row's id is ``base_id + offset + rank``:
-    the same ids as a global ``row_number()`` window over ``order_by``,
-    with no single-partition sort.
+    higher one (a leading order key, or a monotone function of one), so
+    rows that tie on ``order_by`` share a bucket. Each row is dense-ranked
+    inside its bucket by a window partitioned on the bucket, so no task
+    sorts more than its buckets. ONE collect returns every bucket's id
+    count and the number of ids in the buckets before it, computed by a
+    window over the small counts frame (an ``orderBy`` would start a
+    range-sampling job). A row's id is ``base_id + offset + rank``: the
+    same ids as a global ``dense_rank()`` window over ``order_by``, with no
+    single-partition sort.
+
+    ``totals`` is a one-row frame (an aggregate the caller needs anyway)
+    that the same collect returns, as a dict of its columns, so the caller
+    runs no job of its own for it; its column names must differ from the
+    allocator's (``__b<i>``, ``__n``, ``__offset``). None without it.
 
     With ``cache_registry``, the ranked frame is persisted and appended to
     it, so the counts and the ids read one ranking; the returned frame reads
     it lazily, so release it once the result has been materialized. Without
-    it nothing stays persisted and the ranking runs again for the ids, so
-    ``order_by`` must then be a total order (ties would rank differently
-    between the two runs).
+    it nothing stays persisted and the ranking runs again for the ids,
+    which dense ranks make the same ranking.
     """
     spark = df.sparkSession
     keys = [f"__b{i}" for i in range(len(buckets))]
     ranked = df.withColumns(dict(zip(keys, buckets))).withColumn(
-        "__rank", F.row_number().over(Window.partitionBy(*keys).orderBy(*order_by))
+        "__rank", F.dense_rank().over(Window.partitionBy(*keys).orderBy(*order_by))
     )
     if cache_registry is not None:
         ranked = ranked.persist()
         cache_registry.append(ranked)
     before = Window.orderBy(*keys).rowsBetween(Window.unboundedPreceding, -1)
-    counts = ranked.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
-    rows = counts.withColumn(
+    counts = ranked.groupBy(*keys).agg(F.max("__rank").alias("__n"))
+    counts = counts.withColumn(
         "__offset", F.coalesce(F.sum("__n").over(before), F.lit(0)).cast("long")
-    ).collect()
+    )
+    if totals is not None:
+        # the totals row is the one without an id count
+        counts = counts.unionByName(totals, allowMissingColumns=True)
+    rows = counts.collect()
+    total = next(({c: r[c] for c in totals.columns} for r in rows if r["__n"] is None), None)
+    rows = [r for r in rows if r["__n"] is not None]
     offsets = local_frame(
         spark,
         [[*(r[k] for k in keys), r["__offset"]] for r in rows],
@@ -82,7 +96,7 @@ def assign_surrogate_ids_scalable(
         .withColumn(id_col, (F.lit(base_id) + F.col("__offset") + F.col("__rank")).cast("long"))
         .drop(*keys, *offsets.columns, "__rank")
     )
-    return numbered, sum(r["__n"] for r in rows)
+    return numbered, sum(r["__n"] for r in rows), total
 
 
 def merge_update(

@@ -8,17 +8,18 @@ batched inserts.
 
 Spark lifecycle: one text scan → narrow transforms (filter / normalize /
 posexplode) → broadcast interval join (genes) → a left join against the
-variant store, persisted as ``matched`` → window id assignment (ranks inside
-position buckets + one aggregate of the bucket sizes,
-``operators.upsert.assign_surrogate_ids_scalable``) → the detail build at
-line grain (``sample_details``: each line's sample columns cross one exchange
-as one string, or none when the line variants are broadcast; the columns
-explode after it) → an anti-join against the detail store → two appends,
-the variant append skipped when the batch has no new variant. The two joins
-against the stores replace ~N JDBC round trips — the single biggest
-algorithmic win, SURVEY.md §4. Each action is a few stages over line-grain
-rows: on the 146-sample benchmark drop a fresh load runs 8 Spark jobs and
-a re-load 7 (small-input profile).
+variant store, persisted as ``matched`` → window id assignment (dense ranks
+of every new line-allele inside position buckets + one collect of the bucket
+sizes, ``operators.upsert.assign_surrogate_ids_scalable``; the same collect
+returns the run counters and whether a detail pair can repeat) → the detail
+build at line grain (``sample_details``: each line's sample columns cross
+one exchange as one string, or none when the line variants are broadcast;
+the columns explode after it) → an anti-join against the detail store → two
+appends, the variant append skipped when the batch has no new variant. The
+two joins against the stores replace ~N JDBC round trips — the single
+biggest algorithmic win, SURVEY.md §4. Each action is a few stages over
+line-grain rows: on the 146-sample benchmark drop a fresh load runs 6 Spark
+jobs and a re-load 6 (small-input profile).
 
 Faithfully-reproduced quirks (SURVEY.md §1.4, verified against the Java):
 
@@ -53,8 +54,9 @@ Run counters (A1): the reference increments them as it inserts
 (HrdpVariants.java:116-133). Here they come from work the load already
 does: the rows-entered counts from the two store appends
 (``sources.store.append_to_store`` returns what it wrote), the dedup hits
-and end_pos drift from one aggregate over the persisted ``matched`` frame
-(``load_metrics``). Nothing re-executes the load plan to count it.
+and end_pos drift from an aggregate over the persisted ``matched`` frame
+that the id allocator's collect returns (``LoadResult``; ``load_metrics``
+runs no job). Nothing re-executes the load plan to count it.
 """
 
 from __future__ import annotations
@@ -82,32 +84,37 @@ LINE_KEY = ["source_file", "chromosome", "pos", "ref", "alt"]
 
 SPECIES_TYPE_KEY = 3  # rat (HrdpVariants.java:309)
 
+#: the residual match key of a variant: line-alleles equal on it (nulls
+#: equal) are one variant, stored once under one id
+VARIANT_KEY = ["map_key", "chromosome", "start_pos", "ref_nuc", "var_nuc"]
+
 #: width in bases of the position buckets the id allocator ranks within:
-#: ``(source_file, chromosome, pos div ID_BUCKET_BASES)`` coarsens the id
-#: order, and a bucket of one file's 1 Mb window is small enough to sort
+#: ``(source_file, chromosome, pos div ID_BUCKET_BASES)`` of a variant's
+#: first occurrence coarsens the id order, and a bucket of one file's 1 Mb
+#: window is small enough to sort
 ID_BUCKET_BASES = 1_000_000
 
 
 @dataclass
 class LoadResult:
-    """Outputs of one load run (all lazy DataFrames).
+    """Outputs of one load run (lazy DataFrames) and its counters.
 
-    ``matched`` is the persisted dedup result every output reads (one row
-    per line-allele, ``is_new`` plus the matched store row's id and
-    end_pos); ``load_metrics`` aggregates it, so read the counters before
-    ``release()``. ``matched`` stays valid through both appends: a store
+    The outputs read the frames in ``cached`` (the dedup result and the id
+    allocator's ranking); they stay valid through both appends: a store
     append is invisible to plans built before it
-    (``sources.store.append_to_store``), so the detail build and the
-    counters see the stores as the load probed them, not the variants it
-    has just appended. ``n_new`` is 0 when every variant of the batch is
-    already stored: the caller then skips the variant append."""
+    (``sources.store.append_to_store``), so the detail build sees the
+    stores as the load probed them, not the variants it has just appended.
+    ``n_new`` is 0 when every variant of the batch is already stored: the
+    caller then skips the variant append. The counters were collected while
+    the load was planned, by the id allocator's one collect."""
 
     new_variants: DataFrame  # VARIANT schema → variant + variant_map_data sinks
     end_pos_updates: DataFrame  # (rgd_id, end_pos) drift, detected-not-applied
     new_sample_details: DataFrame  # VARIANT_SAMPLE_DETAIL schema
     all_line_variants: DataFrame  # internal: new+existing per line (for QC/tests)
-    matched: DataFrame  # persisted candidates-vs-store match (in ``cached``)
     n_new: int = 0  # rows of new_variants, counted by the id allocator
+    existing_matched: int = 0  # line-alleles the store already held
+    end_pos_drift_detected: int = 0  # rows of end_pos_updates
     cached: tuple = ()  # frames run_load persisted; released via release()
 
     def release(self) -> None:
@@ -147,13 +154,15 @@ def with_genic_status(
     """Add ``status_col``: GENIC when the (chromosome, start, stop) probe
     overlaps an ACTIVE gene of ``map_key`` (of any map when ``genes`` has
     no ``map_key`` column), else INTERGENIC. ``with_exists_flag`` is
-    single-pass over the probe side, so callers need no persist."""
+    single-pass over the probe side, so callers need no persist. The gene
+    rows are dimension-sized: ``coalesce(1)`` lets its per-chromosome
+    aggregate run in one task with no exchange."""
     active = genes.filter(F.col("object_status") == "ACTIVE")
     if "map_key" in genes.columns:
         active = active.filter(F.col("map_key") == map_key)
     flagged = with_exists_flag(
         probes,
-        active.select("chromosome", "start_pos", "stop_pos"),
+        active.select("chromosome", "start_pos", "stop_pos").coalesce(1),
         flag="__genic",
         probe_keys=probe_keys,
     )
@@ -310,24 +319,25 @@ def run_load(
     next_rgd_id: int | None = None,
 ) -> LoadResult:
     """Full ``--runLoad`` equivalent. All outputs are lazy DataFrames; the
-    id allocator's one aggregate runs here. ``next_rgd_id`` defaults to
-    ``first_free_rgd_id(variant_store)``."""
+    id allocator's one collect, which also returns the run counters and
+    decides whether a detail pair can repeat, is the only action run here.
+    ``next_rgd_id`` defaults to ``first_free_rgd_id(variant_store)``."""
     cand = parse_variants(vcf, genes, map_key)
     matched = _dedup_against_store(cand, variant_store)
 
     if next_rgd_id is None:
         next_rgd_id = first_free_rgd_id(variant_store)
 
-    # id allocation (S9): only NEW rows get ids, ranked inside position
-    # buckets — never a global single-partition window.
+    # id allocation (S9): only NEW rows get ids, dense-ranked inside
+    # position buckets — never a global single-partition window.
     # Imported at call time: perfbench's tracer wraps the module attribute.
     from hrdp_variant_load_pipeline_spark.operators.upsert import (
         assign_surrogate_ids_scalable,
     )
 
-    # diamond reuse: matched feeds the allocator's ranked frame, the new
-    # branch, and the existing branch — persist so the scan → normalize
-    # → genic join → dedup chain runs once, not 3-4 times. Tracked in
+    # diamond reuse: matched feeds the allocator's ranked frame, its totals
+    # and the existing branch — persist so the scan → normalize → genic
+    # join → dedup chain runs once, not 3-4 times. Tracked in
     # LoadResult.cached; callers release once outputs are materialized.
     # The dedup probe's own columns are dropped first: every action of the
     # load reads the whole cached row.
@@ -345,49 +355,68 @@ def run_load(
     # several files/lines of one run collapses onto the first insert's id.
     # A store-snapshot anti-join alone misses that: each occurrence would
     # mint its own rgd_id and duplicate the variant row. Set-oriented
-    # equivalent: group new candidates on the residual match key
-    # (map_key, chromosome, start_pos, ref_nuc, var_nuc — null-safe via a
-    # sentinel-coalesced composite key, mirroring eqNullSafe in
-    # _dedup_against_store), allocate ONE id per distinct variant from its
-    # first occurrence in file order, and fan the id back to every
-    # line-allele so sample details all attach to the same variant.
-    vkey = F.concat_ws(
-        "\x01",
-        F.col("map_key").cast("string"),
-        F.col("chromosome"),
-        F.col("start_pos").cast("string"),
-        F.coalesce(F.col("ref_nuc"), F.lit("\x02")),
-        F.coalesce(F.col("var_nuc"), F.lit("\x02")),
+    # equivalent: every new line-allele carries its variant's first
+    # occurrence in file order (a window on the residual match key, whose
+    # partitioning groups nulls as eqNullSafe does in _dedup_against_store),
+    # the allocator orders by that occurrence and the variant key, and its
+    # dense ranks give all rows of one variant one id. No join back.
+    # The first occurrence is kept as flat columns: the allocator persists
+    # them, and the columnar cache compresses flat columns, not structs.
+    w_first = Window.partitionBy(*VARIANT_KEY).orderBy("source_file", "pos", "allele_idx")
+    news = matched.filter("is_new").withColumns(
+        {
+            "__canon": F.row_number().over(w_first) == 1,
+            "__first_file": F.first("source_file").over(w_first),
+            "__first_pos": F.first("pos").over(w_first),
+            "__first_allele": F.first("allele_idx").over(w_first),
+        }
     )
-    news = matched.filter("is_new").withColumn("__vkey", vkey)
-    w_first = Window.partitionBy("__vkey").orderBy(
-        "source_file", "pos", "allele_idx"
-    )
-    canon = (
-        news.withColumn("__occ", F.row_number().over(w_first))
-        .filter(F.col("__occ") == 1)
-        .drop("__occ")
-    )
-    canon_ids, n_new = assign_surrogate_ids_scalable(
-        canon,
-        order_by=["source_file", "chromosome", "pos", "allele_idx", "var_nuc"],
+    files, file_repeats = _file_samples(vcf, samples)
+    numbered, n_new, totals = assign_surrogate_ids_scalable(
+        news,
+        order_by=[
+            "__first_file",
+            "chromosome",
+            "__first_pos",
+            "__first_allele",
+            "var_nuc",
+            # then the variant key: two variants never tie
+            *VARIANT_KEY,
+        ],
         buckets=[
-            F.col("source_file"),
+            F.col("__first_file"),
             F.col("chromosome"),
-            F.expr(f"pos div {ID_BUCKET_BASES}"),
+            F.expr(f"__first_pos div {ID_BUCKET_BASES}"),
         ],
         base_id=next_rgd_id - 1,
         cache_registry=cache_registry,
+        # the run counters and the facts that decide whether a detail pair
+        # can repeat, from the allocator's one collect; one task, no exchange
+        totals=matched.coalesce(1).agg(
+            F.count(F.when(F.col("is_new"), 1)).alias("new_rows"),
+            F.count(F.when(~F.col("is_new"), 1)).alias("existing_matched"),
+            F.count_distinct("store_rgd_id").alias("existing_ids"),
+            F.count(F.when(_end_pos_drift(), 1)).alias("end_pos_drift_detected"),
+            F.max("__copies").alias("max_copies"),
+        ),
+    )
+    # a detail pair can repeat only where a line occurs twice or matches
+    # several stored rows, a variant sits on several lines, or a file maps
+    # two columns to one sample
+    may_repeat = (
+        file_repeats
+        or (totals["max_copies"] or 0) > 1
+        or totals["new_rows"] > n_new
+        or totals["existing_matched"] > totals["existing_ids"]
     )
     existing_rows = matched.filter(~F.col("is_new")).withColumn(
         "rgd_id", F.col("store_rgd_id").cast("long")
     )
     with_ids = existing_rows
     if n_new:
-        new_rows = news.join(
-            canon_ids.select("__vkey", "rgd_id"), "__vkey", "inner"
-        ).drop("__vkey")
-        with_ids = new_rows.unionByName(existing_rows)
+        with_ids = numbered.drop("__canon", "__first_file", "__first_pos", "__first_allele")
+        if totals["existing_matched"]:
+            with_ids = with_ids.unionByName(existing_rows)
 
     variant_cols = [
         "rgd_id",
@@ -404,9 +433,9 @@ def run_load(
         "genic_status",
         "map_key",
     ]
-    # one variant row per distinct new variant (the canonical first
-    # occurrence), not one per line-allele
-    new_variants = canon_ids.select(*variant_cols)
+    # one variant row per distinct new variant (its first occurrence), not
+    # one per line-allele
+    new_variants = numbered.filter("__canon").select(*variant_cols)
 
     end_pos_updates = existing_rows.filter(_end_pos_drift()).select("rgd_id", "end_pos")
 
@@ -418,32 +447,35 @@ def run_load(
     w_j = Window.partitionBy(*LINE_KEY).orderBy(
         F.when(F.col("is_new"), 0).otherwise(1), "allele_idx"
     )
-    line_variants = with_ids.withColumn(
-        "__rgd_lines", F.sum("__copies").over(Window.partitionBy("rgd_id"))
-    ).withColumn("j", F.row_number().over(w_j) - 1)
-    details = sample_details(
-        vcf, line_variants, _file_samples(vcf, samples), detail_store
-    )
+    line_variants = with_ids
+    if may_repeat:
+        line_variants = line_variants.withColumn(
+            "__rgd_lines", F.sum("__copies").over(Window.partitionBy("rgd_id"))
+        )
+    line_variants = line_variants.withColumn("j", F.row_number().over(w_j) - 1)
+    details = sample_details(vcf, line_variants, files, detail_store, may_repeat)
 
     return LoadResult(
         new_variants=new_variants,
         end_pos_updates=end_pos_updates,
         new_sample_details=details,
         all_line_variants=line_variants.drop("__rgd_lines"),
-        matched=matched,
         n_new=n_new,
+        existing_matched=totals["existing_matched"],
+        end_pos_drift_detected=totals["end_pos_drift_detected"],
         cached=tuple(cache_registry),
     )
 
 
-def _file_samples(vcf: DataFrame, samples: DataFrame) -> Column:
+def _file_samples(vcf: DataFrame, samples: DataFrame) -> tuple[Column, bool]:
     """Per line, its file's ``struct<slots, repeats>``, a lookup of
     ``source_file`` in a literal map built on the driver from the header
     (``vcf_header``) and the small sample dimension — no job for a
     ``read_vcf`` frame and a driver-local dimension (``samples_dimension``):
     ``slots`` holds the ``(sample_id, gender)`` of each sample column, null
     for a name the dimension lacks; ``repeats`` is 2 when two columns of the
-    file map to one sample id, else 1."""
+    file map to one sample id, else 1. Also returns whether any file has
+    ``repeats`` 2."""
     by_name = {}
     for name, sid, gender in samples.select("analysis_name", "sample_id", "gender").collect():
         if by_name.setdefault(name, (sid, gender)) != (sid, gender):
@@ -462,17 +494,22 @@ def _file_samples(vcf: DataFrame, samples: DataFrame) -> Column:
         f"map<string, struct<slots: array<struct<sample_id: {id_type}, gender: string>>,"
         " repeats: int>>",
     )
-    return F.try_element_at(lookup, F.col("source_file"))
+    repeats = any(f["repeats"] > 1 for f in per_file.values())
+    return F.try_element_at(lookup, F.col("source_file")), repeats
 
 
 def sample_details(
-    vcf: DataFrame, line_variants: DataFrame, files: Column, detail_store: DataFrame
+    vcf: DataFrame,
+    line_variants: DataFrame,
+    files: Column,
+    detail_store: DataFrame,
+    may_repeat: bool,
 ) -> DataFrame:
     """One VARIANT_SAMPLE_DETAIL row per (variant, called sample column)
     not yet in ``detail_store`` (HrdpVariants.java:465-490), built at line
     grain: each line's sample columns cross ONE exchange, as one string, in
-    the join to ``line_variants`` (which carries ``j`` and
-    ``__rgd_lines``), and none when ``line_variants`` is broadcast; the
+    the join to ``line_variants`` (which carries ``j``, and ``__rgd_lines``
+    when ``may_repeat``), and none when ``line_variants`` is broadcast; the
     columns' ``(sample_id, gender)`` come after it from ``files`` (see
     ``_file_samples``), and the columns explode only then.
 
@@ -483,11 +520,14 @@ def sample_details(
     * First occurrence per ``(rgd_id, sample_id)`` in (file, line, column)
       order: the reference's insert-then-probe skips a later repeat. A pair
       can repeat only on a row whose variant sits on several lines, or
-      whose file maps two columns to one sample. Those rows alone move to
-      their id's partition, where a window
-      keeps the first occurrence. The two branches read one join input:
-      the same exchange when the join shuffles, the same broadcast of
-      ``line_variants`` (and each its own scan of the lines) when not.
+      whose file maps two columns to one sample; ``may_repeat`` says
+      whether the batch has such a row (``run_load`` decides it from its
+      totals). Without one, the lines are read once and explode as they
+      are. With one, those rows alone move to their id's partition, where
+      a window keeps the first occurrence. The two branches then read one
+      join input: the same exchange when the join shuffles, the same
+      broadcast of ``line_variants`` (and each its own scan of the lines)
+      when not.
     * The window orders by ``(source_file, pos, ref, alt, col_idx, j)``,
       then by ``chromosome``, ``total_depth`` (nulls first) and
       ``var_freq``. The last three only rank rows the file order cannot:
@@ -503,13 +543,13 @@ def sample_details(
     lines = placed_lines(vcf).select(
         *LINE_KEY,
         F.array_join("sample_cells", "\t").alias("__cells"),
-        files["repeats"].alias("__file_repeats"),
+        *([files["repeats"].alias("__file_repeats")] if may_repeat else []),
     )
     lv = line_variants.select(
         *LINE_KEY,
         "rgd_id",
         "j",
-        "__rgd_lines",
+        *(["__rgd_lines"] if may_repeat else []),
         F.col("chromosome").alias("v_chrom"),
         F.col("start_pos").alias("v_start"),
     )
@@ -550,20 +590,24 @@ def sample_details(
         pairs = F.filter(F.transform("__cols", pair), lambda x: x["var_freq"] != 0)
         return parsed.select(*keep, F.explode(pairs).alias("__p")).select(*keep, "__p.*")
 
-    # > 1 when a pair of the row can repeat. One non-key column of each join
-    # side, not a conjunction: Catalyst can neither split it nor infer it
-    # for one side through the join keys, so the split stays above the join
-    repeats = F.greatest("__rgd_lines", "__file_repeats")
-    w_pair = Window.partitionBy("rgd_id", "sample_id").orderBy(
-        "source_file", "pos", "ref", "alt", "col_idx", "j", "v_chrom", "total_depth", "var_freq"
-    )
-    firsts = (
-        explode(rows.filter(repeats > 1).repartition("rgd_id"))
-        .withColumn("__pn", F.row_number().over(w_pair))
-        .filter(F.col("__pn") == 1)
-        .drop("__pn")
-    )
-    pairs = explode(rows.filter(repeats <= 1)).unionByName(firsts)
+    if may_repeat:
+        # > 1 when a pair of the row can repeat. One non-key column of each
+        # join side, not a conjunction: Catalyst can neither split it nor
+        # infer it for one side through the join keys, so the split stays
+        # above the join
+        repeats = F.greatest("__rgd_lines", "__file_repeats")
+        w_pair = Window.partitionBy("rgd_id", "sample_id").orderBy(
+            "source_file", "pos", "ref", "alt", "col_idx", "j", "v_chrom", "total_depth", "var_freq"
+        )
+        firsts = (
+            explode(rows.filter(repeats > 1).repartition("rgd_id"))
+            .withColumn("__pn", F.row_number().over(w_pair))
+            .filter(F.col("__pn") == 1)
+            .drop("__pn")
+        )
+        pairs = explode(rows.filter(repeats <= 1)).unionByName(firsts)
+    else:
+        pairs = explode(rows)
 
     # existence check vs detail store (M3): one anti-join replaces the
     # reference's per-pair JDBC count probe (DAO.java:64-66)
@@ -610,21 +654,11 @@ def load_metrics(
     and end_pos drift per run (HrdpVariants.java:116-133).
 
     ``variants_entered`` / ``sample_details_entered`` are the row counts
-    the two store appends returned. The other two come from ONE aggregate
-    over the persisted ``result.matched``, so call this before
-    ``result.release()``. ``coalesce(1)`` keeps the aggregate exchange-free:
-    one job and one task over the cache, with or without AQE."""
-    row = (
-        result.matched.coalesce(1)
-        .agg(
-            F.count(F.when(~F.col("is_new"), 1)).alias("existing_matched"),
-            F.count(F.when(_end_pos_drift(), 1)).alias("end_pos_drift_detected"),
-        )
-        .collect()[0]
-    )
+    the two store appends returned; the other two were collected by
+    ``run_load`` with the ids, so this runs no Spark job."""
     return {
         "variants_entered": variants_entered,
         "sample_details_entered": sample_details_entered,
-        "existing_matched": row["existing_matched"],
-        "end_pos_drift_detected": row["end_pos_drift_detected"],
+        "existing_matched": result.existing_matched,
+        "end_pos_drift_detected": result.end_pos_drift_detected,
     }

@@ -356,7 +356,7 @@ def surrogate_ids(spark: SparkSession, sf: str) -> DataFrame:
     c = table(spark, sf, "customer").filter(F.col("c_mktsegment") == "MACHINERY")
     # buckets of 1000 in -acctbal ascending coarsen acctbal descending
     # (c_acctbal is non-null)
-    out, _ = assign_surrogate_ids_scalable(
+    out, _, _ = assign_surrogate_ids_scalable(
         c.select("c_custkey", "c_acctbal"),
         order_by=[F.desc("c_acctbal"), F.asc("c_custkey")],
         buckets=[F.floor(-F.col("c_acctbal") / 1000)],

@@ -24,8 +24,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 def spark_work_of(spark, fn, *args):
     """``(fn(*args), work)``: the Spark work the call ran, under a job group
     of its own, read as ``perfbench/spans.spark_counts`` reads it — ``jobs``,
-    ``tasks`` of the stages run (a stage skipped for reused shuffle output
-    is not) and the ``shuffle_bytes`` those stages wrote."""
+    ``tasks`` of the jobs' stages, the ``scan_bytes`` they read (file and
+    cache reads alike) and the ``shuffle_bytes`` they wrote. The status
+    tracker also reports a stage skipped because its shuffle output was
+    reused, so its tasks count too: each job over a persisted frame counts
+    the stages of the frame's lineage again."""
     sc = spark.sparkContext
     group = f"jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -38,7 +41,7 @@ def spark_work_of(spark, fn, *args):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     store = spark._jsc.sc().statusStore()
-    work = {"jobs": 0, "tasks": 0, "shuffle_bytes": 0}
+    work = {"jobs": 0, "tasks": 0, "scan_bytes": 0, "shuffle_bytes": 0}
     for job_id in tracker.getJobIdsForGroup(group):
         work["jobs"] += 1
         info = tracker.getJobInfo(job_id)
@@ -47,7 +50,9 @@ def spark_work_of(spark, fn, *args):
             if st is None:
                 continue
             work["tasks"] += st.numTasks
-            work["shuffle_bytes"] += store.lastStageAttempt(stage_id).shuffleWriteBytes()
+            stage = store.lastStageAttempt(stage_id)
+            work["scan_bytes"] += stage.inputBytes()
+            work["shuffle_bytes"] += stage.shuffleWriteBytes()
     return out, work
 
 

@@ -278,10 +278,10 @@ def test_load_metrics(spark, vcf_dir, dims, tmp_path):
 
 
 def test_load_metrics_runs_one_job(spark, vcf_dir, dims, tmp_path):
-    """The counters never re-execute the load plan: after the appends,
-    load_metrics is one aggregate over the cached match, i.e. exactly one
-    Spark job, counted under its own job group through the status tracker
-    (the way the benchmark's spans count a layer's jobs)."""
+    """The counters never re-execute the load plan: the id allocator's
+    collect already returned them, so after the appends load_metrics runs
+    no Spark job at all, counted under its own job group through the status
+    tracker (the way the benchmark's spans count a layer's jobs)."""
     from hrdp_variant_load_pipeline_spark.plans.load import load_metrics
     from hrdp_variant_load_pipeline_spark.sources.store import append_to_store
 
@@ -299,7 +299,7 @@ def test_load_metrics_runs_one_job(spark, vcf_dir, dims, tmp_path):
             sc.setLocalProperty("spark.job.description", None)
         # job events reach the status store through the async listener bus
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
         assert m["variants_entered"] == 5
     finally:
         res.release()
@@ -420,19 +420,63 @@ def test_allocator_ids_equal_global_row_number_across_buckets(spark):
     assert df.select(*buckets).distinct().count() > 50
     cached: list = []
     try:
-        out, n = assign_surrogate_ids_scalable(
+        out, n, totals = assign_surrogate_ids_scalable(
             df, order_by=order, buckets=buckets, base_id=99, cache_registry=cached
         )
         want = df.withColumn("want", F.row_number().over(Window.orderBy(*order)) + 99)
         got = out.join(want, order).select("rgd_id", "want").collect()
-        assert n == 400 and len(got) == 400
+        assert n == 400 and len(got) == 400 and totals is None
         assert all(r["rgd_id"] == r["want"] for r in got)
 
-        empty, n0 = assign_surrogate_ids_scalable(
+        empty, n0, _ = assign_surrogate_ids_scalable(
             df.limit(0), order_by=order, buckets=buckets, base_id=99, cache_registry=cached
         )
         assert n0 == 0 and empty.count() == 0
     finally:
+        release(*cached)
+
+
+def test_allocator_ties_share_one_id_and_totals_ride_the_collect(spark):
+    """Rows that tie on ``order_by`` share one id, numbered as a global
+    ``dense_rank()``, and ``n`` counts the distinct keys, not the rows; the
+    ``totals`` row comes back from the allocator's one collect: with AQE
+    off (AQE would split its stages into jobs) the call runs one Spark
+    job."""
+    from pyspark.sql import Window
+
+    from hrdp_variant_load_pipeline_spark.operators.upsert import (
+        assign_surrogate_ids_scalable,
+    )
+    from hrdp_variant_load_pipeline_spark.runtime import release
+
+    # 60 keys over 3 buckets, each key on 1-4 rows of several partitions
+    rows = [(k % 3, k, r) for k in range(60) for r in range(1 + k % 4)]
+    df = spark.createDataFrame(rows, "b int, k int, r int").repartition(4)
+    cached: list = []
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        (out, n, totals), jobs = spark_jobs_of(
+            spark,
+            assign_surrogate_ids_scalable,
+            df,
+            ["b", "k"],
+            [F.col("b")],
+            10,
+            "id",
+            cached,
+            df.agg(F.count(F.lit(1)).alias("rows"), F.max("r").alias("max_r")),
+        )
+        assert jobs == 1
+        assert n == 60 and totals == {"rows": len(rows), "max_r": 3}
+        want = df.withColumn("want", F.dense_rank().over(Window.orderBy("b", "k")) + 10)
+        got = out.join(want, ["b", "k", "r"]).select("k", "id", "want").collect()
+        assert len(got) == len(rows)
+        assert all(r["id"] == r["want"] for r in got)
+        # one id per key, and every row of a key carries it
+        assert len({(r["k"], r["id"]) for r in got}) == 60
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
         release(*cached)
 
 
@@ -486,9 +530,11 @@ def test_first_free_rgd_id_reads_footers_and_falls_back_to_aggregate(
     assert value == 40 and jobs >= 1
 
 
-def _load_dir(spark, tmp_path, name, header, lines, sample_ids):
+def _load_dir(spark, tmp_path, name, header, lines, sample_ids, variants=()):
     """run_load over one gzip VCF ``name`` (sample columns ``header``) into
-    empty stores, with a ``samples_dimension`` built from ``sample_ids``."""
+    empty stores, or a variant store holding ``variants`` (dicts of VARIANT
+    columns, absent ones null), with a ``samples_dimension`` built from
+    ``sample_ids``."""
     from hrdp_variant_load_pipeline_spark.runtime import local_frame
     from hrdp_variant_load_pipeline_spark.sources.config import samples_dimension
 
@@ -505,10 +551,10 @@ def _load_dir(spark, tmp_path, name, header, lines, sample_ids):
         read_vcf(spark, str(d)),
         genes,
         samples_dimension(spark, sample_ids, 372),
-        local_frame(spark, [], VARIANT),
+        local_frame(spark, [tuple(v.get(c) for c in VARIANT.names) for v in variants], VARIANT),
         local_frame(spark, [], VARIANT_SAMPLE_DETAIL),
         map_key=372,
-        next_rgd_id=1,
+        next_rgd_id=1 + max((v["rgd_id"] for v in variants), default=0),
     )
 
 
@@ -541,7 +587,8 @@ def test_dp_carried_across_unknown_and_hom_ref_columns(spark, tmp_path):
 
 def test_two_header_columns_of_one_sample_keep_the_first(spark, tmp_path):
     """Two header names mapped to one sample id: one detail row, from the
-    first column (the reference's insert-then-probe skips the second)."""
+    first column (the reference's insert-then-probe skips the second),
+    through the pair window."""
     res = _load_dir(
         spark,
         tmp_path,
@@ -551,6 +598,7 @@ def test_two_header_columns_of_one_sample_keep_the_first(spark, tmp_path):
         {"A_2019": 900, "B_2019": 900},
     )
     try:
+        assert _pair_windows(res)
         assert _details(res) == [(900, 3, 10)]
     finally:
         res.release()
@@ -559,7 +607,8 @@ def test_two_header_columns_of_one_sample_keep_the_first(spark, tmp_path):
 def test_variant_on_two_lines_of_one_file_keeps_the_first(spark, tmp_path):
     """One variant on two lines of one file (the SNV A>G, then again as the
     first allele of A>G,T) gets one id and one detail row per sample, from
-    the first line; the second line's other allele keeps its own row."""
+    the first line, through the pair window; the second line's other allele
+    keeps its own row."""
     res = _load_dir(
         spark,
         tmp_path,
@@ -573,6 +622,7 @@ def test_variant_on_two_lines_of_one_file_keeps_the_first(spark, tmp_path):
     )
     try:
         assert res.n_new == 2
+        assert _pair_windows(res)
         # A>G: S1 from the first line (4, not 3), S2 only on the second;
         # A>T: S1 from AD[3] of the second line, S2 has depth 0 there
         assert _details(res) == [(381, 4, 9), (381, 5, 9), (382, 2, 4)]
@@ -583,7 +633,8 @@ def test_variant_on_two_lines_of_one_file_keeps_the_first(spark, tmp_path):
 def test_two_lines_with_one_line_key_keep_the_documented_pick(spark, tmp_path):
     """Two lines of one file with one LINE_KEY have no file order between
     them: per sample, the row with the smaller depth wins, then the one
-    with the smaller allele depth, under any shuffle partition count."""
+    with the smaller allele depth, under any shuffle partition count,
+    through the pair window."""
     key = "chr4\t100\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP"
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -602,6 +653,7 @@ def test_two_lines_with_one_line_key_keep_the_documented_pick(spark, tmp_path):
             )
             try:
                 assert res.n_new == 1
+                assert _pair_windows(res)
                 # S1 from the first line (depth 9 < 12), S2 from the second
                 # (3 < 5), S3 ties on depth 8: allele depth 5 < 7
                 assert _details(res) == [(381, 4, 9), (382, 6, 3), (383, 5, 8)], n
@@ -640,7 +692,8 @@ def test_sample_details_explode_after_the_one_cell_exchange(spark, vcf_dir, dims
     """The detail plan, walked by node class: no shuffle above the explode
     of the sample columns, no window partitioned on the line key over the
     lines, and the lines cross at most one exchange, which both branches
-    of the pair dedup read (the second through a reused exchange)."""
+    of the pair dedup, where planned, read (the second through a reused
+    exchange)."""
     from hrdp_variant_load_pipeline_spark.plans.load import LINE_KEY
     from hrdp_variant_load_pipeline_spark.runtime import local_frame
     from hrdp_variant_load_pipeline_spark.sources.config import samples_dimension
@@ -678,3 +731,86 @@ def test_sample_details_explode_after_the_one_cell_exchange(spark, vcf_dir, dims
         assert len(res.new_sample_details.collect()) == 8
     finally:
         res.release()
+
+
+def _nodes_without_aqe(df):
+    """``_plan_nodes`` of ``df``'s physical plan, planned with AQE off."""
+    spark = df.sparkSession
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        return _plan_nodes(df._jdf.queryExecution().executedPlan())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
+
+
+def _pair_windows(res):
+    """The windows of the detail plan partitioned on ``(rgd_id, sample_id)``
+    (the pair dedup branch)."""
+    return [
+        n
+        for n, _ in _nodes_without_aqe(res.new_sample_details)
+        if _cls(n) == "WindowExec" and _window_keys(n) == ["rgd_id", "sample_id"]
+    ]
+
+
+def test_one_stored_id_matched_by_two_lines_keeps_the_first(spark, tmp_path):
+    """The rs id probe ignores the chromosome, so two lines that differ only
+    in it both match one stored variant: the pair window runs, and the
+    chr4 line's row is stored (its chromosome sorts first)."""
+    stored = {
+        "rgd_id": 7, "ref_nuc": "A", "var_nuc": "G", "rs_id": "rs9", "variant_type": "snv",
+        "species_type_key": 3, "chromosome": "4", "start_pos": 100, "end_pos": 101,
+        "genic_status": "INTERGENIC", "map_key": 372,
+    }
+    res = _load_dir(
+        spark,
+        tmp_path,
+        "rsmatch",
+        ["S1"],
+        [
+            "chr5\t100\trs9\tA\tG\t50\tPASS\t.\tGT:AD:DP\t0/1:1,6:20",
+            "chr4\t100\trs9\tA\tG\t50\tPASS\t.\tGT:AD:DP\t0/1:1,4:9",
+        ],
+        {"S1": 381},
+        [stored],
+    )
+    try:
+        assert res.n_new == 0 and res.existing_matched == 2
+        assert _pair_windows(res)
+        assert _details(res) == [(381, 4, 9)]
+    finally:
+        res.release()
+
+
+def test_batch_where_no_pair_can_repeat_scans_its_lines_once(spark, vcf_dir, dims):
+    """No line repeats, no variant sits on two lines and no file maps two
+    columns to one sample: the detail plan reads the lines in exactly one
+    file scan and has no ``(rgd_id, sample_id)`` window."""
+    res = run(spark, vcf_dir, dims)
+    try:
+        nodes = _nodes_without_aqe(res.new_sample_details)
+        scans = [n for n, _ in nodes if _cls(n) == "FileSourceScanExec"]
+        assert len(scans) == 1
+        assert not _pair_windows(res)
+        assert len(res.new_sample_details.collect()) == 8
+    finally:
+        res.release()
+
+
+def test_genes_aggregate_crosses_no_exchange(spark, vcf_dir, dims, tmp_path):
+    """The genes side of the genic broadcast join is dimension-sized: its
+    per-chromosome aggregate runs in one task, so no ``ShuffleExchangeExec``
+    sits under the ``BroadcastExchangeExec`` that ships it."""
+    from hrdp_variant_load_pipeline_spark.plans.load import parse_variants
+
+    genes, _ = dims
+    path = str(tmp_path / "genes")
+    genes.repartition(3).write.parquet(path)
+    cand = parse_variants(read_vcf(spark, vcf_dir), spark.read.parquet(path), 372)
+    nodes = _nodes_without_aqe(cand)
+    broadcasts = [n for n, _ in nodes if _cls(n) == "BroadcastExchangeExec"]
+    assert len(broadcasts) == 1
+    assert "ShuffleExchangeExec" not in {_cls(n) for n, _ in _plan_nodes(broadcasts[0])}
+    genic = {(r["chromosome"], r["start_pos"]) for r in cand.collect() if r["genic_status"] == "GENIC"}
+    assert genic == {("1", 201), ("MT", 300)}

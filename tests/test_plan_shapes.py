@@ -15,6 +15,19 @@ from tests.conftest import SF_DIR
 QUERIES = entrymod.queries()
 
 
+def _cls(node):
+    return node.getClass().getSimpleName()
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan, by walking ``children()``; an adaptive
+    plan is walked from the plan it starts from."""
+    if _cls(node) == "AdaptiveSparkPlanExec":
+        node = node.executedPlan()
+    kids = node.children()
+    return [node, *(d for i in range(kids.size()) for d in _plan_nodes(kids.apply(i)))]
+
+
 def _plan(spark, name, sf=None):
     df = QUERIES[name](spark, sf or SF_DIR)
     return df._jdf.queryExecution().executedPlan().toString()
@@ -460,11 +473,15 @@ def test_pair_jaccard_prunes_via_hot_anti_join(spark):
         "doc_id long, text string",
     )
     out = ngram_jaccard_pairs(docs, "doc_id", "text", k=3, max_df=5)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan, plan
-    # corpus-shingle explodes (the pair-struct explode is also a
-    # Generate, so count the shingle form specifically)
-    assert plan.count("Generate explode(CASE WHEN") == 2, plan
+    nodes = _plan_nodes(out._jdf.queryExecution().executedPlan())
+    joins = [n.joinType().toString() for n in nodes if "Join" in _cls(n)]
+    assert "LeftAnti" in joins, joins
+    # corpus-shingle explodes: a shingle array is a CASE WHEN (no shingles
+    # below k words); the pair-struct explode is a third Generate
+    explodes = sorted(
+        _cls(n.generator().children().apply(0)) for n in nodes if _cls(n) == "GenerateExec"
+    )
+    assert explodes == ["CaseWhen", "CaseWhen", "Flatten"], explodes
 
 
 def test_word_weighted_stats_udf_sees_vocabulary_not_corpus(spark):
