@@ -8,18 +8,20 @@ batched inserts.
 
 Spark lifecycle: one text scan → narrow transforms (filter / normalize /
 posexplode) → broadcast interval join (genes) → a left join against the
-variant store, persisted as ``matched`` → window id assignment (dense ranks
-of every new line-allele inside position buckets + one collect of the bucket
-sizes, ``operators.upsert.assign_surrogate_ids_scalable``; the same collect
-returns the run counters and whether a detail pair can repeat) → the detail
-build at line grain (``sample_details``: each line's sample columns cross
-one exchange as one string, or none when the line variants are broadcast;
-the columns explode after it) → an anti-join against the detail store → two
-appends, the variant append skipped when the batch has no new variant. The
-two joins against the stores replace ~N JDBC round trips — the single
-biggest algorithmic win, SURVEY.md §4. Each action is a few stages over
-line-grain rows: on the 146-sample benchmark drop a fresh load runs 6 Spark
-jobs and a re-load 6 (small-input profile).
+variant store, persisted as ``matched`` → window id assignment (ranks of
+each new variant's first occurrence inside position buckets + one collect of
+the bucket sizes, ``operators.upsert.assign_surrogate_ids_scalable``; the
+same collect returns the run counters and whether a detail pair can repeat;
+where a variant sits on several lines, a join gives its other rows its id)
+→ the detail build at line grain (``sample_details``: each line's sample
+columns cross one exchange as one string, or none when the line variants
+are broadcast; the columns explode after it) → an anti-join against the
+detail store → two appends, the variant append skipped when the batch has
+no new variant. The two joins against the stores replace ~N JDBC round
+trips — the single biggest algorithmic win, SURVEY.md §4. Each action is a
+few stages over line-grain rows: on the 146-sample benchmark drop a fresh
+load runs 6 Spark jobs and a re-load 6 (small-input profile); a drop where
+variants sit on several lines adds the join's broadcast to a fresh load.
 
 Faithfully-reproduced quirks (SURVEY.md §1.4, verified against the Java):
 
@@ -328,8 +330,9 @@ def run_load(
     if next_rgd_id is None:
         next_rgd_id = first_free_rgd_id(variant_store)
 
-    # id allocation (S9): only NEW rows get ids, dense-ranked inside
-    # position buckets — never a global single-partition window.
+    # id allocation (S9): only the first occurrence of each NEW variant is
+    # ranked, inside position buckets — never a global single-partition
+    # window.
     # Imported at call time: perfbench's tracer wraps the module attribute.
     from hrdp_variant_load_pipeline_spark.operators.upsert import (
         assign_surrogate_ids_scalable,
@@ -355,38 +358,34 @@ def run_load(
     # several files/lines of one run collapses onto the first insert's id.
     # A store-snapshot anti-join alone misses that: each occurrence would
     # mint its own rgd_id and duplicate the variant row. Set-oriented
-    # equivalent: every new line-allele carries its variant's first
-    # occurrence in file order (a window on the residual match key, whose
-    # partitioning groups nulls as eqNullSafe does in _dedup_against_store),
-    # the allocator orders by that occurrence and the variant key, and its
-    # dense ranks give all rows of one variant one id. No join back.
-    # The first occurrence is kept as flat columns: the allocator persists
-    # them, and the columnar cache compresses flat columns, not structs.
+    # equivalent: a window on the residual match key (whose partitioning
+    # groups nulls as eqNullSafe does in _dedup_against_store) picks each
+    # variant's first occurrence in file order, and only those rows are
+    # ranked. Where a variant sits on several lines, its other rows take its
+    # id by a join back; where none does, there is nothing to join.
     w_first = Window.partitionBy(*VARIANT_KEY).orderBy("source_file", "pos", "allele_idx")
-    news = matched.filter("is_new").withColumns(
-        {
-            "__canon": F.row_number().over(w_first) == 1,
-            "__first_file": F.first("source_file").over(w_first),
-            "__first_pos": F.first("pos").over(w_first),
-            "__first_allele": F.first("allele_idx").over(w_first),
-        }
+    firsts = (
+        matched.filter("is_new")
+        .withColumn("__occ", F.row_number().over(w_first))
+        .filter(F.col("__occ") == 1)
+        .drop("__occ")
     )
     files, file_repeats = _file_samples(vcf, samples)
     numbered, n_new, totals = assign_surrogate_ids_scalable(
-        news,
+        firsts,
         order_by=[
-            "__first_file",
+            "source_file",
             "chromosome",
-            "__first_pos",
-            "__first_allele",
+            "pos",
+            "allele_idx",
             "var_nuc",
             # then the variant key: two variants never tie
             *VARIANT_KEY,
         ],
         buckets=[
-            F.col("__first_file"),
+            F.col("source_file"),
             F.col("chromosome"),
-            F.expr(f"__first_pos div {ID_BUCKET_BASES}"),
+            F.expr(f"pos div {ID_BUCKET_BASES}"),
         ],
         base_id=next_rgd_id - 1,
         cache_registry=cache_registry,
@@ -414,7 +413,16 @@ def run_load(
     )
     with_ids = existing_rows
     if n_new:
-        with_ids = numbered.drop("__canon", "__first_file", "__first_pos", "__first_allele")
+        with_ids = numbered
+        if totals["new_rows"] > n_new:
+            # a new variant sits on several lines: its other rows take the
+            # id of its first occurrence (null-safe, as the dedup matches)
+            ids = numbered.select(*(F.col(c).alias(f"__v_{c}") for c in VARIANT_KEY), "rgd_id")
+            with_ids = (
+                matched.filter("is_new")
+                .join(ids, [F.col(c).eqNullSafe(F.col(f"__v_{c}")) for c in VARIANT_KEY])
+                .drop(*ids.columns[:-1])
+            )
         if totals["existing_matched"]:
             with_ids = with_ids.unionByName(existing_rows)
 
@@ -435,7 +443,7 @@ def run_load(
     ]
     # one variant row per distinct new variant (its first occurrence), not
     # one per line-allele
-    new_variants = numbered.filter("__canon").select(*variant_cols)
+    new_variants = numbered.select(*variant_cols)
 
     end_pos_updates = existing_rows.filter(_end_pos_drift()).select("rgd_id", "end_pos")
 

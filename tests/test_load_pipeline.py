@@ -688,13 +688,30 @@ def _reads_lines(node):
     return any(_cls(n) == "FileSourceScanExec" for n, _ in _plan_nodes(node))
 
 
-def test_sample_details_explode_after_the_one_cell_exchange(spark, vcf_dir, dims):
-    """The detail plan, walked by node class: no shuffle above the explode
-    of the sample columns, no window partitioned on the line key over the
-    lines, and the lines cross at most one exchange, which both branches
-    of the pair dedup, where planned, read (the second through a reused
-    exchange)."""
+def _assert_explode_after_one_cell_exchange(nodes):
+    """On the detail plan ``nodes`` (``_plan_nodes``): no shuffle above the
+    explode of the sample columns, no window partitioned on the line key
+    over the lines, and the lines cross at most one exchange, which both
+    branches of the pair dedup, where planned, read (the second through a
+    reused exchange)."""
     from hrdp_variant_load_pipeline_spark.plans.load import LINE_KEY
+
+    generates = [above for n, above in nodes if _cls(n) == "GenerateExec"]
+    assert generates
+    for above in generates:
+        assert "ShuffleExchangeExec" not in {_cls(a) for a in above}
+    for n, _ in nodes:
+        if _cls(n) == "WindowExec" and _window_keys(n) == LINE_KEY:
+            assert not _reads_lines(n)
+    line_exchanges = [n for n, _ in nodes if _cls(n) == "ShuffleExchangeExec" and _reads_lines(n)]
+    assert len(line_exchanges) <= 1
+    if line_exchanges:
+        assert "ReusedExchangeExec" in {_cls(n) for n, _ in nodes}
+
+
+def test_sample_details_explode_after_the_one_cell_exchange(spark, vcf_dir, dims):
+    """The detail plan of a batch where no pair can repeat (one branch),
+    walked by node class: see ``_assert_explode_after_one_cell_exchange``."""
     from hrdp_variant_load_pipeline_spark.runtime import local_frame
     from hrdp_variant_load_pipeline_spark.sources.config import samples_dimension
 
@@ -715,20 +732,38 @@ def test_sample_details_explode_after_the_one_cell_exchange(spark, vcf_dir, dims
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", saved)
     try:
-        generates = [above for n, above in nodes if _cls(n) == "GenerateExec"]
-        assert generates
-        for above in generates:
-            assert "ShuffleExchangeExec" not in {_cls(a) for a in above}
-        for n, _ in nodes:
-            if _cls(n) == "WindowExec" and _window_keys(n) == LINE_KEY:
-                assert not _reads_lines(n)
-        line_exchanges = [
-            n for n, _ in nodes if _cls(n) == "ShuffleExchangeExec" and _reads_lines(n)
-        ]
-        assert len(line_exchanges) <= 1
-        if line_exchanges:
-            assert "ReusedExchangeExec" in {_cls(n) for n, _ in nodes}
+        _assert_explode_after_one_cell_exchange(nodes)
         assert len(res.new_sample_details.collect()) == 8
+    finally:
+        res.release()
+
+
+def test_pair_dedup_branches_explode_after_the_one_cell_exchange(spark, tmp_path):
+    """The detail plan of a batch where pairs can repeat (a variant on two
+    lines, and two header columns of one sample), with both branches of
+    the pair dedup planned, walked by node class: see
+    ``_assert_explode_after_one_cell_exchange``."""
+    res = _load_dir(
+        spark,
+        tmp_path,
+        "repeats",
+        ["S1", "S2", "S2_again"],
+        [
+            "chr4\t100\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP\t0/1:1,4:9\t0/0:9,0:9\t0/1:1,2:5",
+            "chr4\t100\t.\tA\tG,T\t50\tPASS\t.\tGT:AD:DP\t1/2:1,3,5:9\t0/1:2,2,0:4\t0/1:2,1,1:4",
+            "chr4\t200\t.\tC\tT\t50\tPASS\t.\tGT:AD:DP\t0/1:1,2:6\t0/1:1,3:7\t0/1:1,8:8",
+        ],
+        {"S1": 381, "S2": 382, "S2_again": 382},
+    )
+    try:
+        assert _pair_windows(res)
+        _assert_explode_after_one_cell_exchange(_nodes_without_aqe(res.new_sample_details))
+        # A>G: S1 from the first line, S2 from its third column (the second
+        # is 0/0); A>T: S1, and S2 from its second column there (the first
+        # has allele depth 0); C>T: S1, and S2 from its first column
+        assert _details(res) == [
+            (381, 2, 6), (381, 4, 9), (381, 5, 9), (382, 1, 4), (382, 2, 5), (382, 3, 7)
+        ]
     finally:
         res.release()
 
