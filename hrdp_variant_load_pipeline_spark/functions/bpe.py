@@ -171,23 +171,3 @@ def bpe_tokenize(
         return pd.Series(out)
 
     return apply(text)
-
-
-def save_merges(merges: list[tuple[str, str]], path: str) -> None:
-    """Persist an ordered merge list as JSON — train once (cluster job),
-    apply anywhere (other clusters, other sessions, plain Python)."""
-    import json
-    import os
-
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as f:
-        json.dump([list(p) for p in merges], f)
-    os.replace(tmp, path)  # atomic: readers see old or new, never partial
-
-
-def load_merges(path: str) -> list[tuple[str, str]]:
-    import json
-
-    with open(path) as f:
-        return [tuple(p) for p in json.load(f)]

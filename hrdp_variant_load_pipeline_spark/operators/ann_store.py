@@ -20,6 +20,11 @@ Scoring reuses ``ivf_topk``'s rounding and tie rules, so a probe over
 a fully-built index returns EXACTLY what ``ivf_topk`` returns over the
 same corpus + centroids (pinned in tests/test_ann_store.py).
 
+The store is APPEND-ONLY: no vector is ever removed, so a probe scans
+the bucket-pruned store as it is, and the set of ids it holds is the
+set ever ingested (``incremental_semantic_dedup``'s replay probe reads
+exactly that).
+
 Maintenance: each append tiles the bucket domain independently, so at
 ingest frequency a probe reads ~one file per append; run
 ``sources.store.compact_store(spark, store_dir, sort_by=["bucket",
@@ -46,6 +51,7 @@ from hrdp_variant_load_pipeline_spark.sources.store import (
 )
 
 _ROUND = 6
+_STORE_SCHEMA = "bucket BIGINT, vec_id BIGINT, c_vec ARRAY<DOUBLE>, c_norm DOUBLE"
 
 
 def _cent_array(centroids: DataFrame):
@@ -147,18 +153,9 @@ def ivf_store_topk(
     needed = sorted(
         {r["bucket"] for r in probes.select("bucket").distinct().collect()}
     )
-    # bucket-pruned scan, then the tombstone anti-join: deleted vectors
-    # neither match nor rank (delete_from_ann_store)
-    idx = _live_vectors(
-        spark,
-        store_dir,
-        read_store(
-            spark,
-            store_dir,
-            schema="bucket BIGINT, vec_id BIGINT, c_vec ARRAY<DOUBLE>, "
-            "c_norm DOUBLE",
-        ).filter(F.col("bucket").isin(needed)),
-    )
+    idx = read_store(
+        spark, store_dir, schema=_STORE_SCHEMA
+    ).filter(F.col("bucket").isin(needed))
     scored = (
         idx.join(F.broadcast(probes), "bucket")
         .where("vec_id != query_id")
@@ -227,19 +224,9 @@ def incremental_semantic_dedup(
     # IN filter (row-group pruning via the vec_id secondary clustering —
     # the incremental_minhash_dedup candidate-pushdown shape); oversized
     # batches fall back to the broadcast semi-join probe.
-    # RAW store ids ∪ consumed ids, deliberately NOT the filtered live
-    # view: deletion removes a vector from search, it does not free its
-    # id — re-ingesting a deleted id is still a replay. The consumed-id
-    # union (current tombstones ∪ the vacuum-migrated registry) makes
-    # this hold even after vacuum_ann_store physically purges the
-    # deleted rows; the registry is a separate store from the tombstones
-    # so the per-probe filter does not pay for replay history.
-    store_ids = read_store(
-        spark,
-        store_dir,
-        schema="bucket BIGINT, vec_id BIGINT, c_vec ARRAY<DOUBLE>, "
-        "c_norm DOUBLE",
-    ).select("vec_id").unionByName(_ann_consumed_ids(spark, store_dir))
+    store_ids = read_store(spark, store_dir, schema=_STORE_SCHEMA).select(
+        "vec_id"
+    )
     # bound the collect itself (limit cap+1), not just the branch — an
     # unthrottled backfill batch must never materialize its full id set
     # on the driver (the incremental_minhash_dedup pushdown shape)
@@ -312,179 +299,3 @@ def incremental_semantic_dedup(
         )
     return flagged
 
-
-# --------------------------------------------------------------- deletion
-# Tombstones live under `<store>/_tombstones`: the underscore prefix makes
-# the directory invisible to the index's own parquet scans (Hadoop's
-# default path filter skips `_`/`.`-prefixed paths), so the store read
-# stays one clean directory while deletion state rides alongside it.
-# `_consumed_ids` is the SEPARATE consumed-id registry: vacuum migrates
-# tombstoned ids there before clearing the tombstones, so the probe
-# filter shrinks back to empty after a purge while the replay probe
-# (which must remember every id ever ingested) keeps its union — the two
-# concerns grow on different clocks and must not share one file.
-_TOMB = "_tombstones"
-_CONSUMED = "_consumed_ids"
-
-#: broadcast-hint gate for the tombstone anti-joins (bytes on disk of
-#: the tombstone parquet). SemDeDup-flagged drops can be a large corpus
-#: fraction, so the filter set is unbounded by design — above this size
-#: the hint is withheld and the planner runs a shuffle anti-join (same
-#: discipline as corpus_stream's broadcast_probe gate). 16 MiB of
-#: parquet-encoded longs is roughly Spark's default
-#: autoBroadcastJoinThreshold ballpark once expanded to a hash relation.
-_BROADCAST_TOMB_BYTES = 16 * 1024 * 1024
-
-
-def _dir_bytes(spark: SparkSession, path: str) -> int:
-    """Filesystem-metadata size of a directory (0 when absent) — a
-    per-call broadcast gate must not cost a Spark job."""
-    from hrdp_variant_load_pipeline_spark.sources.store import _fs, _jpath
-
-    fs, jvm = _fs(spark, path)
-    p = _jpath(jvm, path)
-    if not fs.exists(p):
-        return 0
-    return int(fs.getContentSummary(p).getLength())
-
-
-def _hint_if_small(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    return (
-        F.broadcast(df)
-        if _dir_bytes(spark, path) <= _BROADCAST_TOMB_BYTES
-        else df
-    )
-
-
-def _ids_at(spark: SparkSession, path: str) -> DataFrame:
-    fs_path_exists = _dir_bytes(spark, path) > 0
-    if not fs_path_exists:
-        return spark.createDataFrame([], "vec_id BIGINT")
-    return spark.read.parquet(path).select("vec_id")
-
-
-def _ann_tombstones(spark: SparkSession, store_dir: str) -> DataFrame:
-    return _ids_at(spark, f"{store_dir}/{_TOMB}")
-
-
-def _ann_consumed_ids(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Every id ever ingested-then-deleted, across vacuums: current
-    tombstones ∪ the vacuum-migrated registry. Feeds ONLY the replay
-    probe — never the per-probe filter."""
-    return _ann_tombstones(spark, store_dir).unionByName(
-        _ids_at(spark, f"{store_dir}/{_CONSUMED}")
-    )
-
-
-def _live_vectors(
-    spark: SparkSession, store_dir: str, idx: DataFrame
-) -> DataFrame:
-    """Anti-join the (already bucket-pruned) index scan against the
-    tombstone set — deleted vectors neither match nor rank. The
-    broadcast hint is size-gated: a tombstone set past
-    ``_BROADCAST_TOMB_BYTES`` (possible when SemDeDup flags a large
-    corpus fraction between vacuums) anti-joins by shuffle instead of
-    shipping an unbounded id set to every executor. After
-    ``vacuum_ann_store`` the filter set is EMPTY again (consumed ids
-    move to their own registry), so steady-state probes pay nothing."""
-    tomb = _ann_tombstones(spark, store_dir).distinct()
-    return idx.join(
-        _hint_if_small(spark, tomb, f"{store_dir}/{_TOMB}"),
-        "vec_id",
-        "left_anti",
-    )
-
-
-def delete_from_ann_store(
-    spark: SparkSession,
-    store_dir: str,
-    ids: DataFrame,
-    id_col: str = "vec_id",
-) -> int:
-    """Logical deletion for the persisted IVF index: tombstone vector
-    ids so probes (``ivf_store_topk`` and therefore
-    ``incremental_semantic_dedup``'s history matching) exclude them — the removal path when SemDeDup-flagged or taken-down
-    documents must stop matching, without rewriting the clustered store.
-
-    Ids not present in the store, or already tombstoned, are ignored —
-    deletes are idempotent under replay. The ID NAMESPACE STAYS
-    CONSUMED: ``incremental_semantic_dedup``'s exact-id replay probe
-    deliberately reads the raw store, so re-ingesting a deleted id is
-    still flagged as a replay (ids are unique-once; deletion removes a
-    vector from SEARCH, it does not free its id). Physical purge =
-    rebuild; ``compact_store`` preserves the tombstone dir (underscore
-    paths are not data files). Returns ids newly tombstoned."""
-    req = ids.select(F.col(id_col).cast("long").alias("vec_id")).distinct()
-    prior = _ann_tombstones(spark, store_dir).distinct()
-    fresh = req.join(
-        _hint_if_small(spark, prior, f"{store_dir}/{_TOMB}"),
-        "vec_id",
-        "left_anti",
-    )
-    present = snapshot(
-        read_store(spark, store_dir, schema="vec_id BIGINT")
-        .select("vec_id")
-        .join(F.broadcast(fresh), "vec_id", "left_semi")
-        .distinct(),
-        reliable=False,
-    )
-    n = present.count()
-    if n:
-        present.write.mode("append").parquet(f"{store_dir}/{_TOMB}")
-    return n
-
-
-def vacuum_ann_store(
-    spark: SparkSession,
-    store_dir: str,
-    sort_by: list[str] | None = None,
-) -> int:
-    """Physically purge tombstoned vectors: commit a new store version
-    containing only live rows (clustered on ``sort_by``, default
-    ``["bucket", "vec_id"]`` — keep vec_id secondary or the replay
-    probe's row-group pruning degrades), migrate the tombstoned ids into
-    the ``_consumed_ids`` registry (``incremental_semantic_dedup``'s
-    replay probe unions it in, so a deleted id stays a replay even after
-    its rows are gone), then CLEAR the tombstones — after a vacuum the
-    per-probe anti-join filter is empty again, so probe cost does not
-    grow with deletion history (the registry feeds only the
-    batch-bounded replay probe, never the probe filter). Crash-safe:
-    each boundary re-converges on the next vacuum call (a crash between
-    the registry append and the tombstone clear re-migrates
-    idempotently — the append is anti-joined against the registry).
-    Returns rows purged. No-op (returns 0) when nothing is tombstoned.
-    """
-    from hrdp_variant_load_pipeline_spark.sources.store import (
-        _fs,
-        _jpath,
-        commit_store_version,
-    )
-
-    tomb = snapshot(_ann_tombstones(spark, store_dir).distinct(), reliable=False)
-    if not tomb.take(1):
-        return 0
-    tomb_hinted = _hint_if_small(spark, tomb, f"{store_dir}/{_TOMB}")
-    idx = read_store(spark, store_dir)
-    n_dead = idx.join(tomb_hinted, "vec_id", "left_semi").count()
-    if n_dead:
-        live = idx.join(tomb_hinted, "vec_id", "left_anti")
-        keys = sort_by or ["bucket", "vec_id"]
-        live = live.repartitionByRange(*keys).sortWithinPartitions(*keys)
-        # snapshot BEFORE the commit: live's lineage reads the store the
-        # commit supersedes (same rule as every store-mutating path)
-        commit_store_version(snapshot(live, reliable=False), store_dir)
-    # registry migration AFTER the purge commit (a crash in between
-    # leaves the tombstones standing, so nothing is forgotten); the
-    # anti-join makes a replayed migration append nothing
-    consumed_path = f"{store_dir}/{_CONSUMED}"
-    fresh_ids = snapshot(
-        tomb.join(_ids_at(spark, consumed_path), "vec_id", "left_anti"),
-        reliable=False,
-    )
-    if fresh_ids.take(1):
-        fresh_ids.write.mode("append").parquet(consumed_path)
-    fs, jvm = _fs(spark, store_dir)
-    tpath = _jpath(jvm, f"{store_dir}/{_TOMB}")
-    if fs.exists(tpath):
-        fs.delete(tpath, True)
-    return int(n_dead)

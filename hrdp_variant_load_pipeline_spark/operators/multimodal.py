@@ -134,72 +134,6 @@ def decode_image_features(df: DataFrame) -> DataFrame:
     return df.mapInPandas(batches, DECODE_SCHEMA)
 
 
-RESIZE_SCHEMA = (
-    "doc_id long, width int, height int, channels int, "
-    "resized binary, resized_md5 string"
-)
-
-
-def resize_images(
-    df: DataFrame, width: int, height: int
-) -> DataFrame:
-    """Resize plumbing via ``mapInPandas`` — the Spark-side shape is
-    REAL (Arrow batch transfer, binary-in/binary-out schema, bounded
-    per-batch memory: the contract a Pillow/OpenCV kernel drops into);
-    the pixel kernel itself is a clearly-marked DETERMINISTIC FAKE (no
-    image libraries in this environment): the "resized" payload is a
-    reproducible digest-expansion of (source bytes, target dims) sized
-    ``width*height*channels``, so tests can pin batch shape, output
-    size, and determinism without pretending to interpolate pixels.
-    Channels come from the real header probe (fake fallback), matching
-    ``decode_image_features``.
-
-    Input: (doc_id, payload binary). Output: RESIZE_SCHEMA. Swap
-    ``_fake_resize`` for a real kernel on a cluster with imaging libs —
-    nothing else changes.
-    """
-    import hashlib
-
-    if width <= 0 or height <= 0:
-        raise ValueError(
-            f"resize_images: target {width}x{height} must be positive"
-        )
-
-    def _fake_resize(payload: bytes, channels: int) -> bytes:
-        # DETERMINISTIC FAKE pixel kernel (see docstring): stretch a
-        # content-keyed digest stream to the target buffer size
-        n = width * height * channels
-        seed = hashlib.md5(
-            payload + f"|{width}x{height}".encode()
-        ).digest()
-        reps = (n + len(seed) - 1) // len(seed)
-        return (seed * reps)[:n]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [bytes(p) for p in pdf["payload"]]
-            chans = [
-                (_header_decode(p) or _fake_decode(p))[2] for p in payloads
-            ]
-            bufs = [
-                _fake_resize(p, c) for p, c in zip(payloads, chans)
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [width] * len(payloads),
-                    "height": [height] * len(payloads),
-                    "channels": chans,
-                    "resized": bufs,
-                    "resized_md5": [
-                        hashlib.md5(b).hexdigest() for b in bufs
-                    ],
-                }
-            )
-
-    return df.mapInPandas(batches, RESIZE_SCHEMA)
-
-
 AUDIO_SCHEMA = (
     "doc_id long, byte_len long, sample_rate int, n_samples long, duration_ms long"
 )
@@ -265,84 +199,12 @@ def decode_audio_features(df: DataFrame) -> DataFrame:
 
 
 def frame_sample_indices(df: DataFrame, n_frames_col: str, every: int) -> DataFrame:
-    """Frame-sampling plumbing: one row per sampled frame index (video
-    path); pure explode, no Python."""
+    """Frame-sampling plumbing: one row per sampled frame index; pure
+    explode, no Python."""
     return df.withColumn(
         "frame_idx",
         F.explode(F.sequence(F.lit(0), F.greatest(F.col(n_frames_col) - 1, F.lit(0)), F.lit(every))),
     )
-
-
-def _mp4_probe(payload: bytes) -> tuple[int, int] | None:
-    """REAL (timescale, duration_ms) from an ISO-BMFF (MP4/MOV) header:
-    walk the top-level box list to ``moov``, then its children to
-    ``mvhd`` (version 0: u32 timescale/duration at +12; version 1: u64
-    duration after a u32 timescale at +20). None for non-MP4 payloads.
-    O(header) bytes — frame-accurate counts need a full ``stbl`` parse
-    (codec territory); duration is what sampling-rate decisions need."""
-
-    def _walk(lo: int, hi: int, depth: int = 0):
-        i = lo
-        while i + 8 <= hi:
-            size = struct.unpack(">I", payload[i : i + 4])[0]
-            btype = payload[i + 4 : i + 8]
-            if size == 1:  # 64-bit largesize
-                size = struct.unpack(">Q", payload[i + 8 : i + 16])[0]
-            if size < 8:
-                return None
-            if btype == b"moov":
-                return _walk(i + 8, min(i + size, hi), depth + 1)
-            if btype == b"mvhd":
-                version = payload[i + 8]
-                if version == 1:
-                    ts = struct.unpack(">I", payload[i + 28 : i + 32])[0]
-                    dur = struct.unpack(">Q", payload[i + 32 : i + 40])[0]
-                else:
-                    ts, dur = struct.unpack(">II", payload[i + 20 : i + 28])
-                if not ts:
-                    return None
-                return ts, dur * 1000 // ts
-            i += size
-        return None
-
-    try:
-        if len(payload) < 12 or payload[4:8] not in (b"ftyp", b"moov", b"wide", b"free"):
-            return None
-        return _walk(0, len(payload))
-    except (struct.error, ValueError, IndexError):
-        return None
-
-
-VIDEO_SCHEMA = "doc_id long, byte_len long, timescale int, duration_ms long"
-
-
-def decode_video_features(df: DataFrame) -> DataFrame:
-    """Video-path probe: mapInPandas over (doc_id, payload binary).
-    ISO-BMFF (MP4/MOV) headers yield REAL timescale/duration via
-    ``_mp4_probe``; unrecognized payloads get the deterministic fake
-    (same contract as the image/audio paths). Compose with
-    ``frame_sample_indices`` once a frame count is derived from
-    duration × target fps."""
-
-    def _fake(payload: bytes) -> tuple[int, int]:
-        n = len(payload)
-        return 600, (n * 33) % 3_600_000
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            probed = [
-                _mp4_probe(bytes(p)) or _fake(p) for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "byte_len": [len(p) for p in pdf["payload"]],
-                    "timescale": [p[0] for p in probed],
-                    "duration_ms": [p[1] for p in probed],
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(batches, VIDEO_SCHEMA)
 
 
 EMBED_SCHEMA = "doc_id long, embedding array<double>"

@@ -28,10 +28,17 @@ store's bucket-range shuffle — O(tokens) wire, once per batch. A probe
 reads O(postings of the probed terms): the term→bucket mapping is
 computed on a query-sized frame, df arrives from ONE tiny aggregate
 over the already-pruned postings, and the top-k is a
-TakeOrderedAndProject, never a global sort. Ids must be unique across
-appends (same contract as the ANN store); re-ingesting a doc_id
-double-counts its postings. Run ``sources.store.compact_store(spark,
-postings_dir, sort_by=["bucket", "term"])`` periodically to re-tile —
+TakeOrderedAndProject, never a global sort.
+
+The index is APPEND-ONLY: a store directory holds exactly two
+substores, ``postings`` and ``stats``, and nothing is ever deleted from
+either. Ids must be unique across appends (same contract as the ANN
+store); re-ingesting a doc_id double-counts its postings, so a batch
+that may be delivered twice carries a ``batch_key`` and its replay is
+skipped (``append_text_index_batch``).
+
+Run ``sources.store.compact_store(spark, postings_dir,
+sort_by=["bucket", "term"])`` periodically to re-tile —
 keep term as the secondary key or row-group pruning on the term IN
 filter silently degrades (probe parity across compaction is pinned).
 """
@@ -75,8 +82,7 @@ def _stats_summary(spark: SparkSession, store_dir: str) -> dict:
     collected — a long-lived stream writes one marker per micro-batch,
     so materializing the full key set on the driver per call would grow
     without bound; membership is checked distributedly
-    (``_has_marker_key``) and set differences via anti-join
-    (``_marker_keys_df``)."""
+    (``_has_marker_key``)."""
     st = (
         read_store(spark, f"{store_dir}/{_STATS}", schema=_STATS_SCHEMA)
         .agg(
@@ -97,18 +103,6 @@ def _stats_summary(spark: SparkSession, store_dir: str) -> dict:
         "s": int(st["s"] or 0),
         "nb": nbs[0] if nbs else None,
     }
-
-
-def _marker_keys_df(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Distinct non-null commit-marker keys as a DataFrame (one column
-    ``batch_key``) — for anti-join set arithmetic, never a driver
-    collect."""
-    return (
-        read_store(spark, f"{store_dir}/{_STATS}", schema=_STATS_SCHEMA)
-        .select("batch_key")
-        .filter(F.col("batch_key").isNotNull())
-        .distinct()
-    )
 
 
 def _has_marker_key(spark: SparkSession, store_dir: str, key: str) -> bool:
@@ -184,40 +178,10 @@ def append_text_index_batch(
             "dl",
         )
     )
-    # one tf-aggregate feeds the inverted append and the forward rollup
-    postings = snapshot(postings, reliable=False)
     append_to_store(
         postings,
         f"{store_dir}/{_POSTINGS}",
         cluster_by=["bucket", "term"],
-        cluster_partitions=cluster_partitions,
-    )
-    forward = (
-        postings.groupBy("doc_id", "dl")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("term", "tf"))
-            ).alias("__p")
-        )
-        .select(
-            "doc_id",
-            # explicit casts: collect_list yields containsNull=false
-            # array types, which parquet reads back as containsNull=true
-            # — without the cast the SECOND append trips the store's
-            # schema-drift refusal on that invisible difference
-            F.transform("__p", lambda p: p["term"])
-            .cast("array<string>")
-            .alias("terms"),
-            F.transform("__p", lambda p: p["tf"])
-            .cast("array<bigint>")
-            .alias("tfs"),
-            "dl",
-        )
-    )
-    append_to_store(
-        forward,
-        f"{store_dir}/{_FORWARD}",
-        cluster_by=["doc_id"],
         cluster_partitions=cluster_partitions,
     )
     append_to_store(
@@ -281,16 +245,12 @@ def text_index_scores(
 
     # distinct over the PRUNED frame (probed terms only): exact-duplicate
     # posting rows from a crashed-then-replayed batch append score once —
-    # O(probed postings) for crash-tolerance everywhere. Tombstoned docs
-    # drop out via a broadcast anti-join BEFORE df counting, so deleted
-    # docs neither appear nor inflate any term's df.
-    post = _live_postings(
-        spark,
-        store_dir,
+    # O(probed postings) for crash-tolerance everywhere
+    post = (
         read_store(spark, f"{store_dir}/{_POSTINGS}", schema=_POSTINGS_SCHEMA)
         .filter(F.col("bucket").isin(needed))
         .filter(F.col("term").isin(list(terms)))
-        .distinct(),
+        .distinct()
     )
     # df per probed term: ONE tiny aggregate over the pruned postings
     # (ids unique across appends ⇒ one posting per (term, doc))
@@ -354,25 +314,6 @@ def text_index_topk(
             Window.orderBy(F.desc("score"), F.asc("doc_id"))
         ),
     )
-
-
-def describe_text_index(spark: SparkSession, store_dir: str) -> dict:
-    """Operational snapshot: corpus stats plus posting/term/file counts
-    (one metadata-scale pass over the postings; no text is read)."""
-    st = _stats_summary(spark, store_dir)
-    p = read_store(spark, f"{store_dir}/{_POSTINGS}", schema=_POSTINGS_SCHEMA)
-    agg = p.agg(
-        F.count("*").alias("postings"),
-        F.countDistinct("term").alias("terms"),
-        F.countDistinct("bucket").alias("buckets"),
-    ).collect()[0]
-    return {
-        "n_docs": st["n"],
-        "sum_dl": st["s"],
-        "postings": int(agg["postings"]),
-        "terms": int(agg["terms"]),
-        "buckets": int(agg["buckets"]),
-    }
 
 
 def text_index_topk_many(
@@ -487,12 +428,8 @@ def text_index_topk_many(
         scan = scan.join(
             F.broadcast(tdf.select("term")), "term", "left_semi"
         )
-    post = _live_postings(
-        spark,
-        store_dir,
-        scan.distinct(),  # crashed-replay duplicate rows score once
-        # (see text_index_scores)
-    )
+    post = scan.distinct()  # crashed-replay duplicate rows score once
+    # (see text_index_scores)
     dfs = {r["term"]: r["df"] for r in
            post.groupBy("term").agg(F.count("*").alias("df")).collect()}
     if max_df_frac is not None:
@@ -586,476 +523,16 @@ def verify_text_index(spark: SparkSession, store_dir: str) -> dict:
     ``distinct_doc_ids > n_docs`` proves an orphaned postings batch.
     Returns the counts and a boolean; on ``consistent=False`` the remedy
     is to rebuild the store (re-appending the lost batch would
-    double-count its postings — ids are unique-once by contract).
-    Crashed DELETES, by contrast, are repairable and repaired here
-    first (``_repair_crashed_deletes``)."""
-    _repair_crashed_deletes(spark, store_dir)
+    double-count its postings — ids are unique-once by contract)."""
     n_docs = _stats_summary(spark, store_dir)["n"]
-    # live view: tombstoned docs are excluded from BOTH sides of the
-    # inequality (their stats rows were already subtracted at delete)
     posted = (
-        _live_postings(
-            spark,
-            store_dir,
-            read_store(
-                spark, f"{store_dir}/{_POSTINGS}", schema=_POSTINGS_SCHEMA
-            ),
-        )
+        read_store(spark, f"{store_dir}/{_POSTINGS}", schema=_POSTINGS_SCHEMA)
         .agg(F.countDistinct("doc_id").alias("d"))
         .collect()[0]
     )
     distinct_docs = int(posted["d"] or 0)
-    # forward completeness: every live posted doc must have its forward
-    # row (a store built before the forward substore, or a crash between
-    # the postings and forward writes, leaves a gap — repair with
-    # backfill_forward_index)
-    fwd_docs = int(
-        read_store(spark, f"{store_dir}/{_FORWARD}", schema=_FORWARD_SCHEMA)
-        .join(
-            F.broadcast(
-                read_store(
-                    spark, f"{store_dir}/{_TOMBSTONES}",
-                    schema=_TOMBSTONES_SCHEMA,
-                ).select("doc_id").distinct()
-            ),
-            "doc_id",
-            "left_anti",
-        )
-        .agg(F.countDistinct("doc_id").alias("d"))
-        .collect()[0]["d"]
-        or 0
-    )
     return {
         "n_docs": n_docs,
         "distinct_posted_docs": distinct_docs,
-        "forward_docs": fwd_docs,
-        "forward_complete": fwd_docs >= distinct_docs,
-        "consistent": distinct_docs <= n_docs and fwd_docs >= distinct_docs,
+        "consistent": distinct_docs <= n_docs,
     }
-
-
-_TOMBSTONES = "tombstones"
-# del_key: the delete's commit marker, mirrored into the stats ledger's
-# batch_key column AFTER the tombstones land — a tombstoned del_key with
-# no matching stats row is a crashed delete, repaired (from the dl each
-# tombstone carries) at the start of the next delete or verify.
-_TOMBSTONES_SCHEMA = "doc_id BIGINT, dl BIGINT, del_key STRING"
-
-
-def _repair_crashed_deletes(spark: SparkSession, store_dir: str) -> int:
-    """Append the missing negative stats row for any delete that crashed
-    between its tombstone write and its stats write. Idempotent and
-    cheap: key sets are ledger-sized."""
-    tomb = read_store(
-        spark, f"{store_dir}/{_TOMBSTONES}", schema=_TOMBSTONES_SCHEMA
-    )
-    st = _stats_summary(spark, store_dir)
-    # anti-join FIRST, collect only the difference: the collected set is
-    # bounded by crashed deletes (normally empty), not by ledger history
-    missing = sorted(
-        r["batch_key"]
-        for r in tomb.select(F.col("del_key").alias("batch_key"))
-        .filter(F.col("batch_key").isNotNull())
-        .distinct()
-        .join(_marker_keys_df(spark, store_dir), "batch_key", "left_anti")
-        .collect()
-    )
-    for key in missing:
-        adj = (
-            tomb.filter(F.col("del_key") == key)
-            .select("doc_id", "dl")
-            .distinct()
-            .agg(F.count("*").alias("k"), F.sum("dl").alias("s"))
-            .collect()[0]
-        )
-        append_to_store(
-            spark.createDataFrame(
-                [(-int(adj["k"]), -int(adj["s"] or 0), st["nb"], key)],
-                _STATS_SCHEMA,
-            ),
-            f"{store_dir}/{_STATS}",
-        )
-    return len(missing)
-
-
-def delete_from_text_index(
-    spark: SparkSession,
-    store_dir: str,
-    ids: DataFrame,
-    id_col: str = "doc_id",
-) -> int:
-    """Logical deletion: tombstone document ids so probes exclude them —
-    the removal path for dedup-driven drops and takedown requests
-    against a standing index, without rewriting the clustered postings.
-
-    Ids already tombstoned (or never ingested — postings-free AND
-    unknown) are ignored, so deletes are idempotent under replay and a
-    double delete cannot double-adjust the statistics. The corpus stats
-    shrink via a NEGATIVE stats row (−n_docs, −Σdl) computed from the
-    tombstoned ids' own postings. The tombstones land FIRST carrying a
-    deterministic ``del_key``; the stats row mirrors that key as its
-    commit marker, so a crash between the two writes is detected and
-    repaired (``_repair_crashed_deletes`` — each tombstone carries its
-    dl) on the next delete or ``verify_text_index`` call, keeping
-    post-delete probe scores bit-equal to ``bm25_scores`` over the
-    surviving corpus through every crash point (pinned in
-    tests/test_text_index.py). Physical purge = ``vacuum_text_index``.
-    NOTE: a tokenless-but-ingested doc has no postings to prove
-    ingestion, so deleting it adjusts nothing — its dl is 0 (harmless to
-    Σdl) but its N slot survives; track tokenless ids caller-side if
-    exact-N deletion of empty docs matters.
-
-    Returns the number of ids newly tombstoned."""
-    _repair_crashed_deletes(spark, store_dir)
-    st = _stats_summary(spark, store_dir)
-    if st["nb"] is None:
-        raise ValueError(
-            f"delete_from_text_index: no committed appends at {store_dir}"
-        )
-    req = ids.select(F.col(id_col).cast("long").alias("doc_id")).distinct()
-    prior = read_store(
-        spark, f"{store_dir}/{_TOMBSTONES}", schema=_TOMBSTONES_SCHEMA
-    ).select("doc_id")
-    fresh = snapshot(req.join(prior, "doc_id", "left_anti"), reliable=False)
-    # ONE semi-join against the (doc-unprunable) postings serves the
-    # adjustment aggregate AND the tombstone rows; dl rides every posting
-    # of a doc, so the per-doc distinct is exact
-    post = read_store(
-        spark, f"{store_dir}/{_POSTINGS}", schema=_POSTINGS_SCHEMA
-    )
-    deletable = snapshot(
-        post.join(F.broadcast(fresh), "doc_id", "left_semi")
-        .select("doc_id", "dl")
-        .distinct(),
-        reliable=False,
-    )
-    adj = deletable.agg(
-        F.count("*").alias("k"),
-        F.sum("dl").alias("s"),
-        # bit_xor, not sum: an order-independent digest of the DISTINCT
-        # id set that cannot hit ANSI long overflow (a plain sum of
-        # xxhash64 values aborts after a handful of rows)
-        F.expr("bit_xor(xxhash64(doc_id))").alias("h"),
-        F.min("doc_id").alias("lo"),
-        F.max("doc_id").alias("hi"),
-    ).collect()[0]
-    n_del = int(adj["k"] or 0)
-    if n_del == 0:
-        return 0
-    # deterministic over the id set → a replay of the same crashed
-    # request converges on the same marker
-    del_key = f"del-{n_del}-{int(adj['h'])}-{int(adj['lo'])}-{int(adj['hi'])}"
-    # fully committed by an earlier attempt
-    if _has_marker_key(spark, store_dir, del_key):
-        return 0
-    append_to_store(
-        deletable.withColumn("del_key", F.lit(del_key)),
-        f"{store_dir}/{_TOMBSTONES}",
-    )
-    append_to_store(
-        spark.createDataFrame(
-            [(-n_del, -int(adj["s"] or 0), st["nb"], del_key)], _STATS_SCHEMA
-        ),
-        f"{store_dir}/{_STATS}",
-    )
-    return n_del
-
-
-def _live_postings(spark: SparkSession, store_dir: str, pruned: DataFrame):
-    """Anti-join the pruned postings against the tombstone set (empty →
-    no-op plan). The broadcast hint is size-gated on the tombstone
-    store's on-disk bytes (filesystem metadata, no extra job): deletes
-    are billed as the removal path for dedup-driven drops, which can be
-    a large corpus fraction between vacuums, and an oversized set must
-    shuffle instead of shipping to every executor — same discipline as
-    the ANN store's ``_live_vectors``. (The byte count spans kept store
-    versions, so it over-estimates by ≤ the KEEP_PREVIOUS factor —
-    conservative in the safe direction for a broadcast gate.)"""
-    from hrdp_variant_load_pipeline_spark.operators.ann_store import (
-        _dir_bytes,
-        _BROADCAST_TOMB_BYTES,
-    )
-
-    tomb = read_store(
-        spark, f"{store_dir}/{_TOMBSTONES}", schema=_TOMBSTONES_SCHEMA
-    ).select("doc_id").distinct()
-    if _dir_bytes(spark, f"{store_dir}/{_TOMBSTONES}") <= _BROADCAST_TOMB_BYTES:
-        tomb = F.broadcast(tomb)
-    return pruned.join(tomb, "doc_id", "left_anti")
-
-
-def vacuum_text_index(
-    spark: SparkSession,
-    store_dir: str,
-    retire_keys_where: str | None = None,
-) -> int:
-    """Physically purge the index: commit a postings version holding
-    only live, de-duplicated rows (tombstoned docs and crashed-replay
-    duplicates gone), collapse the stats ledger to one summed row PLUS
-    one zero-row per commit-marker key, and clear the tombstones. Probe
-    results are unchanged (the logical view was already
-    live-and-distinct); what changes is the storage — scans stop paying
-    the anti-join input and the duplicate rows.
-
-    Marker keys are PRESERVED by default (as zero-valued ledger rows):
-    they are what makes append/delete replays idempotent, and dropping
-    them would let an at-least-once replay of a pre-vacuum batch
-    double-count its stats after the vacuum. For a long-lived stream
-    (one marker per micro-batch) the ledger would otherwise grow
-    forever, so ``retire_keys_where`` — a SQL predicate over
-    ``batch_key`` — retires matching markers during the collapse.
-    SAFETY CONTRACT: only retire keys that can NEVER be replayed again,
-    i.e. below the source's committed replay horizon (e.g.
-    ``"batch_key like 'a1b2c3d4-%' and
-    cast(substring_index(batch_key, '-', -1) as bigint) < 100"`` for a
-    stream checkpoint already committed past batch 100 — replays of
-    earlier batches are impossible once the checkpoint has advanced).
-    Retiring a still-replayable key converts its replay into a
-    double-count. A key is retired only when the predicate evaluates to
-    exactly TRUE — keys where it evaluates to NULL (e.g. a try_cast on
-    a non-conforming key) are KEPT, erring on the safe side of the
-    contract. Crash-safe at every boundary: crashed deletes are
-    repaired first; the postings commit is logically identical to the
-    live view; the stats commit preserves both sums and (non-retired)
-    keys; stale tombstones against purged postings anti-join to a no-op
-    until the final clear. Returns posting rows removed."""
-    from hrdp_variant_load_pipeline_spark.sources.store import (
-        _fs,
-        _jpath,
-        commit_store_version,
-    )
-
-    _repair_crashed_deletes(spark, store_dir)
-    post = read_store(
-        spark, f"{store_dir}/{_POSTINGS}", schema=_POSTINGS_SCHEMA
-    )
-    n_before = post.count()
-    live = _live_postings(spark, store_dir, post.distinct())
-    live = live.repartitionByRange("bucket", "term").sortWithinPartitions(
-        "bucket", "term"
-    )
-    commit_store_version(snapshot(live, reliable=False), f"{store_dir}/{_POSTINGS}")
-    n_after = read_store(
-        spark, f"{store_dir}/{_POSTINGS}", schema=_POSTINGS_SCHEMA
-    ).count()
-
-    # forward substore: same live-and-distinct purge, clustered on
-    # doc_id (tombstone anti-join rides _live_postings' size-gated
-    # broadcast discipline via the same gate)
-    from hrdp_variant_load_pipeline_spark.operators.ann_store import (
-        _dir_bytes,
-        _BROADCAST_TOMB_BYTES,
-    )
-
-    tomb_ids = read_store(
-        spark, f"{store_dir}/{_TOMBSTONES}", schema=_TOMBSTONES_SCHEMA
-    ).select("doc_id").distinct()
-    if _dir_bytes(spark, f"{store_dir}/{_TOMBSTONES}") <= _BROADCAST_TOMB_BYTES:
-        tomb_ids = F.broadcast(tomb_ids)
-    fwd_live = (
-        read_store(spark, f"{store_dir}/{_FORWARD}", schema=_FORWARD_SCHEMA)
-        .distinct()
-        .join(tomb_ids, "doc_id", "left_anti")
-        .repartitionByRange("doc_id")
-        .sortWithinPartitions("doc_id")
-    )
-    commit_store_version(snapshot(fwd_live, reliable=False), f"{store_dir}/{_FORWARD}")
-
-    st = _stats_summary(spark, store_dir)
-    if st["nb"] is not None:  # no stats ledger -> nothing to collapse
-        # the marker rows are built DISTRIBUTEDLY (select over the
-        # ledger, not a driver collect of every key — the ledger can be
-        # micro-batch-count-sized for a long stream), unioned with the
-        # one summed total row
-        keys = _marker_keys_df(spark, store_dir)
-        if retire_keys_where is not None:
-            # retire ONLY on predicate IS TRUE: a NULL evaluation (e.g.
-            # try_cast on a non-conforming key) must KEEP the marker —
-            # `NOT (pred)` would drop NULL-predicate keys too, and per
-            # the safety contract retiring a still-replayable key turns
-            # its replay into a stats double-count
-            keys = keys.filter(
-                ~F.expr(retire_keys_where).eqNullSafe(F.lit(True))
-            )
-        marker_rows = keys.select(
-            F.lit(0).cast("long").alias("n_docs"),
-            F.lit(0).cast("long").alias("sum_dl"),
-            F.lit(st["nb"]).cast("long").alias("n_buckets"),
-            F.col("batch_key"),
-        )
-        total_row = spark.createDataFrame(
-            [(st["n"], st["s"], st["nb"], None)], _STATS_SCHEMA
-        )
-        commit_store_version(
-            snapshot(total_row.unionByName(marker_rows), reliable=False),
-            f"{store_dir}/{_STATS}",
-        )
-    fs, jvm = _fs(spark, store_dir)
-    tpath = _jpath(jvm, f"{store_dir}/{_TOMBSTONES}")
-    if fs.exists(tpath):
-        fs.delete(tpath, True)
-    return int(n_before - n_after)
-
-
-# ---------------------------------------------------------- forward index
-# doc → term-vector substore: the complement of the inverted postings.
-# Clustered by doc_id, so an `id IN (...)` fetch prunes at the parquet
-# footer — per-document term vectors in O(requested docs), the access
-# path pseudo-relevance feedback and doc-similarity need (the inverted
-# postings are (bucket, term)-clustered; a doc-keyed filter over them
-# cannot prune and would scan the store).
-_FORWARD = "forward"
-_FORWARD_SCHEMA = (
-    "doc_id BIGINT, terms ARRAY<STRING>, tfs ARRAY<BIGINT>, dl BIGINT"
-)
-
-
-def doc_vectors(
-    spark: SparkSession,
-    store_dir: str,
-    ids: DataFrame | list[int],
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Fetch (doc_id, terms, tfs, dl) for the requested ids from the
-    forward substore — `doc_id IN` pushed to the clustered scan, so cost
-    is O(requested docs' rows), never O(corpus). The id set is
-    REQUEST-SIZED by contract: a DataFrame argument is collected to the
-    driver (``id_col`` names its id column) and routed through the same
-    static IN filter as a list, so both forms get footer pruning.
-    Tombstoned docs are excluded; crashed-replay duplicate rows collapse
-    via distinct (rows of a replayed batch are identical: terms sort by
-    term). Ids absent from the substore (never ingested, tokenless,
-    deleted — or ingested by a pre-forward build, see
-    ``backfill_forward_index``) produce no row."""
-    if isinstance(ids, DataFrame):
-        ids = [
-            int(r[0])
-            for r in ids.select(F.col(id_col).cast("long")).collect()
-        ]
-    fwd = read_store(
-        spark, f"{store_dir}/{_FORWARD}", schema=_FORWARD_SCHEMA
-    ).filter(F.col("doc_id").isin([int(i) for i in ids]))
-    tomb = read_store(
-        spark, f"{store_dir}/{_TOMBSTONES}", schema=_TOMBSTONES_SCHEMA
-    ).select("doc_id")
-    return fwd.join(F.broadcast(tomb.distinct()), "doc_id", "left_anti").distinct()
-
-
-def backfill_forward_index(spark: SparkSession, store_dir: str) -> int:
-    """Build (or rebuild) the forward substore FROM the live postings —
-    the migration path for indexes created before the forward substore
-    existed, and the repair path when ``verify_text_index`` reports
-    ``forward_complete=False``. One postings pass (the same doc-keyed
-    rollup an append performs), committed as a fresh forward version.
-    Returns the number of forward rows committed."""
-    from hrdp_variant_load_pipeline_spark.sources.store import (
-        commit_store_version,
-    )
-
-    live = _live_postings(
-        spark,
-        store_dir,
-        read_store(
-            spark, f"{store_dir}/{_POSTINGS}", schema=_POSTINGS_SCHEMA
-        ).distinct(),
-    )
-    fwd = (
-        live.groupBy("doc_id", "dl")
-        .agg(F.sort_array(F.collect_list(F.struct("term", "tf"))).alias("__p"))
-        .select(
-            "doc_id",
-            F.transform("__p", lambda p: p["term"])
-            .cast("array<string>")
-            .alias("terms"),
-            F.transform("__p", lambda p: p["tf"])
-            .cast("array<bigint>")
-            .alias("tfs"),
-            "dl",
-        )
-        .repartitionByRange("doc_id")
-        .sortWithinPartitions("doc_id")
-    )
-    fwd = snapshot(fwd, reliable=False)
-    commit_store_version(fwd, f"{store_dir}/{_FORWARD}")
-    return fwd.count()
-
-
-def prf_expand_terms(
-    spark: SparkSession,
-    store_dir: str,
-    terms: list[str],
-    k_docs: int = 10,
-    n_expand: int = 5,
-    k1: float = 1.2,
-    b: float = 0.75,
-    max_candidates: int = 256,
-) -> list[str]:
-    """Pseudo-relevance feedback (Rocchio/RM3 family): expand a query
-    with the most informative terms of its own top-k documents, entirely
-    from the index — (1) inverted top-k probe, (2) forward fetch of the
-    k winners' term vectors (id pushdown, O(k) rows), (3) one pruned
-    inverted probe for the candidate terms' dfs, (4) rank candidates by
-    feedback-tf × idf. The original terms are excluded; ties break to
-    the lexicographically smaller term, so expansion is deterministic.
-    Returns ``terms + [up to n_expand new terms]``; an empty match set
-    returns the original query unchanged. Requires the forward substore
-    (built by every append; for a pre-forward store run
-    ``backfill_forward_index`` once). ``max_candidates`` caps the
-    feedback vocabulary taken into the df probe (pre-ranked by feedback
-    tf, ties to the smaller term): long documents would otherwise push
-    thousands of term literals into the probe's IN filter, past the
-    point where the scan can prune."""
-    st = _stats_summary(spark, store_dir)
-    nb = st["nb"] if st["nb"] is not None else 64
-    top = text_index_topk(spark, store_dir, terms, k=k_docs, k1=k1, b=b)
-    ids = [int(r["doc_id"]) for r in top.select("doc_id").collect()]
-    if not ids:
-        return list(terms)
-    fb_rows = (
-        doc_vectors(spark, store_dir, ids)
-        .select(F.explode(F.arrays_zip("terms", "tfs")).alias("z"))
-        .select(
-            F.col("z.terms").alias("term"), F.col("z.tfs").alias("tf")
-        )
-        .filter(~F.col("term").isin(list(terms)))
-        .groupBy("term")
-        .agg(F.sum("tf").alias("fb_tf"))
-        .orderBy(F.desc("fb_tf"), F.asc("term"))
-        .limit(max_candidates)
-        .collect()  # request-sized: <= max_candidates rows
-    )
-    if not fb_rows:
-        return list(terms)
-    fb = spark.createDataFrame(
-        [(r["term"], int(r["fb_tf"])) for r in fb_rows],
-        "term STRING, fb_tf BIGINT",
-    )
-    cands = [r["term"] for r in fb_rows]
-    cdf = spark.createDataFrame([(t,) for t in cands], "term STRING").select(
-        "term", _bucket_of(F.col("term"), nb).alias("bucket")
-    )
-    needed = sorted({r["bucket"] for r in cdf.collect()})
-    dfs = _live_postings(
-        spark,
-        store_dir,
-        read_store(spark, f"{store_dir}/{_POSTINGS}", schema=_POSTINGS_SCHEMA)
-        .filter(F.col("bucket").isin(needed))
-        .filter(F.col("term").isin(cands))
-        .distinct(),
-    ).groupBy("term").agg(F.count("*").alias("df"))
-    n_lit = F.lit(float(st["n"]))
-    scored = fb.join(dfs, "term").select(
-        "term",
-        (
-            F.col("fb_tf").cast("double")
-            * F.log(
-                1.0
-                + (n_lit - F.col("df").cast("double") + 0.5)
-                / (F.col("df").cast("double") + 0.5)
-            )
-        ).alias("w"),
-    )
-    picked = (
-        scored.orderBy(F.desc("w"), F.asc("term")).limit(n_expand).collect()
-    )
-    return list(terms) + [r["term"] for r in picked]

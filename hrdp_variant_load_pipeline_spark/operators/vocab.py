@@ -1,18 +1,17 @@
-"""Corpus vocabulary building and frequency-based document scoring.
+"""Corpus vocabulary building and token-statistics document scoring.
 
 Tokenizer training and quality filtering both start from corpus-level
 token statistics: the vocabulary builder is the input to a BPE/WordPiece
-trainer; the frequency scorer is the cheap stand-in for LM-perplexity
-filtering (CCNet-style) — documents made of rare tokens score low, and
-at 100 TB the KenLM pass is usually seeded from exactly this table.
+trainer, and the n-gram LM scorer (``lm_doc_score``) is the
+LM-perplexity filter (CCNet-style) — documents made of rare tokens score
+low.
 
 Scale shape: one explode → hash aggregate with map-side combine (the
 shuffle carries one row per distinct token per map partition, not one per
 occurrence), a TakeOrdered top-k for the vocabulary, and a BROADCAST of
-the (bounded, ``max_vocab``-sized) frequency table back onto the corpus
-for scoring — the corpus itself never shuffles during scoring.
+bounded model tables back onto the corpus for scoring — the corpus
+itself never shuffles during scoring.
 """
-
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
@@ -156,45 +155,6 @@ def word_weighted_stats(
             for c in stat_cols
         ],
     )
-
-
-def frequency_score(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    vocab: DataFrame,
-    out_col: str = "freq_score",
-) -> DataFrame:
-    """Mean log10 corpus-frequency of a document's tokens — the
-    perplexity-proxy quality signal (higher = more ordinary language;
-    garbage/boilerplate full of out-of-vocabulary tokens scores lowest).
-
-    Out-of-vocabulary tokens count as frequency 1 (log 0). The vocabulary
-    frame is broadcast, so per-token scoring is map-side; the partial avg
-    then collapses each document to one (sum, count) row per partition
-    before the doc-keyed shuffle — the wire carries O(docs), never
-    O(tokens).
-
-    Output: input columns + ``out_col`` (rounded to 4 decimals; null for
-    empty documents).
-    """
-    tok = df.select(
-        F.col(id_col),
-        F.explode(
-            F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-        ).alias("token"),
-    )
-    scored = (
-        tok.join(F.broadcast(vocab.select("token", "tf")), "token", "left")
-        .groupBy(id_col)
-        .agg(
-            F.round(
-                F.avg(F.log10(F.coalesce(F.col("tf"), F.lit(1)).cast("double"))),
-                4,
-            ).alias(out_col)
-        )
-    )
-    return df.join(scored, id_col, "left")
 
 
 def tfidf_vectors(

@@ -139,9 +139,11 @@ def _cfg_fingerprint(cfg: dict) -> str:
 
 
 def _ck_write_marker(spark: SparkSession, path: str, payload: dict) -> None:
-    """One atomic create commits the stage (the store-commit pattern,
-    sources/store.py:192): data files without a marker are invisible to
-    resume, so a crash mid-write just recomputes the stage."""
+    """One atomic rename commits the stage (``write_small_file`` with
+    ``overwrite=False``; the same pattern as the ``_COMMITTED`` marker of
+    ``sources.store.commit_store_version``): data files without a marker
+    are invisible to resume, so a crash mid-write just recomputes the
+    stage."""
     write_small_file(
         spark, path, json.dumps(payload).encode(), overwrite=False
     )

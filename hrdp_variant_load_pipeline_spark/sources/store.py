@@ -75,12 +75,35 @@ def write_small_file(
 ) -> None:
     """Write a small driver-side file (marker/manifest JSON) through the
     Hadoop FS API, so it lands on whatever filesystem the data does
-    (HDFS/S3/local). With ``overwrite=False`` the create is the atomic
-    commit primitive: it FAILS if the path exists."""
+    (HDFS/S3/local). The bytes go to a hidden (dot-prefixed) temporary
+    file beside ``path`` and become visible with ONE rename, so a crash
+    leaves either no file at ``path`` or the whole one, never an empty
+    or partial file. With ``overwrite=False`` that rename is the atomic
+    commit primitive: it FAILS if the path exists. The rename goes
+    through ``FileContext``, whose rename replaces an existing target
+    only when asked to (``FileSystem.rename`` on a local path would
+    replace it silently)."""
     fs, jvm = _fs(spark, path)
-    out = fs.create(_jpath(jvm, path), overwrite)
-    out.write(bytearray(data))
-    out.close()
+    target = fs.makeQualified(_jpath(jvm, path))
+    tmp = _jpath(
+        jvm, f"{target.getParent()}/.{target.getName()}.{uuid.uuid4().hex}"
+    )
+    out = fs.create(tmp, False)
+    try:
+        try:
+            out.write(bytearray(data))
+        finally:
+            out.close()
+        Rename = jvm.org.apache.hadoop.fs.Options.Rename
+        opts = spark.sparkContext._gateway.new_array(Rename, 1 if overwrite else 0)
+        if overwrite:
+            opts[0] = Rename.OVERWRITE
+        jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+            fs.getUri(), spark._jsc.hadoopConfiguration()
+        ).rename(tmp, target, opts)
+    except BaseException:
+        fs.delete(tmp, False)
+        raise
 
 
 def _list_names(fs, jvm, root: str) -> list[tuple[str, bool]]:

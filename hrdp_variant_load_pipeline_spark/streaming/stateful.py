@@ -118,78 +118,6 @@ def dedup_stream(
     )
 
 
-def streaming_heavy_hitters(
-    stream: DataFrame,
-    item_col: str,
-    k: int = 32,
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Approximate top items over an unbounded stream in BOUNDED state:
-    Misra–Gries summaries (≤ ``k`` counters each) kept per hash bucket in
-    the state store.
-
-    Exact top-k over a stream needs state proportional to the distinct-
-    item count — unbounded. Misra–Gries keeps at most ``k`` counters:
-    increment a tracked item, start tracking into a free slot, else
-    decrement ALL counters (evicting zeros). Guarantees per bucket:
-    ``true − k ≤ est ≤ true`` where the undercount is at most
-    ``n_bucket / (k+1)``, and any item with frequency above that bound is
-    guaranteed present. With items hash-partitioned over ``n_buckets``
-    (each item deterministically in ONE bucket — summaries never have to
-    merge across buckets), the stream parallelizes like any keyed agg and
-    total state is ``n_buckets × k`` counters, forever.
-
-    Output (update mode): one row per (bucket, item) still tracked after
-    each micro-batch — (bucket, item, est_count, n_bucket). Take the
-    latest row per item and order by est_count for the top list.
-    """
-
-    def update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            items, counts, n_seen = state.get
-            counters = dict(zip(items, counts))
-        else:
-            counters, n_seen = {}, 0
-        for pdf in batches:
-            for item in pdf[item_col]:
-                n_seen += 1
-                if item in counters:
-                    counters[item] += 1
-                elif len(counters) < k:
-                    counters[item] = 1
-                else:
-                    # decrement-all: evict zeroed counters
-                    counters = {
-                        it: c - 1 for it, c in counters.items() if c > 1
-                    }
-        state.update((list(counters), [int(c) for c in counters.values()], n_seen))
-        yield pd.DataFrame(
-            {
-                "bucket": [key[0]] * len(counters),
-                "item": list(counters),
-                "est_count": [int(c) for c in counters.values()],
-                "n_bucket": [n_seen] * len(counters),
-            }
-        )
-
-    # item cast to string up front: the output/state schemas declare
-    # string, and an int64 pandas series would fail Arrow serialization
-    bucketed = stream.withColumn(
-        item_col, F.col(item_col).cast("string")
-    ).withColumn("bucket", F.pmod(F.xxhash64(F.col(item_col)), F.lit(n_buckets)))
-    return bucketed.groupBy("bucket").applyInPandasWithState(
-        update,
-        outputStructType="bucket long, item string, est_count long, n_bucket long",
-        stateStructType="items array<string>, counts array<long>, n_seen long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_bottom_k_sample(
     stream: DataFrame,
     id_col: str,
@@ -262,26 +190,3 @@ def streaming_bottom_k_sample(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def quantiles_from_sample(
-    sample: DataFrame, value_col: str, qs: list[float]
-) -> list[float]:
-    """Quantile estimates from a uniform sample — the consumer side of
-    ``streaming_bottom_k_sample`` (join the kept ids back to their rows,
-    or carry the value through the sketch): because the sketch's kept set
-    is a provably uniform without-replacement sample, order statistics of
-    the sample estimate the stream's quantiles with the standard
-    sampling error (±O(1/sqrt(sample_size)) in rank). Driver-side sort of
-    a sample-sized list."""
-    vals = sorted(
-        r[0] for r in sample.select(F.col(value_col).cast("double")).collect()
-        if r[0] is not None
-    )
-    if not vals:
-        return [float("nan")] * len(qs)
-    out = []
-    for q in qs:
-        i = min(len(vals) - 1, max(0, int(round(q * (len(vals) - 1)))))
-        out.append(vals[i])
-    return out

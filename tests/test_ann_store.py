@@ -158,132 +158,26 @@ def test_incremental_semantic_dedup_vs_history_and_replay(spark, tmp_path):
         assert got[20_002] is True  # larger id is the duplicate
 
 
-def test_delete_tombstones_vectors_and_matches_filtered_recompute(
-    spark, tmp_path
-):
-    """Deletion: tombstoned vectors vanish from probes — the store probe
-    equals ivf_topk over the corpus WITHOUT the deleted rows; deletes
-    are idempotent, unknown ids are ignored, and the id namespace stays
-    consumed (a deleted id re-ingested through incremental_semantic_dedup
-    is still flagged as a replay)."""
+def test_store_is_append_only_and_replays_ingested_ids(spark, tmp_path):
+    """After two appends the store directory holds data files only (no
+    side directories), and an already-ingested id sent again through
+    incremental_semantic_dedup is flagged as a replay and leaves the
+    store unchanged (probe parity: test_store_probe_matches_ivf_topk)."""
+    import os
+
     from hrdp_variant_load_pipeline_spark.operators.ann_store import (
-        delete_from_ann_store,
         incremental_semantic_dedup,
-    )
-
-    e, cents, store = _setup(spark, tmp_path)
-    victims = e.filter(F.col("vec_id") % 7 == 0).select("vec_id")
-    n_victims = victims.count()
-    assert delete_from_ann_store(spark, store, victims) == n_victims
-    # replay + unknown id: no-op
-    extra = victims.union(
-        spark.createDataFrame([(999_999,)], "vec_id long")
-    )
-    assert delete_from_ann_store(spark, store, extra) == 0
-
-    queries = e.filter(F.col("vec_id") < 6)
-    got = sorted(map(tuple, ivf_store_topk(
-        spark, store, queries, cents, k=5, nprobe=2
-    ).collect()))
-    survivors = e.filter(F.col("vec_id") % 7 != 0)
-    want = sorted(map(tuple, ivf_topk(
-        survivors, queries, k=5, nprobe=2, centroids=cents
-    ).collect()))
-    assert got == want and got
-    assert all(t[1] % 7 != 0 for t in got)  # no tombstoned neighbor
-
-    # id namespace: a deleted id re-submitted is flagged as replay
-    reingest = e.filter(F.col("vec_id") == 0)  # vec 0 was deleted (0%7==0)
-    flagged = incremental_semantic_dedup(
-        reingest, cents, store, append_kept=False
-    )
-    assert [r.is_semantic_dup for r in flagged.collect()] == [True]
-
-
-def test_vacuum_purges_rows_but_keeps_consumed_ids(spark, tmp_path):
-    """Vacuum physically removes tombstoned rows; probe results are
-    unchanged, and the consumed-id registry survives — a deleted id
-    re-submitted through incremental_semantic_dedup is STILL a replay
-    after the purge."""
-    from hrdp_variant_load_pipeline_spark.operators.ann_store import (
-        delete_from_ann_store,
-        incremental_semantic_dedup,
-        vacuum_ann_store,
     )
     from hrdp_variant_load_pipeline_spark.sources.store import read_store
 
     e, cents, store = _setup(spark, tmp_path)
-    victims = e.filter(F.col("vec_id") % 9 == 0).select("vec_id")
-    n = victims.count()
-    assert delete_from_ann_store(spark, store, victims) == n
-    queries = e.filter(F.col("vec_id") < 6)
-    before = sorted(map(tuple, ivf_store_topk(
-        spark, store, queries, cents, k=5, nprobe=2
-    ).collect()))
-
-    assert vacuum_ann_store(spark, store) == n
-    assert vacuum_ann_store(spark, store) == 0  # registry kept, rows gone
-
-    after = sorted(map(tuple, ivf_store_topk(
-        spark, store, queries, cents, k=5, nprobe=2
-    ).collect()))
-    assert after == before
-    assert read_store(spark, store).filter("vec_id % 9 = 0").count() == 0
-    # consumed namespace survives the purge
-    reingest = e.filter(F.col("vec_id") == 9)
+    assert not [
+        f for f in os.listdir(store)
+        if os.path.isdir(os.path.join(store, f))
+    ]
+    n_before = read_store(spark, store).count()
     flagged = incremental_semantic_dedup(
-        reingest, cents, store, append_kept=False
+        e.filter(F.col("vec_id") == 0), cents, store
     )
     assert [r.is_semantic_dup for r in flagged.collect()] == [True]
-
-
-def test_vacuum_splits_probe_filter_from_consumed_registry(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r12: the per-probe tombstone anti-join must not pay for
-    deletion HISTORY. After a vacuum the tombstone (probe-filter) set is
-    empty and the ids live in the separate consumed registry; a second
-    delete→vacuum generation behaves identically, and replays of BOTH
-    generations' ids stay flagged."""
-    from hrdp_variant_load_pipeline_spark.operators import ann_store as mod
-    from hrdp_variant_load_pipeline_spark.operators.ann_store import (
-        _ann_consumed_ids,
-        _ann_tombstones,
-        delete_from_ann_store,
-        incremental_semantic_dedup,
-        vacuum_ann_store,
-    )
-
-    e, cents, store = _setup(spark, tmp_path)
-    gen1 = e.filter(F.col("vec_id") % 9 == 0).select("vec_id")
-    n1 = gen1.count()
-    assert delete_from_ann_store(spark, store, gen1) == n1
-    assert vacuum_ann_store(spark, store) == n1
-    # probe filter shrank to empty; registry holds the generation
-    assert _ann_tombstones(spark, store).count() == 0
-    assert _ann_consumed_ids(spark, store).count() == n1
-
-    # second generation over the purged store
-    gen2 = e.filter(F.col("vec_id") % 9 == 1).select("vec_id")
-    n2 = gen2.count()
-    assert delete_from_ann_store(spark, store, gen2) == n2
-    assert _ann_tombstones(spark, store).count() == n2  # only gen2
-    # shuffle fallback path: with the broadcast gate forced shut the
-    # probe still excludes gen2 and ranks identically
-    monkeypatch.setattr(mod, "_BROADCAST_TOMB_BYTES", -1)
-    queries = e.filter(F.col("vec_id") < 6)
-    got = ivf_store_topk(spark, store, queries, cents, k=5, nprobe=2)
-    assert all(
-        r[1] % 9 != 0 and r[1] % 9 != 1 for r in got.collect()
-    )
-    monkeypatch.undo()
-    assert vacuum_ann_store(spark, store) == n2
-    assert _ann_tombstones(spark, store).count() == 0
-    assert _ann_consumed_ids(spark, store).count() == n1 + n2
-
-    # replays of both generations are still replays after both vacuums
-    replay = e.filter(F.col("vec_id").isin(0, 9, 10))  # 0,9 gen1; 10 gen2
-    flagged = incremental_semantic_dedup(
-        replay, cents, store, append_kept=False
-    )
-    assert all(r.is_semantic_dup for r in flagged.collect())
+    assert read_store(spark, store).count() == n_before

@@ -457,3 +457,64 @@ def test_footer_schema_is_the_inferred_schema_and_read_store_runs_no_job(spark, 
     df, jobs = spark_jobs_of(spark, read_store, spark, store)
     assert jobs == 0
     assert df.schema == spark.read.parquet(target).schema and df.count() == 20
+
+
+def test_small_file_write_is_atomic_and_refuses_an_existing_marker(
+    spark, tmp_path, monkeypatch
+):
+    """A stage marker becomes visible with one rename. A write that dies
+    after the file is opened leaves nothing at the final path (before, it
+    left an empty marker that resume read as "no checkpoint" and that the
+    next commit then collided with); an ``overwrite=False`` write to an
+    existing marker raises and leaves the marker as it was."""
+    import json
+
+    from hrdp_variant_load_pipeline_spark.plans.corpus_pipeline import (
+        _ck_read_marker,
+        _ck_write_marker,
+    )
+    from hrdp_variant_load_pipeline_spark.sources import store as store_mod
+
+    stage = tmp_path / "stage"
+    marker = str(stage / "_STAGE_COMMITTED.json")
+    real_fs = store_mod._fs
+
+    class _DiesMidWrite:
+        """The FileSystem, except that the process "dies" right after a
+        file is created, before a byte of it is written."""
+
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def create(self, *args):
+            self._fs.create(*args).close()
+            raise RuntimeError("killed mid-write")
+
+    def dying_fs(spark_, path):
+        fs, jvm = real_fs(spark_, path)
+        return _DiesMidWrite(fs), jvm
+
+    monkeypatch.setattr(store_mod, "_fs", dying_fs)
+    with pytest.raises(RuntimeError, match="killed mid-write"):
+        _ck_write_marker(spark, marker, {"stage": "ingested", "n": 1})
+    monkeypatch.undo()
+    assert not os.path.exists(marker)
+    assert [f for f in os.listdir(stage) if not f.startswith(".")] == []
+    assert _ck_read_marker(spark, marker) is None
+
+    # the resumed run commits the stage
+    _ck_write_marker(spark, marker, {"stage": "ingested", "n": 2})
+    assert _ck_read_marker(spark, marker) == {"stage": "ingested", "n": 2}
+    # a second commit of the same stage is refused; the marker stands
+    with pytest.raises(Exception, match="FileAlreadyExists"):
+        _ck_write_marker(spark, marker, {"stage": "ingested", "n": 3})
+    assert _ck_read_marker(spark, marker) == {"stage": "ingested", "n": 2}
+    # overwrite=True (shard manifests) replaces the file in one rename
+    store_mod.write_small_file(spark, marker, json.dumps({"n": 4}).encode())
+    assert _ck_read_marker(spark, marker) == {"n": 4}
+    assert [f for f in os.listdir(stage) if not f.startswith(".")] == [
+        "_STAGE_COMMITTED.json"
+    ]

@@ -84,23 +84,6 @@ def test_empty_and_null_text(spark):
     assert out[1] == [] and out[2] == []
 
 
-def test_merges_roundtrip_through_disk(spark, tmp_path):
-    from hrdp_variant_load_pipeline_spark.functions.bpe import (
-        load_merges,
-        save_merges,
-    )
-
-    corpus = _corpus(spark)
-    merges = learn_bpe(corpus, "text", n_merges=8)
-    path = str(tmp_path / "model" / "merges.json")
-    save_merges(merges, path)
-    reloaded = load_merges(path)
-    assert reloaded == merges
-    a = corpus.select(bpe_tokenize(F.col("text"), merges).alias("t")).collect()
-    b = corpus.select(bpe_tokenize(F.col("text"), reloaded).alias("t")).collect()
-    assert [r.t for r in a] == [r.t for r in b]
-
-
 def test_training_stats_bounded_cluster_side(spark):
     """min_count / max_words must bound the stats INSIDE the cluster (the
     model-sized-collect contract): hapax noise is dropped, the top-k cap

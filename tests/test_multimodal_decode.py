@@ -110,73 +110,3 @@ def test_decode_operators_mix_real_and_fallback(spark):
         16000, 8000, 500,
     )
     assert agot[2].sample_rate in range(8000, 40001, 8000)  # fake path
-
-
-def _mp4(timescale, duration, version=0):
-    if version == 0:
-        mvhd_body = bytes([0, 0, 0, 0]) + b"\x00" * 8 + struct.pack(
-            ">II", timescale, duration
-        ) + b"\x00" * 80
-    else:
-        mvhd_body = bytes([1, 0, 0, 0]) + b"\x00" * 16 + struct.pack(
-            ">I", timescale
-        ) + struct.pack(">Q", duration) + b"\x00" * 80
-    mvhd = struct.pack(">I", 8 + len(mvhd_body)) + b"mvhd" + mvhd_body
-    moov = struct.pack(">I", 8 + len(mvhd)) + b"moov" + mvhd
-    ftyp = struct.pack(">I", 16) + b"ftyp" + b"isom" + b"\x00\x00\x02\x00"
-    return ftyp + moov
-
-
-def test_mp4_probe_real_and_fallback(spark):
-    from hrdp_variant_load_pipeline_spark.operators.multimodal import (
-        _mp4_probe,
-        decode_video_features,
-    )
-
-    assert _mp4_probe(_mp4(600, 3000)) == (600, 5000)          # 5 s movie
-    assert _mp4_probe(_mp4(90000, 90000 * 7, version=1)) == (90000, 7000)
-    assert _mp4_probe(b"plain text") is None
-    assert _mp4_probe(b"") is None
-    assert _mp4_probe(struct.pack(">I", 16) + b"ftyp" + b"\x00" * 8) is None
-
-    rows = [(1, bytearray(_mp4(1000, 2500))), (2, bytearray(b"not video"))]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r.doc_id: r for r in decode_video_features(df).collect()}
-    assert (got[1].timescale, got[1].duration_ms) == (1000, 2500)
-    assert got[2].timescale == 600  # deterministic fallback
-
-
-def test_resize_images_plumbing_and_determinism(spark):
-    """resize_images (r14): real Arrow/mapInPandas plumbing around the
-    clearly-marked fake kernel — output buffer is exactly
-    width*height*channels bytes, channels ride the real header probe,
-    results are deterministic across runs and partitionings, and bad
-    dims fail loud."""
-    import pytest as _pytest
-
-    from hrdp_variant_load_pipeline_spark.operators.multimodal import (
-        resize_images,
-    )
-
-    png = (
-        b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR"
-        + (16).to_bytes(4, "big") + (8).to_bytes(4, "big")
-        + bytes([8, 2, 0, 0, 0])  # color type 2 -> RGB, 3 channels
-    )
-    rows = [(1, bytearray(png)), (2, bytearray(b"opaque-not-an-image"))]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = {r.doc_id: r for r in resize_images(df, 4, 3).collect()}
-    assert (out[1].width, out[1].height, out[1].channels) == (4, 3, 3)
-    assert len(bytes(out[1].resized)) == 4 * 3 * 3
-    assert len(bytes(out[2].resized)) == 4 * 3 * out[2].channels
-    # deterministic across partitionings
-    again = {
-        r.doc_id: r
-        for r in resize_images(df.repartition(4), 4, 3).collect()
-    }
-    assert all(
-        bytes(again[k].resized) == bytes(out[k].resized) for k in out
-    )
-    assert out[1].resized_md5 != out[2].resized_md5
-    with _pytest.raises(ValueError, match="positive"):
-        resize_images(df, 0, 3)

@@ -67,13 +67,16 @@ def test_unknown_rule_type_raises(spark):
 def test_rowwise_rules_share_one_aggregate_job(spark):
     """Scale shape: N row-local rules must not mean N scans — the job
     count is the SAME for 2 rules as for 6 (all ride one aggregate)."""
-    sc = spark.sparkContext
+    from tests.conftest import spark_jobs_of
+
     df = _df(spark)
 
     def jobs_for(rules):
-        before = len(sc.statusTracker().getJobIdsForGroup(None))
-        check_constraints(df, rules).collect()
-        return len(sc.statusTracker().getJobIdsForGroup(None)) - before
+        # counted under a job group of its own: a count of all retained
+        # jobs goes negative when the status store evicts old ones
+        return spark_jobs_of(
+            spark, lambda: check_constraints(df, rules).collect()
+        )[1]
 
     two = jobs_for(
         [

@@ -238,7 +238,7 @@ def test_stream_stream_left_outer_join_equals_batch(spark, tmp_path):
     assert _rows(streamed) == _rows(batch)
 
 
-def _hh_stream(spark):
+def _events_stream(spark):
     raw_schema = spark.read.parquet(os.path.join(SF_DIR, "events.parquet")).schema
     return (
         spark.readStream.schema(raw_schema)
@@ -246,87 +246,6 @@ def _hh_stream(spark):
         .option("pathGlobFilter", "events.parquet")
         .load(SF_DIR)
     )
-
-
-def test_streaming_heavy_hitters_exact_when_under_capacity(spark):
-    """With k larger than any bucket's distinct-item count, Misra–Gries
-    never decrements — the summary IS the exact per-item count, so the
-    streamed result must equal the batch groupBy."""
-    import uuid
-
-    from hrdp_variant_load_pipeline_spark.streaming.stateful import (
-        streaming_heavy_hitters,
-    )
-
-    out = streaming_heavy_hitters(
-        _hh_stream(spark), "event_type", k=16, n_buckets=4
-    )
-    name = f"hh_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        r["item"]: r["est_count"]
-        for r in spark.table(name)
-        .groupBy("item")
-        .agg(F.max("est_count").alias("est_count"))
-        .collect()
-    }
-    want = {
-        r["event_type"]: r["n"]
-        for r in table(spark, SF_DIR, "events")
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_streaming_heavy_hitters_bounds_under_pressure(spark):
-    """With k far below the distinct-item count the summary must still
-    (a) keep at most k counters per bucket, (b) never overcount, and
-    (c) undercount by at most n_bucket/(k+1)."""
-    import uuid
-
-    from hrdp_variant_load_pipeline_spark.streaming.stateful import (
-        streaming_heavy_hitters,
-    )
-
-    k = 4
-    out = streaming_heavy_hitters(
-        # bigint column on purpose: the operator must cast internally
-        _hh_stream(spark).selectExpr("user_id AS item"),
-        "item",
-        k=k,
-        n_buckets=2,
-    )
-    name = f"hhp_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.table(name).collect()
-    per_bucket: dict = {}
-    for r in rows:
-        per_bucket.setdefault(r["bucket"], []).append(r)
-    true = {
-        str(r["user_id"]): r["n"]
-        for r in table(spark, SF_DIR, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert per_bucket
-    for bucket, brs in per_bucket.items():
-        assert len(brs) <= k
-        n_bucket = brs[0]["n_bucket"]
-        for r in brs:
-            t = true[r["item"]]
-            assert r["est_count"] <= t  # never overcounts
-            assert t - r["est_count"] <= n_bucket / (k + 1)
 
 
 def test_streaming_bottom_k_sample_equals_batch_order_by_hash(spark):
@@ -341,7 +260,7 @@ def test_streaming_bottom_k_sample_equals_batch_order_by_hash(spark):
 
     k, nb = 8, 4
     out = streaming_bottom_k_sample(
-        _hh_stream(spark), "event_id", k=k, n_buckets=nb
+        _events_stream(spark), "event_id", k=k, n_buckets=nb
     )
     name = f"bk_{uuid.uuid4().hex[:8]}"
     q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
@@ -396,12 +315,11 @@ def test_streaming_sample_quantiles_track_exact(spark):
     import uuid
 
     from hrdp_variant_load_pipeline_spark.streaming.stateful import (
-        quantiles_from_sample,
         streaming_bottom_k_sample,
     )
 
     out = streaming_bottom_k_sample(
-        _hh_stream(spark), "event_id", k=64, n_buckets=4
+        _events_stream(spark), "event_id", k=64, n_buckets=4
     )
     name = f"qs_{uuid.uuid4().hex[:8]}"
     q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
@@ -417,10 +335,9 @@ def test_streaming_sample_quantiles_track_exact(spark):
         .join(ev, "event_id")
     )
     assert kept.count() == 4 * 64
-    est = quantiles_from_sample(kept, "value", [0.25, 0.5, 0.75])
-    exact = ev.agg(
-        F.expr("percentile(value, array(0.25, 0.5, 0.75))")
-    ).collect()[0][0]
+    pcts = F.expr("percentile(value, array(0.25, 0.5, 0.75))")
+    est = kept.agg(pcts).collect()[0][0]
+    exact = ev.agg(pcts).collect()[0][0]
     spread = ev.agg(F.max("value") - F.min("value")).collect()[0][0]
     for e, x in zip(est, exact):
         assert abs(e - x) <= 0.15 * spread, (est, exact)

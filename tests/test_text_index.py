@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from hrdp_variant_load_pipeline_spark.operators.text_index import (
     append_text_index_batch,
-    describe_text_index,
     text_index_topk,
 )
 from hrdp_variant_load_pipeline_spark.operators.vocab import bm25_scores
@@ -123,16 +122,6 @@ def test_unmatched_terms_and_small_match_set(spark, tmp_path):
     }
     assert {r.doc_id: r.score for r in rows} == want
     assert len(rows) == len(want)  # k past the match set returns matches
-
-
-def test_describe(spark, tmp_path):
-    store = _ingest(spark, tmp_path)
-    d = describe_text_index(spark, store)
-    assert d["n_docs"] == 7
-    assert d["sum_dl"] == sum(
-        len([w for w in t.split() if w]) for _, t in BATCH1 + BATCH2
-    )
-    assert d["postings"] > 0 and d["terms"] > 0 and d["buckets"] >= 1
 
 
 def test_n_buckets_is_a_store_property(spark, tmp_path):
@@ -336,173 +325,6 @@ def test_batch_key_makes_append_replay_idempotent(spark, tmp_path):
     assert got == want  # duplicates scored once, stats counted once
 
 
-def test_delete_tombstones_docs_and_restores_parity(spark, tmp_path):
-    """Deletion: tombstoned docs vanish from probes (single AND batch),
-    df/N/avgdl shrink accordingly, and probe scores are bit-equal to the
-    one-shot operator over the SURVIVING corpus. Double/unknown deletes
-    are no-ops."""
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        delete_from_text_index,
-        text_index_scores,
-        text_index_topk_many,
-        verify_text_index,
-    )
-
-    store = _ingest(spark, tmp_path)
-    victims = spark.createDataFrame([(1,), (5,)], "doc_id long")
-    assert delete_from_text_index(spark, store, victims) == 2
-    # idempotent: replay + a never-ingested id adjust nothing
-    again = spark.createDataFrame([(1,), (5,), (999,)], "doc_id long")
-    assert delete_from_text_index(spark, store, again) == 0
-    assert verify_text_index(spark, store)["consistent"]
-
-    survivors = spark.createDataFrame(
-        [r for r in BATCH1 + BATCH2 if r[0] not in (1, 5)],
-        "doc_id long, text string",
-    )
-    want = {
-        r.doc_id: r.bm25
-        for r in bm25_scores(survivors, "doc_id", "text", TERMS).collect()
-        if r.bm25 > 0
-    }
-    got = {r.doc_id: r.score
-           for r in text_index_scores(spark, store, TERMS).collect()}
-    assert got == want  # N, avgdl, df all reflect the deletion
-    assert 1 not in got and 5 not in got
-    many = text_index_topk_many(
-        spark,
-        store,
-        spark.createDataFrame(
-            [(1, TERMS)], "query_id long, terms array<string>"
-        ),
-        k=100,
-    ).collect()
-    assert {r.doc_id: r.score for r in many} == want
-
-
-def test_vacuum_purges_tombstones_and_duplicates(spark, tmp_path):
-    """Vacuum: probe results unchanged, but tombstoned docs' postings
-    and crashed-replay duplicates are physically gone, the stats ledger
-    collapses to one row, and the tombstone dir is cleared."""
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        delete_from_text_index,
-        text_index_scores,
-        vacuum_text_index,
-        verify_text_index,
-    )
-    from hrdp_variant_load_pipeline_spark.sources.store import (
-        append_to_store,
-        read_store,
-    )
-
-    store = _ingest(spark, tmp_path)
-    # plant a crashed-replay duplicate of an existing posting row
-    one = read_store(spark, f"{store}/postings").limit(1)
-    append_to_store(one, f"{store}/postings")
-    delete_from_text_index(
-        spark, store, spark.createDataFrame([(5,)], "doc_id long")
-    )
-    before = {r.doc_id: r.score
-              for r in text_index_scores(spark, store, TERMS).collect()}
-
-    removed = vacuum_text_index(spark, store)
-    assert removed >= 1  # at least the planted duplicate or doc 5's rows
-
-    after = {r.doc_id: r.score
-             for r in text_index_scores(spark, store, TERMS).collect()}
-    assert after == before and 5 not in after
-    post = read_store(spark, f"{store}/postings")
-    assert post.filter("doc_id = 5").count() == 0  # physically gone
-    assert post.count() == post.distinct().count()  # duplicates gone
-    stats = read_store(
-        spark, f"{store}/stats",
-        schema="n_docs BIGINT, sum_dl BIGINT, n_buckets BIGINT, batch_key STRING",
-    ).collect()
-    # collapsed to ONE summed row + zero-rows preserving replay markers
-    summed = [r for r in stats if r.batch_key is None]
-    markers = [r for r in stats if r.batch_key is not None]
-    assert len(summed) == 1
-    assert all(r.n_docs == 0 and r.sum_dl == 0 for r in markers)
-    assert verify_text_index(spark, store)["consistent"]
-    # a second vacuum is a no-op for content
-    vacuum_text_index(spark, store)
-    again = {r.doc_id: r.score
-             for r in text_index_scores(spark, store, TERMS).collect()}
-    assert again == before
-
-
-def test_crashed_delete_is_repaired(spark, tmp_path):
-    """Crash drill for deletion: tombstones landed, the negative stats
-    row did not. The next entry point (here: verify) repairs the ledger
-    from the dl each tombstone carries, restoring bit-equality over the
-    surviving corpus; a replay of the same request stays a no-op."""
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        delete_from_text_index,
-        text_index_scores,
-        verify_text_index,
-    )
-    from hrdp_variant_load_pipeline_spark.sources.store import (
-        append_to_store,
-        read_store,
-    )
-
-    store = _ingest(spark, tmp_path)
-    # simulate the crash: run a real delete in a scratch store to obtain
-    # the exact tombstone rows it writes, then append ONLY those (no
-    # stats row) to the store under test
-    scratch = _ingest(spark, tmp_path / "scratch")
-    delete_from_text_index(
-        spark, scratch, spark.createDataFrame([(5,), (7,)], "doc_id long")
-    )
-    crashed_tomb = read_store(spark, f"{scratch}/tombstones")
-    append_to_store(crashed_tomb, f"{store}/tombstones")
-
-    # probes already exclude the docs, but stats drifted — verify repairs
-    assert verify_text_index(spark, store)["consistent"]
-    survivors = spark.createDataFrame(
-        [r for r in BATCH1 + BATCH2 if r[0] not in (5, 7)],
-        "doc_id long, text string",
-    )
-    want = {
-        r.doc_id: r.bm25
-        for r in bm25_scores(survivors, "doc_id", "text", TERMS).collect()
-        if r.bm25 > 0
-    }
-    got = {r.doc_id: r.score
-           for r in text_index_scores(spark, store, TERMS).collect()}
-    assert got == want
-    # replaying the original request after the repair adjusts nothing
-    assert delete_from_text_index(
-        spark, store, spark.createDataFrame([(5,), (7,)], "doc_id long")
-    ) == 0
-    assert {r.doc_id: r.score
-            for r in text_index_scores(spark, store, TERMS).collect()} == want
-
-
-def test_vacuum_preserves_replay_markers(spark, tmp_path):
-    """An at-least-once replay of a pre-vacuum batch must STILL be
-    skipped after the vacuum — the marker keys survive as zero-rows."""
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        text_index_scores,
-        vacuum_text_index,
-    )
-
-    store = str(tmp_path / "tix")
-    b1 = spark.createDataFrame(BATCH1, "doc_id long, text string")
-    assert append_text_index_batch(b1, store, batch_key="b1") == 4
-    vacuum_text_index(spark, store)
-    # replay of the pre-vacuum batch: skipped, stats unchanged
-    assert append_text_index_batch(b1, store, batch_key="b1") == 0
-    corpus_scores = {
-        r.doc_id: r.bm25
-        for r in bm25_scores(b1, "doc_id", "text", TERMS).collect()
-        if r.bm25 > 0
-    }
-    got = {r.doc_id: r.score
-           for r in text_index_scores(spark, store, TERMS).collect()}
-    assert got == corpus_scores
-
-
 def test_topk_many_rejects_duplicate_query_ids(spark, tmp_path):
     from hrdp_variant_load_pipeline_spark.operators.text_index import (
         text_index_topk_many,
@@ -521,30 +343,29 @@ def test_topk_many_rejects_duplicate_query_ids(spark, tmp_path):
 
 
 def test_lifecycle_random_walk_matches_model(spark, tmp_path):
-    """Stateful drill: a seeded random interleaving of keyed appends,
-    deletes, and vacuums; after EVERY op the probe must be bit-equal to
-    bm25_scores over the currently-live corpus. Catches interleaving
-    bugs no single-op test can (stats drift across op boundaries)."""
+    """Stateful drill: a seeded random interleaving of keyed appends and
+    at-least-once replays of earlier batches; after EVERY op the probe
+    must be bit-equal to bm25_scores over the ingested corpus and the
+    integrity probe must pass. Catches stats drift across appends that
+    no single-op test can (a replay that double-counts shows up as a
+    changed N/avgdl on the next check)."""
     import random
 
     from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        delete_from_text_index,
         text_index_scores,
-        vacuum_text_index,
         verify_text_index,
     )
 
     rng = random.Random(42)
     words = ["cat", "dog", "mat", "sun", "sky", "run"]
     store = str(tmp_path / "walk")
-    live: dict[int, str] = {}
+    ingested: dict[int, str] = {}
+    sent: dict[str, list] = {}  # batch_key -> the rows delivered under it
     next_id = 0
 
     def check():
-        if not live:
-            return
         corpus = spark.createDataFrame(
-            sorted(live.items()), "doc_id long, text string"
+            sorted(ingested.items()), "doc_id long, text string"
         )
         want = {
             r.doc_id: r.bm25
@@ -556,206 +377,41 @@ def test_lifecycle_random_walk_matches_model(spark, tmp_path):
         assert got == want
         assert verify_text_index(spark, store)["consistent"]
 
-    ops = 0
+    ops = {"append": 0, "replay": 0}
     for step in range(8):
-        op = rng.choice(["append", "append", "delete", "vacuum"])
-        if op == "append" or not live:
-            batch = {}
+        op = rng.choice(["append", "append", "replay"])
+        if op == "replay" and sent:
+            key = rng.choice(sorted(sent))
+            df = spark.createDataFrame(sent[key], "doc_id long, text string")
+            assert append_text_index_batch(df, store, batch_key=key) == 0
+        else:
+            op = "append"
+            rows = []
             for _ in range(rng.randint(1, 4)):
-                batch[next_id] = " ".join(
-                    rng.choices(words, k=rng.randint(0, 7))
+                rows.append(
+                    (next_id, " ".join(rng.choices(words, k=rng.randint(0, 7))))
                 )
                 next_id += 1
-            df = spark.createDataFrame(
-                sorted(batch.items()), "doc_id long, text string"
-            )
-            append_text_index_batch(df, store, batch_key=f"walk-{step}")
-            live.update(batch)
-        elif op == "delete":
-            victims = rng.sample(sorted(live), k=min(2, len(live)))
-            delete_from_text_index(
-                spark, store,
-                spark.createDataFrame([(v,) for v in victims], "doc_id long"),
-            )
-            # tokenless docs stay in N (documented caveat): keep them in
-            # the model too, drop only the tokenized victims
-            for v in victims:
-                if live[v].split():
-                    del live[v]
-        else:
-            vacuum_text_index(spark, store)
-        ops += 1
+            key = f"walk-{step}"
+            df = spark.createDataFrame(rows, "doc_id long, text string")
+            assert append_text_index_batch(df, store, batch_key=key) == len(rows)
+            sent[key] = rows
+            ingested.update(rows)
+        ops[op] += 1
         check()
-    assert ops == 8
+    assert ops["append"] and ops["replay"]
 
 
-def test_forward_index_vectors_and_pushdown(spark, tmp_path):
-    """doc_vectors: per-doc (terms, tfs, dl) parity with tokenization,
-    id-pushdown into the clustered scan, deletion/vacuum interplay."""
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        delete_from_text_index,
-        doc_vectors,
-        vacuum_text_index,
-    )
-
-    store = _ingest(spark, tmp_path)
-    got = {r.doc_id: (list(r.terms), list(r.tfs), r.dl)
-           for r in doc_vectors(spark, store, [1, 5, 4, 999]).collect()}
-    # tokenless doc 4 and unknown 999 produce no rows
-    assert set(got) == {1, 5}
-    for did, text in [(1, BATCH1[0][1]), (5, BATCH2[0][1])]:
-        toks = text.split()
-        want = sorted({(t, toks.count(t)) for t in toks})
-        assert got[did][0] == [t for t, _ in want]
-        assert got[did][1] == [c for _, c in want]
-        assert got[did][2] == len(toks)
-    plan = (
-        doc_vectors(spark, store, [1, 5])
-        ._jdf.queryExecution().executedPlan().toString().replace("\n", " ")
-    )
-    assert "In(doc_id" in plan or "EqualTo(doc_id" in plan, plan
-    # deletion hides the vector; vacuum purges it physically
-    delete_from_text_index(
-        spark, store, spark.createDataFrame([(1,)], "doc_id long")
-    )
-    assert {r.doc_id for r in doc_vectors(spark, store, [1, 5]).collect()} == {5}
-    vacuum_text_index(spark, store)
-    from hrdp_variant_load_pipeline_spark.sources.store import read_store
-
-    assert read_store(spark, f"{store}/forward").filter(
-        "doc_id = 1"
-    ).count() == 0
-    assert {r.doc_id for r in doc_vectors(spark, store, [1, 5]).collect()} == {5}
-
-
-def test_prf_expansion_is_deterministic_and_sensible(spark, tmp_path):
-    """PRF: terms co-occurring with the query in its top docs are
-    appended, idf keeps ubiquitous terms from dominating, originals are
-    never repeated, and the expansion is deterministic."""
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        prf_expand_terms,
-    )
-
-    rows = [
-        (1, "cat mat whiskers purr"),
-        (2, "cat whiskers purr nap"),
-        (3, "dog bark fetch"),
-        (4, "stock market prices fall"),
-        (5, "cat purr whiskers"),
-    ]
-    store = str(tmp_path / "tix")
-    append_text_index_batch(
-        spark.createDataFrame(rows, "doc_id long, text string"), store
-    )
-    out = prf_expand_terms(spark, store, ["cat"], k_docs=3, n_expand=2)
-    assert out[0] == "cat" and len(out) == 3
-    assert "cat" not in out[1:]
-    # cat's top docs are 1/2/5: whiskers+purr dominate the feedback mass
-    assert set(out[1:]) == {"whiskers", "purr"}
-    assert out == prf_expand_terms(spark, store, ["cat"], k_docs=3, n_expand=2)
-    # no matches -> unchanged query
-    assert prf_expand_terms(spark, store, ["zzz"], k_docs=3) == ["zzz"]
-
-
-def test_backfill_repairs_missing_forward_substore(spark, tmp_path):
-    """Migration/repair: a store whose forward substore is missing (a
-    pre-forward build, simulated by deleting the dir) is flagged by
-    verify and fully repaired by backfill_forward_index — vectors then
-    match a fresh build."""
-    import shutil
-
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        backfill_forward_index,
-        doc_vectors,
-        verify_text_index,
-    )
-
-    store = _ingest(spark, tmp_path)
-    before = {r.doc_id: (list(r.terms), list(r.tfs), r.dl)
-              for r in doc_vectors(spark, store, [1, 2, 3, 5, 6, 7]).collect()}
-    shutil.rmtree(f"{store}/forward")
-    v = verify_text_index(spark, store)
-    assert not v["forward_complete"] and not v["consistent"]
-    assert doc_vectors(spark, store, [1]).count() == 0
-
-    n = backfill_forward_index(spark, store)
-    assert n == 6  # every tokenized doc
-    assert verify_text_index(spark, store)["consistent"]
-    after = {r.doc_id: (list(r.terms), list(r.tfs), r.dl)
-             for r in doc_vectors(spark, store, [1, 2, 3, 5, 6, 7]).collect()}
-    assert after == before
-
-
-def test_vacuum_retires_marker_keys_below_replay_horizon(spark, tmp_path):
-    """ADVICE r12: the stats ledger must not grow forever for a
-    long-lived stream. ``retire_keys_where`` drops matching markers at
-    vacuum time; non-matching markers keep their replay-skip semantics,
-    and the corpus totals are unchanged either way."""
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        _has_marker_key,
-        _marker_keys_df,
-        text_index_scores,
-        vacuum_text_index,
-    )
+def test_index_is_append_only_two_substores(spark, tmp_path):
+    """The persisted layout after keyed appends: exactly the postings
+    and stats substores, nothing beside them."""
+    import os
 
     store = str(tmp_path / "tix")
-    b1 = spark.createDataFrame(BATCH1, "doc_id long, text string")
-    b2 = spark.createDataFrame(BATCH2, "doc_id long, text string")
-    assert append_text_index_batch(b1, store, batch_key="s-1") == 4
-    assert append_text_index_batch(b2, store, batch_key="s-2") == 3
-    # stream checkpoint committed past batch 1: s-1 can never replay
-    vacuum_text_index(
-        spark,
-        store,
-        retire_keys_where=(
-            "batch_key like 's-%' and "
-            "cast(substring_index(batch_key, '-', -1) as bigint) < 2"
-        ),
-    )
-    assert not _has_marker_key(spark, store, "s-1")  # retired
-    assert _has_marker_key(spark, store, "s-2")  # kept
-    assert [r.batch_key for r in _marker_keys_df(spark, store).collect()] == [
-        "s-2"
-    ]
-    # the kept marker still skips its replay; totals/scores intact
-    assert append_text_index_batch(b2, store, batch_key="s-2") == 0
-    corpus = spark.createDataFrame(BATCH1 + BATCH2, "doc_id long, text string")
-    want = {
-        r.doc_id: r.bm25
-        for r in bm25_scores(corpus, "doc_id", "text", TERMS).collect()
-        if r.bm25 > 0
-    }
-    got = {r.doc_id: r.score
-           for r in text_index_scores(spark, store, TERMS).collect()}
-    assert got == want
-
-
-def test_live_postings_shuffle_fallback_keeps_parity(
-    spark, tmp_path, monkeypatch
-):
-    """With the tombstone broadcast gate forced shut (size threshold
-    below any real directory), the anti-join runs as a shuffle and probe
-    scores stay bit-equal to the surviving-corpus recompute."""
-    from hrdp_variant_load_pipeline_spark.operators import ann_store as amod
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        delete_from_text_index,
-        text_index_scores,
-    )
-
-    store = _ingest(spark, tmp_path)
-    victims = spark.createDataFrame([(3,), (5,)], "doc_id long")
-    assert delete_from_text_index(spark, store, victims) == 2
-    monkeypatch.setattr(amod, "_BROADCAST_TOMB_BYTES", -1)
-    survivors = [r for r in BATCH1 + BATCH2 if r[0] not in (3, 5)]
-    corpus = spark.createDataFrame(survivors, "doc_id long, text string")
-    want = {
-        r.doc_id: r.bm25
-        for r in bm25_scores(corpus, "doc_id", "text", TERMS).collect()
-        if r.bm25 > 0
-    }
-    got = {r.doc_id: r.score
-           for r in text_index_scores(spark, store, TERMS).collect()}
-    assert got == want
+    for key, batch in (("b1", BATCH1), ("b2", BATCH2)):
+        df = spark.createDataFrame(batch, "doc_id long, text string")
+        assert append_text_index_batch(df, store, batch_key=key) == len(batch)
+    assert sorted(os.listdir(store)) == ["postings", "stats"]
 
 
 def test_topk_many_max_df_frac_prunes_common_terms(spark, tmp_path):
@@ -874,35 +530,6 @@ def test_topk_many_oov_terms_do_not_consume_probe_budget(spark, tmp_path):
         spark, store, q2, k=10, max_query_terms=1
     ).collect()
     assert {r.query_id for r in rows} == {2}
-
-
-def test_vacuum_retire_null_predicate_keeps_marker(spark, tmp_path):
-    """ADVICE r13: a retire predicate that evaluates to NULL on a
-    non-conforming key (e.g. try_cast) must KEEP that marker — retiring
-    a still-replayable key converts its replay into a double-count.
-    Only predicate IS TRUE retires."""
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        _has_marker_key,
-        vacuum_text_index,
-    )
-
-    store = str(tmp_path / "tix")
-    b1 = spark.createDataFrame(BATCH1, "doc_id long, text string")
-    b2 = spark.createDataFrame(BATCH2, "doc_id long, text string")
-    assert append_text_index_batch(b1, store, batch_key="s-1") == 4
-    # a key the numeric-suffix predicate cannot parse: try_cast -> NULL
-    assert append_text_index_batch(b2, store, batch_key="manual-fix") == 3
-    vacuum_text_index(
-        spark,
-        store,
-        retire_keys_where=(
-            "try_cast(substring_index(batch_key, '-', -1) as bigint) < 2"
-        ),
-    )
-    assert not _has_marker_key(spark, store, "s-1")  # TRUE -> retired
-    assert _has_marker_key(spark, store, "manual-fix")  # NULL -> KEPT
-    # the kept marker still skips its replay
-    assert append_text_index_batch(b2, store, batch_key="manual-fix") == 0
 
 
 def test_topk_many_round_digits_rounds_before_ranking(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Vocabulary builder + frequency scorer (operators/vocab.py)."""
+"""Vocabulary builder and token-statistics scorers (operators/vocab.py)."""
 
 from __future__ import annotations
 
@@ -6,10 +6,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from hrdp_variant_load_pipeline_spark.operators.vocab import (
-    build_vocab,
-    frequency_score,
-)
+from hrdp_variant_load_pipeline_spark.operators.vocab import build_vocab
 
 
 def _corpus(spark):
@@ -40,42 +37,6 @@ def test_build_vocab_truncation_and_min_count(spark):
     assert {r.token for r in top2} == {"cat", "the"}
     no_hapax = build_vocab(_corpus(spark), "text", min_count=2).collect()
     assert "dog" not in {r.token for r in no_hapax}
-
-
-def test_frequency_score_matches_manual(spark):
-    docs = _corpus(spark)
-    vocab = build_vocab(docs, "text")
-    tf = {r.token: r.tf for r in vocab.collect()}
-    out = {r.doc_id: r.freq_score for r in frequency_score(docs, "doc_id", "text", vocab).collect()}
-    want1 = sum(math.log10(tf[t]) for t in "the cat sat on the mat".split()) / 6
-    assert abs(out[1] - round(want1, 4)) < 1e-9
-    assert out[3] == round(math.log10(4), 4)
-    assert out[4] is None  # empty doc: no tokens, null score
-
-
-def test_frequency_score_oov_counts_as_one(spark):
-    docs = _corpus(spark)
-    vocab = build_vocab(docs, "text", max_vocab=2)  # only cat/the in vocab
-    out = {r.doc_id: r.freq_score for r in frequency_score(docs, "doc_id", "text", vocab).collect()}
-    # doc 2: the(3), dog(OOV->1), sat(OOV->1) -> mean(log10(3), 0, 0)
-    assert out[2] == round(math.log10(3) / 3, 4)
-
-
-def test_frequency_score_broadcast_no_token_shuffle(spark):
-    """The vocab side must broadcast; no exchange may feed the join's
-    probe (token) side — the corpus explode stays map-local."""
-    docs = _corpus(spark)
-    vocab = build_vocab(docs, "text")
-    plan = (
-        frequency_score(docs, "doc_id", "text", vocab)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan
-    join_at = plan.index("BroadcastHashJoin")
-    gen_at = plan.index("Generate explode", join_at)
-    assert "Exchange hashpartitioning" not in plan[join_at:gen_at]
 
 
 def test_build_vocab_matches_duckdb_on_documents(spark):
