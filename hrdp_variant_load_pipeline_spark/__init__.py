@@ -9,7 +9,7 @@ Layout:
   functions/  pure column-expression libraries (normalization, zygosity, text)
   operators/  relational / set operators (interval join, upsert, dedup, ANN)
   plans/      end-to-end pipelines (runLoad, genicQc equivalents)
-  streaming/  Structured Streaming variants of the batch DAGs
+  streaming/  Structured Streaming stateful operators (running totals, stream dedup)
 """
 
 from hrdp_variant_load_pipeline_spark.session import get_spark

@@ -213,92 +213,6 @@ def winnow_fp(gram_hashes: Column, window: int = 8) -> Column:
     )
 
 
-# --- repetition signals (Gopher-style corpus quality rules; Rae et al.
-# 2021 §A1.1: filter documents dominated by repeated n-grams or a single
-# over-represented word). All row-local array expressions — at 100 TB
-# these run inside whole-stage codegen on the scan, no shuffle. ---
-
-def word_ngrams(text: Column, n: int) -> Column:
-    """Whitespace-token ``n``-grams as ``array<string>`` (empty array for
-    docs shorter than ``n`` tokens)."""
-    toks = F.filter(F.split(text, r"\s+"), lambda t: t != "")
-    m = F.size(toks)
-    # explicit empty for short docs: sequence(1, 0) DESCENDS in Spark
-    return F.when(m < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), m - (n - 1)),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        )
-    )
-
-
-def dup_ngram_fraction(text: Column, n: int = 2) -> Column:
-    """Fraction of ``n``-grams that are repeats of an earlier one:
-    ``1 - distinct/total`` (0.0 for docs with fewer than ``n`` tokens).
-    High values flag boilerplate/spam repetition (the Gopher rule drops
-    docs with dup-bigram fraction above ~0.2)."""
-    g = word_ngrams(text, n)
-    total = F.size(g)
-    return F.when(total <= 0, F.lit(0.0)).otherwise(
-        F.round(
-            1.0 - F.size(F.array_distinct(g)).cast("double") / total, 4
-        )
-    )
-
-
-def top_token_fraction(text: Column) -> Column:
-    """Share of tokens taken by the single most frequent token.
-
-    Row-local O(n log n): sort the token array, then one ``aggregate``
-    pass carries (current-run, best-run) through adjacent-equality flags —
-    the mode count without any per-token sub-scan (a naive
-    count-per-distinct-token is O(distinct × n) per row, quadratic on
-    pathological docs). Gopher drops docs whose top word exceeds ~0.1-0.2
-    of all tokens."""
-    toks = F.filter(F.split(text, r"\s+"), lambda t: t != "")
-    n = F.size(toks)
-    sorted_t = F.array_sort(toks)
-    # eq[i] = 1 if sorted[i+1] == sorted[i] — adjacency in sorted order
-    eq = F.zip_with(
-        F.slice(sorted_t, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(sorted_t, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.when(a == b, F.lit(1)).otherwise(F.lit(0)),
-    )
-    best_run = F.aggregate(
-        eq,
-        F.struct(F.lit(1).alias("cur"), F.lit(1).alias("best")),
-        lambda acc, x: F.struct(
-            F.when(x == 1, acc["cur"] + 1).otherwise(F.lit(1)).alias("cur"),
-            F.greatest(
-                acc["best"],
-                F.when(x == 1, acc["cur"] + 1).otherwise(F.lit(1)),
-            ).alias("best"),
-        ),
-        lambda acc: acc["best"],
-    )
-    return F.when(n <= 0, F.lit(0.0)).otherwise(
-        F.round(best_run.cast("double") / n, 4)
-    )
-
-
-def repetition_flags(
-    text: Column,
-    max_dup_bigram_frac: float = 0.2,
-    max_dup_trigram_frac: float = 0.18,
-    max_top_token_frac: float = 0.2,
-    min_tokens_for_top: int = 10,
-) -> Column:
-    """Gopher-style repetition gate: TRUE when the document passes all
-    repetition rules (thresholds per Rae et al. 2021 Table A1 defaults;
-    the top-token rule only applies above ``min_tokens_for_top`` — tiny
-    docs trivially concentrate)."""
-    toks_ok = token_count(text) < F.lit(min_tokens_for_top)
-    return (
-        (dup_ngram_fraction(text, 2) <= max_dup_bigram_frac)
-        & (dup_ngram_fraction(text, 3) <= max_dup_trigram_frac)
-        & (toks_ok | (top_token_fraction(text) <= max_top_token_frac))
-    )
-
 
 #: masking patterns for pre-tokenization normalization. URL first (an URL
 #: may embed digits/@-text that must mask as part of the URL, not as an
@@ -346,48 +260,6 @@ def normalize_text(
     if collapse_whitespace:
         out = F.trim(F.regexp_replace(out, r"\s+", " "))
     return out
-
-
-def compression_ratio(df, text_col: str, out_col: str = "compression_ratio"):
-    """zlib compressed-size / raw-size per document — the classic
-    "too repetitive / too random" quality signal (Gopher-family rules):
-    boilerplate and looped spam compress far below normal prose (< ~0.3),
-    while base64/random noise refuses to compress (→ 1.0). Empty docs
-    get null.
-
-    Row-local, data-dependent byte work — the sanctioned Arrow-batched
-    pandas path (a zlib pass cannot be expressed in codegen). The corpus
-    never shuffles; output is the input frame + ``out_col`` (double,
-    4 decimals).
-    """
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    if out_col in df.columns:
-        raise ValueError(
-            f"compression_ratio: output column {out_col!r} already exists "
-            "on the input — pass a different out_col"
-        )
-
-    def comp(batches):
-        import zlib
-
-        for pdf in batches:
-            vals = []
-            for text in pdf[text_col]:
-                raw = (text or "").encode("utf-8")
-                if not raw:
-                    vals.append(None)
-                else:
-                    vals.append(round(len(zlib.compress(raw, 6)) / len(raw), 4))
-            pdf = pdf.copy()
-            pdf[out_col] = vals
-            yield pdf
-
-    # fresh StructType: .add mutates the input frame's schema in place
-    schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, DoubleType())]
-    )
-    return df.mapInPandas(comp, schema)
 
 
 #: PII redaction rules, applied IN THIS ORDER (order is semantic:
@@ -559,8 +431,7 @@ def gopher_rules(
     min_stopword_hits: int = 2,
 ) -> Column:
     """Gopher-style document quality rules (Rae et al. 2021 §A1.1, the
-    repetition-free subset — repetition signals live in
-    ``repetition_flags``; C4's terminal-punctuation line rules are folded
+    repetition-free subset; C4's terminal-punctuation line rules are folded
     into the line-shape checks). One struct column of per-rule booleans
     (True = rule PASSES) plus the word count:
 

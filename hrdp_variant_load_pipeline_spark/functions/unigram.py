@@ -1,48 +1,20 @@
-"""Unigram-LM (SentencePiece-style) subword tokenizer: seed → hard-EM →
-prune, plus Viterbi apply.
+"""Unigram-LM (SentencePiece-style) subword tokenizer: Viterbi apply of a
+piece table (Kudo 2018, arXiv:1804.10959).
 
-Completes the tokenizer-prep family next to ``functions/bpe.py``: BPE
-grows a vocabulary bottom-up from pair merges; the unigram model starts
-from an over-complete substring seed and PRUNES toward ``vocab_size``
-under an EM-estimated piece distribution (Kudo 2018, arXiv:1804.10959).
-This implementation uses hard (Viterbi) EM — deterministic, and within
-~1% of soft EM on segmentation quality for corpus-prep purposes.
-
-Scale shape (100 TB): every statistic is computed over the DISTINCT
-word table with frequencies (Zipf-bounded — orders of magnitude smaller
-than the corpus; the corpus itself is touched once by the word-count
-aggregate, map-side combined). Substring seeding is a row-local
-flatten + one hash aggregate + a distributed TakeOrdered. The E-step
-segments distinct words in an Arrow-batched pandas UDF (per-word
-dynamic programming is genuinely data-dependent row-local looping — the
-sanctioned pandas shape) against a BROADCAST piece table; the M-step is
-one piece-keyed hash aggregate. The only driver-side materialization is
-the piece table itself (model-sized by construction: ``seed_size``
-rows max).
+Completes the tokenizer-prep family next to ``functions/bpe.py``: where
+BPE applies an ordered merge list, the unigram model segments each word
+into the pieces of maximal total log-probability under a (piece, logprob)
+table. Segmentation is per-word dynamic programming — genuinely
+data-dependent row-local looping, the sanctioned Arrow-batched pandas
+shape — against a BROADCAST piece table, which is model-sized by
+construction; the corpus never shuffles.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, functions as F
-
-from hrdp_variant_load_pipeline_spark.runtime import release
-
-#: characters never merged into pieces (word boundaries are pre-split)
-_WS = r"\s+"
-
-
-def _word_counts(df: DataFrame, text_col: str) -> DataFrame:
-    return (
-        df.select(
-            F.explode(
-                F.filter(F.split(F.col(text_col), _WS), lambda t: t != "")
-            ).alias("word")
-        )
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
-    )
+from pyspark.sql import DataFrame
 
 
 def _viterbi_segment(word: str, logp: dict, max_len: int) -> list[str]:
@@ -72,156 +44,6 @@ def _viterbi_segment(word: str, logp: dict, max_len: int) -> list[str]:
     return out[::-1]
 
 
-def _segment_words(words: DataFrame, b_logp, max_len: int) -> DataFrame:
-    """(word, freq) → (piece, freq) rows via Viterbi, Arrow-batched.
-    ``b_logp`` is a caller-owned broadcast of the piece log-prob dict —
-    the caller destroys it once the segmentation job has run (a
-    per-iteration broadcast left alive would accumulate a model-sized
-    copy on the driver and every executor for the session lifetime)."""
-    import pandas as pd  # noqa: F401 — mapInPandas contract
-
-    def seg(batches):
-        lp = b_logp.value
-        for pdf in batches:
-            pieces, freqs = [], []
-            for w, f in zip(pdf["word"], pdf["freq"]):
-                for p in _viterbi_segment(w, lp, max_len):
-                    pieces.append(p)
-                    freqs.append(f)
-            import pandas as _pd
-
-            yield _pd.DataFrame({"piece": pieces, "freq": freqs})
-
-    return words.mapInPandas(seg, "piece string, freq long")
-
-
-def learn_unigram(
-    df: DataFrame,
-    text_col: str,
-    vocab_size: int = 8000,
-    seed_size: int | None = None,
-    max_piece_len: int = 8,
-    n_iter: int = 3,
-    prune_frac: float = 0.25,
-) -> DataFrame:
-    """Train a unigram-LM subword vocabulary.
-
-    1. Seed: the ``seed_size`` (default 4×``vocab_size``) most frequent
-       word substrings up to ``max_piece_len`` chars (frequency-weighted
-       by word count; single characters always included so every word
-       stays segmentable).
-    2. Hard-EM: repeat ``n_iter`` times — Viterbi-segment the distinct
-       word table under current piece log-probs, re-estimate probs from
-       the segmentation counts, then prune the lowest-prob
-       ``prune_frac`` of multi-char pieces while above ``vocab_size``.
-    3. Final prune to exactly ``vocab_size`` (single chars exempt).
-
-    Returns (piece, logprob, rank) — rank 1 = most probable,
-    deterministic (ties by piece). Persist with the caller's store of
-    choice; apply with ``unigram_tokenize``.
-    """
-    if seed_size is None:
-        seed_size = 4 * vocab_size
-    words = _word_counts(df, text_col).persist()
-    try:
-        # row-local substring explosion: for each distinct word, every
-        # (start, len<=max_piece_len) substring weighted by word freq
-        subs = words.select(
-            "freq",
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.sequence(F.lit(1), F.length("word")),
-                        lambda i: F.transform(
-                            F.sequence(
-                                F.lit(1),
-                                F.least(
-                                    F.lit(max_piece_len),
-                                    F.length("word") - i + 1,
-                                ),
-                            ),
-                            lambda l: F.substring(F.col("word"), i, l),
-                        ),
-                    )
-                )
-            ).alias("piece"),
-        )
-        # ONE aggregate over the substring explosion feeds both the top-k
-        # seed and the always-kept single characters (a second pass would
-        # re-run the dominant O(word_len × max_piece_len) explode)
-        allp = subs.groupBy("piece").agg(F.sum("freq").alias("w")).persist()
-        try:
-            seed = allp.orderBy(F.desc("w"), F.asc("piece")).limit(seed_size)
-            chars = allp.filter(F.length("piece") == 1)
-            seeded = (
-                seed.unionByName(chars)
-                .groupBy("piece")
-                .agg(F.max("w").alias("w"))
-            )
-            # model-sized collect: <= seed_size + alphabet rows
-            rows = seeded.collect()
-        finally:
-            release(allp)
-        total = sum(r["w"] for r in rows)
-        logp = {r["piece"]: math.log(r["w"] / total) for r in rows}
-
-        for _ in range(n_iter):
-            b_logp = df.sparkSession.sparkContext.broadcast(logp)
-            try:
-                counts = (
-                    _segment_words(words, b_logp, max_piece_len)
-                    .groupBy("piece")
-                    .agg(F.sum("freq").alias("w"))
-                    .collect()
-                )
-            finally:
-                # the collect materialized the job; the per-iteration
-                # broadcast must not outlive it
-                b_logp.destroy()
-            total = sum(r["w"] for r in counts)
-            new_logp = {r["piece"]: math.log(r["w"] / total) for r in counts}
-            # unused seed pieces die; single chars always survive with a
-            # floor so segmentation stays total
-            for ch in {p for p in logp if len(p) == 1}:
-                new_logp.setdefault(ch, math.log(0.5 / total))
-            logp = new_logp
-            multi = sorted(
-                ((p, lp) for p, lp in logp.items() if len(p) > 1),
-                key=lambda x: (x[1], x[0]),
-            )
-            if len(logp) > vocab_size:
-                n_drop = min(
-                    int(len(multi) * prune_frac),
-                    len(logp) - vocab_size,
-                )
-                for p, _lp in multi[:n_drop]:
-                    del logp[p]
-
-        multi = sorted(
-            ((p, lp) for p, lp in logp.items() if len(p) > 1),
-            key=lambda x: (-x[1], x[0]),
-        )
-        singles = {p: lp for p, lp in logp.items() if len(p) == 1}
-        keep_multi = multi[: max(0, vocab_size - len(singles))]
-        final = dict(keep_multi)
-        final.update(singles)
-        spark = df.sparkSession
-        out = spark.createDataFrame(
-            sorted(final.items(), key=lambda x: (-x[1], x[0])),
-            "piece string, logprob double",
-        )
-        from pyspark.sql import Window
-
-        return out.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.orderBy(F.desc("logprob"), F.asc("piece"))
-            ),
-        )
-    finally:
-        release(words)
-
-
 def unigram_tokenize(
     df: DataFrame,
     text_col: str,
@@ -229,8 +51,8 @@ def unigram_tokenize(
     out_col: str = "pieces",
     max_piece_len: int | None = None,
 ) -> DataFrame:
-    """Viterbi-segment every document's words under a trained
-    ``learn_unigram`` table. The piece table is model-sized and rides a
+    """Viterbi-segment every document's words under a (piece, logprob)
+    table. The piece table is model-sized and rides a
     broadcast variable (alive as long as the returned frame — the apply
     side cannot release it); segmentation is Arrow-batched row-local
     work — the corpus never shuffles. ``max_piece_len`` defaults to the
@@ -255,8 +77,6 @@ def unigram_tokenize(
     b_logp = spark.sparkContext.broadcast(logp)
 
     def tok(batches):
-        import pandas as _pd
-
         lp = b_logp.value
         # task-level memo: Viterbi depends only on (word, lp, max_len),
         # both constant here, and word occurrences are Zipf-distributed —

@@ -22,15 +22,14 @@ same corpus + centroids (pinned in tests/test_ann_store.py).
 
 The store is APPEND-ONLY: no vector is ever removed, so a probe scans
 the bucket-pruned store as it is, and the set of ids it holds is the
-set ever ingested (``incremental_semantic_dedup``'s replay probe reads
-exactly that).
+set ever ingested.
 
 Maintenance: each append tiles the bucket domain independently, so at
 ingest frequency a probe reads ~one file per append; run
 ``sources.store.compact_store(spark, store_dir, sort_by=["bucket",
 "vec_id"])`` periodically to re-tile the whole index — keep vec_id as
-the secondary key or the replay probe's row-group pruning is silently
-lost (probe results are pinned identical across compaction).
+the secondary key, the order each append writes (probe results are
+pinned identical across compaction).
 """
 
 from __future__ import annotations
@@ -99,9 +98,8 @@ def append_ivf_batch(
     )
     n = assigned.count()
     # vec_id as the secondary clustering key: within each bucket-ranged
-    # file, row groups then carry narrow id stats, so the incremental
-    # dedup's exact-id replay probe (an id IN filter) prunes row groups
-    # instead of scanning the whole id column
+    # file, row groups then carry narrow id stats, so an id IN filter on
+    # the store prunes row groups instead of scanning the whole id column
     append_to_store(
         assigned, store_dir, cluster_by=["bucket", "vec_id"],
         cluster_partitions=cluster_partitions,
@@ -167,135 +165,3 @@ def ivf_store_topk(
         )
     )
     return _rank_topk(scored, k)
-
-
-# ------------------------------------------------ incremental semantic dedup
-def incremental_semantic_dedup(
-    new_vectors: DataFrame,
-    centroids: DataFrame,
-    store_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    append_kept: bool = True,
-) -> DataFrame:
-    """SemDeDup against HISTORY through the persisted IVF index — the
-    embedding-space twin of ``dedup.incremental_minhash_dedup``: a new
-    batch (a crawl snapshot's embeddings) is checked for semantic
-    near-duplicates of everything already ingested, plus of earlier
-    same-batch rows, without rescanning the historical corpus.
-
-    Per batch: (1) probe the index with the batch AS queries, nprobe=1 —
-    the batch member's own bucket, the same single-cluster pair space
-    batch ``semantic_dedup`` searches, so a doc is dropped iff a
-    same-bucket historical doc (or a smaller-id same-bucket batch mate,
-    checked via one batch-local block join) matches at >= ``threshold``;
-    (2) optionally append the kept rows to the index
-    (``append_ivf_batch``), making the dedup cumulative. Cost is
-    O(batch x probed-bucket rows), never O(history): the probe's bucket
-    IN filter prunes the store scan to the batch's own buckets.
-
-    Replay-safe when ``append_kept``: ids already present in the index
-    are flagged duplicates up front (an exact-id semi-join probe, batch-
-    bounded — the probe cannot ride the cosine path because the scorer
-    excludes self-id matches), so re-running a batch flags every row and
-    appends nothing (pinned in tests).
-
-    Output: the new batch + ``is_semantic_dup`` (boolean; filter NOT for
-    the kept rows). Same keep-the-minimum-id rule as ``semantic_dedup``.
-    """
-    from hrdp_variant_load_pipeline_spark.operators.similarity import (
-        near_dup_pairs,
-    )
-
-    clash = {"is_semantic_dup", "__bucket"} & set(new_vectors.columns)
-    if clash:
-        raise ValueError(
-            f"incremental_semantic_dedup: output column(s) {sorted(clash)} "
-            "already exist on the input — rename/drop them first (same "
-            "rule as semantic_dedup)"
-        )
-    # stable batch: its plan must not re-read the store the append below
-    # mutates
-    new_vectors = snapshot(new_vectors, reliable=False)
-    spark = new_vectors.sparkSession
-    # (0) replay probe: batch ids already ingested are duplicates by
-    # definition. Bounded batches push their id set INTO the scan as an
-    # IN filter (row-group pruning via the vec_id secondary clustering —
-    # the incremental_minhash_dedup candidate-pushdown shape); oversized
-    # batches fall back to the broadcast semi-join probe.
-    store_ids = read_store(spark, store_dir, schema=_STORE_SCHEMA).select(
-        "vec_id"
-    )
-    # bound the collect itself (limit cap+1), not just the branch — an
-    # unthrottled backfill batch must never materialize its full id set
-    # on the driver (the incremental_minhash_dedup pushdown shape)
-    batch_ids = [
-        r[0] for r in new_vectors.select(id_col).limit(10_001).collect()
-    ]
-    if len(batch_ids) <= 10_000:  # same cap as incremental_minhash_dedup
-        replayed = (
-            store_ids.filter(F.col("vec_id").isin(batch_ids))
-            .distinct()
-            .selectExpr(f"vec_id AS `{id_col}`")
-        )
-    else:
-        replayed = store_ids.join(
-            F.broadcast(new_vectors.selectExpr(f"`{id_col}` AS vec_id")),
-            "vec_id",
-            "left_semi",
-        ).selectExpr(f"vec_id AS `{id_col}`")
-    # (1a) vs history: probe the index with the batch as the query set;
-    # nprobe=1 = the batch row's own bucket (SemDeDup's pair space)
-    hist_hits = (
-        ivf_store_topk(
-            spark=spark,
-            store_dir=store_dir,
-            queries=new_vectors,
-            centroids=centroids,
-            id_col=id_col,
-            vec_col=vec_col,
-            k=1,
-            nprobe=1,
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select(F.col("query_id").alias(id_col))
-        .distinct()
-    )
-    # (1b) vs the batch itself: one block join on the assigned bucket;
-    # the LARGER id of a matching pair is the duplicate (same rule as
-    # semantic_dedup's min-id keeper)
-    assigned = new_vectors.crossJoin(
-        F.broadcast(_cent_array(centroids))
-    ).selectExpr(
-        "*",
-        f"coalesce(array_min({_cent_scored_sql(f'`{vec_col}`', _norm_sql(f'`{vec_col}`'))}).cent_id,"
-        " -1L) AS __bucket",
-    )
-    batch_pairs = near_dup_pairs(
-        assigned, block_cols=["__bucket"], id_col=id_col, vec_col=vec_col,
-        threshold=threshold,
-    )
-    batch_hits = batch_pairs.select(
-        F.greatest("id_a", "id_b").alias(id_col)
-    ).distinct()
-    dup_ids = (
-        hist_hits.unionByName(batch_hits).unionByName(replayed).distinct()
-    )
-    flagged = new_vectors.join(
-        dup_ids.withColumn("is_semantic_dup", F.lit(True)), id_col, "left"
-    ).fillna({"is_semantic_dup": False})
-    # ALWAYS pin the result: its lineage probes the store, which this
-    # call (or the caller, in the append_kept=False preview flow) is
-    # about to mutate — a lazy plan re-evaluated after the append would
-    # find every kept row's own copy and flag 100% duplicates
-    flagged = snapshot(flagged, reliable=False)
-    if append_kept:
-        kept = flagged.filter(~F.col("is_semantic_dup")).select(
-            id_col, vec_col
-        )
-        append_ivf_batch(
-            kept, centroids, store_dir, id_col=id_col, vec_col=vec_col
-        )
-    return flagged
-

@@ -238,8 +238,7 @@ def ngram_jaccard_pairs(
 # rank order decorrelates; recall vs the exhaustive Jaccard path is
 # empirically 28/28, 25/25, 256/256 at sf0.001/0.01/0.1 (threshold 0.5).
 # Engine- and run-stable like the previous seeded-md5 scheme (no JVM
-# seeded hashing), so signatures stay reproducible for the DuckDB oracle
-# and across incremental index builds.
+# seeded hashing), so signatures stay reproducible for the DuckDB oracle.
 
 #: modulus of the minhash value family (prime, < 2^40)
 MINHASH_P = 999_999_999_989
@@ -626,227 +625,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFr
     return df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("doc"), sig.alias("simhash")
     )
-
-
-def banded_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_hashes: int = 6,
-    band_rows: int = 2,
-) -> DataFrame:
-    """The persistable LSH index rows for a corpus: one row per (doc,
-    band), carrying the band bucket key and the doc's shingle set.
-
-    Output: (doc, band_idx, band_val, sh). Write this to a store (ideally
-    bucketed on ``band_val``) and nightly batches dedup against history
-    via ``incremental_minhash_dedup`` WITHOUT recomputing the historical
-    corpus — the 100 TB ingest shape, where the index is touched as a
-    co-located probe join instead of re-shingling petabytes.
-
-    Hash convention (Kirsch-Mitzenmacher double hashing of md5(shingle),
-    '|'-concatenated per band — see ``_digest_half``/``_band_key``) must
-    match between index build and probe; both paths share THIS function,
-    so a code drift cannot split them. A PERSISTED index outlives the
-    code, though: an index written under a different hash-family version
-    (e.g. the pre-r12 seeded-md5 scheme) makes every probe miss silently
-    — after a family change, rebuild stored indexes rather than append.
-    """
-    n_bands = num_hashes // band_rows
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band_idx"),
-                _band_key(
-                    [F.col(f"mh{bi * band_rows + r}") for r in range(band_rows)]
-                ).alias("band_val"),
-            )
-            for bi in range(n_bands)
-        ]
-    )
-    src = df.select(
-        F.col(id_col).alias("doc"), shingle_array(F.col(text_col), k).alias("sh")
-    )
-    from hrdp_variant_load_pipeline_spark.sources.tables import spread_for_cpu
-
-    # spread a tiny-file input before CPU-heavy shingling (no-op when the
-    # scan already has enough partitions); full parallelism here — the
-    # per-row minhash work is far heavier than spread_for_cpu's default
-    # string-stats target
-    src = spread_for_cpu(src, df.sparkSession.sparkContext.defaultParallelism)
-    return (
-        # docs with no shingles (< k words) have null minhashes and null
-        # band_val rows that can never equi-join — dropped here so a
-        # persisted index does not accrete dead rows batch after batch
-        _with_minhash_cols(src.filter(F.size("sh") > 0), num_hashes)
-        .select("doc", "sh", F.explode(bands).alias("b"))
-        .select("doc", "b.band_idx", "b.band_val", "sh")
-    )
-
-
-def incremental_minhash_dedup(
-    new_docs: DataFrame,
-    index: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_hashes: int = 6,
-    band_rows: int = 2,
-    verify_threshold: float = 0.5,
-    materialize: bool = True,
-    broadcast_probe: bool = True,
-    pushdown_limit: int = 10000,
-) -> DataFrame:
-    """Near-dup pairs TOUCHING a new batch, probed against a persisted
-    ``banded_signatures`` index — history is never re-shingled.
-
-    Returns (doc_new, doc_dup, jaccard, source) where ``source`` is
-    ``'index'`` (duplicate of a historical doc) or ``'batch'``
-    (duplicate within the new batch; emitted once, doc_new < doc_dup).
-    A batch doc sharing an id with an index row is treated as the SAME
-    document (replay of a partially-committed batch), never as its own
-    duplicate.
-
-    Scale: the probe side is batch-sized; the index join is an equi join
-    on (band_idx, band_val) — bucketed storage makes it exchange the
-    probe side only. Verification intersects shingle arrays row-locally,
-    candidates only. Historical shingles are fetched by PUSHING the
-    candidate id set down to the index scan (``pushdown_limit`` caps the
-    per-batch collect; the In/range filter lets parquet prune row groups
-    by doc min/max, so the fat ``sh`` column is read only from files
-    that can hold a candidate — appends are doc-clustered, making this
-    near-O(candidates) in scan bytes). Above the cap, or on the lazy
-    ``materialize=False`` path, a broadcast LEFT-SEMI against the
-    candidate ids is used instead: still never shuffles history, but
-    scans the full ``sh`` column once per batch. Per-batch cost:
-    O(batch + candidates) compute either way.
-    """
-    nb = banded_signatures(
-        new_docs, id_col, text_col, k, num_hashes, band_rows
-    ).persist()
-    cands = None
-    try:
-        probe = nb.select("doc", "band_idx", "band_val")
-        # The batch side of the band join is explicitly broadcast by
-        # default: the planner cannot size the probe (derived plan, no
-        # stats) and would otherwise broadcast the INDEX side whenever
-        # its file stats look small — an O(history) ship per batch that
-        # grows forever. Micro-batches are bounded by construction; for
-        # a huge backfill batch against a BUCKETED index pass
-        # ``broadcast_probe=False`` (probe-side-only exchange).
-        bprobe = F.broadcast(probe) if broadcast_probe else probe
-        idx_cand = (
-            bprobe.join(
-                index.select(
-                    F.col("doc").alias("doc_dup"), "band_idx", "band_val"
-                ),
-                ["band_idx", "band_val"],
-            )
-            # a replayed batch can meet its own first-attempt index rows
-            # (crash between index and docs append): a doc must never
-            # count as a duplicate of ITSELF
-            .filter(F.col("doc") != F.col("doc_dup"))
-            .select("doc", "doc_dup")
-            .distinct()
-            .withColumn("source", F.lit("index"))
-        )
-        batch_cand = (
-            probe.join(
-                nb.select(F.col("doc").alias("doc_dup"), "band_idx", "band_val"),
-                ["band_idx", "band_val"],
-            )
-            .filter(F.col("doc") < F.col("doc_dup"))
-            .select("doc", "doc_dup")
-            .distinct()
-            .withColumn("source", F.lit("batch"))
-        )
-        # candidate pairs first — the verify stage below only ever needs
-        # shingles for docs that appear in a candidate pair, so the pair
-        # set is computed (and, on the materialized path, cached: it
-        # feeds both the history-id pruning and the final join) before
-        # any shingle is fetched. The lazy path does NOT persist (the
-        # caller gets no unpersist handle — a cache here would leak for
-        # the session lifetime); it recomputes the band joins once more
-        # instead, the documented cost of materialize=False.
-        cands = idx_cand.union(batch_cand)
-        if materialize:
-            cands = cands.persist()
-        # Historical shingles are fetched through a broadcast LEFT SEMI
-        # join against the candidate doc_dup id set: batch-sized by
-        # construction (candidates are pairs touching the batch). The
-        # distinct that collapses the index's per-band row replication
-        # therefore shuffles candidate survivors only — history is never
-        # re-shingled NOR re-shuffled, which is what makes the per-batch
-        # cost O(batch) rather than O(corpus). The index side never
-        # exchanges: scan → broadcast semi filter → candidate-only
-        # distinct (plan-pinned in tests/test_plan_shapes.py).
-        hist_ids = (
-            cands.filter(F.col("source") == "index")
-            .select(F.col("doc_dup").alias("doc"))
-            .distinct()
-        )
-        sh_hist = None
-        if materialize and pushdown_limit:
-            # Candidate-id PUSHDOWN: the `sh` column is the fat side of
-            # the index (a doc's whole shingle set vs three skinny band
-            # rows), and a semi-join filters only AFTER the scan has
-            # read it for every history row. Collecting the candidate id
-            # set (batch-bounded; capped at pushdown_limit) and pushing
-            # it as an In/range filter lets parquet prune row groups by
-            # doc min/max — append-time files are doc-clustered, so the
-            # fat column is read only from files that can hold a
-            # candidate. Costs one extra candidate-sized action per
-            # batch; falls back to the broadcast semi-join when the
-            # candidate set exceeds the cap (a backfill-sized batch).
-            ids = [
-                r[0] for r in hist_ids.limit(pushdown_limit + 1).collect()
-            ]
-            if len(ids) <= pushdown_limit:
-                sh_hist = (
-                    index.select("doc", "sh")
-                    .filter(F.col("doc").isin(ids))
-                    .distinct()
-                    if ids
-                    else index.select("doc", "sh").filter(F.lit(False))
-                )
-        if sh_hist is None:
-            sh_hist = (
-                index.select("doc", "sh")
-                .join(F.broadcast(hist_ids), "doc", "left_semi")
-                .distinct()
-            )
-        sh_all = sh_hist.union(nb.select("doc", "sh").distinct())
-        pairs = cands.join(
-            nb.select(F.col("doc"), F.col("sh").alias("sh_a")).distinct(), "doc"
-        ).join(
-            sh_all.select(F.col("doc").alias("doc_dup"), F.col("sh").alias("sh_b")),
-            "doc_dup",
-        )
-        n_shared = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        jaccard = F.round(
-            n_shared.cast("double")
-            / (F.size("sh_a") + F.size("sh_b") - n_shared),
-            4,
-        )
-        out = (
-            pairs.withColumn("jaccard", jaccard)
-            .filter(F.col("jaccard") >= verify_threshold)
-            .select(
-                F.col("doc").alias("doc_new"),
-                F.col("doc_dup"),
-                "jaccard",
-                "source",
-            )
-        )
-        if not materialize:
-            # lazy plan for inspection/composition; caller must consume it
-            # before nb's persist is dropped by session cache churn
-            return out
-        return snapshot(out)
-    finally:
-        if materialize:
-            release(nb, cands)
 
 
 def _merge_removed_intervals(spans: DataFrame) -> DataFrame:

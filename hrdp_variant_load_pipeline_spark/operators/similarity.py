@@ -50,14 +50,10 @@ def _norm_sql(a: str) -> str:
     return f"sqrt({_dot_sql(a, a)})"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     """Per-query top-k rank over (query_id, neighbor_id, cosine) — the
     shared tail of every cosine search here (brute force, IVF,
-    incremental fold, persisted-store probes): ties break on
+    persisted-store probes): ties break on
     neighbor_id, so results are deterministic and engine-portable."""
     return scored.selectExpr(
         "*",
@@ -127,7 +123,7 @@ def brute_force_topk(
         # zero-norm vectors have no defined cosine (0/0): exclude them
         # like self-matches rather than let NaN propagate — Spark ranks
         # NaN FIRST descending, which would put garbage at rank 1. Same
-        # contract as the BLAS form and the kcenter/mmr zero-exclusion.
+        # contract as the BLAS form and the kcenter zero-exclusion.
         .where("neighbor_id != query_id AND c_norm != 0.0 AND q_norm != 0.0")
         .selectExpr(
             "query_id",
@@ -683,188 +679,3 @@ def near_dup_pairs_lsh(
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
-
-
-def assign_clusters(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Row-local nearest-centroid assignment: input columns + ``cluster``.
-
-    Same shape as ``ivf_topk``'s inverted-file stage: the centroid set
-    (``(cent_id, cvec)``, e.g. ``train_centroids`` output) collapses to ONE
-    array row and rides a broadcast, so the corpus is NEVER shuffled —
-    assignment is a per-row argmax over ``n_centroids`` dot products.
-    Cosine is rounded before the argmax so ties break engine-portably
-    (then by cent_id asc via the struct sort order).
-    """
-    if "cluster" in corpus.columns:
-        raise ValueError(
-            "assign_clusters: corpus already has a 'cluster' column "
-            "(re-running dedup, or pre-blocked input?) — rename/drop it "
-            "first; silently shadowing it would make downstream joins "
-            "ambiguous"
-        )
-    cent_arr = centroids.selectExpr(
-        "cent_id", "cvec", f"{_norm_sql('cvec')} AS cvec_norm"
-    ).agg(
-        F.array_sort(
-            F.collect_list(F.struct("cent_id", "cvec", "cvec_norm"))
-        ).alias("__cents")
-    )
-    vnorm = _norm_sql(f"`{vec_col}`")
-    scored = (
-        f"transform(__cents, x -> named_struct("
-        f"'neg_cos', -round({_dot_sql(f'`{vec_col}`', 'x.cvec')} / "
-        f"({vnorm} * x.cvec_norm), {round_digits}), "
-        f"'cent_id', x.cent_id))"
-    )
-    return corpus.crossJoin(F.broadcast(cent_arr)).selectExpr(
-        *[f"`{c}`" for c in corpus.columns],
-        f"coalesce(array_min({scored}).cent_id, -1L) AS cluster",
-    )
-
-
-def semantic_dedup(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_centroids: int = 8,
-    n_iter: int = 3,
-    centroids: DataFrame | None = None,
-    round_digits: int = 6,
-) -> DataFrame:
-    """SemDeDup-style semantic deduplication (Abbas et al. 2023,
-    arXiv:2303.09540): cluster embeddings with k-means, then inside each
-    cluster drop every document whose cosine similarity to a SMALLER-id
-    cluster-mate is >= ``threshold``. Keeping the minimum id per duplicate
-    chain is deterministic and engine-portable (the paper keeps an
-    arbitrary representative; any fixed rule is equally valid for
-    training-data curation).
-
-    Output: input columns + ``cluster`` (long) + ``is_semantic_dup``
-    (boolean) — filter ``NOT is_semantic_dup`` for the kept corpus.
-    Invariant (tested): no two KEPT documents in the same cluster have
-    cosine >= threshold, because any such pair would have flagged the
-    larger id.
-
-    Scale shape (100 TB): assignment is row-local against the broadcast
-    centroid array (corpus never shuffled — see ``assign_clusters``); the
-    pair space is bounded by clusters via one equi-join on ``cluster``
-    (``near_dup_pairs``), never all-pairs; the dup-id set is
-    candidates-only and joined back with a broadcast-friendly left join.
-    The quadratic term is per-cluster, so ``n_centroids`` must grow with
-    the corpus (SemDeDup uses ~100k clusters for 100M docs — cluster size,
-    not corpus size, is the knob); skewed clusters show up in the pair
-    join's task histogram and are split by raising n_centroids or
-    pre-blocking with ``hyperplane_buckets`` as an extra block column.
-
-    Why the cosine here does NOT ride ``brute_force_topk_auto`` (r15
-    audit): the scoring is a cluster-blocked PAIR join
-    (``near_dup_pairs``), not a corpus x broadcast-queries top-k scan —
-    there is no query side to batch into one ``C @ Q.T``, and a
-    per-cluster BLAS grouping would funnel each whole cluster through
-    one Python worker (the hot-key straggler shape the JVM pair join
-    avoids; partial work distributes across the equi-join's tasks).
-    The dispatch applies to the top-k family only.
-    """
-    clash = {"cluster", "is_semantic_dup", "__dup"} & set(corpus.columns)
-    if clash:
-        raise ValueError(
-            f"semantic_dedup: output column(s) {sorted(clash)} already "
-            "exist on the input — rename/drop them first (duplicate "
-            "column names are ambiguous downstream)"
-        )
-    if centroids is None:
-        centroids = train_centroids(
-            corpus,
-            id_col=id_col,
-            vec_col=vec_col,
-            n_centroids=n_centroids,
-            n_iter=n_iter,
-            round_digits=round_digits,
-        )
-    assigned = assign_clusters(
-        corpus, centroids, id_col=id_col, vec_col=vec_col, round_digits=round_digits
-    )
-    pairs = near_dup_pairs(
-        assigned,
-        block_cols=["cluster"],
-        id_col=id_col,
-        vec_col=vec_col,
-        threshold=threshold,
-        round_digits=round_digits,
-    )
-    # a doc is a dup iff SOME smaller-id cluster-mate sits above threshold;
-    # near_dup_pairs already emits only id_a < id_b, so id_b is the drop side
-    dups = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return assigned.join(
-        dups.withColumn("__dup", F.lit(True)), id_col, "left"
-    ).select(
-        *[F.col(c) for c in assigned.columns],
-        F.coalesce(F.col("__dup"), F.lit(False)).alias("is_semantic_dup"),
-    )
-
-
-def incremental_topk(
-    prev_topk: DataFrame,
-    new_corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Fold a NEW corpus batch into an existing ``brute_force_topk``
-    result without rescoring history — the interactive-session /
-    streaming-index shape (cf. the incremental top-k literature, e.g.
-    EDBT 2020): the standing top-k per query is a sufficient statistic,
-    because a vector outside it can never enter later ranks as more
-    candidates only push scores DOWN.
-
-    Cost is O(|batch| x |queries| + |queries| x k) — the historical
-    corpus is never touched (no scan, no join). Batch scoring reuses
-    :func:`brute_force_topk` (same rounding + tie rules), so a fold of
-    batches is EXACTLY the full recompute over the union, rank for
-    rank — pinned in tests/test_kmeans_ivf.py.
-
-    Re-ingestion contract — **best version seen, not last-write-wins**:
-    replayed identical rows collapse idempotently, but if an id is
-    re-ingested with a CHANGED embedding the fold keeps the MAX cosine
-    per (query, neighbor) across versions, so a neighbor whose vector
-    moved AWAY from a query retains its old (higher) score. Callers
-    re-ingesting corrected embeddings who need last-write-wins must
-    rebuild the standing top-k (or carry a batch sequence number and
-    keep the max-seq row) instead of folding.
-
-    Output schema = brute_force_topk's: (query_id, neighbor_id, cosine,
-    rank).
-    """
-    # r15: route through the size-gated dispatch — a replayed /
-    # backfilled batch can be corpus-sized, where the Arrow/BLAS form
-    # wins 2x+; both forms are bit-equal so the fold contract
-    # (fold == full recompute, rank for rank) is unchanged
-    batch = brute_force_topk_auto(
-        new_corpus, queries, id_col=id_col, vec_col=vec_col, k=k,
-        round_digits=round_digits,
-    )
-    merged = prev_topk.select(
-        "query_id", "neighbor_id", "cosine"
-    ).unionByName(batch.select("query_id", "neighbor_id", "cosine"))
-    # re-folding the same vector (streaming replay, overlapping batches)
-    # yields byte-identical (query, neighbor, cosine) rows; collapsing
-    # them makes the fold IDEMPOTENT — without it a replayed neighbor
-    # would occupy two ranks. Collapse keeps the MAX cosine per
-    # (query, neighbor) — not dropDuplicates, whose survivor is
-    # partition-order-dependent: if an id is re-ingested with a CHANGED
-    # embedding the two rows differ in cosine and the standing top-k
-    # must stay deterministic (max = "best version seen", documented
-    # fold contract; replays are unaffected since their rows are equal).
-    merged = merged.groupBy("query_id", "neighbor_id").agg(
-        F.max("cosine").alias("cosine")
-    )
-    return _rank_topk(merged, k)

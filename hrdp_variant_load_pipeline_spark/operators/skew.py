@@ -322,35 +322,3 @@ def pre_aggregated_join(
     else:
         pre = fact.groupBy(*keys).agg(*aggs)
     return pre.join(dim, list(keys), how)
-
-
-def salted_count_distinct(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    salt: int = 32,
-    out_col: str = "n_distinct",
-) -> DataFrame:
-    """``count(DISTINCT value) GROUP BY keys`` with the VALUE SPACE sharded
-    across ``salt`` reducers per key.
-
-    Algebraic aggregates (sum/count/min/max) don't need salting — map-side
-    partial aggregation already collapses a hot key to one row per map
-    task. Distinct-style aggregates are different: every distinct value of
-    the hot key must meet in one reducer, whose state is the full distinct
-    set. Sharding by ``hash(value) % salt`` partitions that state — each
-    reducer deduplicates a DISJOINT slice of the value space, so the
-    per-shard counts add exactly and the hot key's memory/CPU spreads over
-    ``salt`` tasks. Deterministic (hash, no RNG).
-
-    NULL values are ignored, matching ``count(DISTINCT ...)``.
-    """
-    shard = F.pmod(F.xxhash64(F.col(value_col)), F.lit(salt))
-    per_shard = df.groupBy(*keys, shard.alias(SALT_COL)).agg(
-        F.count_distinct(F.col(value_col)).alias("__n")
-    )
-    return (
-        per_shard.groupBy(*keys)
-        .agg(F.sum("__n").alias(out_col))
-        .withColumn(out_col, F.col(out_col).cast("long"))
-    )

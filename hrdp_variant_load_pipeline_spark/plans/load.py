@@ -122,8 +122,8 @@ class LoadResult:
     def release(self) -> None:
         """Unpersist the plan's internal caches. Call AFTER the outputs
         have been materialized (written / collected): repeated loads in a
-        long-lived session — the streaming loader runs one per micro-batch
-        — accumulate cached partitions without bound otherwise. Outputs
+        long-lived session accumulate cached partitions without bound
+        otherwise. Outputs
         consumed after release() recompute from source. The registry
         protocol is described in ``runtime``."""
         release(*self.cached)

@@ -7,9 +7,16 @@ give that (the old files die before the new ones are durable), and the
 round-5 write-then-double-rename still had a window between the two
 renames where NO store existed at the path.
 
-This module gives the Oracle-transaction visibility guarantee on any
-Hadoop filesystem with three primitives that are each atomic on their own
-(file create, dir rename) and ZERO multi-step visibility dependencies:
+Only ``commit_store_version`` (a whole new version) keeps that guarantee.
+``append_to_store`` does not: it renames a batch's staged files into the
+live location one file at a time, so a reader that lists the store
+mid-append, or a crash mid-append, sees part of the batch (ROADMAP.md
+item 3 plans one commit per append).
+
+``commit_store_version`` gives the Oracle-transaction visibility guarantee
+on any Hadoop filesystem with three primitives that are each atomic on
+their own (file create, dir rename) and ZERO multi-step visibility
+dependencies:
 
 * a store root holds immutable version directories ``v_00000001``,
   ``v_00000002``, … — each fully written before it becomes eligible;
@@ -441,9 +448,10 @@ def append_to_store(
 ) -> int:
     """Append rows to the CURRENT store location (version dir when the
     store is versioned, the root for legacy/new flat stores) and return
-    the number of rows appended. Appends are file-granular like the
-    reference's batched inserts; use ``commit_store_version`` when
-    replace-visibility is required.
+    the number of rows appended. Appends are file-granular, NOT atomic:
+    the staged files become visible one rename at a time (module
+    docstring); use ``commit_store_version`` when all-or-nothing
+    visibility is required.
 
     The batch is written to a staging directory ``<target>/.append-<uuid>``
     (dot prefix: hidden from Spark and Hadoop listings), its data files are
@@ -461,18 +469,18 @@ def append_to_store(
     set: the batch is range-repartitioned then sorted within partitions
     on the keys, so each written file covers a narrow, disjoint key
     range and its parquet footer min/max actually prunes. This is the
-    contract the incremental-dedup candidate pushdown relies on
-    (``operators/dedup.py``: an In/range filter over candidate ids skips
-    files whose stats cannot hold one) — without it a multi-partition
-    batch hash-scatters ids so every file spans the whole batch range
-    and no file is ever skipped. Cost: one batch-sized range shuffle
-    (micro-batch appends are bounded by construction).
+    contract the persisted indexes' probes rely on
+    (``operators/ann_store.py`` and ``operators/text_index.py``: an IN
+    filter over probed keys skips files whose stats cannot hold one) —
+    without it a multi-partition batch hash-scatters keys so every file
+    spans the whole batch range and no file is ever skipped. Cost: one
+    batch-sized range shuffle.
     ``cluster_partitions`` pins the written file count; left None, the
     range shuffle takes the session default and AQE right-sizes it per
     batch. Deliberately NOT derived from ``df.rdd.getNumPartitions()``:
     under AQE, touching ``.rdd`` finalizes the plan by RUNNING its
-    shuffle map stages, so a derived batch (e.g. the ingest's
-    shingle/minhash index rows) would execute twice per append.
+    shuffle map stages, so a derived batch (e.g. an index's
+    bucket-assigned rows) would execute twice per append.
 
     Appending a DIFFERENT schema into an existing location is refused:
     Spark's default parquet read infers from one footer, so a drifted

@@ -14,9 +14,11 @@ which a plan that does not read the names drops. The same map is recorded
 in the metadata of the ``sample_names`` column (``vcf_header`` reads it
 back), so a plan can drop the per-line names before an exchange and map the
 sample columns after it from the driver-side header. Data rows never leave
-the cluster. Gzip is unsplittable (1 task per file); parallelism comes from
-many files, which matches the reference workload (146 strains). For 100 TB,
-re-stage to bgzip/Parquet first.
+the cluster. Gzip is unsplittable (1 task per file), so the scan's
+parallelism is the file count. The deployed drop is ONE joint VCF with 146
+sample columns, so it scans as one task, and ``restage_to_parquet`` does not
+change that: it writes one row group per input file. For 100 TB, re-stage
+to bgzip first.
 """
 
 from __future__ import annotations
@@ -188,13 +190,14 @@ _RESTAGED_EMPTY = StructType(
 
 
 def restage_to_parquet(vcf: DataFrame, dest: str) -> None:
-    """One-time restage of parsed VCF rows to splittable Parquet,
-    partitioned by ``source_file``.
+    """One-time restage of parsed VCF rows to Parquet, partitioned by
+    ``source_file``.
 
-    Gzip text is unsplittable (1 task/file); for repeated processing at
-    scale, pay the scan once and write columnar, partitioned storage —
-    every later pass gets column pruning, predicate pushdown, and
-    arbitrary parallelism. ``read_restaged`` round-trips the result.
+    Gzip text is unsplittable (1 task/file); for repeated processing,
+    pay the scan once and write columnar, partitioned storage — every
+    later pass gets column pruning and predicate pushdown. Parallelism
+    stays per input file: each file's rows come from one scan task and
+    land as one row group. ``read_restaged`` round-trips the result.
     """
     vcf.write.mode("overwrite").partitionBy("source_file").parquet(dest)
 

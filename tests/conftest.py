@@ -60,3 +60,25 @@ def spark_jobs_of(spark, fn, *args):
     """``(fn(*args), n)``: n is the number of Spark jobs the call ran."""
     out, work = spark_work_of(spark, fn, *args)
     return out, work["jobs"]
+
+
+def node_class(node) -> str:
+    """Simple class name of a Spark plan node (``FileSourceScanExec``)."""
+    return node.getClass().getSimpleName()
+
+
+def plan_nodes(plan):
+    """Yield ``(node, ancestors)`` for every node of a Spark plan, logical
+    or physical, parents before children, by walking ``children()``. An
+    ``AdaptiveSparkPlanExec`` is replaced by the plan it currently runs
+    (``executedPlan()``), so AQE-on and AQE-off plans walk alike."""
+    stack = [(plan, ())]
+    while stack:
+        node, above = stack.pop()
+        if node_class(node) == "AdaptiveSparkPlanExec":
+            node = node.executedPlan()
+        yield node, above
+        kids = node.children()
+        stack.extend(
+            (kids.apply(i), (*above, node)) for i in reversed(range(kids.size()))
+        )

@@ -98,76 +98,12 @@ def test_compaction_preserves_probe_results(spark, tmp_path):
     assert after == before and before
 
 
-def test_incremental_semantic_dedup_vs_history_and_replay(spark, tmp_path):
-    """New batches dedup semantically against everything already
-    ingested (through the index probe — history never rescanned), plus
-    earlier same-batch mates; replaying a batch flags every row and
-    appends nothing."""
-    from hrdp_variant_load_pipeline_spark.operators.ann_store import (
-        incremental_semantic_dedup,
-    )
-    from hrdp_variant_load_pipeline_spark.sources.store import read_store
-
-    e = spark.read.parquet(EMB)
-    cents = train_centroids(e, n_centroids=8, n_iter=3)
-    store = str(tmp_path / "sem")
-
-    batch1 = e.filter(F.col("vec_id") < 40)
-    r1 = incremental_semantic_dedup(batch1, cents, store, threshold=0.999)
-    n_kept1 = r1.filter(~F.col("is_semantic_dup")).count()
-    assert n_kept1 > 0
-    assert read_store(spark, store).count() == n_kept1
-
-    # batch 2: exact copies of batch-1 vectors under NEW ids -> every
-    # row matches history at cosine 1.0 and is flagged
-    copies = batch1.select(
-        (F.col("vec_id") + 10_000).alias("vec_id"), "embedding"
-    )
-    r2 = incremental_semantic_dedup(copies, cents, store, threshold=0.999)
-    flagged = {
-        row["vec_id"]
-        for row in r2.filter(F.col("is_semantic_dup")).collect()
-    }
-    kept1_ids = {
-        row["vec_id"] + 10_000
-        for row in r1.filter(~F.col("is_semantic_dup")).collect()
-    }
-    assert kept1_ids <= flagged  # every kept-history copy is caught
-    assert read_store(spark, store).count() == n_kept1 + r2.filter(
-        ~F.col("is_semantic_dup")
-    ).count()
-
-    # replay batch 1 verbatim: exact-id probe flags everything, store
-    # unchanged
-    n_before = read_store(spark, store).count()
-    r3 = incremental_semantic_dedup(batch1, cents, store, threshold=0.999)
-    assert r3.filter(~F.col("is_semantic_dup")).count() == 0
-    assert read_store(spark, store).count() == n_before
-
-    # intra-batch: two fresh ids, identical vectors -> larger id flagged
-    v = e.filter(F.col("vec_id") == 500).select("embedding").collect()
-    if v:
-        pair = spark.createDataFrame(
-            [(20_001, v[0][0]), (20_002, v[0][0])],
-            "vec_id long, embedding array<double>",
-        )
-        r4 = incremental_semantic_dedup(pair, cents, store, threshold=0.999)
-        got = {
-            row["vec_id"]: row["is_semantic_dup"] for row in r4.collect()
-        }
-        assert got[20_002] is True  # larger id is the duplicate
-
-
-def test_store_is_append_only_and_replays_ingested_ids(spark, tmp_path):
+def test_store_is_append_only_and_holds_each_ingested_id_once(spark, tmp_path):
     """After two appends the store directory holds data files only (no
-    side directories), and an already-ingested id sent again through
-    incremental_semantic_dedup is flagged as a replay and leaves the
-    store unchanged (probe parity: test_store_probe_matches_ivf_topk)."""
+    side directories), and its ids are exactly the ids ingested, each
+    once (probe parity: test_store_probe_matches_ivf_topk)."""
     import os
 
-    from hrdp_variant_load_pipeline_spark.operators.ann_store import (
-        incremental_semantic_dedup,
-    )
     from hrdp_variant_load_pipeline_spark.sources.store import read_store
 
     e, cents, store = _setup(spark, tmp_path)
@@ -175,9 +111,5 @@ def test_store_is_append_only_and_replays_ingested_ids(spark, tmp_path):
         f for f in os.listdir(store)
         if os.path.isdir(os.path.join(store, f))
     ]
-    n_before = read_store(spark, store).count()
-    flagged = incremental_semantic_dedup(
-        e.filter(F.col("vec_id") == 0), cents, store
-    )
-    assert [r.is_semantic_dup for r in flagged.collect()] == [True]
-    assert read_store(spark, store).count() == n_before
+    stored = [r.vec_id for r in read_store(spark, store).select("vec_id").collect()]
+    assert sorted(stored) == sorted(r.vec_id for r in e.select("vec_id").collect())

@@ -1,5 +1,5 @@
-"""BPE subword tokenization (functions/bpe.py): distributed word stats,
-driver-side merge learning, Arrow-batched application."""
+"""BPE subword tokenization (functions/bpe.py): Arrow-batched application
+of an ordered merge list."""
 
 from __future__ import annotations
 
@@ -8,9 +8,17 @@ from pyspark.sql import functions as F
 from hrdp_variant_load_pipeline_spark.functions.bpe import (
     EOW,
     bpe_tokenize,
-    learn_bpe,
-    word_frequencies,
 )
+
+#: the first 10 merges greedy BPE learns on ``_corpus`` (word frequencies
+#: low 5, lower 2, newest 6, widest 3; the most frequent adjacent pair
+#: wins, ties to the lexicographic max): the est</w> unit assembles
+#: right-to-left, then the "low" family
+MERGES = [
+    ("t", EOW), ("s", f"t{EOW}"), ("e", f"st{EOW}"), ("o", "w"), ("l", "ow"),
+    ("w", f"est{EOW}"), ("n", "e"), ("ne", f"west{EOW}"), ("low", EOW),
+    ("w", "i"),
+]
 
 
 def _corpus(spark):
@@ -24,29 +32,10 @@ def _corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_word_frequencies(spark):
-    wf = {r.word: r.freq for r in word_frequencies(_corpus(spark), "text").collect()}
-    assert wf == {"low": 5, "lower": 2, "newest": 6, "widest": 3}
-
-
-def test_learn_bpe_first_merges_follow_frequencies(spark):
-    merges = learn_bpe(_corpus(spark), "text", n_merges=10)
-    # ("e","s"), ("s","t"), ("t",EOW) all tie at newest(6)+widest(3)=9;
-    # the documented lexicographic-max tie-break picks ("t",EOW), and the
-    # est</w> unit then assembles right-to-left
-    assert merges[:3] == [("t", EOW), ("s", f"t{EOW}"), ("e", f"st{EOW}")]
-    # the "low" family merges next: ("o","w") at low(5)+lower(2)=7
-    assert merges[3] == ("o", "w")
-    assert len(merges) <= 10
-    # deterministic across runs
-    assert merges == learn_bpe(_corpus(spark), "text", n_merges=10)
-
-
 def test_tokenize_roundtrip_and_known_segmentation(spark):
     corpus = _corpus(spark)
-    merges = learn_bpe(corpus, "text", n_merges=10)
     out = corpus.select(
-        "doc_id", "text", bpe_tokenize(F.col("text"), merges).alias("toks")
+        "doc_id", "text", bpe_tokenize(F.col("text"), MERGES).alias("toks")
     )
     for r in out.collect():
         # lossless: stripping markers reconstructs the original text
@@ -64,15 +53,13 @@ def test_tokenize_roundtrip_and_known_segmentation(spark):
 
 
 def test_tokenize_unseen_word_falls_back_to_chars(spark):
-    corpus = _corpus(spark)
-    merges = learn_bpe(corpus, "text", n_merges=10)
-    df = corpus.sparkSession.createDataFrame([("zzq",)], "text string")
-    toks = df.select(bpe_tokenize(F.col("text"), merges).alias("t")).first().t
+    df = spark.createDataFrame([("zzq",)], "text string")
+    toks = df.select(bpe_tokenize(F.col("text"), MERGES).alias("t")).first().t
     assert toks == ["z", "z", "q", EOW] or toks == ["z", "z", "q" + EOW]
 
 
 def test_empty_and_null_text(spark):
-    df = _corpus(spark).sparkSession.createDataFrame(
+    df = spark.createDataFrame(
         [(1, ""), (2, None)], "doc_id long, text string"
     )
     out = {
@@ -82,31 +69,3 @@ def test_empty_and_null_text(spark):
         ).collect()
     }
     assert out[1] == [] and out[2] == []
-
-
-def test_training_stats_bounded_cluster_side(spark):
-    """min_count / max_words must bound the stats INSIDE the cluster (the
-    model-sized-collect contract): hapax noise is dropped, the top-k cap
-    keeps the most frequent words, and learned merges ignore noise words
-    below the floor."""
-    rows = [(1, "low low low low low url9x7 q3k8z"), (2, "lower lower")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    floored = {
-        r.word: r.freq
-        for r in word_frequencies(df, "text", min_count=2).collect()
-    }
-    assert floored == {"low": 5, "lower": 2}
-    capped = {
-        r.word
-        for r in word_frequencies(df, "text", max_words=1).collect()
-    }
-    assert capped == {"low"}
-    # default learn_bpe floor: merges must be identical to training on
-    # the noise-free corpus
-    clean = spark.createDataFrame(
-        [(1, "low low low low low"), (2, "lower lower")],
-        "doc_id long, text string",
-    )
-    assert learn_bpe(df, "text", n_merges=5) == learn_bpe(
-        clean, "text", n_merges=5
-    )

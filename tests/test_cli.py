@@ -737,3 +737,30 @@ def test_cli_load_shuffles_each_line_once(spark, tmp_path):
     # gzip text among them once; a second read of the text (142,933)
     # exceeds the budget, as the two-branch plan's 192,970 did
     assert reload["scan_bytes"] <= 135_000, reload
+
+
+def test_first_restaging_run_is_profiled_from_the_raw_drop(tmp_path, monkeypatch):
+    """The run that writes the restage cannot size its profile from it (it
+    does not exist yet): ``main`` sizes it from the raw drop instead, and a
+    later run from the restage."""
+    from hrdp_variant_load_pipeline_spark import cli
+
+    class _Session:
+        def stop(self):
+            pass
+
+    sized = []
+    monkeypatch.setattr(cli, "get_spark", lambda name: _Session())
+    monkeypatch.setattr(cli, "tune_for_input", lambda spark, d: sized.append(d))
+    monkeypatch.setattr(cli, "cmd_run_load", lambda spark, cfg: {})
+    drop, restage = tmp_path / "vcfs", tmp_path / "restage"
+    drop.mkdir()
+    cfg_path = tmp_path / "cfg.json"
+    cfg_path.write_text(
+        json.dumps({"input_dir": str(drop), "restage_dir": str(restage)})
+    )
+
+    assert cli.main(["--runLoad", "--config", str(cfg_path)]) == 0
+    restage.mkdir()
+    assert cli.main(["--runLoad", "--config", str(cfg_path)]) == 0
+    assert sized == [str(drop), str(restage)]

@@ -98,10 +98,8 @@ def test_minhash_empty_and_single_doc(spark):
 
 def test_minhash_signature_forms_agree(spark):
     """The exploded-rows signature form (minhash_signatures, the public
-    per-doc API) and the array-column form the LSH/banded-index paths use
-    (_with_minhash_cols) must compute IDENTICAL mh values — a drift
-    between them would silently split a persisted banded index from a
-    probe built through the other path."""
+    per-doc API) and the array-column form the LSH path uses
+    (_with_minhash_cols) must compute IDENTICAL mh values."""
     from pyspark.sql import functions as F
 
     from hrdp_variant_load_pipeline_spark.operators.dedup import (
@@ -188,37 +186,6 @@ def test_connected_components_releases_round_checkpoints(spark):
     assert rows == {(i, 0) for i in range(10)}
     leftover = cached_ids() - before
     assert len(leftover) <= 1, f"round checkpoints leaked: {leftover}"
-
-
-def test_salted_count_distinct_matches_exact(spark):
-    """Value-space-sharded distinct count == plain count(DISTINCT), on a
-    skewed frame (one hot key with many distinct values, nulls present)."""
-    from hrdp_variant_load_pipeline_spark.operators.skew import (
-        salted_count_distinct,
-    )
-
-    df = spark.range(20000).selectExpr(
-        "CASE WHEN id % 10 < 9 THEN 'hot' ELSE concat('k', id % 50) END AS k",
-        "CASE WHEN id % 97 = 0 THEN NULL ELSE id % 3000 END AS v",
-    )
-    got = {
-        r["k"]: r["n_distinct"]
-        for r in salted_count_distinct(df, ["k"], "v", salt=8).collect()
-    }
-    want = {
-        r["k"]: r["n"]
-        for r in df.groupBy("k").agg(F.count_distinct("v").alias("n")).collect()
-    }
-    assert got == want
-    # plan: the first shuffle must be keyed on (k, shard) — the hot key's
-    # distinct state spreads over `salt` reducers
-    plan = (
-        salted_count_distinct(df, ["k"], "v", salt=8)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "xxhash64" in plan and "pmod" in plan
 
 
 def test_adaptive_salted_join_matches_plain_join(spark):

@@ -124,75 +124,6 @@ def test_ivf_recall_at_5_on_real_embeddings(spark):
     assert recalls[3] >= recalls[2], recalls
 
 
-def test_incremental_topk_equals_full_recompute(spark):
-    """Folding corpus batches through incremental_topk must reproduce
-    brute_force_topk over the union EXACTLY (same rounding/tie rules),
-    while never rescanning history."""
-    from hrdp_variant_load_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        incremental_topk,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = e.filter(F.col("vec_id") < 5)
-    hist = e.filter((F.col("vec_id") % 3 == 0))
-    b1 = e.filter(F.col("vec_id") % 3 == 1)
-    b2 = e.filter(F.col("vec_id") % 3 == 2)
-
-    topk = brute_force_topk(hist, queries, k=7)
-    topk = incremental_topk(topk, b1, queries, k=7)
-    topk = incremental_topk(topk, b2, queries, k=7)
-    full = brute_force_topk(e, queries, k=7)
-    got = sorted(map(tuple, topk.collect()))
-    want = sorted(map(tuple, full.collect()))
-    assert got == want
-    # the incremental plan never touches the historical frames: exactly
-    # one scan (the new batch) below the standing-result reuse point
-    import re
-
-    plan = (
-        incremental_topk(full.localCheckpoint(), b2, queries, k=7)
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    n_scans = len(re.findall(r"Relation.*parquet", plan))
-    assert n_scans == 2, plan  # b2 + the broadcast query side
-
-
-def test_incremental_topk_changed_embedding_keeps_best_deterministically(spark):
-    """Re-ingesting a vector id with a CHANGED embedding must resolve to
-    the max-cosine row per (query, neighbor) — not an arbitrary
-    dropDuplicates survivor (ADVICE r10: the standing top-k must be
-    deterministic under re-ingest)."""
-    from hrdp_variant_load_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        incremental_topk,
-    )
-
-    q = spark.createDataFrame(
-        [(0, [1.0, 0.0])], "vec_id long, embedding array<double>"
-    )
-    v1 = spark.createDataFrame(
-        [(10, [0.6, 0.8]), (11, [0.0, 1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    # id 10 re-ingested pointing closer to the query (cosine 0.6 -> 1.0)
-    v2 = spark.createDataFrame(
-        [(10, [1.0, 0.0])], "vec_id long, embedding array<double>"
-    )
-    base = brute_force_topk(v1, q, k=3)
-    folded = incremental_topk(base, v2, q, k=3)
-    rows = {r["neighbor_id"]: r for r in folded.collect()}
-    assert rows[10]["cosine"] == 1.0  # best version won, not batch order
-    assert rows[10]["rank"] == 1
-    # one row per (query, neighbor): the two versions collapsed
-    assert folded.count() == 2
-    # fold is order-independent: opposite ingest order, same result
-    rev = incremental_topk(brute_force_topk(v2, q, k=3), v1, q, k=3)
-    assert sorted(map(tuple, rev.collect())) == sorted(
-        map(tuple, folded.collect())
-    )
-
-
 def test_brute_force_topk_blas_matches_jvm_form(spark):
     """The Arrow/BLAS batch-dot form is bit-equal to the
     zip_with/aggregate JVM form — same rounded cosines (half-up mirror

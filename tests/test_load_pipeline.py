@@ -23,7 +23,7 @@ from hrdp_variant_load_pipeline_spark.schemas import (
     VARIANT_SAMPLE_DETAIL,
 )
 from hrdp_variant_load_pipeline_spark.sources.vcf import read_vcf
-from tests.conftest import spark_jobs_of
+from tests.conftest import node_class, plan_nodes, spark_jobs_of
 
 VCF_BODY = "\n".join(
     [
@@ -663,50 +663,35 @@ def test_two_lines_with_one_line_key_keep_the_documented_pick(spark, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
-def _plan_nodes(node):
-    """``(node, ancestors)`` for every node of a physical plan."""
-    out, stack = [], [(node, ())]
-    while stack:
-        n, above = stack.pop()
-        out.append((n, above))
-        kids = n.children()
-        stack.extend((kids.apply(i), (*above, n)) for i in range(kids.size()))
-    return out
-
-
-def _cls(node):
-    return node.getClass().getSimpleName()
-
-
 def _window_keys(node):
     spec = node.partitionSpec()
     exprs = [spec.apply(i) for i in range(spec.size())]
-    return [e.name() if _cls(e) == "AttributeReference" else None for e in exprs]
+    return [e.name() if node_class(e) == "AttributeReference" else None for e in exprs]
 
 
 def _reads_lines(node):
-    return any(_cls(n) == "FileSourceScanExec" for n, _ in _plan_nodes(node))
+    return any(node_class(n) == "FileSourceScanExec" for n, _ in plan_nodes(node))
 
 
 def _assert_explode_after_one_cell_exchange(nodes):
-    """On the detail plan ``nodes`` (``_plan_nodes``): no shuffle above the
+    """On the detail plan ``nodes`` (``plan_nodes``): no shuffle above the
     explode of the sample columns, no window partitioned on the line key
     over the lines, and the lines cross at most one exchange, which both
     branches of the pair dedup, where planned, read (the second through a
     reused exchange)."""
     from hrdp_variant_load_pipeline_spark.plans.load import LINE_KEY
 
-    generates = [above for n, above in nodes if _cls(n) == "GenerateExec"]
+    generates = [above for n, above in nodes if node_class(n) == "GenerateExec"]
     assert generates
     for above in generates:
-        assert "ShuffleExchangeExec" not in {_cls(a) for a in above}
+        assert "ShuffleExchangeExec" not in {node_class(a) for a in above}
     for n, _ in nodes:
-        if _cls(n) == "WindowExec" and _window_keys(n) == LINE_KEY:
+        if node_class(n) == "WindowExec" and _window_keys(n) == LINE_KEY:
             assert not _reads_lines(n)
-    line_exchanges = [n for n, _ in nodes if _cls(n) == "ShuffleExchangeExec" and _reads_lines(n)]
+    line_exchanges = [n for n, _ in nodes if node_class(n) == "ShuffleExchangeExec" and _reads_lines(n)]
     assert len(line_exchanges) <= 1
     if line_exchanges:
-        assert "ReusedExchangeExec" in {_cls(n) for n, _ in nodes}
+        assert "ReusedExchangeExec" in {node_class(n) for n, _ in nodes}
 
 
 def test_sample_details_explode_after_the_one_cell_exchange(spark, vcf_dir, dims):
@@ -728,7 +713,7 @@ def test_sample_details_explode_after_the_one_cell_exchange(spark, vcf_dir, dims
             map_key=372,
             next_rgd_id=1000,
         )
-        nodes = _plan_nodes(res.new_sample_details._jdf.queryExecution().executedPlan())
+        nodes = list(plan_nodes(res.new_sample_details._jdf.queryExecution().executedPlan()))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", saved)
     try:
@@ -769,12 +754,12 @@ def test_pair_dedup_branches_explode_after_the_one_cell_exchange(spark, tmp_path
 
 
 def _nodes_without_aqe(df):
-    """``_plan_nodes`` of ``df``'s physical plan, planned with AQE off."""
+    """``plan_nodes`` of ``df``'s physical plan, planned with AQE off."""
     spark = df.sparkSession
     saved = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        return _plan_nodes(df._jdf.queryExecution().executedPlan())
+        return list(plan_nodes(df._jdf.queryExecution().executedPlan()))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", saved)
 
@@ -785,7 +770,7 @@ def _pair_windows(res):
     return [
         n
         for n, _ in _nodes_without_aqe(res.new_sample_details)
-        if _cls(n) == "WindowExec" and _window_keys(n) == ["rgd_id", "sample_id"]
+        if node_class(n) == "WindowExec" and _window_keys(n) == ["rgd_id", "sample_id"]
     ]
 
 
@@ -825,7 +810,7 @@ def test_batch_where_no_pair_can_repeat_scans_its_lines_once(spark, vcf_dir, dim
     res = run(spark, vcf_dir, dims)
     try:
         nodes = _nodes_without_aqe(res.new_sample_details)
-        scans = [n for n, _ in nodes if _cls(n) == "FileSourceScanExec"]
+        scans = [n for n, _ in nodes if node_class(n) == "FileSourceScanExec"]
         assert len(scans) == 1
         assert not _pair_windows(res)
         assert len(res.new_sample_details.collect()) == 8
@@ -844,8 +829,8 @@ def test_genes_aggregate_crosses_no_exchange(spark, vcf_dir, dims, tmp_path):
     genes.repartition(3).write.parquet(path)
     cand = parse_variants(read_vcf(spark, vcf_dir), spark.read.parquet(path), 372)
     nodes = _nodes_without_aqe(cand)
-    broadcasts = [n for n, _ in nodes if _cls(n) == "BroadcastExchangeExec"]
+    broadcasts = [n for n, _ in nodes if node_class(n) == "BroadcastExchangeExec"]
     assert len(broadcasts) == 1
-    assert "ShuffleExchangeExec" not in {_cls(n) for n, _ in _plan_nodes(broadcasts[0])}
+    assert "ShuffleExchangeExec" not in {node_class(n) for n, _ in plan_nodes(broadcasts[0])}
     genic = {(r["chromosome"], r["start_pos"]) for r in cand.collect() if r["genic_status"] == "GENIC"}
     assert genic == {("1", 201), ("MT", 300)}

@@ -10,22 +10,9 @@ import os
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, node_class, plan_nodes
 
 QUERIES = entrymod.queries()
-
-
-def _cls(node):
-    return node.getClass().getSimpleName()
-
-
-def _plan_nodes(node):
-    """Every node of a physical plan, by walking ``children()``; an adaptive
-    plan is walked from the plan it starts from."""
-    if _cls(node) == "AdaptiveSparkPlanExec":
-        node = node.executedPlan()
-    kids = node.children()
-    return [node, *(d for i in range(kids.size()) for d in _plan_nodes(kids.apply(i)))]
 
 
 def _plan(spark, name, sf=None):
@@ -229,77 +216,6 @@ def test_brute_force_topk_blas_shape(spark):
     assert plan.count("Exchange hashpartitioning") == 1  # the rank window only
 
 
-def test_incremental_dedup_history_probe_is_candidate_pruned(spark, tmp_path):
-    """The incremental dedup verify stage must fetch historical shingles
-    through a broadcast LEFT-SEMI join against the (batch-sized)
-    candidate id set — never distinct/shuffle the full index's (doc, sh)
-    rows. The index-side shingle scan must feed the semi filter DIRECTLY
-    (no Exchange between scan and filter): this is the O(batch), not
-    O(history), per-ingest-batch contract."""
-    from hrdp_variant_load_pipeline_spark.operators.dedup import (
-        banded_signatures,
-        incremental_minhash_dedup,
-    )
-
-    hist = spark.createDataFrame(
-        [(1, "a b c d e f g"), (2, "h i j k l m n")], "doc_id long, text string"
-    )
-    batch = spark.createDataFrame(
-        [(101, "a b c d e f g"), (102, "z y x w v u t")],
-        "doc_id long, text string",
-    )
-    idx_path = str(tmp_path / "idx")
-    banded_signatures(hist, "doc_id", "text").write.parquet(idx_path)
-    index = spark.read.parquet(idx_path)
-    out = incremental_minhash_dedup(
-        batch, index, "doc_id", "text", materialize=False
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("LeftSemi") == 1
-    # locate the index shingle scan (the only FileScan reading sh)
-    sh_scan = plan.find("sh:array<string>")
-    assert sh_scan != -1, "index shingle scan missing from plan"
-    above = plan[max(0, sh_scan - 600) : sh_scan]
-    # scan -> (null filter) -> broadcast semi: nothing else in between —
-    # in particular no Exchange and no full-index distinct aggregate
-    assert "BroadcastHashJoin" in above and "LeftSemi" in above
-    seg = above[above.find("LeftSemi") :]
-    assert "Exchange" not in seg and "HashAggregate" not in seg
-
-
-def test_incremental_dedup_band_join_broadcasts_probe_side(spark, tmp_path):
-    """The band join must broadcast the BATCH probe side (BuildLeft), not
-    the index: the planner sizes the parquet index but not the derived
-    probe plan, and an index-side broadcast grows with history forever."""
-    import re
-
-    from hrdp_variant_load_pipeline_spark.operators.dedup import (
-        banded_signatures,
-        incremental_minhash_dedup,
-    )
-
-    hist = spark.createDataFrame(
-        [(1, "a b c d e f g"), (2, "h i j k l m n")], "doc_id long, text string"
-    )
-    batch = spark.createDataFrame(
-        [(101, "a b c d e f g")], "doc_id long, text string"
-    )
-    idx_path = str(tmp_path / "idx")
-    banded_signatures(hist, "doc_id", "text").write.parquet(idx_path)
-    index = spark.read.parquet(idx_path)
-    out = incremental_minhash_dedup(
-        batch, index, "doc_id", "text", materialize=False
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    band_joins = re.findall(
-        r"BroadcastHashJoin \[band_idx#\d+, band_val#\d+\].*", plan
-    )
-    assert band_joins, "band join missing or not a broadcast join"
-    # the index-probing band join (right side carries doc_dup from the
-    # index) must build from the LEFT (broadcast probe)
-    assert any("BuildLeft" in j for j in band_joins), band_joins
-
-
 def test_spread_for_cpu_noop_on_wide_scans(spark):
     """spread_for_cpu must never insert a shuffle when the plan already
     has enough partitions (the real-cluster case)."""
@@ -473,13 +389,13 @@ def test_pair_jaccard_prunes_via_hot_anti_join(spark):
         "doc_id long, text string",
     )
     out = ngram_jaccard_pairs(docs, "doc_id", "text", k=3, max_df=5)
-    nodes = _plan_nodes(out._jdf.queryExecution().executedPlan())
-    joins = [n.joinType().toString() for n in nodes if "Join" in _cls(n)]
+    nodes = [n for n, _ in plan_nodes(out._jdf.queryExecution().executedPlan())]
+    joins = [n.joinType().toString() for n in nodes if "Join" in node_class(n)]
     assert "LeftAnti" in joins, joins
     # corpus-shingle explodes: a shingle array is a CASE WHEN (no shingles
     # below k words); the pair-struct explode is a third Generate
     explodes = sorted(
-        _cls(n.generator().children().apply(0)) for n in nodes if _cls(n) == "GenerateExec"
+        node_class(n.generator().children().apply(0)) for n in nodes if node_class(n) == "GenerateExec"
     )
     assert explodes == ["CaseWhen", "CaseWhen", "Flatten"], explodes
 

@@ -467,57 +467,6 @@ def test_dsir_self_ratio_is_zero_and_partition_invariant_bulk(spark):
     assert base == shuffled
 
 
-def test_incremental_topk_fold_equals_recompute_bulk(spark):
-    """Property: for random vector sets and random batch partitions,
-    folding the batches through incremental_topk reproduces
-    brute_force_topk over the union exactly (hypothesis-driven splits,
-    one Spark job per materialized case batch)."""
-    from hrdp_variant_load_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        incremental_topk,
-    )
-
-    cases = []
-
-    @settings(max_examples=12, derandomize=True, deadline=None)
-    @given(
-        n=st.integers(8, 24),
-        dim=st.integers(2, 5),
-        k=st.integers(1, 6),
-        seed=st.integers(0, 10_000),
-        n_batches=st.integers(2, 4),
-    )
-    def gen(n, dim, k, seed, n_batches):
-        cases.append((n, dim, k, seed, n_batches))
-
-    gen()
-    for n, dim, k, seed, n_batches in cases:
-        import hashlib
-
-        def h(i, j):
-            x = int(hashlib.md5(f"{seed}:{i}:{j}".encode()).hexdigest()[:8], 16)
-            return (x % 1000) / 500.0 - 1.0
-
-        rows = [(i, [h(i, j) for j in range(dim)]) for i in range(n)]
-        vecs = spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        )
-        queries = vecs.filter(F.col("vec_id") < 3)
-        topk = brute_force_topk(
-            vecs.filter(F.col("vec_id") % n_batches == 0), queries, k=k
-        )
-        for b in range(1, n_batches):
-            topk = incremental_topk(
-                topk, vecs.filter(F.col("vec_id") % n_batches == b),
-                queries, k=k,
-            )
-        got = sorted(map(tuple, topk.collect()))
-        want = sorted(
-            map(tuple, brute_force_topk(vecs, queries, k=k).collect())
-        )
-        assert got == want, (n, dim, k, seed, n_batches)
-
-
 def test_remove_pieces_rowlocal_matches_python_model(spark):
     """The removal-keyed rebuild tail (interval merge + row-local
     positional filter) against a brute-force Python model: random texts

@@ -14,6 +14,7 @@ from hrdp_variant_load_pipeline_spark.operators.dedup import (
 from hrdp_variant_load_pipeline_spark.operators.similarity import train_centroids
 from hrdp_variant_load_pipeline_spark.operators.upsert import merge_update
 from hrdp_variant_load_pipeline_spark.runtime import local_frame
+from tests.conftest import node_class, plan_nodes
 import importlib
 
 # the plans package re-exports the genic_qc FUNCTION under the same name,
@@ -272,22 +273,13 @@ def test_genic_qc_scope_is_one_broadcast_semi_join(spark, tmp_path):
     assert set(sc._jsc.getPersistentRDDs().keySet()) - before == set()
     assert n_updates == len(_qc_brute_force(QC_STORE, QC_SCOPE, QC_GENES, 372))
 
-    def walk(node):
-        yield node
-        kids = node.children()
-        for i in range(kids.size()):
-            yield from walk(kids.apply(i))
-
-    def cls(node):
-        return node.getClass().getSimpleName()
-
     semis = [
         n
-        for n in walk(plan)
-        if cls(n) == "BroadcastHashJoinExec" and n.joinType().toString() == "LeftSemi"
+        for n, _ in plan_nodes(plan)
+        if node_class(n) == "BroadcastHashJoinExec" and n.joinType().toString() == "LeftSemi"
     ]
     assert len(semis) == 1
     assert semis[0].buildSide().toString() == "BuildRight"
-    streamed = [cls(n) for n in walk(semis[0].left())]
+    streamed = [node_class(n) for n, _ in plan_nodes(semis[0].left())]
     assert "FileSourceScanExec" in streamed
     assert "ShuffleExchangeExec" not in streamed

@@ -1,98 +1,10 @@
-"""Gopher-style repetition signals (functions/text.py): duplicate n-gram
-fractions and top-token concentration, hand-verified plus bulk invariants.
+"""Pre-tokenization text normalization (functions/text.py:normalize_text):
+masking, case and whitespace rules, and parity with DuckDB's regexes.
 """
 
 from __future__ import annotations
 
-import collections
-import random
-
 from pyspark.sql import functions as F
-
-from hrdp_variant_load_pipeline_spark.functions.text import (
-    dup_ngram_fraction,
-    repetition_flags,
-    top_token_fraction,
-    word_ngrams,
-)
-
-
-def _one(spark, text, col):
-    df = spark.createDataFrame([(text,)], "text string")
-    return df.select(col.alias("v")).collect()[0]["v"]
-
-
-def test_word_ngrams_and_short_docs(spark):
-    assert _one(spark, "a b c d", word_ngrams(F.col("text"), 2)) == [
-        "a b",
-        "b c",
-        "c d",
-    ]
-    assert _one(spark, "a", word_ngrams(F.col("text"), 2)) == []
-    assert _one(spark, "", word_ngrams(F.col("text"), 2)) == []
-
-
-def test_dup_ngram_fraction_hand_values(spark):
-    # "a b a b a" -> bigrams [a b, b a, a b, b a]: 2 distinct of 4 -> 0.5
-    assert _one(spark, "a b a b a", dup_ngram_fraction(F.col("text"), 2)) == 0.5
-    # all-unique bigrams -> 0.0; doc shorter than n -> 0.0
-    assert _one(spark, "a b c", dup_ngram_fraction(F.col("text"), 2)) == 0.0
-    assert _one(spark, "a", dup_ngram_fraction(F.col("text"), 2)) == 0.0
-
-
-def test_top_token_fraction_hand_values(spark):
-    # "x x x y z": top token x is 3 of 5
-    assert _one(spark, "x x x y z", top_token_fraction(F.col("text"))) == 0.6
-    assert _one(spark, "a b c d", top_token_fraction(F.col("text"))) == 0.25
-    assert _one(spark, "", top_token_fraction(F.col("text"))) == 0.0
-    assert _one(spark, "same same same", top_token_fraction(F.col("text"))) == 1.0
-
-
-def test_repetition_flags_gate(spark):
-    spam = " ".join(["buy now"] * 30)  # dup bigrams + concentrated tokens
-    clean = " ".join(f"w{i}" for i in range(30))
-    df = spark.createDataFrame([(1, spam), (2, clean)], "id long, text string")
-    out = {
-        r["id"]: r["ok"]
-        for r in df.select(
-            "id", repetition_flags(F.col("text")).alias("ok")
-        ).collect()
-    }
-    assert out[1] is False and out[2] is True
-
-
-def test_bulk_invariants_match_python_reference(spark):
-    rng = random.Random(11)
-    vocab = [f"t{i}" for i in range(12)]
-    docs = [
-        " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 60)))
-        for _ in range(200)
-    ]
-    df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)], "id long, text string")
-    got = {
-        r["id"]: (r["d2"], r["top"])
-        for r in df.select(
-            "id",
-            dup_ngram_fraction(F.col("text"), 2).alias("d2"),
-            top_token_fraction(F.col("text")).alias("top"),
-        ).collect()
-    }
-    import math
-
-    def r4(x):  # Spark rounds HALF_UP; Python round() is banker's
-        return math.floor(x * 10000 + 0.5) / 10000
-
-    for i, d in enumerate(docs):
-        toks = d.split()
-        grams = [" ".join(toks[j : j + 2]) for j in range(len(toks) - 1)]
-        want_d2 = r4(1 - len(set(grams)) / len(grams)) if grams else 0.0
-        want_top = (
-            r4(collections.Counter(toks).most_common(1)[0][1] / len(toks))
-            if toks
-            else 0.0
-        )
-        assert abs(got[i][0] - want_d2) < 1e-9, (i, d)
-        assert abs(got[i][1] - want_top) < 1e-9, (i, d)
 
 
 class TestNormalizeText:
@@ -188,39 +100,3 @@ def test_normalize_text_masks_uppercase_urls_and_emails(spark):
     )
     got = df.select(normalize_text(F.col("t")).alias("n")).first().n
     assert got == "visit <url> or <url> mail <email>"
-
-
-def test_compression_ratio_separates_spam_noise_prose(spark):
-    from hrdp_variant_load_pipeline_spark.functions.text import (
-        compression_ratio,
-    )
-    import random
-
-    rng = random.Random(7)
-    noise = " ".join(
-        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz0123456789") for _ in range(8))
-        for _ in range(60)
-    )
-    docs = spark.createDataFrame(
-        [
-            (1, "buy now " * 200),                       # looped spam
-            (2, noise),                                  # incompressible
-            (3, "the quick brown fox jumps over the lazy dog and keeps "
-                "running through the quiet field toward the river " * 4),
-            (4, ""),
-        ],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: r.compression_ratio for r in compression_ratio(docs, "text").collect()}
-    assert out[1] < 0.1            # spam compresses to almost nothing
-    assert out[2] > 0.6            # noise barely compresses
-    assert out[1] < out[3] < out[2]  # prose sits between
-    assert out[4] is None
-    # row-local: no exchange in the plan
-    plan = (
-        compression_ratio(docs, "text")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan

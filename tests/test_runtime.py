@@ -14,7 +14,7 @@ from hrdp_variant_load_pipeline_spark.runtime import (
     shuffle_partitions,
     snapshot,
 )
-from tests.conftest import spark_jobs_of
+from tests.conftest import node_class, plan_nodes, spark_jobs_of
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "hrdp_variant_load_pipeline_spark"
 
@@ -54,16 +54,6 @@ def test_estimated_bytes_none_without_stats_positive_for_parquet(spark, tmp_path
     assert isinstance(est, int) and est > 0
 
 
-def _plan_classes(plan) -> set[str]:
-    out, stack = set(), [plan]
-    while stack:
-        node = stack.pop()
-        out.add(node.getClass().getSimpleName())
-        kids = node.children()
-        stack.extend(kids.apply(i) for i in range(kids.size()))
-    return out
-
-
 def test_local_frame_is_a_local_relation_with_real_stats(spark):
     """A driver-built frame plans as a LocalRelation: a real size estimate,
     collected without a job, and an empty one takes the joins over it out
@@ -77,7 +67,7 @@ def test_local_frame_is_a_local_relation_with_real_stats(spark):
     probe = spark.range(10).selectExpr("CAST(id AS STRING) AS k")
     for how in ("left_anti", "left"):
         plan = probe.join(empty, "k", how)._jdf.queryExecution().optimizedPlan()
-        assert not any("Join" in c for c in _plan_classes(plan)), how
+        assert not any("Join" in node_class(n) for n, _ in plan_nodes(plan)), how
 
 
 def test_release_frees_only_its_own_frame(spark):

@@ -115,118 +115,6 @@ def test_no_shuffle_no_join_per_iteration(spark):
     assert plan.count("Exchange") <= 1, plan
 
 
-# ------------------------------------------------------------------- MMR
-def test_mmr_matches_python_model(spark):
-    from hrdp_variant_load_pipeline_spark.operators.selection import mmr_rerank
-
-    # rel scores favor 1 and 2 (near-duplicates); diversity must demote 2
-    rows = [
-        (1, [1.0, 0.0, 0.0], 1.00),
-        (2, [0.99, 0.14, 0.0], 0.95),  # near-dup of 1
-        (3, [0.0, 1.0, 0.0], 0.60),
-        (4, [0.0, 0.0, 1.0], 0.40),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, embedding array<double>, score double"
-    )
-    got = mmr_rerank(df, k=3, lam=0.5)
-
-    def model(rows, k, lam):
-        import math
-
-        pool = {i: (v, math.sqrt(sum(x * x for x in v)), r) for i, v, r in rows}
-
-        def cosd(a, b):
-            va, na, _ = pool[a]
-            vb, nb, _ = pool[b]
-            return round(sum(x * y for x, y in zip(va, vb)) / (na * nb), 6)
-
-        sel, out = [], []
-        while len(out) < k and len(sel) < len(pool):
-            best = None
-            for i in sorted(pool):
-                if i in sel:
-                    continue
-                pen = max((cosd(i, s) for s in sel), default=0.0)
-                m = round(lam * pool[i][2] - (1 - lam) * pen, 6)
-                if best is None or m > best[0] or (m == best[0] and i < best[1]):
-                    best = (m, i)
-            out.append((len(out) + 1, best[1], best[0]))
-            sel.append(best[1])
-        return out
-
-    assert got == model(rows, 3, 0.5)
-    # diversity wins: the near-dup of the first pick is NOT second
-    assert [i for _, i, _ in got][:3] == [1, 3, 4]
-    # lam=1 reduces to pure relevance order
-    rel_only = mmr_rerank(df, k=4, lam=1.0)
-    assert [i for _, i, _ in rel_only] == [1, 2, 3, 4]
-
-
-def test_mmr_guards(spark):
-    from hrdp_variant_load_pipeline_spark.operators.selection import mmr_rerank
-
-    df = spark.createDataFrame(
-        [(1, [1.0], 0.5)], "doc_id long, embedding array<double>, score double"
-    )
-    with pytest.raises(ValueError, match="k must be"):
-        mmr_rerank(df, k=0)
-    with pytest.raises(ValueError, match="lam"):
-        mmr_rerank(df, k=1, lam=1.5)
-    z = spark.createDataFrame(
-        [(9, [0.0], 0.5)], "doc_id long, embedding array<double>, score double"
-    )
-    with pytest.raises(ValueError, match="zero vector for id 9"):
-        mmr_rerank(z, k=1)
-    assert mmr_rerank(df.filter("doc_id < 0"), k=2) == []
-
-
-def test_mmr_rejects_duplicate_candidate_ids(spark):
-    """ADVICE r12: duplicate pool ids must fail loud (the convention of
-    the other query-sized-input operators), not silently collapse."""
-    from hrdp_variant_load_pipeline_spark.operators.selection import (
-        mmr_rerank,
-    )
-
-    cands = spark.createDataFrame(
-        [(1, [1.0, 0.0], 0.9), (1, [0.0, 1.0], 0.5)],
-        "doc_id long, embedding array<double>, score double",
-    )
-    with pytest.raises(ValueError, match="duplicate candidate id 1"):
-        mmr_rerank(cands, k=2)
-
-
-def test_kcenter_carried_matches_literal_form(spark):
-    """The carried-min-dist form returns the IDENTICAL trajectory to the
-    literal form (same 6dp rounds, same ties, same duplicate early
-    stop), and releases every superseded per-step checkpoint."""
-    from hrdp_variant_load_pipeline_spark.operators.selection import (
-        kcenter_greedy_carried,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-
-    def cached_ids():
-        sc = spark.sparkContext
-        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-    before = cached_ids()
-    want = kcenter_greedy(e, "vec_id", "embedding", 12)
-    got = kcenter_greedy_carried(e, "vec_id", "embedding", 12)
-    assert got == want and len(got) == 12
-    assert cached_ids() - before == set()  # no leaked step checkpoints
-
-    # duplicate-point early stop parity
-    import pyspark.sql.functions as F
-
-    dup = e.limit(3).union(e.limit(3)).withColumn(
-        "vec_id", F.monotonically_increasing_id()
-    )
-    assert kcenter_greedy_carried(dup, "vec_id", "embedding", 6) == (
-        kcenter_greedy(dup, "vec_id", "embedding", 6)
-    )
-
-
 def test_kcenter_literal_k_ceiling_fails_loud(spark):
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     with pytest.raises(ValueError, match="max_literal_k"):
