@@ -98,10 +98,12 @@ def test_compaction_preserves_probe_results(spark, tmp_path):
     assert after == before and before
 
 
-def test_store_is_append_only_and_holds_each_ingested_id_once(spark, tmp_path):
+def test_store_is_append_only_and_replays_ingested_ids(spark, tmp_path):
     """After two appends the store directory holds data files only (no
-    side directories), and its ids are exactly the ids ingested, each
-    once (probe parity: test_store_probe_matches_ivf_topk)."""
+    side directories) and its ids are exactly the ids ingested, each
+    once. Ingested ids sent again as probe queries never match their own
+    stored rows, and the probe leaves the store unchanged (probe parity:
+    test_store_probe_matches_ivf_topk)."""
     import os
 
     from hrdp_variant_load_pipeline_spark.sources.store import read_store
@@ -113,3 +115,10 @@ def test_store_is_append_only_and_holds_each_ingested_id_once(spark, tmp_path):
     ]
     stored = [r.vec_id for r in read_store(spark, store).select("vec_id").collect()]
     assert sorted(stored) == sorted(r.vec_id for r in e.select("vec_id").collect())
+    files_before = sorted(os.listdir(store))
+    replayed = e.filter(F.col("vec_id") < 4)
+    rows = ivf_store_topk(spark, store, replayed, cents, k=3, nprobe=2).collect()
+    assert {r.query_id for r in rows} == {0, 1, 2, 3}
+    assert all(r.neighbor_id != r.query_id for r in rows)
+    assert sorted(os.listdir(store)) == files_before
+    assert read_store(spark, store).count() == len(stored)
