@@ -213,53 +213,33 @@ def winnow_fp(gram_hashes: Column, window: int = 8) -> Column:
     )
 
 
-
 #: masking patterns for pre-tokenization normalization. URL first (an URL
-#: may embed digits/@-text that must mask as part of the URL, not as an
-#: email/number), then email, then standalone numbers. Case-insensitive
-#: ((?i)) because masking runs BEFORE lowercasing — an uppercase-scheme
-#: URL must not escape into the lowercased output.
+#: may embed @-text that must mask as part of the URL, not as an email),
+#: then email. Case-insensitive ((?i)) because masking runs BEFORE
+#: lowercasing — an uppercase-scheme URL must not escape into the
+#: lowercased output.
 URL_RE = r"(?i)(https?://|www\.)[^\s]+"
 EMAIL_RE = r"(?i)[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
-NUMBER_RE = r"\d+([.,]\d+)*"
 
 
-def normalize_text(
-    text: Column,
-    *,
-    lowercase: bool = True,
-    mask_urls: bool = True,
-    mask_emails: bool = True,
-    mask_numbers: bool = False,
-    collapse_whitespace: bool = True,
-) -> Column:
+def normalize_text(text: Column) -> Column:
     """Standard pre-tokenization cleanup as one codegen'd expression chain:
-    mask URLs/emails/(optionally) numbers to stable placeholder tokens,
-    lowercase, collapse whitespace runs, trim.
+    mask URLs and emails to stable placeholder tokens, lowercase, collapse
+    whitespace runs, trim.
 
-    Masking replaces each match with ``<url>`` / ``<email>`` / ``<num>``
-    so downstream token counts, shingles, and dedup signatures treat all
-    concrete instances as one vocabulary item — the usual way training
-    corpora stop URL/id churn from defeating near-dup detection. Number
-    masking is off by default (it erases real signal in code/math-heavy
-    corpora; turn it on for web text).
+    Masking replaces each match with ``<url>`` / ``<email>`` so downstream
+    token counts, shingles, and dedup signatures treat all concrete
+    instances as one vocabulary item — the usual way training corpora stop
+    URL/id churn from defeating near-dup detection. Numbers are kept: they
+    carry real signal in code/math-heavy corpora.
 
-    Row-local, order-fixed (URL → email → number, see pattern notes), no
-    Python UDFs — at 100 TB this rides the same scan as every other
-    column expression.
+    Row-local, order-fixed (URL before email: an URL's ``user@host`` part
+    masks as the URL), no Python UDFs — at 100 TB this rides the same scan
+    as every other column expression.
     """
-    out = text
-    if mask_urls:
-        out = F.regexp_replace(out, URL_RE, "<url>")
-    if mask_emails:
-        out = F.regexp_replace(out, EMAIL_RE, "<email>")
-    if mask_numbers:
-        out = F.regexp_replace(out, NUMBER_RE, "<num>")
-    if lowercase:
-        out = F.lower(out)
-    if collapse_whitespace:
-        out = F.trim(F.regexp_replace(out, r"\s+", " "))
-    return out
+    out = F.regexp_replace(text, URL_RE, "<url>")
+    out = F.regexp_replace(out, EMAIL_RE, "<email>")
+    return F.trim(F.regexp_replace(F.lower(out), r"\s+", " "))
 
 
 #: PII redaction rules, applied IN THIS ORDER (order is semantic:

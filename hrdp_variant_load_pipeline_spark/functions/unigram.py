@@ -49,14 +49,13 @@ def unigram_tokenize(
     text_col: str,
     pieces: DataFrame,
     out_col: str = "pieces",
-    max_piece_len: int | None = None,
 ) -> DataFrame:
     """Viterbi-segment every document's words under a (piece, logprob)
     table. The piece table is model-sized and rides a
     broadcast variable (alive as long as the returned frame — the apply
     side cannot release it); segmentation is Arrow-batched row-local
-    work — the corpus never shuffles. ``max_piece_len`` defaults to the
-    longest piece IN the table — a fixed default shorter than the vocab
+    work — the corpus never shuffles. Candidate pieces are as long as
+    the longest piece IN the table — a fixed bound shorter than the vocab
     would silently ignore its longer pieces.
 
     Output: input columns + ``out_col`` (array<string>; concatenating a
@@ -72,8 +71,7 @@ def unigram_tokenize(
     logp = {
         r["piece"]: r["logprob"] for r in pieces.select("piece", "logprob").collect()
     }
-    if max_piece_len is None:
-        max_piece_len = max((len(p) for p in logp), default=1)
+    max_piece_len = max((len(p) for p in logp), default=1)
     b_logp = spark.sparkContext.broadcast(logp)
 
     def tok(batches):

@@ -73,7 +73,6 @@ def append_ivf_batch(
     store_dir: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cluster_partitions: int | None = None,
 ) -> int:
     """Assign a vector batch to buckets (row-local) and append it to the
     index store clustered by bucket. Incremental by construction — call
@@ -100,10 +99,7 @@ def append_ivf_batch(
     # vec_id as the secondary clustering key: within each bucket-ranged
     # file, row groups then carry narrow id stats, so an id IN filter on
     # the store prunes row groups instead of scanning the whole id column
-    append_to_store(
-        assigned, store_dir, cluster_by=["bucket", "vec_id"],
-        cluster_partitions=cluster_partitions,
-    )
+    append_to_store(assigned, store_dir, cluster_by=["bucket", "vec_id"])
     return n
 
 

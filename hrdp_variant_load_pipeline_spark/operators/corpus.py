@@ -82,7 +82,6 @@ def chunk_documents(
 def densify_ids(
     df: DataFrame,
     id_col: str,
-    orig_col: str | None = None,
     partitions: int | None = None,
     order_extra: list[str] | None = None,
 ) -> DataFrame:
@@ -98,8 +97,7 @@ def densify_ids(
     zipWithIndex algorithm expressed in DataFrame ops. Deterministic
     for a given id set. Null ids are rejected loudly.
 
-    ``orig_col`` (default ``{id_col}_src``) preserves the original id
-    for provenance joins; pass ``orig_col=""`` to drop it.
+    ``{id_col}_src`` preserves the original id for provenance joins.
 
     Ids should be unique (run after dedup) unless ``order_extra``
     appends tie-break columns to the within-bucket rank order (e.g. the
@@ -127,9 +125,8 @@ def densify_ids(
     overflow — the direction that would otherwise mint colliding dense
     ids (a shrunk bucket merely leaves a gap, keeping ids unique).
     """
-    if orig_col is None:
-        orig_col = f"{id_col}_src"
-    if orig_col and orig_col in df.columns:
+    orig_col = f"{id_col}_src"
+    if orig_col in df.columns:
         raise ValueError(f"densify_ids: column {orig_col!r} already exists")
     spark = df.sparkSession
     if partitions is None:
@@ -158,9 +155,7 @@ def densify_ids(
         cols = [F.col(id_col).cast("long").alias(id_col)] + [
             F.col(c) for c in keep
         ]
-        if orig_col:
-            cols.append(F.col(id_col).alias(orig_col))
-        return df.select(*cols)
+        return df.select(*cols, F.col(id_col).alias(orig_col))
     stats = sorted(
         (r for r in stats if r["n"] > 0), key=lambda r: r["__pid"]
     )
@@ -210,9 +205,7 @@ def densify_ids(
     ).otherwise(rn)
     dense = (rn - 1 + off).cast("long")
     cols = [dense.alias(id_col)] + [F.col(c) for c in keep]
-    if orig_col:
-        cols.append(F.col(id_col).alias(orig_col))
-    return df.withColumn("__bucket", bucket).select(*cols)
+    return df.withColumn("__bucket", bucket).select(*cols, F.col(id_col).alias(orig_col))
 
 
 def pack_sequences(
@@ -293,15 +286,12 @@ def decontaminate(
     text_col: str,
     bench_text_col: str | None = None,
     n: int = 8,
-    mode: str = "drop",
 ) -> DataFrame:
-    """Remove (or flag) training documents sharing any word ``n``-gram with
-    a benchmark/eval set — the standard pretraining decontamination step
-    (GPT-3 appendix C / PaLM style n-gram overlap, word-level).
-
-    ``mode="drop"`` returns the clean corpus; ``mode="flag"`` returns every
-    input row plus a boolean ``contaminated`` column. Documents shorter
-    than ``n`` words produce no shingles and are never contaminated.
+    """Remove training documents sharing any word ``n``-gram with a
+    benchmark/eval set — the standard pretraining decontamination step
+    (GPT-3 appendix C / PaLM style n-gram overlap, word-level) — and
+    return the clean corpus. Documents shorter than ``n`` words produce no
+    shingles and are never contaminated.
 
     Scale shape (100 TB corpus, MB-scale benchmark): the benchmark's
     distinct shingle set is eval-sized, so it is BROADCAST and the corpus
@@ -312,8 +302,6 @@ def decontaminate(
     """
     from hrdp_variant_load_pipeline_spark.operators.dedup import shingle_array
 
-    if mode not in ("drop", "flag"):
-        raise ValueError(f"mode must be 'drop' or 'flag', got {mode!r}")
     bcol = bench_text_col if bench_text_col is not None else text_col
     bench_shingles = (
         benchmark.select(
@@ -329,11 +317,7 @@ def decontaminate(
         .select(id_col)
         .distinct()
     )
-    if mode == "drop":
-        return docs.join(contaminated, id_col, "left_anti")
-    return docs.join(
-        contaminated.withColumn("contaminated", F.lit(True)), id_col, "left"
-    ).withColumn("contaminated", F.coalesce("contaminated", F.lit(False)))
+    return docs.join(contaminated, id_col, "left_anti")
 
 
 def contamination_report(

@@ -5,7 +5,7 @@ Design notes for 100 TB:
 
 * exact dedup is a single hash-aggregate (map-side partial combine);
 * n-gram Jaccard generates candidate pairs ONLY for docs sharing a shingle
-  (inverted-index self-join) and drops ubiquitous shingles (``max_df``) to
+  (inverted-index self-join) and drops ubiquitous shingles (``MAX_DF``) to
   bound the quadratic blow-up on hot shingles — the same role stopword
   removal plays in web-scale dedup;
 * MinHash uses md5-based hash families, so signatures are reproducible
@@ -81,108 +81,95 @@ def shingle_sets(
     )
 
 
-def _pair_jaccard(
-    sh: DataFrame, max_df: int | None, sizes: DataFrame | None = None
-) -> DataFrame:
+#: document-frequency ceiling of ``ngram_jaccard_pairs``: shingles in more
+#: documents are pruned before pair expansion
+MAX_DF = 100
+
+
+def _pair_jaccard(sh: DataFrame, sizes: DataFrame) -> DataFrame:
     """Candidate pairs sharing ≥1 shingle, with Jaccard over df-pruned
     shingle sets: ``n_shared`` counts only shingles with document
-    frequency ≤ ``max_df`` while the union denominator uses the
+    frequency ≤ ``MAX_DF`` while the union denominator uses the
     UNFILTERED set sizes, so when documents share hot shingles above
-    ``max_df`` the reported value is a LOWER BOUND on the exact Jaccard
-    (equal when ``max_df is None``). df-pruning is the standard recall/
-    cost trade: hot shingles generate O(df²) candidate pairs while
-    contributing the least similarity evidence.
+    ``MAX_DF`` the reported value is a LOWER BOUND on the exact Jaccard.
+    df-pruning is the standard recall/cost trade: hot shingles generate
+    O(df²) candidate pairs while contributing the least similarity
+    evidence.
 
-    ``sizes``: optional (doc, n_sh) frame with each doc's UNFILTERED
-    distinct-shingle count. Callers that hold the pre-explode corpus
-    pass the row-local ``size(shingle_array(...))`` projection (r16):
-    the shingle arrays are already distinct, so the count needs no
-    explode, no aggregate and no exchange — one fewer corpus-sized
-    Generate in the plan. Defaults to deriving it from ``sh`` (one
-    map-combined aggregate), for callers that only have the exploded
-    layout. Extra rows for shingle-less docs are harmless — every
+    ``sizes``: (doc, n_sh) frame with each doc's UNFILTERED
+    distinct-shingle count — the row-local ``size(shingle_array(...))``
+    projection of the pre-explode corpus (r16): the shingle arrays are
+    already distinct, so the count needs no explode, no aggregate and no
+    exchange. Extra rows for shingle-less docs are harmless — every
     consumer inner-joins on docs that appear in pairs."""
-    if sizes is None:
-        sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
-    if max_df is not None:
-        # inverted-list pair expansion (r14): ONE aggregate keyed on the
-        # shingle collects its (<= max_df, sorted) doc list, and the
-        # C(df, 2) ordered pairs expand ROW-LOCALLY from that list — the
-        # per-row pair count is bounded by C(max_df, 2) by construction.
-        # The previous self-join shuffled the df-pruned (doc, shingle)
-        # table TWICE (both join sides) plus a third exchange for the
-        # pair count; this shape pays one shingle exchange and the pair
-        # exchange (measured 89.6 s -> see BENCH_NOTES r14 on the sf10
-        # Zipf fixture). The exact path (max_df=None) keeps the join
-        # form: an unbounded hot shingle would expand C(df, 2) structs
-        # inside ONE row there, trading a shuffle for executor memory.
-        # the grouping key is engine-INTERNAL (the oracle groups by its
-        # own shingle strings), so hash it to a long before the exchange
-        # — anchor-class keys may be any collision-negligible function
-        # (r12 precedent, span/paragraph dedup): ~half the wire bytes of
-        # the ~25-char gram strings, value-identity pinned at 2 scales
-        # df-prune BEFORE the list materialization (r15): a hot shingle
-        # (boilerplate gram in 10^7+ docs at web scale) must never reach
-        # collect_list — the C(max_df, 2) bound below applies to pair
-        # EXPANSION, not the aggregation buffer, and one unbounded doc
-        # list per hot key is exactly the executor-memory cliff the r14
-        # rebuild was meant to remove.
-        # The prune is an ANTI-join against the HOT set (r16), not a
-        # semi-join against the rare set: "df <= max_df" keeps almost
-        # every shingle on any Zipf-shaped corpus (measured at the 100x
-        # staging: 20,279,790 of 20,279,825 distinct shingles are rare,
-        # 35 are hot), so joining on the KEEP side made the build/
-        # broadcast side corpus-sized — the planner shipped a 1.5 GiB,
-        # 20M-row broadcast at sf10, the exact anti-pattern this family
-        # is specced to avoid at 100 TB. The DROP side is bounded by
-        # total_occurrences / max_df and in practice is the Zipf head
-        # (boilerplate grams — model-sized), so the anti-join's build
-        # side stays broadcastable and the full (doc, shingle) table
-        # crosses the wire exactly once, for the collect_list exchange.
-        # The count aggregate is unchanged (map-side combinable) and the
-        # size(ds) filter stays as a belt-and-braces re-check of the
-        # same bound. Values identical: keep(df <= max_df) == drop(df >
-        # max_df), pinned vs the oracle at sf0.01/sf0.1.
-        hashed = sh.select("doc", F.xxhash64("shingle").alias("__sh"))
-        hot_sh = (
-            hashed.groupBy("__sh")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select("__sh")
-        )
-        docs_by_sh = (
-            hashed.join(hot_sh, "__sh", "left_anti")
-            .groupBy("__sh")
-            .agg(F.sort_array(F.collect_list("doc")).alias("ds"))
-            .filter(F.size("ds") <= max_df)
-        )
-        pair_arr = F.flatten(
-            F.transform(
-                F.col("ds"),
-                lambda x, i: F.transform(
-                    F.slice(
-                        F.col("ds"), i + 2, F.size(F.col("ds")) - i - 1
-                    ),
-                    lambda y: F.struct(
-                        x.alias("doc_a"), y.alias("doc_b")
-                    ),
+    # inverted-list pair expansion (r14): ONE aggregate keyed on the
+    # shingle collects its (<= MAX_DF, sorted) doc list, and the
+    # C(df, 2) ordered pairs expand ROW-LOCALLY from that list — the
+    # per-row pair count is bounded by C(MAX_DF, 2) by construction.
+    # The previous self-join shuffled the df-pruned (doc, shingle)
+    # table TWICE (both join sides) plus a third exchange for the
+    # pair count; this shape pays one shingle exchange and the pair
+    # exchange (measured 89.6 s -> see BENCH_NOTES r14 on the sf10
+    # Zipf fixture).
+    # the grouping key is engine-INTERNAL (the oracle groups by its
+    # own shingle strings), so hash it to a long before the exchange
+    # — anchor-class keys may be any collision-negligible function
+    # (r12 precedent, span/paragraph dedup): ~half the wire bytes of
+    # the ~25-char gram strings, value-identity pinned at 2 scales
+    # df-prune BEFORE the list materialization (r15): a hot shingle
+    # (boilerplate gram in 10^7+ docs at web scale) must never reach
+    # collect_list — the C(MAX_DF, 2) bound below applies to pair
+    # EXPANSION, not the aggregation buffer, and one unbounded doc
+    # list per hot key is exactly the executor-memory cliff the r14
+    # rebuild was meant to remove.
+    # The prune is an ANTI-join against the HOT set (r16), not a
+    # semi-join against the rare set: "df <= MAX_DF" keeps almost
+    # every shingle on any Zipf-shaped corpus (measured at the 100x
+    # staging: 20,279,790 of 20,279,825 distinct shingles are rare,
+    # 35 are hot), so joining on the KEEP side made the build/
+    # broadcast side corpus-sized — the planner shipped a 1.5 GiB,
+    # 20M-row broadcast at sf10, the exact anti-pattern this family
+    # is specced to avoid at 100 TB. The DROP side is bounded by
+    # total_occurrences / MAX_DF and in practice is the Zipf head
+    # (boilerplate grams — model-sized), so the anti-join's build
+    # side stays broadcastable and the full (doc, shingle) table
+    # crosses the wire exactly once, for the collect_list exchange.
+    # The count aggregate is unchanged (map-side combinable) and the
+    # size(ds) filter stays as a belt-and-braces re-check of the
+    # same bound. Values identical: keep(df <= MAX_DF) == drop(df >
+    # MAX_DF), pinned vs the oracle at sf0.01/sf0.1.
+    hashed = sh.select("doc", F.xxhash64("shingle").alias("__sh"))
+    hot_sh = (
+        hashed.groupBy("__sh")
+        .agg(F.count("*").alias("__df"))
+        .filter(F.col("__df") > MAX_DF)
+        .select("__sh")
+    )
+    docs_by_sh = (
+        hashed.join(hot_sh, "__sh", "left_anti")
+        .groupBy("__sh")
+        .agg(F.sort_array(F.collect_list("doc")).alias("ds"))
+        .filter(F.size("ds") <= MAX_DF)
+    )
+    pair_arr = F.flatten(
+        F.transform(
+            F.col("ds"),
+            lambda x, i: F.transform(
+                F.slice(
+                    F.col("ds"), i + 2, F.size(F.col("ds")) - i - 1
                 ),
-            )
+                lambda y: F.struct(
+                    x.alias("doc_a"), y.alias("doc_b")
+                ),
+            ),
         )
-        shared = (
-            docs_by_sh.select(F.explode(pair_arr).alias("p"))
-            .groupBy(F.col("p.doc_a").alias("doc_a"),
-                     F.col("p.doc_b").alias("doc_b"))
-            .agg(F.count("*").alias("n_shared"))
-        )
-    else:
-        a = sh.alias("a")
-        b = sh.alias("b")
-        shared = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
-            .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-            .agg(F.count("*").alias("n_shared"))
-        )
+    )
+    shared = (
+        docs_by_sh.select(F.explode(pair_arr).alias("p"))
+        .groupBy(F.col("p.doc_a").alias("doc_a"),
+                 F.col("p.doc_b").alias("doc_b"))
+        .agg(F.count("*").alias("n_shared"))
+    )
     return (
         shared.join(sizes.withColumnsRenamed({"doc": "doc_a", "n_sh": "n_a"}), "doc_a")
         .join(sizes.withColumnsRenamed({"doc": "doc_b", "n_sh": "n_b"}), "doc_b")
@@ -203,12 +190,11 @@ def ngram_jaccard_pairs(
     text_col: str,
     k: int = 3,
     threshold: float = 0.2,
-    max_df: int | None = 100,
 ) -> DataFrame:
-    """Near-duplicate pairs by k-gram Jaccard ≥ threshold (exact when
-    ``max_df is None``; with the default df-pruning the score is a lower
-    bound — see ``_pair_jaccard`` — so the pair list errs toward fewer,
-    higher-precision matches)."""
+    """Near-duplicate pairs by k-gram Jaccard ≥ threshold. Shingles in
+    more than ``MAX_DF`` documents are pruned, so the score is a lower
+    bound — see ``_pair_jaccard`` — and the pair list errs toward fewer,
+    higher-precision matches."""
     sh = shingle_sets(df, id_col, text_col, k)
     # per-doc set sizes row-locally from the (already-distinct) shingle
     # array — no third corpus explode, no aggregate (r16)
@@ -217,7 +203,7 @@ def ngram_jaccard_pairs(
         F.size(shingle_array(F.col(text_col), k)).alias("n_sh"),
     )
     return (
-        _pair_jaccard(sh, max_df, sizes=sizes)
+        _pair_jaccard(sh, sizes)
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -326,7 +312,6 @@ def minhash_lsh_pairs(
     band_rows: int = 2,
     verify_threshold: float = 0.5,
     cache_registry: list | None = None,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """LSH candidate generation + exact-Jaccard verification.
 
@@ -347,8 +332,8 @@ def minhash_lsh_pairs(
     trade for composing into lazy plans is a pinned (small) pair set.
     Pass ``cache_registry`` to receive that pair-set snapshot for release
     once consumed (the registry protocol in ``runtime``); without it the
-    pair set lives until session end.
-    ``reliable`` selects the snapshot mode (see ``runtime.snapshot``).
+    pair set lives until session end. The snapshot is reliable when the
+    session has a checkpoint dir (``runtime.snapshot``).
     """
     spark = df.sparkSession
     src = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__text"))
@@ -408,7 +393,7 @@ def minhash_lsh_pairs(
     # — in a long-lived session each minhash call would otherwise pin a
     # full copy of the corpus shingles in the cache
     try:
-        out = snapshot(result, reliable=reliable)
+        out = snapshot(result)
         if cache_registry is not None:
             cache_registry.append(out)
         return out
@@ -421,7 +406,6 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 25,
-    reliable: bool | None = None,
     skew: dict | None = None,
     cache_registry: list | None = None,
 ) -> DataFrame:
@@ -434,10 +418,10 @@ def connected_components(
     grow with iterations. Converges in O(diameter) rounds — near-dup
     clusters are shallow (stars/chains), so the loop is short. The
     driver-side loop carries only a converged/not flag, never data.
-    ``reliable=True`` checkpoints rounds to the cluster checkpoint dir
-    (``sc.setCheckpointDir``) so a lost executor recomputes instead of
-    killing the job — use it on real clusters; executor-local blocks are
-    the fast default for local[n] (see ``runtime.snapshot``).
+    With a cluster checkpoint dir (``sc.setCheckpointDir``) rounds
+    checkpoint there, so a lost executor recomputes instead of killing
+    the job; without one, executor-local blocks are the fast local[n]
+    form (``runtime.snapshot``).
 
     Storage hygiene: each round's snapshot supersedes the previous one,
     which is released through its own frame (``runtime.release``). Only
@@ -485,7 +469,6 @@ def connected_components(
             edges.groupBy("src").agg(
                 F.least(F.col("src"), F.min("dst")).alias("label")
             ).select(F.col("src").alias("node"), "label"),
-            reliable=reliable,
         )
         prev_round = labels
         lbl_type = labels.schema["label"].dataType
@@ -530,7 +513,6 @@ def connected_components(
                     F.max("__self").alias("__old"),
                 )
                 .select(F.col("src").alias("node"), "__old", "label"),
-                reliable=reliable,
                 # lazy: the convergence count below materializes it —
                 # ONE job per round, not checkpoint-job + count-job
                 eager=False,

@@ -340,11 +340,14 @@ def dsir_resample(
     )
 
 
+#: relative error of the ``approxQuantile`` cut in ``dsir_select_fraction``
+_QUANTILE_ERROR = 0.001
+
+
 def dsir_select_fraction(
     scored: DataFrame,
     fraction: float,
     logw_col: str = "dsir_logw",
-    relative_error: float = 0.001,
 ) -> DataFrame:
     """The petabyte-scale selection shape: keep (approximately) the top
     ``fraction`` of the pool by weight via a THRESHOLD cut — tau =
@@ -352,11 +355,11 @@ def dsir_select_fraction(
     Greenwald-Khanna sketch pass + one filter pass; no ordered merge,
     no driver-sized result dependency (a billion-row top-k has a
     billion-row "k"). The kept fraction deviates from the target by at
-    most ``relative_error`` quantile mass plus threshold ties.
+    most ``_QUANTILE_ERROR`` quantile mass plus threshold ties.
     """
     if not 0.0 < fraction <= 1.0:
         raise ValueError(f"fraction must be in (0, 1], got {fraction}")
     if fraction == 1.0:
         return scored
-    tau = scored.approxQuantile(logw_col, [1.0 - fraction], relative_error)[0]
+    tau = scored.approxQuantile(logw_col, [1.0 - fraction], _QUANTILE_ERROR)[0]
     return scored.filter(F.col(logw_col) >= tau)

@@ -21,7 +21,6 @@ def pagerank(
     dst_col: str = "dst",
     n_iter: int = 10,
     damping: float = 0.85,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """PageRank over an edge list, normalized so ranks sum to 1.
 
@@ -35,8 +34,8 @@ def pagerank(
     edge-sized. Each iteration is ONE Spark action (the dangling-mass
     scalar rides the same job as a broadcast 1-row aggregate, pinned by
     ``tests/test_graph.py``). Lineage is truncated every iteration
-    (``runtime.snapshot``; pass ``reliable=True`` on a real cluster with a
-    checkpoint dir to survive executor loss), and each superseded
+    (``runtime.snapshot``: reliable on a cluster with a checkpoint dir,
+    so it survives executor loss), and each superseded
     iteration's snapshot is released.
 
     Output: (vertex, rank) — deterministic for a fixed iteration count.
@@ -96,7 +95,7 @@ def pagerank(
                     ).alias("rank"),
                 )
             )
-            prev, ranks = ranks, snapshot(stepped, reliable=reliable)
+            prev, ranks = ranks, snapshot(stepped)
             release(prev)
     finally:
         # failures mid-iteration must not pin the loop invariants for the

@@ -117,14 +117,15 @@ def interval_join_binned(
     bin_size: int = 1_000_000,
     probe_keys: tuple[str, str, str] = ("chromosome", "q_start", "q_stop"),
     interval_keys: tuple[str, str, str] = ("chromosome", "start_pos", "stop_pos"),
-    distinct_pairs: bool = True,
 ) -> DataFrame:
     """Scale-path interval join via fixed-width genomic bins.
 
     Requires well-formed (start <= stop) intervals on BOTH sides, for which
     the 3-disjunct predicate equals standard overlap. Each side explodes
     into the bins its interval covers; the join is equi on
-    (chromosome, bin) plus the residual overlap filter.
+    (chromosome, bin) plus the residual overlap filter. A pair whose
+    overlap spans several bins matches once per bin, so the result is
+    de-duplicated.
     """
     p_chrom, p_start, p_stop = probe_keys
     i_chrom, i_start, i_stop = interval_keys
@@ -149,7 +150,4 @@ def interval_join_binned(
         & (F.col(f"pr.{p_start}") <= F.col(f"iv.{i_stop}"))
         & (F.col(f"pr.{p_stop}") >= F.col(f"iv.{i_start}"))
     )
-    out = pb.join(ib, cond, "inner").drop("__pbin", "__ibin")
-    if distinct_pairs:
-        out = out.distinct()
-    return out
+    return pb.join(ib, cond, "inner").drop("__pbin", "__ibin").distinct()

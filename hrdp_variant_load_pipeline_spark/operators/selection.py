@@ -51,17 +51,16 @@ def _py_norm(vec) -> float:
     return math.sqrt(acc)
 
 
+#: largest k ``kcenter_greedy`` accepts (see its measured k ceiling)
+MAX_LITERAL_K = 128
+
+
 def kcenter_greedy(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    seed_id: int | None = None,
-    max_literal_k: int = 128,
+    df: DataFrame, id_col: str, vec_col: str, k: int
 ) -> list[tuple[int, int, float | None]]:
     """Greedy k-center selection by cosine distance. Returns the
     trajectory ``[(step, id, min_dist_at_pick), ...]`` — step 0 is the
-    seed (``seed_id`` or the smallest id; ``min_dist`` None), steps
+    seed (the smallest id; ``min_dist`` None), steps
     1..k-1 the successive farthest points. The trajectory is model-sized
     driver state by definition (it IS the selected coreset), hence a
     list, not a DataFrame; wrap with ``spark.createDataFrame`` to join
@@ -71,16 +70,16 @@ def kcenter_greedy(
     MEASURED k CEILING (r13, dim 64): each iteration inlines all
     selected centers as SQL literals, so per-step driver cost grows with
     k — 0.41 s/step at k=64, 0.65 at k=128, 1.25 at k=256 (O(k²·dim)
-    cumulative analysis). ``max_literal_k`` fails loud past 128 (the
-    measured knee).
+    cumulative analysis). k past ``MAX_LITERAL_K`` = 128 (the measured
+    knee) fails loud.
 
     Zero-vector rows (undefined cosine) are excluded up front — keeping
     them would put NaN into every min-fold."""
     if k < 1:
         raise ValueError("kcenter_greedy: k must be >= 1")
-    if k > max_literal_k:
+    if k > MAX_LITERAL_K:
         raise ValueError(
-            f"kcenter_greedy: k={k} exceeds max_literal_k={max_literal_k} "
+            f"kcenter_greedy: k={k} exceeds MAX_LITERAL_K={MAX_LITERAL_K} "
             "(per-step literal-expression cost grows with k — measured "
             "knee at 128)"
         )
@@ -89,12 +88,9 @@ def kcenter_greedy(
         f"`{vec_col}` AS __v",
         f"{_norm_sql(f'`{vec_col}`')} AS __n",
     ).filter("__n > 0")
-    if seed_id is None:
-        seed_row = base.orderBy("__id").limit(1).collect()
-    else:
-        seed_row = base.filter(F.col("__id") == seed_id).collect()
+    seed_row = base.orderBy("__id").limit(1).collect()
     if not seed_row:
-        raise ValueError("kcenter_greedy: empty input (or seed_id absent)")
+        raise ValueError("kcenter_greedy: empty input")
     seed = seed_row[0]
     trajectory: list[tuple[int, int, float | None]] = [
         (0, int(seed["__id"]), None)

@@ -256,22 +256,18 @@ def brute_force_topk_auto(
     vec_col: str = "embedding",
     k: int = 5,
     round_digits: int = 6,
-    corpus_rows: int | None = None,
-    blas_threshold: int = _BLAS_CORPUS_ROWS,
 ) -> DataFrame:
     """Size-gated dispatch between the two bit-equal brute-force forms:
-    the ``zip_with``/``aggregate`` JVM form below ``blas_threshold``
+    the ``zip_with``/``aggregate`` JVM form below ``_BLAS_CORPUS_ROWS``
     corpus rows (no Python-worker/Arrow startup — wins at small scale),
     the Arrow/BLAS batch-dot form at or above it (one ``C @ Q.T`` per
     batch — 2.1x the JVM form at sf10). Threshold from a measured
-    crossover (see ``_BLAS_CORPUS_ROWS`` note).
+    crossover (see the ``_BLAS_CORPUS_ROWS`` note).
 
-    ``corpus_rows`` skips the sizing count when the caller already knows
-    it; the default ``corpus.count()`` is footer-only on a raw parquet
-    scan but executes the full plan on derived lineage — pass the hint
-    there."""
-    n = corpus.count() if corpus_rows is None else int(corpus_rows)
-    form = brute_force_topk_blas if n >= blas_threshold else brute_force_topk
+    The sizing ``corpus.count()`` is footer-only on a raw parquet scan but
+    executes the full plan on derived lineage."""
+    n = corpus.count()
+    form = brute_force_topk_blas if n >= _BLAS_CORPUS_ROWS else brute_force_topk
     return form(corpus, queries, id_col, vec_col, k, round_digits)
 
 
@@ -283,7 +279,6 @@ def train_centroids(
     n_iter: int = 5,
     round_digits: int = 6,
     centroid_round_digits: int | None = None,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Distributed Lloyd's k-means for IVF training: cosine assignment,
     element-wise mean update.
@@ -372,9 +367,9 @@ def train_centroids(
         )
         # k rows; truncate the per-iteration lineage so n_iter rounds don't
         # stack n_iter full assignment plans, and release the superseded
-        # round. reliable=True survives executor loss on a real cluster
-        # (needs sc.setCheckpointDir)
-        prev, cents = cents, snapshot(stepped, reliable=reliable)
+        # round. With sc.setCheckpointDir the snapshot is reliable and
+        # survives executor loss on a real cluster
+        prev, cents = cents, snapshot(stepped)
         release(prev)
     return cents
 
@@ -572,15 +567,16 @@ def make_planes(n_planes: int, dim: int, seed: int = 7) -> list[list[float]]:
 
 def hyperplane_buckets(
     df: DataFrame,
+    dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_planes: int = 16,
     band_planes: int = 8,
     seed: int = 7,
-    dim: int | None = None,
 ) -> DataFrame:
     """Sign-sketch LSH buckets: bit j of a vector's sketch is the sign of
-    its dot product with pseudo-random hyperplane j (``make_planes``).
+    its dot product with pseudo-random hyperplane j (``make_planes``) of
+    ``dim`` components.
 
     All ``n_planes`` dot products are produced by ONE expression — a
     ``transform`` over the literal plane matrix with a ``zip_with`` fold
@@ -594,9 +590,6 @@ def hyperplane_buckets(
 
     Output: one row per (vector, band): (id, band_idx, bucket).
     """
-    if dim is None:
-        first = df.select(F.size(vec_col)).first()
-        dim = int(first[0]) if first else 0
     planes = make_planes(n_planes, dim, seed)
     plane_lit = F.array(*[F.array(*[F.lit(p) for p in row]) for row in planes])
     v = F.col(vec_col)
@@ -633,6 +626,7 @@ def hyperplane_buckets(
 
 def near_dup_pairs_lsh(
     corpus: DataFrame,
+    dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
@@ -640,7 +634,6 @@ def near_dup_pairs_lsh(
     band_planes: int = 8,
     seed: int = 7,
     round_digits: int = 6,
-    dim: int | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs with self-contained LSH blocking.
 
@@ -652,7 +645,7 @@ def near_dup_pairs_lsh(
     bounded by collisions, never all-pairs. Verification makes precision
     exact; recall is tuned by (n_planes, band_planes).
     """
-    bk = hyperplane_buckets(corpus, id_col, vec_col, n_planes, band_planes, seed, dim)
+    bk = hyperplane_buckets(corpus, dim, id_col, vec_col, n_planes, band_planes, seed)
     a, b = bk.alias("a"), bk.alias("b")
     cands = (
         a.join(

@@ -160,21 +160,16 @@ def adaptive_salted_join(
 #: stagings are ~GB; 100 TB facts are far past it) the estimate clears
 #: the gate and the sample runs as before. The estimate is Catalyst's
 #: logical-plan sizeInBytes (file bytes scaled by projected row width)
-#: — no job, no I/O. Callers can pass ``small_input_bytes=0`` to force
-#: the sampled decision at any size (the unit tests do, since
-#: createDataFrame fixtures are always "small").
+#: — no job, no I/O. 0 forces the sampled decision at any size.
 SMALL_FACT_BYTES = 64 * 1024 * 1024
+#: share of the fact rows ``eager_agg_profitable`` counts (seeded sample)
+SAMPLE_FRACTION = 0.01
+#: sampled max-key share / rows per key at which the rewrite pays
+HOT_SHARE_THRESHOLD = 0.05
+REDUCTION_THRESHOLD = 32.0
 
 
-def eager_agg_profitable(
-    fact: DataFrame,
-    keys: Sequence[str],
-    sample_fraction: float = 0.01,
-    hot_share_threshold: float = 0.05,
-    reduction_threshold: float = 32.0,
-    seed: int = 7,
-    small_input_bytes: int = SMALL_FACT_BYTES,
-) -> bool:
+def eager_agg_profitable(fact: DataFrame, keys: Sequence[str]) -> bool:
     """Decide whether the eager-aggregation rewrite pays for THIS key
     distribution — the cost model behind ``pre_aggregated_join``'s auto
     mode, split out so the decision is unit-testable.
@@ -185,23 +180,23 @@ def eager_agg_profitable(
     saves; on the 20%-hot-key drill staging it WINS 2.4x (3.97 s vs
     9.5 s, r13 SKEW_DRILL) because the hot key collapses to one row
     before any reducer sees it. So: route to the rewrite when the
-    sampled max-key share crosses ``hot_share_threshold`` (a dominant
+    sampled max-key share crosses ``HOT_SHARE_THRESHOLD`` (a dominant
     reducer exists — unmissable in any sample) or the sampled rows-per-
-    key crosses ``reduction_threshold`` (the probe side shrinks enough
+    key crosses ``REDUCTION_THRESHOLD`` (the probe side shrinks enough
     to pay for the agg; note sampling biases this estimate LOW on
     near-unique keys, which safely favors the plain join). One
     O(sample)-sized counting job; deterministic (seeded sample).
 
-    Facts whose estimated size is under ``small_input_bytes`` skip the
+    Facts whose estimated size is under ``SMALL_FACT_BYTES`` skip the
     counting job entirely and take the plain join: both routes are
     value-identical by contract, and at that size either plan is
     trivial, so the only effect of sampling would be its own cost."""
-    if small_input_bytes:
+    if SMALL_FACT_BYTES:
         est_bytes = estimated_bytes(fact)
-        if est_bytes is not None and est_bytes < small_input_bytes:
+        if est_bytes is not None and est_bytes < SMALL_FACT_BYTES:
             return False
     est = (
-        fact.sample(fraction=sample_fraction, seed=seed)
+        fact.sample(fraction=SAMPLE_FRACTION, seed=7)
         .groupBy(*keys)
         .count()
         .agg(
@@ -216,7 +211,7 @@ def eager_agg_profitable(
         return True  # degenerate/tiny sample: either plan is trivial
     hot_share = int(est["m"]) / s
     reduction = s / int(est["k"])
-    return hot_share >= hot_share_threshold or reduction >= reduction_threshold
+    return hot_share >= HOT_SHARE_THRESHOLD or reduction >= REDUCTION_THRESHOLD
 
 
 def pre_aggregated_join(

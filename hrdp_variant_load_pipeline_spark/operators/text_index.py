@@ -122,7 +122,6 @@ def append_text_index_batch(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = 64,
-    cluster_partitions: int | None = None,
     batch_key: str | None = None,
 ) -> int:
     """Tokenize a document batch ONCE (the staged frame is pinned with
@@ -182,7 +181,6 @@ def append_text_index_batch(
         postings,
         f"{store_dir}/{_POSTINGS}",
         cluster_by=["bucket", "term"],
-        cluster_partitions=cluster_partitions,
     )
     append_to_store(
         spark.createDataFrame(
@@ -286,33 +284,6 @@ def text_index_scores(
                 lambda acc, x: acc + x["__c"],
             ).alias("score")
         )
-    )
-
-
-def text_index_topk(
-    spark: SparkSession,
-    store_dir: str,
-    terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Top-k retrieval over ``text_index_scores``: (doc_id, score, rank),
-    rank dense from 1 by (score desc, doc_id asc). ``k`` past the match
-    set returns just the matches. The order-by + limit lowers to a
-    TakeOrderedAndProject (per-partition heaps, never a global sort)."""
-    scored = text_index_scores(
-        spark, store_dir, terms, k1=k1, b=b, n_buckets=n_buckets
-    )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    from pyspark.sql.window import Window
-
-    return topk.withColumn(
-        "rank",
-        F.row_number().over(
-            Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        ),
     )
 
 

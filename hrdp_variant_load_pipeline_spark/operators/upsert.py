@@ -104,7 +104,6 @@ def merge_update(
     updates: DataFrame,
     key: str,
     set_cols: Sequence[str],
-    order_col: str | None = None,
 ) -> DataFrame:
     """MERGE WHEN MATCHED THEN UPDATE emulation in plain Spark.
 
@@ -119,32 +118,21 @@ def merge_update(
     * updates are reduced to ONE row per key first: duplicate keys (e.g.
       the same rgd_id's end_pos from several files) would otherwise fan
       out store rows through the join and DUPLICATE the store after
-      overwrite. With ``order_col`` (a batch-position column: source file,
-      line number) the LAST row in that order wins — the reference's keyed
-      batch-UPDATE semantics, where later statements overwrite earlier
-      ones. Without it the reduce is ``max`` over the set-col tuple:
-      deterministic cross-run, but an intentional deviation — several
-      files updating one key apply the numerically largest tuple, not the
-      batch-order value;
+      overwrite. The reduce is ``max`` over the set-col tuple:
+      deterministic cross-run, but an intentional deviation from the
+      reference's keyed batch UPDATE, where later statements overwrite
+      earlier ones — several rows updating one key apply the numerically
+      largest tuple, not the batch-order value (genic QC, the one caller,
+      derives one row per key);
     * no forced broadcast hint: an update set can approach store size
       (genic-QC drift after a gene-annotation refresh), and a forced
       broadcast of an unbounded side is a driver/executor OOM at scale.
       Catalyst/AQE picks broadcast automatically when the reduced update
       set is below ``spark.sql.autoBroadcastJoinThreshold``.
     """
-    if order_col is not None:
-        # max over (order, values): last batch position wins; the value
-        # tuple only breaks exact order ties deterministically
-        reduce_expr = F.max(
-            F.struct(F.col(order_col).alias("__ord"), F.struct(*set_cols).alias("__v"))
-        )["__v"].alias("__u")
-        sel = updates.select(key, order_col, *set_cols)
-    else:
-        reduce_expr = F.max(F.struct(*set_cols)).alias("__u")
-        sel = updates.select(key, *set_cols)
     upd = (
-        sel.groupBy(key)
-        .agg(reduce_expr)
+        updates.groupBy(key)
+        .agg(F.max(F.struct(*set_cols)).alias("__u"))
         .select(F.col(key), *[F.col(f"__u.{c}").alias(f"__new_{c}") for c in set_cols])
     )
     joined = store.join(upd, key, "left")

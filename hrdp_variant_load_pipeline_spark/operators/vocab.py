@@ -23,7 +23,6 @@ def build_vocab(
     df: DataFrame,
     text_col: str,
     max_vocab: int = 30000,
-    min_count: int = 1,
 ) -> DataFrame:
     """Top-``max_vocab`` tokens by corpus frequency.
 
@@ -55,8 +54,6 @@ def build_vocab(
         .groupBy("token")
         .agg(F.sum("__c").alias("tf"), F.count("*").alias("df"))
     )
-    if min_count > 1:
-        stats = stats.filter(F.col("tf") >= min_count)
     # two-stage exact top-k: (tf desc, token asc) is a TOTAL order (token
     # is unique after the aggregate), so orderBy+limit — a distributed
     # TakeOrdered: per-partition top-k heaps, merged — selects exactly

@@ -297,15 +297,13 @@ def _dedup_against_store(cand: DataFrame, store: DataFrame) -> DataFrame:
     )
 
 
-def first_free_rgd_id(variant_store: DataFrame, root: str | None = None) -> int:
-    """One above the store's max ``rgd_id`` (1 for an empty store). With the
-    store's ``root``, the max comes from the parquet footers of its current
-    version (``sources.store.footer_max``: no Spark job); without it, or
-    when a column chunk carries no statistics, from an aggregate over
-    ``variant_store``."""
-    known, m = (False, None)
-    if root is not None:
-        known, m = footer_max(variant_store.sparkSession, root, "rgd_id")
+def first_free_rgd_id(variant_store: DataFrame, root: str) -> int:
+    """One above the max ``rgd_id`` of the store at ``root`` (1 for an
+    empty store). The max comes from the parquet footers of its current
+    version (``sources.store.footer_max``: no Spark job), or, when a
+    column chunk carries no statistics, from an aggregate over
+    ``variant_store``, the frame read from ``root``."""
+    known, m = footer_max(variant_store.sparkSession, root, "rgd_id")
     if not known:
         m = variant_store.agg(F.max("rgd_id")).collect()[0][0]
     return (m or 0) + 1
@@ -318,17 +316,15 @@ def run_load(
     variant_store: DataFrame,
     detail_store: DataFrame,
     map_key: int,
-    next_rgd_id: int | None = None,
+    next_rgd_id: int,
 ) -> LoadResult:
     """Full ``--runLoad`` equivalent. All outputs are lazy DataFrames; the
     id allocator's one collect, which also returns the run counters and
     decides whether a detail pair can repeat, is the only action run here.
-    ``next_rgd_id`` defaults to ``first_free_rgd_id(variant_store)``."""
+    New variants take ids from ``next_rgd_id`` up (``first_free_rgd_id``
+    of the store)."""
     cand = parse_variants(vcf, genes, map_key)
     matched = _dedup_against_store(cand, variant_store)
-
-    if next_rgd_id is None:
-        next_rgd_id = first_free_rgd_id(variant_store)
 
     # id allocation (S9): only the first occurrence of each NEW variant is
     # ranked, inside position buckets — never a global single-partition

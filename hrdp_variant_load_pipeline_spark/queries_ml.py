@@ -200,7 +200,7 @@ _NGRAM_JACCARD_SQL = f"""
 
 def _ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     return DD.ngram_jaccard_pairs(
-        table(spark, sf, "documents"), "doc_id", "text", k=3, threshold=0.2, max_df=100
+        table(spark, sf, "documents"), "doc_id", "text", k=3, threshold=0.2
     )
 
 

@@ -14,14 +14,13 @@ from pyspark.sql import SparkSession
 
 def _cpus() -> tuple[str, int]:
     """``SPARK_GRAFT_CPUS`` as the local master's core spec and as the
-    default shuffle-partition count (32 when it is not a number)."""
+    shuffle-partition count (32 when it is not a number)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     return cpus, int(cpus) if cpus.isdigit() else 32
 
 
 def get_spark(
     app_name: str = "hrdp_variant_load_pipeline_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
@@ -33,10 +32,7 @@ def get_spark(
     caller can override any default (the shuffle-audit tool re-enables
     the UI this way to read per-stage exchange metrics).
     """
-    cpus, default_sp = _cpus()
-    if shuffle_partitions is None:
-        shuffle_partitions = default_sp
-
+    cpus, shuffle_partitions = _cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -43,7 +43,6 @@ def samples_dimension(
     spark: SparkSession,
     sample_ids: dict[str, int],
     map_key: int,
-    strain_rgd_ids: dict[str, int] | None = None,
 ) -> DataFrame:
     """Build the ``samples`` dimension from a name→id config map.
 
@@ -51,8 +50,8 @@ def samples_dimension(
     header names to sample ids through it, replacing the reference's
     per-column JDBC lookups (``HrdpVariants.java:97-110``). A driver-local
     frame (``runtime.local_frame``): the load reads its rows without a job.
+    The strain RGD id is left null: the config carries none.
     """
-    strain_rgd_ids = strain_rgd_ids or {}
     rows = [
         (
             sid,
@@ -60,7 +59,7 @@ def samples_dimension(
             SAMPLE_DEFAULTS["gender"],
             SAMPLE_DEFAULTS["patient_id"],
             map_key,
-            strain_rgd_ids.get(name),
+            None,
             SAMPLE_DEFAULTS["description"],
             SAMPLE_DEFAULTS["grant_number"],
         )

@@ -25,9 +25,8 @@ def read_jsonl_docs(
     spark: SparkSession,
     path: str,
     schema: str = DOC_SCHEMA,
-    recursive: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """Read (gzipped) JSONL documents under ``path``.
+    """Read (gzipped) JSONL documents under ``path``, recursively.
 
     Returns ``(docs, quarantine)``: ``docs`` carries the schema'd rows;
     ``quarantine`` one ``raw`` string column per unparseable line.
@@ -44,10 +43,8 @@ def read_jsonl_docs(
     arrive as many files; restage to parquet for repeated scans (same
     guidance as the VCF path, ``sources/vcf.py``).
     """
-    reader = spark.read
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    return split_jsonl_lines(reader.text(path), schema)
+    lines = spark.read.option("recursiveFileLookup", "true").text(path)
+    return split_jsonl_lines(lines, schema)
 
 
 def split_jsonl_lines(
@@ -87,7 +84,6 @@ def write_shards(
     shard_col: str,
     n_shards: int | None = None,
     order_col: str | None = None,
-    max_records_per_file: int | None = None,
     manifest: dict | None = None,
     format: str = "parquet",
 ) -> None:
@@ -98,9 +94,7 @@ def write_shards(
     streams sequentially without a shuffle on its side.
 
     One shuffle (the range exchange), then a straight parquet write.
-    ``n_shards`` defaults to the session's shuffle parallelism;
-    ``max_records_per_file`` additionally splits oversized shards into
-    bounded files.
+    ``n_shards`` defaults to the session's shuffle parallelism.
 
     ``manifest`` (optional dict of caller context — counts, config
     fingerprint, seed) is written AFTER the data as ``_MANIFEST.json``
@@ -116,11 +110,6 @@ def write_shards(
         shard_col, *( [order_col] if order_col else [] )
     )
     writer = out.write.mode("overwrite")
-    if max_records_per_file is not None:
-        # hard cap per FILE (a partition then splits into several files,
-        # each still sorted): data loaders that mmap or stream whole
-        # files get a bounded working set regardless of shard skew
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     if format == "parquet":
         writer.parquet(path)
     elif format == "jsonl":

@@ -3,8 +3,10 @@
 The reference writes four Oracle tables through hand-rolled batched JDBC
 (10 000-row insert batches, ``DAO.java:68-119``; 5 000-row update batches,
 ``DAO.java:142-163``). The engine's native stores are the versioned
-parquet stores of ``sources/store.py``; JDBC stays supported for sink
-compatibility with the same batching.
+parquet stores of ``sources/store.py``; its QC updates rewrite a store
+version (``operators.upsert.merge_update``). The JDBC sink batches inserts
+only, with the reference's insert batch size: ``write_jdbc`` inserts rows
+(appends by default) and has no update path.
 
 ``variant`` + ``variant_map_data`` are materialized from the engine's
 unified variant DataFrame only at the sink boundary — they are 1:1 on
@@ -15,9 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-#: reference batch sizes (DAO.java:75,98,112 / DAO.java:145)
+#: reference insert batch size (DAO.java:75,98,112)
 JDBC_INSERT_BATCH = 10_000
-JDBC_UPDATE_BATCH = 5_000
 
 
 def split_variant_sinks(variants: DataFrame) -> tuple[DataFrame, DataFrame]:

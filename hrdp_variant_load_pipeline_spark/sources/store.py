@@ -137,22 +137,11 @@ def committed_versions(spark: SparkSession, root: str) -> list[int]:
     return sorted(out)
 
 
-def resolve_store(
-    spark: SparkSession, root: str, version: int | None = None
-) -> str | None:
-    """Path a reader should scan: the highest committed version dir (or
-    the specific committed ``version`` — time travel within the retention
-    window, ``KEEP_PREVIOUS`` back), else the root itself when it holds a
-    legacy flat store, else None."""
+def resolve_store(spark: SparkSession, root: str) -> str | None:
+    """Path a reader should scan: the highest committed version dir, else
+    the root itself when it holds a legacy flat store, else None."""
     base = root.rstrip("/")
     versions = committed_versions(spark, base)
-    if version is not None:
-        if version not in versions:
-            raise FileNotFoundError(
-                f"store version {version} not committed under {root} "
-                f"(retained: {versions})"
-            )
-        return f"{base}/v_{version:08d}"
     if versions:
         return f"{base}/v_{versions[-1]:08d}"
     fs, jvm = _fs(spark, base)
@@ -235,14 +224,12 @@ def footer_schema(spark: SparkSession, path: str) -> StructType | None:
     return StructType.fromJson(json.loads(jschema.asNullable().json()))
 
 
-def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` with the schema taken from the footer
     (``footer_schema``) instead of inferred by a Spark job; the frame is the
-    same. ``merge_schema=True`` keeps Spark's merging inference."""
+    same."""
     reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    elif (schema := footer_schema(spark, path)) is not None:
+    if (schema := footer_schema(spark, path)) is not None:
         reader = reader.schema(schema)
     return reader.parquet(path)
 
@@ -282,36 +269,23 @@ def footer_max(spark: SparkSession, root: str, column: str) -> tuple[bool, objec
     return True, best
 
 
-def read_store(
-    spark: SparkSession,
-    root: str,
-    schema=None,
-    version: int | None = None,
-    merge_schema: bool = False,
-) -> DataFrame:
-    """Read the current committed store — or a retained earlier one via
-    ``version`` (the commit protocol keeps ``KEEP_PREVIOUS`` superseded
-    versions, so the previous batch stays queryable: diff a repair against
-    what it replaced, audit a load, roll analysis back a step). Empty
-    frame with ``schema`` when the store does not exist yet: a driver-local
-    one (``runtime.local_frame``), which Catalyst knows is empty, so the joins
+def read_store(spark: SparkSession, root: str, schema=None) -> DataFrame:
+    """Read the current committed store. Empty frame with ``schema`` when
+    the store does not exist yet: a driver-local one
+    (``runtime.local_frame``), which Catalyst knows is empty, so the joins
     a load makes against it plan away.
 
     The reader gets the schema of the version's first data file from its
     footer (``read_parquet``), the file Spark's inference would read, so
     the frame is the one ``spark.read.parquet`` returns without the
-    inference job. ``merge_schema=True`` unions schemas across files
-    (columns absent in older files read as null) through Spark's merging
-    inference — needed only after an ``allow_schema_drift`` append widened
-    the store. Off by default: the merge reads EVERY file footer, which at
-    100 TB file counts is a real listing/IO cost the common fixed-schema
-    read should not pay."""
-    target = resolve_store(spark, root, version)
+    inference job. One footer speaks for every file: ``append_to_store``
+    refuses a batch whose schema differs from the store's."""
+    target = resolve_store(spark, root)
     if target is None:
         if schema is None:
             raise FileNotFoundError(f"no committed store under {root}")
         return local_frame(spark, [], schema)
-    return read_parquet(spark, target, merge_schema)
+    return read_parquet(spark, target)
 
 
 def _verify_write(fs, jvm, tmp: str, spark: SparkSession) -> None:
@@ -388,10 +362,7 @@ def commit_store_version(df: DataFrame, root: str) -> str:
 
 
 def compact_store(
-    spark: SparkSession,
-    root: str,
-    target_partitions: int | None = None,
-    sort_by: list[str] | None = None,
+    spark: SparkSession, root: str, sort_by: list[str] | None = None
 ) -> str | None:
     """Rewrite the current store version into fewer, larger files —
     optionally clustered on ``sort_by`` for data-skipping scans.
@@ -415,36 +386,27 @@ def compact_store(
     shuffle of the store (range exchange), which is the point of a
     clustering rewrite; plain coalesce stays the no-shuffle default.
 
-    ``target_partitions`` defaults to the session's shuffle parallelism,
-    floored at 1. Returns the new version path, or None when the store
-    does not exist.
+    The rewrite has the session's shuffle parallelism in files
+    (``runtime.shuffle_partitions``). Returns the new version path, or
+    None when the store does not exist.
     """
     target = resolve_store(spark, root)
     if target is None:
         return None
-    if target_partitions is None:
-        target_partitions = shuffle_partitions(spark)
-    # always merge schemas: a compaction is the rewrite that re-unifies a
-    # drift-widened store (and it reads every file anyway, so the footer
-    # cost is already paid) — a sampled-footer read here could silently
-    # drop a column added by an allow_schema_drift append
-    df = read_parquet(spark, target, merge_schema=True)
+    n = shuffle_partitions(spark)
+    df = read_parquet(spark, target)
     if sort_by:
-        df = df.repartitionByRange(target_partitions, *sort_by).sortWithinPartitions(
-            *sort_by
-        )
+        df = df.repartitionByRange(n, *sort_by).sortWithinPartitions(*sort_by)
     else:
         # coalesce, not repartition: file-count reduction needs no shuffle
-        df = df.coalesce(target_partitions)
+        df = df.coalesce(n)
     return commit_store_version(df, root)
 
 
 def append_to_store(
     df: DataFrame,
     root: str,
-    allow_schema_drift: bool = False,
     cluster_by: list[str] | None = None,
-    cluster_partitions: int | None = None,
 ) -> int:
     """Append rows to the CURRENT store location (version dir when the
     store is versioned, the root for legacy/new flat stores) and return
@@ -474,10 +436,9 @@ def append_to_store(
     filter over probed keys skips files whose stats cannot hold one) —
     without it a multi-partition batch hash-scatters keys so every file
     spans the whole batch range and no file is ever skipped. Cost: one
-    batch-sized range shuffle.
-    ``cluster_partitions`` pins the written file count; left None, the
-    range shuffle takes the session default and AQE right-sizes it per
-    batch. Deliberately NOT derived from ``df.rdd.getNumPartitions()``:
+    batch-sized range shuffle. The range shuffle takes the session's
+    shuffle parallelism and AQE right-sizes it per batch. Deliberately
+    NOT derived from ``df.rdd.getNumPartitions()``:
     under AQE, touching ``.rdd`` finalizes the plan by RUNNING its
     shuffle map stages, so a derived batch (e.g. an index's
     bucket-assigned rows) would execute twice per append.
@@ -486,28 +447,22 @@ def append_to_store(
     Spark's default parquet read infers from one footer, so a drifted
     append would silently drop (or null out) columns depending on which
     file gets sampled — the database behavior the reference relies on is
-    a loud ALTER-or-fail. Pass ``allow_schema_drift=True`` for deliberate
-    widening, and read with ``read_store(..., merge_schema=True)``."""
+    a loud ALTER-or-fail: widen a store by committing a new version of
+    it."""
     spark = df.sparkSession
     if cluster_by:
-        if cluster_partitions:
-            df = df.repartitionByRange(cluster_partitions, *cluster_by)
-        else:
-            df = df.repartitionByRange(*cluster_by)
-        df = df.sortWithinPartitions(*cluster_by)
+        df = df.repartitionByRange(*cluster_by).sortWithinPartitions(*cluster_by)
     target = resolve_store(spark, root) or root.rstrip("/")
     fs, jvm = _fs(spark, target)
-    if not allow_schema_drift:
-        existing = footer_schema(spark, target)
-        if existing is not None and {
-            (f.name, f.dataType) for f in existing.fields
-        } != {(f.name, f.dataType) for f in df.schema.fields}:
-            raise ValueError(
-                f"append schema drift at {target}: store has "
-                f"{existing.simpleString()}, append has "
-                f"{df.schema.simpleString()}; pass "
-                "allow_schema_drift=True for deliberate widening"
-            )
+    existing = footer_schema(spark, target)
+    if existing is not None and {
+        (f.name, f.dataType) for f in existing.fields
+    } != {(f.name, f.dataType) for f in df.schema.fields}:
+        raise ValueError(
+            f"append schema drift at {target}: store has "
+            f"{existing.simpleString()}, append has "
+            f"{df.schema.simpleString()}"
+        )
     # observed here, ABOVE cluster_by's range exchange: the exchange's
     # sampling job runs the plan below it, and an observation placed there
     # would count the sampled rows too. Unnamed, so each call's metric name

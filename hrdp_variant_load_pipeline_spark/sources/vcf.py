@@ -42,9 +42,6 @@ FIXED_COLS = ("chrom", "pos", "vcf_id", "ref", "alt", "qual", "filter", "info", 
 #: file names ``read_vcf`` keeps, in the input directory and every subdirectory
 _VCF_GLOB = "*.vcf*"
 
-#: stop scanning a file for its #CHROM header after this many lines
-_HEADER_SCAN_LIMIT = 10_000
-
 #: metadata key of ``sample_names`` holding every input file's header, a
 #: JSON object ``{source_file: [sample name, ...]}``
 HEADER_KEY = "vcf_header"
@@ -60,20 +57,25 @@ def _list_local_files(path: str) -> list[str]:
 
 
 def _read_header_line(fpath: str) -> str | None:
-    """Stream the head of one file until its ``#CHROM`` line.
+    """Stream the head of one file until its ``#CHROM`` line, however many
+    ``##`` meta lines come first. None when the file ends before a
+    ``#CHROM`` line and holds no data line.
 
     Headers sit at the start of a VCF; reading them driver-side is O(files),
     whereas filtering a distributed text scan for them reads the ENTIRE
-    corpus once just to find one line per file.
+    corpus once just to find one line per file. Raises ``ValueError`` when
+    a data line comes before any ``#CHROM`` line: its sample cells would
+    load with no sample names.
     """
     opener = gzip.open if fpath.endswith(".gz") else open
     with opener(fpath, "rb") as raw, io.TextIOWrapper(raw, encoding="utf-8") as f:
-        for _ in range(_HEADER_SCAN_LIMIT):
-            line = f.readline()
-            if not line:
-                return None
+        for line in f:
             if line.startswith("#CHROM"):
                 return line.rstrip("\n")
+            if line.strip() and not line.startswith("#"):
+                raise ValueError(
+                    f"read_vcf: {fpath} has a data line before its #CHROM header"
+                )
     return None
 
 
@@ -100,7 +102,8 @@ def read_vcf(spark: SparkSession, path: str) -> DataFrame:
     Returns columns: the 9 fixed VCF fields, ``sample_cells``
     (array<string>, one per sample column), ``sample_names``
     (array<string>, aligned with cells), ``source_file`` (basename).
-    Raises ``ValueError`` when two input files share a basename.
+    Raises ``ValueError`` when two input files share a basename, or when a
+    local file has a data line before its ``#CHROM`` header.
     """
     raw = (
         spark.read.option("recursiveFileLookup", "true")

@@ -149,34 +149,26 @@ def _maybe_gunzip(content: bytes) -> bytes:
     return bytes(out)
 
 
-def read_warc(
-    spark: SparkSession,
-    path: str,
-    record_types: tuple[str, ...] = ("response",),
-    recursive: bool = True,
-) -> DataFrame:
+def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """Read WARC archives (plain or .gz, recursive glob) into one row
-    per record of the requested ``warc-type``s:
+    per ``response`` record (warcinfo, request, metadata and conversion
+    records are skipped):
 
       (url, warc_date, record_type, http_status, content_type,
        payload binary, source_file, record_offset)
 
-    ``record_types=None`` keeps everything (warcinfo/request/metadata
-    included). HTTP response records are unwrapped: status and
-    content-type come from the HTTP block and ``payload`` is the body
-    alone; other records carry their raw WARC body.
+    Records are unwrapped: status and content-type come from the HTTP
+    block and ``payload`` is the body alone.
     """
     import pandas as pd
 
     files = (
         spark.read.format("binaryFile")
-        .option("recursiveFileLookup", str(recursive).lower())
+        .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.warc*")
         .load(path)
         .select("path", "content")
     )
-    wanted = tuple(record_types) if record_types is not None else None
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.split()[0] for f in WARC_SCHEMA.split(", ")]
         for pdf in it:
@@ -184,7 +176,7 @@ def read_warc(
             for fpath, content in zip(pdf["path"], pdf["content"]):
                 buf = _maybe_gunzip(bytes(content))
                 for rec in _iter_warc_records(buf, fpath):
-                    if wanted is None or rec["record_type"] in wanted:
+                    if rec["record_type"] == "response":
                         rows.append(rec)
             yield pd.DataFrame(rows, columns=cols)
 

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 import uuid
@@ -14,7 +15,7 @@ from hrdp_variant_load_pipeline_spark.session import get_spark  # noqa: E402
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-    spark = get_spark("tests", shuffle_partitions=4)
+    spark = get_spark("tests", extra_conf={"spark.sql.shuffle.partitions": "4"})
     yield spark
 
 
@@ -82,3 +83,23 @@ def plan_nodes(plan):
         stack.extend(
             (kids.apply(i), (*above, node)) for i in reversed(range(kids.size()))
         )
+
+
+@contextlib.contextmanager
+def pinned_partitions(spark, n: int):
+    """Run the block with ``n`` shuffle partitions that AQE does not
+    coalesce, so a range-clustered write of a tiny fixture still lands as
+    several files (a single file would pass a disjointness check
+    vacuously)."""
+    conf = {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    before = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)

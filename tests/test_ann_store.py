@@ -14,6 +14,7 @@ from hrdp_variant_load_pipeline_spark.operators.similarity import (
     ivf_topk,
     train_centroids,
 )
+from tests.conftest import pinned_partitions
 
 EMB = "/root/testdata/sf0.001/embeddings.parquet"
 
@@ -60,7 +61,8 @@ def test_index_files_are_bucket_disjoint(spark, tmp_path):
     e = spark.read.parquet(EMB)
     cents = train_centroids(e, n_centroids=8, n_iter=3)
     store = str(tmp_path / "ivf")
-    append_ivf_batch(e, cents, store, cluster_partitions=4)
+    with pinned_partitions(spark, 4):
+        append_ivf_batch(e, cents, store)
     per_file = (
         spark.read.parquet(store)
         .groupBy(F.input_file_name().alias("f"))
@@ -91,7 +93,8 @@ def test_compaction_preserves_probe_results(spark, tmp_path):
     before = sorted(map(tuple, ivf_store_topk(
         spark, store, queries, cents, k=5, nprobe=2
     ).collect()))
-    compact_store(spark, store, target_partitions=4, sort_by=["bucket", "vec_id"])
+    with pinned_partitions(spark, 4):
+        compact_store(spark, store, sort_by=["bucket", "vec_id"])
     after = sorted(map(tuple, ivf_store_topk(
         spark, store, queries, cents, k=5, nprobe=2
     ).collect()))

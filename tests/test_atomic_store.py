@@ -11,6 +11,7 @@ atomic marker create.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -26,7 +27,7 @@ from hrdp_variant_load_pipeline_spark.sources.store import (
     read_store,
     resolve_store,
 )
-from tests.conftest import spark_jobs_of
+from tests.conftest import pinned_partitions, spark_jobs_of
 
 
 def _mk_flat(spark, path, tag="orig", n=10):
@@ -146,7 +147,8 @@ def test_compact_store_reduces_files_and_preserves_rows(spark, tmp_path):
     n_before = sum(1 for f in os.listdir(cur) if f.startswith("part-"))
     assert n_before >= 20
 
-    new_path = compact_store(spark, store, target_partitions=2)
+    with pinned_partitions(spark, 2):
+        new_path = compact_store(spark, store)
     assert new_path == resolve_store(spark, store)
     n_after = sum(1 for f in os.listdir(new_path) if f.startswith("part-"))
     assert n_after <= 2
@@ -155,21 +157,6 @@ def test_compact_store_reduces_files_and_preserves_rows(spark, tmp_path):
     assert out.agg(F.sum("id")).collect()[0][0] == sum(range(100)) + sum(
         range(1000, 1030)
     )
-
-
-def test_time_travel_reads_retained_previous_version(spark, tmp_path):
-    store = str(tmp_path / "store")
-    commit_store_version(spark.range(10).withColumn("tag", F.lit("v1")), store)
-    commit_store_version(spark.range(3).withColumn("tag", F.lit("v2")), store)
-    assert read_store(spark, store).count() == 3
-    old = read_store(spark, store, version=1)
-    assert old.count() == 10 and old.filter(F.col("tag") == "v1").count() == 10
-    # beyond the retention window (pruned) or never-committed -> loud error
-    commit_store_version(spark.range(1), store)  # prunes v1
-    with pytest.raises(Exception, match="not committed"):
-        read_store(spark, store, version=1)
-    with pytest.raises(Exception, match="not committed"):
-        read_store(spark, store, version=99)
 
 
 def test_compact_store_missing_is_noop(spark, tmp_path):
@@ -206,7 +193,8 @@ def test_compact_store_sorted_clusters_files_for_data_skipping(spark, tmp_path):
             spark.range(lo, 4000, 2).selectExpr("id % 97 AS pos", "id AS payload"),
             store,
         )
-    new_path = compact_store(spark, store, target_partitions=4, sort_by=["pos"])
+    with pinned_partitions(spark, 4):
+        new_path = compact_store(spark, store, sort_by=["pos"])
     files = [f for f in os.listdir(new_path) if f.startswith("part-")]
     assert 1 < len(files) <= 4
     ranges = []
@@ -241,35 +229,6 @@ def test_append_refuses_silent_schema_drift(spark, tmp_path):
     # same schema still appends fine
     append_to_store(spark.range(5, 8).selectExpr("id", "id * 2 AS v"), store)
     assert read_store(spark, store).count() == 8
-
-
-def test_schema_widening_roundtrip_with_merge_schema(spark, tmp_path):
-    from hrdp_variant_load_pipeline_spark.sources.store import compact_store
-
-    store = str(tmp_path / "store")
-    commit_store_version(spark.range(3).selectExpr("id", "id * 2 AS v"), store)
-    append_to_store(
-        spark.range(3, 5).selectExpr("id", "id * 2 AS v", "'new' AS extra"),
-        store,
-        allow_schema_drift=True,
-    )
-    merged = read_store(spark, store, merge_schema=True)
-    assert set(merged.columns) == {"id", "v", "extra"}
-    rows = {r.id: r.extra for r in merged.collect()}
-    assert rows[4] == "new" and rows[0] is None
-    # a compaction rewrite re-unifies the store to the widened schema;
-    # plain reads then see every column without the merge cost
-    compact_store(spark, store, target_partitions=1)
-    plain = read_store(spark, store)
-    assert set(plain.columns) == {"id", "v", "extra"} and plain.count() == 5
-
-
-def _interleave_ref(vals, bits):
-    z = 0
-    for i, v in enumerate(vals):
-        for b in range(bits):
-            z |= ((v >> b) & 1) << (b * len(vals) + i)
-    return z
 
 
 def test_describe_store_reports_versions_files_rows(spark, tmp_path):
@@ -311,9 +270,10 @@ def test_append_cluster_by_writes_disjoint_key_ranges(spark, tmp_path):
         .repartition(8, "v")  # hash scatter: every partition spans 0..399
     )
     clustered = str(tmp_path / "clustered")
-    # explicit cluster_partitions: AQE would rightly coalesce this tiny
-    # batch to one file, which passes disjointness vacuously
-    append_to_store(df, clustered, cluster_by=["doc"], cluster_partitions=4)
+    # pinned partitions: AQE would rightly coalesce this tiny batch to
+    # one file, which passes disjointness vacuously
+    with pinned_partitions(spark, 4):
+        append_to_store(df, clustered, cluster_by=["doc"])
     ranges = _file_ranges(spark, clustered, "doc")
     assert len(ranges) >= 2  # non-vacuous: multiple files written
     for (_, prev_hi), (lo, _) in zip(ranges, ranges[1:]):
@@ -335,8 +295,9 @@ def test_append_cluster_by_stacks_disjoint_per_batch(spark, tmp_path):
     store = str(tmp_path / "store")
     b1 = spark.range(0, 200).select(F.col("id").alias("doc")).repartition(4)
     b2 = spark.range(1000, 1200).select(F.col("id").alias("doc")).repartition(4)
-    append_to_store(b1, store, cluster_by=["doc"], cluster_partitions=2)
-    append_to_store(b2, store, cluster_by=["doc"], cluster_partitions=2)
+    with pinned_partitions(spark, 2):
+        append_to_store(b1, store, cluster_by=["doc"])
+        append_to_store(b2, store, cluster_by=["doc"])
     ranges = _file_ranges(spark, store, "doc")
     assert len(ranges) >= 4
     # monotonic batches here, so global disjointness must hold as well
@@ -345,10 +306,10 @@ def test_append_cluster_by_stacks_disjoint_per_batch(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "cluster_by, cluster_partitions",
+    "cluster_by, partitions",
     [(None, None), (["doc"], None), (["doc"], 3)],
 )
-def test_append_returns_rows_appended(spark, tmp_path, cluster_by, cluster_partitions):
+def test_append_returns_rows_appended(spark, tmp_path, cluster_by, partitions):
     """append_to_store returns exactly the rows it wrote. With cluster_by,
     the range exchange's sampling job runs the plan below it, so a count
     taken there would see rows twice; the store's own row count is the
@@ -359,14 +320,12 @@ def test_append_returns_rows_appended(spark, tmp_path, cluster_by, cluster_parti
         .select(F.col("id").alias("doc"), (F.col("id") % 5).alias("v"))
         .repartition(4, "v")
     )
-    n = append_to_store(
-        df, store, cluster_by=cluster_by, cluster_partitions=cluster_partitions
-    )
-    assert n == 250 == spark.read.parquet(store).count()
-    # a second append into the same location counts only its own rows
-    n2 = append_to_store(
-        df.filter("v = 0"), store, cluster_by=cluster_by, cluster_partitions=cluster_partitions
-    )
+    pinned = pinned_partitions(spark, partitions) if partitions else contextlib.nullcontext()
+    with pinned:
+        n = append_to_store(df, store, cluster_by=cluster_by)
+        assert n == 250 == spark.read.parquet(store).count()
+        # a second append into the same location counts only its own rows
+        n2 = append_to_store(df.filter("v = 0"), store, cluster_by=cluster_by)
     assert n2 == 50
     assert spark.read.parquet(store).count() == 300
     assert append_to_store(df.limit(0), store, cluster_by=cluster_by) == 0

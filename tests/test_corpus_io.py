@@ -115,19 +115,6 @@ def test_multimodal_embed_feeds_ann_operators(spark):
             assert top[qid]["cosine"] > 0.9999
 
 
-def test_write_shards_max_records_per_file(spark, tmp_path):
-    df = spark.range(1000).selectExpr("id % 4 AS bin_id", "id AS doc_id")
-    out = str(tmp_path / "capped")
-    write_shards(df, out, "bin_id", n_shards=2, max_records_per_file=200)
-    import pyarrow.parquet as pq
-
-    files = [f for f in os.listdir(out) if f.startswith("part-")]
-    assert len(files) >= 5  # 1000 rows / 200-cap
-    for f in files:
-        assert pq.ParquetFile(os.path.join(out, f)).metadata.num_rows <= 200
-    assert spark.read.parquet(out).count() == 1000
-
-
 def test_corpus_report_scalars(spark):
     from hrdp_variant_load_pipeline_spark.sources.corpus_io import corpus_report
 

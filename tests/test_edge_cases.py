@@ -34,6 +34,7 @@ def _load(spark, tmp_path, body, samples_rows):
         spark.createDataFrame([], schemas.VARIANT),
         spark.createDataFrame([], schemas.VARIANT_SAMPLE_DETAIL),
         map_key=372,
+        next_rgd_id=1,
     )
 
 
@@ -319,7 +320,7 @@ def test_pre_aggregated_join_matches_naive_join_agg(spark):
         pre_aggregated_join(fact, dim, ["k"], how="right")
 
 
-def test_pre_aggregated_join_modes_are_route_invariant(spark):
+def test_pre_aggregated_join_modes_are_route_invariant(spark, monkeypatch):
     """mode="plain" (literal partials, no keyed agg) and mode="auto"
     must produce the same finishing aggregates and the same SCHEMA as
     mode="pre" — the contract that lets the auto cost model route
@@ -374,18 +375,18 @@ def test_pre_aggregated_join_modes_are_route_invariant(spark):
         pre_aggregated_join(fact, dim, ["k"], mode="eager")
 
     # the cost model: sample the WHOLE frame so the decision is exact
-    # (small_input_bytes=0 disables the byte gate — these in-memory
+    # (SMALL_FACT_BYTES=0 disables the byte gate — these in-memory
     # fixtures are below any sensible production threshold)
+    from hrdp_variant_load_pipeline_spark.operators import skew
+
+    monkeypatch.setattr(skew, "SAMPLE_FRACTION", 1.0)
+    monkeypatch.setattr(skew, "SMALL_FACT_BYTES", 0)
     uniform = spark.range(20000).selectExpr("id AS k", "id AS x")
-    assert not eager_agg_profitable(
-        uniform, ["k"], sample_fraction=1.0, small_input_bytes=0
-    )
+    assert not eager_agg_profitable(uniform, ["k"])
     hot = spark.range(20000).selectExpr(
         "CASE WHEN id % 2 = 0 THEN 1L ELSE id END AS k"
     )
-    assert eager_agg_profitable(
-        hot, ["k"], sample_fraction=1.0, small_input_bytes=0
-    )
+    assert eager_agg_profitable(hot, ["k"])
 
 
 def test_pre_aggregated_join_grain_contract(spark):
@@ -524,3 +525,27 @@ def test_vcf_inputs_with_one_file_name_are_refused(spark, tmp_path, scheme):
         (100, ("S1",)),
         (200, ("S2",)),
     ]
+
+
+def test_vcf_header_after_many_meta_lines_is_read(spark, tmp_path):
+    """The #CHROM line is found however many ## meta lines precede it (a
+    contig-heavy reference header runs to tens of thousands of lines), so
+    every data line keeps its sample names."""
+    from hrdp_variant_load_pipeline_spark.sources.vcf import vcf_header
+
+    with gzip.open(tmp_path / "long.vcf.gz", "wt") as f:
+        f.write("##fileformat=VCFv4.2\n")
+        f.writelines(f"##contig=<ID=c{i},length=1000>\n" for i in range(10_050))
+        f.write(HEADER.split("\n")[1] + "\n")
+        f.write("chr1\t100\t.\tA\tG\t50\tPASS\t.\tGT\t0/1\t1/1\n")
+    vcf = read_vcf(spark, str(tmp_path))
+    assert vcf_header(vcf) == [("long.vcf.gz", ["S1", "GHOST"])]
+    assert [tuple(r["sample_names"]) for r in vcf.collect()] == [("S1", "GHOST")]
+
+
+def test_vcf_with_data_lines_and_no_header_is_refused(spark, tmp_path):
+    with gzip.open(tmp_path / "bare.vcf.gz", "wt") as f:
+        f.write("##fileformat=VCFv4.2\n")
+        f.write("chr1\t100\t.\tA\tG\t50\tPASS\t.\tGT\t0/1\n")
+    with pytest.raises(ValueError, match="bare.vcf.gz has a data line before"):
+        read_vcf(spark, str(tmp_path))

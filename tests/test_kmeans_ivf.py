@@ -172,10 +172,11 @@ def test_brute_force_topk_zero_norm_excluded_both_forms(spark):
     # no NaN cosines survive either form
     assert all(t[2] == t[2] for t in a)
 
-def test_brute_force_topk_auto_dispatches_on_corpus_size(spark):
+def test_brute_force_topk_auto_dispatches_on_corpus_size(spark, monkeypatch):
     """Size-gated dispatch (r14): below the measured knee the JVM form
     runs (no Python stage in the plan); at/above it the BLAS
     mapInPandas form runs — results identical either way."""
+    from hrdp_variant_load_pipeline_spark.operators import similarity
     from hrdp_variant_load_pipeline_spark.operators.similarity import (
         brute_force_topk,
         brute_force_topk_auto,
@@ -185,13 +186,11 @@ def test_brute_force_topk_auto_dispatches_on_corpus_size(spark):
     q = e.filter(F.col("vec_id") < 3)
     small = brute_force_topk_auto(e, q, k=4)
     assert "mapInPandas" not in small._jdf.queryExecution().executedPlan().toString()
-    forced_blas = brute_force_topk_auto(e, q, k=4, blas_threshold=1)
+    monkeypatch.setattr(similarity, "_BLAS_CORPUS_ROWS", 1)
+    forced_blas = brute_force_topk_auto(e, q, k=4)
     assert "MapInPandas" in (
         forced_blas._jdf.queryExecution().executedPlan().toString()
     )
     want = sorted(map(tuple, brute_force_topk(e, q, k=4).collect()))
     assert sorted(map(tuple, small.collect())) == want
     assert sorted(map(tuple, forced_blas.collect())) == want
-    # corpus_rows hint skips the sizing count and still dispatches right
-    hinted = brute_force_topk_auto(e, q, k=4, corpus_rows=10**9)
-    assert "MapInPandas" in hinted._jdf.queryExecution().executedPlan().toString()

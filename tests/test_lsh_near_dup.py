@@ -32,8 +32,8 @@ def _corpus(spark, per_cluster=40, dim=16):
 
 def test_buckets_deterministic_and_band_shaped(spark):
     c = _corpus(spark, per_cluster=5)
-    b1 = sorted(map(tuple, hyperplane_buckets(c).collect()))
-    b2 = sorted(map(tuple, hyperplane_buckets(c).collect()))
+    b1 = sorted(map(tuple, hyperplane_buckets(c, 16).collect()))
+    b2 = sorted(map(tuple, hyperplane_buckets(c, 16).collect()))
     assert b1 == b2  # hash-derived planes: no RNG state, reproducible
     n_bands = 16 // 8
     assert len(b1) == c.count() * n_bands
@@ -41,7 +41,7 @@ def test_buckets_deterministic_and_band_shaped(spark):
 
 def test_lsh_near_dup_matches_brute_force_on_separable_data(spark):
     c = _corpus(spark)
-    got = near_dup_pairs_lsh(c, threshold=0.9, n_planes=16, band_planes=4)
+    got = near_dup_pairs_lsh(c, 16, threshold=0.9, n_planes=16, band_planes=4)
     pairs = {(r["id_a"], r["id_b"]) for r in got.collect()}
 
     # brute-force truth: every same-cluster pair is >= 0.9, no cross pair

@@ -192,7 +192,7 @@ def test_brute_force_topk_single_corpus_pass_broadcast_queries(spark):
     assert plan.count("Exchange hashpartitioning") == 1  # the rank window only
 
 
-def test_brute_force_topk_blas_shape(spark):
+def test_brute_force_topk_blas_shape(spark, monkeypatch):
     """The Arrow/BLAS form (the driver row's large-corpus arm since the
     r14 size-gated dispatch): corpus scanned once through ONE
     mapInPandas (queries ride the closure, no join at all); the only
@@ -207,9 +207,8 @@ def test_brute_force_topk_blas_shape(spark):
     small = _plan(spark, "embedding_cosine_topk")
     assert "MapInPandas" not in small  # tiny corpus -> JVM fast path
     e = table(spark, SF_DIR, "embeddings")
-    df = SIM.brute_force_topk_auto(
-        e, e.filter(F.col("vec_id") < 10), k=5, blas_threshold=1
-    )
+    monkeypatch.setattr(SIM, "_BLAS_CORPUS_ROWS", 1)
+    df = SIM.brute_force_topk_auto(e, e.filter(F.col("vec_id") < 10), k=5)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "Join" not in plan and "CartesianProduct" not in plan
@@ -369,7 +368,7 @@ def test_pre_aggregated_join_plain_route_has_no_keyed_agg(spark):
     assert fin(plain) == fin(pre)
 
 
-def test_pair_jaccard_prunes_via_hot_anti_join(spark):
+def test_pair_jaccard_prunes_via_hot_anti_join(spark, monkeypatch):
     """The df-prune must ANTI-join against the (Zipf-head-sized) HOT
     shingle set, never semi-join against the rare KEEP set: rare is
     nearly every shingle on real corpora (measured at the 100x staging:
@@ -380,6 +379,7 @@ def test_pair_jaccard_prunes_via_hot_anti_join(spark):
     (df-count branch + collect branch), not three."""
     from pyspark.sql import functions as F  # noqa: F401
 
+    from hrdp_variant_load_pipeline_spark.operators import dedup
     from hrdp_variant_load_pipeline_spark.operators.dedup import (
         ngram_jaccard_pairs,
     )
@@ -388,7 +388,8 @@ def test_pair_jaccard_prunes_via_hot_anti_join(spark):
         [(i, f"w{i} x{i} y{i} z{i} common tail here") for i in range(30)],
         "doc_id long, text string",
     )
-    out = ngram_jaccard_pairs(docs, "doc_id", "text", k=3, max_df=5)
+    monkeypatch.setattr(dedup, "MAX_DF", 5)
+    out = ngram_jaccard_pairs(docs, "doc_id", "text", k=3)
     nodes = [n for n, _ in plan_nodes(out._jdf.queryExecution().executedPlan())]
     joins = [n.joinType().toString() for n in nodes if "Join" in node_class(n)]
     assert "LeftAnti" in joins, joins

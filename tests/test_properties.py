@@ -91,6 +91,7 @@ def test_explode_count_matches_allele_count(spark, tmp_path):
         spark.createDataFrame([], schemas.VARIANT),
         spark.createDataFrame([], schemas.VARIANT_SAMPLE_DETAIL),
         map_key=372,
+        next_rgd_id=1,
     )
     assert res.all_line_variants.count() == expected
 

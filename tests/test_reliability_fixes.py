@@ -1,8 +1,9 @@
 """Round-3 hardening: reliable checkpointing for iterative operators,
-caller-releasable minhash checkpoints, batch-order merge_update, and the
-genic-QC scope join."""
+caller-releasable minhash checkpoints, and the genic-QC scope join."""
 
 from __future__ import annotations
+
+import contextlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,7 +13,6 @@ from hrdp_variant_load_pipeline_spark.operators.dedup import (
     minhash_lsh_pairs,
 )
 from hrdp_variant_load_pipeline_spark.operators.similarity import train_centroids
-from hrdp_variant_load_pipeline_spark.operators.upsert import merge_update
 from hrdp_variant_load_pipeline_spark.runtime import local_frame
 from tests.conftest import node_class, plan_nodes
 import importlib
@@ -31,15 +31,23 @@ PAIRS = [
 ]
 
 
+@contextlib.contextmanager
+def _checkpoint_dir(spark, path):
+    # restore the unset state afterward: with a dir configured, the
+    # iterative operators' snapshots turn reliable (resolve_reliable),
+    # which must not leak into other tests on the session-scoped
+    # SparkContext
+    spark.sparkContext.setCheckpointDir(str(path))
+    try:
+        yield str(path)
+    finally:
+        spark.sparkContext.setCheckpointDir(None)
+
+
 @pytest.fixture()
 def ckpt_dir(spark, tmp_path):
-    # restore the unset state afterward: with a dir configured, the
-    # iterative operators' reliable=None default flips to reliable
-    # checkpointing (resolve_reliable), which must not leak into other
-    # tests on the session-scoped SparkContext
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    yield str(tmp_path / "ckpt")
-    spark.sparkContext.setCheckpointDir(None)
+    with _checkpoint_dir(spark, tmp_path / "ckpt") as d:
+        yield d
 
 
 def test_reliable_default_follows_checkpoint_dir(spark, tmp_path):
@@ -81,16 +89,15 @@ def test_connected_components_default_uses_configured_ckpt_dir(spark, ckpt_dir):
     assert ckpt_files, "no files written to the configured checkpoint dir"
 
 
-def test_connected_components_reliable_matches_local(spark, ckpt_dir):
+def test_connected_components_reliable_matches_local(spark, tmp_path):
     pairs = spark.createDataFrame(PAIRS, "doc_a long, doc_b long")
     local = {
-        (r["doc"], r["cluster"])
-        for r in connected_components(pairs, reliable=False).collect()
+        (r["doc"], r["cluster"]) for r in connected_components(pairs).collect()
     }
-    rel = {
-        (r["doc"], r["cluster"])
-        for r in connected_components(pairs, reliable=True).collect()
-    }
+    with _checkpoint_dir(spark, tmp_path / "ckpt"):
+        rel = {
+            (r["doc"], r["cluster"]) for r in connected_components(pairs).collect()
+        }
     assert rel == local
     assert rel == {
         (1, 1), (2, 1), (3, 1),
@@ -99,18 +106,17 @@ def test_connected_components_reliable_matches_local(spark, ckpt_dir):
     }
 
 
-def test_train_centroids_reliable_matches_local(spark, ckpt_dir):
+def test_train_centroids_reliable_matches_local(spark, tmp_path):
     rows = [(i, [float((i * 7 + j) % 5) for j in range(4)]) for i in range(20)]
     e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     kw = dict(n_centroids=2, n_iter=2, centroid_round_digits=6)
     local = {
-        (r["cent_id"], tuple(r["cvec"]))
-        for r in train_centroids(e, reliable=False, **kw).collect()
+        (r["cent_id"], tuple(r["cvec"])) for r in train_centroids(e, **kw).collect()
     }
-    rel = {
-        (r["cent_id"], tuple(r["cvec"]))
-        for r in train_centroids(e, reliable=True, **kw).collect()
-    }
+    with _checkpoint_dir(spark, tmp_path / "ckpt"):
+        rel = {
+            (r["cent_id"], tuple(r["cvec"])) for r in train_centroids(e, **kw).collect()
+        }
     assert rel == local
 
 
@@ -140,28 +146,6 @@ def test_minhash_cache_registry_release(spark):
     assert pair_rdd in persisted()  # checkpoint data is pinned
     release(*registry)
     assert pair_rdd not in persisted()  # and now released
-
-
-def test_merge_update_order_col_last_wins(spark):
-    store = spark.createDataFrame(
-        [(1, 100), (2, 200)], "rgd_id long, end_pos long"
-    )
-    # key 1 updated twice: batch order says 150 is LAST, but 999 is larger
-    updates = spark.createDataFrame(
-        [(1, 999, 0), (1, 150, 1)], "rgd_id long, end_pos long, batch_pos int"
-    )
-    default = {
-        r["rgd_id"]: r["end_pos"]
-        for r in merge_update(store, updates, "rgd_id", ["end_pos"]).collect()
-    }
-    ordered = {
-        r["rgd_id"]: r["end_pos"]
-        for r in merge_update(
-            store, updates, "rgd_id", ["end_pos"], order_col="batch_pos"
-        ).collect()
-    }
-    assert default == {1: 999, 2: 200}  # documented max-wins deviation
-    assert ordered == {1: 150, 2: 200}  # reference batch-order semantics
 
 
 #: (rgd_id, chromosome, start_pos, genic_status, map_key) of a store that

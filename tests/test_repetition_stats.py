@@ -8,11 +8,11 @@ from pyspark.sql import functions as F
 
 
 class TestNormalizeText:
-    def _norm(self, spark, text, **kw):
+    def _norm(self, spark, text):
         from hrdp_variant_load_pipeline_spark.functions.text import normalize_text
 
         df = spark.createDataFrame([(text,)], "t string")
-        return df.select(normalize_text(F.col("t"), **kw).alias("n")).first().n
+        return df.select(normalize_text(F.col("t")).alias("n")).first().n
 
     def test_masks_urls_emails_and_case(self, spark):
         got = self._norm(
@@ -20,14 +20,8 @@ class TestNormalizeText:
             "Visit https://ex.com/a?b=1 or www.ex.org/x, mail Bob@Ex.COM now",
         )
         assert got == "visit <url> or <url> mail <email> now"
-
-    def test_number_masking_opt_in(self, spark):
-        text = "pi is 3.14 and 1,000 items"
-        assert self._norm(spark, text) == "pi is 3.14 and 1,000 items"
-        assert (
-            self._norm(spark, text, mask_numbers=True)
-            == "pi is <num> and <num> items"
-        )
+        # numbers are kept
+        assert self._norm(spark, "pi is 3.14 and 1,000 items") == "pi is 3.14 and 1,000 items"
 
     def test_whitespace_collapse_and_trim(self, spark):
         assert self._norm(spark, "  a \t b\n\nc  ") == "a b c"
@@ -36,19 +30,6 @@ class TestNormalizeText:
         # an URL containing @ and digits masks as ONE <url>, not a mix
         got = self._norm(spark, "see https://u:p@host:8080/p?q=1 ok")
         assert got == "see <url> ok"
-
-    def test_all_off_is_identity(self, spark):
-        t = "Mixed CASE  and https://x.y 42"
-        got = self._norm(
-            spark,
-            t,
-            lowercase=False,
-            mask_urls=False,
-            mask_emails=False,
-            mask_numbers=False,
-            collapse_whitespace=False,
-        )
-        assert got == t
 
 
 def test_normalize_text_matches_duckdb(spark):

@@ -47,8 +47,8 @@ def test_restage_roundtrip_equivalent_load(spark, tmp_path):
     empty_v = spark.createDataFrame([], schemas.VARIANT)
     empty_d = spark.createDataFrame([], schemas.VARIANT_SAMPLE_DETAIL)
 
-    a = run_load(vcf, genes, samples, empty_v, empty_d, map_key=372)
-    b = run_load(staged, genes, samples, empty_v, empty_d, map_key=372)
+    a = run_load(vcf, genes, samples, empty_v, empty_d, map_key=372, next_rgd_id=1)
+    b = run_load(staged, genes, samples, empty_v, empty_d, map_key=372, next_rgd_id=1)
     cols = ["chromosome", "start_pos", "ref_nuc", "var_nuc", "variant_type", "genic_status"]
     assert sorted(map(tuple, a.new_variants.select(*cols).collect())) == sorted(
         map(tuple, b.new_variants.select(*cols).collect())

@@ -105,7 +105,7 @@ def test_pagerank_keeps_only_the_returned_round(spark):
         [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1)], "src long, dst long"
     )
     base = _persisted(spark)
-    ranks = pagerank(edges, n_iter=5, reliable=False)
+    ranks = pagerank(edges, n_iter=5)
     grown = _persisted(spark) - base
     assert grown <= {_rdd_id(ranks)}
     assert abs(sum(r["rank"] for r in ranks.collect()) - 1.0) < 1e-9

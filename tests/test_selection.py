@@ -9,7 +9,7 @@ import pytest
 from hrdp_variant_load_pipeline_spark.operators.selection import kcenter_greedy
 
 
-def _model(rows, k, seed_id=None):
+def _model(rows, k):
     """Brute-force Python mirror: rounded cosine distance, min over
     selected, argmax with smallest-id tie-break."""
     vecs = {i: v for i, v in rows}
@@ -22,7 +22,7 @@ def _model(rows, k, seed_id=None):
 
     ids = sorted(i for i, v in vecs.items()
                  if math.sqrt(sum(x * x for x in v)) > 0)
-    sel = [seed_id if seed_id is not None else ids[0]]
+    sel = [ids[0]]
     out = [(0, sel[0], None)]
     for step in range(1, k):
         best = None
@@ -67,12 +67,14 @@ def test_duplicates_never_repick_and_early_stop(spark):
 
 
 def test_seed_and_zero_vector_handling(spark):
-    rows = ROWS + [(7, [0.0, 0.0, 0.0])]
+    # the zero vector holds the smallest id: the seed is the smallest id
+    # among the rows that have a cosine
+    rows = [(0, [0.0, 0.0, 0.0])] + ROWS
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = kcenter_greedy(df, "vec_id", "embedding", k=3, seed_id=3)
-    assert got[0] == (0, 3, None)
-    assert all(i != 7 for _, i, _ in got)  # zero vector excluded
-    assert got == _model(ROWS, k=3, seed_id=3)
+    got = kcenter_greedy(df, "vec_id", "embedding", k=3)
+    assert got[0] == (0, 1, None)
+    assert all(i != 0 for _, i, _ in got)  # zero vector excluded
+    assert got == _model(ROWS, k=3)
 
 
 def test_guards(spark):
@@ -82,7 +84,7 @@ def test_guards(spark):
     with pytest.raises(ValueError, match="k must be"):
         kcenter_greedy(df, "vec_id", "embedding", k=0)
     with pytest.raises(ValueError, match="empty input"):
-        kcenter_greedy(df, "vec_id", "embedding", k=2, seed_id=99)
+        kcenter_greedy(df.filter("vec_id > 1"), "vec_id", "embedding", k=2)
 
 
 def test_no_shuffle_no_join_per_iteration(spark):
@@ -117,5 +119,5 @@ def test_no_shuffle_no_join_per_iteration(spark):
 
 def test_kcenter_literal_k_ceiling_fails_loud(spark):
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    with pytest.raises(ValueError, match="max_literal_k"):
+    with pytest.raises(ValueError, match="MAX_LITERAL_K"):
         kcenter_greedy(e, "vec_id", "embedding", 129)

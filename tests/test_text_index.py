@@ -8,9 +8,11 @@ from pyspark.sql import functions as F
 
 from hrdp_variant_load_pipeline_spark.operators.text_index import (
     append_text_index_batch,
-    text_index_topk,
+    text_index_scores,
+    text_index_topk_many,
 )
 from hrdp_variant_load_pipeline_spark.operators.vocab import bm25_scores
+from tests.conftest import pinned_partitions
 
 TERMS = ["cat", "dog", "mat"]
 
@@ -27,11 +29,18 @@ BATCH2 = [
 ]
 
 
+def _topk(spark, store, terms, k):
+    """One query's top-k: (doc_id, score, rank) rows, rank-ordered."""
+    q = spark.createDataFrame([(0, terms)], "query_id long, terms array<string>")
+    return sorted(text_index_topk_many(spark, store, q, k=k).collect(), key=lambda r: r.rank)
+
+
 def _ingest(spark, tmp_path):
     store = str(tmp_path / "tix")
     for batch in (BATCH1, BATCH2):
         df = spark.createDataFrame(batch, "doc_id long, text string")
-        append_text_index_batch(df, store, cluster_partitions=3)
+        with pinned_partitions(spark, 3):
+            append_text_index_batch(df, store)
     return store
 
 
@@ -48,11 +57,11 @@ def test_probe_is_bit_equal_to_bm25_scores(spark, tmp_path):
     }
     got = {
         r.doc_id: r.score
-        for r in text_index_topk(spark, store, TERMS, k=100).collect()
+        for r in text_index_scores(spark, store, TERMS).collect()
     }
     assert got == want  # bit-equal, not approximately
     # rank: dense from 1, by (score desc, doc_id asc)
-    ranked = text_index_topk(spark, store, TERMS, k=3).collect()
+    ranked = _topk(spark, store, TERMS, k=3)
     assert [r.rank for r in ranked] == [1, 2, 3]
     order = sorted(want.items(), key=lambda kv: (-kv[1], kv[0]))[:3]
     assert [(r.doc_id, r.score) for r in ranked] == order
@@ -61,7 +70,7 @@ def test_probe_is_bit_equal_to_bm25_scores(spark, tmp_path):
 def test_probe_pushes_bucket_filter(spark, tmp_path):
     store = _ingest(spark, tmp_path)
     plan = (
-        text_index_topk(spark, store, ["cat", "dog"], k=5)
+        text_index_scores(spark, store, ["cat", "dog"])
         ._jdf.queryExecution().executedPlan().toString()
     ).replace("\n", " ")
     # single-bucket probes simplify In -> EqualTo; accept either form
@@ -92,26 +101,26 @@ def test_compaction_keeps_probe_parity(spark, tmp_path):
 
     store = _ingest(spark, tmp_path)
     before = [(r.doc_id, r.score) for r in
-              text_index_topk(spark, store, TERMS, k=100).collect()]
+              text_index_scores(spark, store, TERMS).collect()]
     compact_store(spark, f"{store}/postings", sort_by=["bucket", "term"])
     after = [(r.doc_id, r.score) for r in
-             text_index_topk(spark, store, TERMS, k=100).collect()]
+             text_index_scores(spark, store, TERMS).collect()]
     assert sorted(before) == sorted(after)
 
 
 def test_empty_index_and_guards(spark, tmp_path):
     store = str(tmp_path / "empty")
-    assert text_index_topk(spark, store, ["cat"]).count() == 0
+    assert text_index_scores(spark, store, ["cat"]).count() == 0
     with pytest.raises(ValueError, match="empty"):
-        text_index_topk(spark, store, [])
+        text_index_scores(spark, store, [])
     with pytest.raises(ValueError, match="duplicate"):
-        text_index_topk(spark, store, ["cat", "cat"])
+        text_index_scores(spark, store, ["cat", "cat"])
 
 
 def test_unmatched_terms_and_small_match_set(spark, tmp_path):
     store = _ingest(spark, tmp_path)
     # a term absent from the corpus contributes nothing and breaks nothing
-    rows = text_index_topk(spark, store, ["mat", "zzz_absent"], k=50).collect()
+    rows = _topk(spark, store, ["mat", "zzz_absent"], k=50)
     corpus = spark.createDataFrame(BATCH1 + BATCH2, "doc_id long, text string")
     want = {
         r.doc_id: r.bm25
@@ -122,6 +131,7 @@ def test_unmatched_terms_and_small_match_set(spark, tmp_path):
     }
     assert {r.doc_id: r.score for r in rows} == want
     assert len(rows) == len(want)  # k past the match set returns matches
+    assert [r.rank for r in rows] == list(range(1, len(want) + 1))
 
 
 def test_n_buckets_is_a_store_property(spark, tmp_path):
@@ -139,7 +149,7 @@ def test_n_buckets_is_a_store_property(spark, tmp_path):
             n_buckets=64,
         )
     with pytest.raises(ValueError, match="n_buckets=256"):
-        text_index_topk(spark, store, ["cat"], n_buckets=64)
+        text_index_scores(spark, store, ["cat"], n_buckets=64)
     # derived probe under the non-default modulus matches the operator
     corpus = spark.createDataFrame(BATCH1, "doc_id long, text string")
     want = {
@@ -147,10 +157,6 @@ def test_n_buckets_is_a_store_property(spark, tmp_path):
         for r in bm25_scores(corpus, "doc_id", "text", TERMS).collect()
         if r.bm25 > 0
     }
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        text_index_scores,
-    )
-
     got = {r.doc_id: r.score
            for r in text_index_scores(spark, store, TERMS).collect()}
     assert got == want
@@ -167,10 +173,6 @@ def test_null_text_counts_as_empty_doc_both_paths(spark, tmp_path):
     scored = {r.doc_id: r.bm25
               for r in bm25_scores(df, "doc_id", "text", TERMS).collect()}
     assert scored[8] == 0.0  # never NULL
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        text_index_scores,
-    )
-
     got = {r.doc_id: r.score
            for r in text_index_scores(spark, store, TERMS).collect()}
     assert got == {i: s for i, s in scored.items() if s > 0}
@@ -180,10 +182,6 @@ def test_topk_many_matches_per_query_operator(spark, tmp_path):
     """Batch retrieval: each query's scores are bit-equal to running the
     one-shot operator alone with that query's terms — overlapping terms
     across queries included."""
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        text_index_topk_many,
-    )
-
     store = _ingest(spark, tmp_path)
     corpus = spark.createDataFrame(BATCH1 + BATCH2, "doc_id long, text string")
     queries = {
@@ -222,10 +220,6 @@ def test_topk_many_matches_per_query_operator(spark, tmp_path):
 
 
 def test_topk_many_guards_and_empty(spark, tmp_path):
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        text_index_topk_many,
-    )
-
     store = _ingest(spark, tmp_path)
     with pytest.raises(ValueError, match="duplicate terms in query 5"):
         text_index_topk_many(
@@ -286,7 +280,6 @@ def test_batch_key_makes_append_replay_idempotent(spark, tmp_path):
     exact-duplicate posting rows that the probe's distinct scores once —
     bit-equality vs the one-shot operator survives both."""
     from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        text_index_scores,
         verify_text_index,
     )
 
@@ -326,10 +319,6 @@ def test_batch_key_makes_append_replay_idempotent(spark, tmp_path):
 
 
 def test_topk_many_rejects_duplicate_query_ids(spark, tmp_path):
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        text_index_topk_many,
-    )
-
     store = _ingest(spark, tmp_path)
     with pytest.raises(ValueError, match="duplicate query_id 1"):
         text_index_topk_many(
@@ -352,7 +341,6 @@ def test_lifecycle_random_walk_matches_model(spark, tmp_path):
     import random
 
     from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        text_index_scores,
         verify_text_index,
     )
 
@@ -419,10 +407,6 @@ def test_topk_many_max_df_frac_prunes_common_terms(spark, tmp_path):
     score nor reach the contribution join; surviving-term scores equal
     a probe run with ONLY those terms; an all-pruned batch returns the
     empty typed frame."""
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        text_index_topk_many,
-    )
-
     store = _ingest(spark, tmp_path)  # 7 docs; 'cat' df=3, 'dog' df=3
     q = spark.createDataFrame(
         [(1, ["cat", "mat"])], "query_id long, terms array<string>"
@@ -457,10 +441,6 @@ def test_topk_many_max_query_terms_keeps_rarest(spark, tmp_path):
     """Rare-term probing: with max_query_terms=1 the probe scores each
     query by its rarest surviving term only ('mat' df=2 beats 'cat'/
     'dog' df=3), equal to a probe with just that term."""
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        text_index_topk_many,
-    )
-
     store = _ingest(spark, tmp_path)
     q = spark.createDataFrame(
         [(1, ["cat", "mat", "dog"])], "query_id long, terms array<string>"
@@ -491,10 +471,6 @@ def test_topk_many_oov_terms_do_not_consume_probe_budget(spark, tmp_path):
     max_query_terms budget — a query with >= budget OOV tokens probed
     only no-op terms and retrieved nothing. They are now dropped before
     the cut (strictly recall-improving, score-neutral)."""
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        text_index_topk_many,
-    )
-
     store = _ingest(spark, tmp_path)
     # two OOV tokens + one real rare term, budget 1: the real term must
     # survive the cut and the probe must equal a probe with just it
@@ -537,10 +513,6 @@ def test_topk_many_round_digits_rounds_before_ranking(spark, tmp_path):
     top-k cut and rank order are stable against sub-round_digits score
     noise (the engine-portability convention the similarity operators
     use)."""
-    from hrdp_variant_load_pipeline_spark.operators.text_index import (
-        text_index_topk_many,
-    )
-
     store = _ingest(spark, tmp_path)
     q = spark.createDataFrame(
         [(1, ["cat", "mat"])], "query_id long, terms array<string>"

@@ -88,25 +88,10 @@ def test_response_framing_and_unwrapping(spark, warc_dir):
         assert bytes(txt["payload"]) == PLAIN_TXT
         assert txt["record_type"] == "response"
     assert all(r["warc_date"] == "2026-08-15T00:00:00Z" for r in rows)
-
-
-def test_record_type_filter_and_keep_all(spark, warc_dir):
-    conv = read_warc(spark, warc_dir, record_types=("conversion",)).collect()
-    assert {r["record_type"] for r in conv} == {"conversion"}
-    assert all(bytes(r["payload"]) == b"already extracted text" for r in conv)
-    assert all(r["content_type"] == "text/plain" for r in conv)
-    everything = read_warc(spark, warc_dir, record_types=None)
-    counts = dict(
-        everything.groupBy("record_type").count().collect()
-    )
-    assert counts == {
-        "warcinfo": 2, "request": 2, "response": 4, "conversion": 2
-    }
-    # offsets are strictly increasing within a file (framing walked
-    # forward, never re-read)
-    offs = everything.filter(F.col("source_file").endswith("part-0.warc"))
-    vals = [r["record_offset"] for r in offs.orderBy("record_offset").collect()]
-    assert vals == sorted(vals) and len(set(vals)) == len(vals)
+    # offsets are distinct within a file (framing walked forward, never
+    # re-read)
+    vals = sorted(r["record_offset"] for r in rows if r["source_file"].endswith("part-0.warc"))
+    assert len(set(vals)) == len(vals) == 2
 
 
 def test_html_to_text_extraction(spark, warc_dir):

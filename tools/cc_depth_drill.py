@@ -144,9 +144,7 @@ def main() -> None:
             lambda p: cc_three_exchange_form(p, max_iter=max_iter), "3-exchange"
         )
         ec, dc = run(
-            lambda p: DD.connected_components(
-                p, max_iter=max_iter, reliable=False
-            ),
+            lambda p: DD.connected_components(p, max_iter=max_iter),
             "union-form",
         )
         ref = ref or do
