@@ -3,11 +3,11 @@ gap interpolation.
 
 Sensor/metric feeds arrive irregular and gappy; training and analytics
 want fixed-step series. ``resample_interpolate`` snaps observations to a
-grid and fills holes — linearly between surrounding observations, or
-forward-fill. All work is per-key: the grid generation is one aggregate +
-row-local ``sequence``/``explode``, and the fills are windows partitioned
-by key (never a global sort), so series parallelize like any keyed
-aggregation at 100 TB.
+grid and fills holes linearly between surrounding observations. All work
+is per-key: the grid generation is one aggregate + row-local
+``sequence``/``explode``, and the fills are windows partitioned by key
+(never a global sort), so series parallelize like any keyed aggregation
+at 100 TB.
 """
 
 from __future__ import annotations
@@ -21,24 +21,20 @@ def resample_interpolate(
     ts_col: str,
     value_col: str,
     step: str = "5 minutes",
-    how: str = "linear",
 ) -> DataFrame:
     """Resample each key's series onto a regular ``step`` grid spanning
     its observed range, filling empty buckets.
 
     Observations snap to their bucket start (last value wins within a
-    bucket — the usual "latest reading" semantic); ``how="linear"``
-    interpolates empty buckets between the surrounding observations by
-    time distance, ``how="ffill"`` carries the previous observation
-    forward. The grid covers floor(min ts)..floor(max ts) per key, so
+    bucket — the usual "latest reading" semantic); empty buckets are
+    interpolated between the surrounding observations by time distance.
+    The grid covers floor(min ts)..floor(max ts) per key, so
     every grid point has an observation on at least one side; the first
     bucket is always observed and later buckets are never null.
 
     Output: (key, bucket_ts, value, observed) — ``observed`` marks real
     buckets vs filled ones.
     """
-    if how not in ("linear", "ffill"):
-        raise ValueError(f"how must be 'linear' or 'ffill', got {how!r}")
     k, t, v = F.col(key_col), F.col(ts_col), F.col(value_col)
     # step in SECONDS via epoch arithmetic: casting a day-time interval to
     # long yields the value in the interval's own end-field units
@@ -77,24 +73,21 @@ def resample_interpolate(
         .rowsBetween(0, Window.unboundedFollowing)
     )
     prev_v = F.last("obs_value", ignorenulls=True).over(w_prev)
-    if how == "ffill":
-        value = prev_v
-    else:
-        ot = F.when(F.col("obs_value").isNotNull(), F.col("bucket_ts"))
-        prev_t = F.last(ot, ignorenulls=True).over(w_prev)
-        next_v = F.first("obs_value", ignorenulls=True).over(w_next)
-        next_t = F.first(ot, ignorenulls=True).over(w_next)
-        span = F.unix_timestamp(next_t) - F.unix_timestamp(prev_t)
-        frac = (
-            (F.unix_timestamp("bucket_ts") - F.unix_timestamp(prev_t))
-            / F.when(span > 0, span).otherwise(F.lit(1))
+    ot = F.when(F.col("obs_value").isNotNull(), F.col("bucket_ts"))
+    prev_t = F.last(ot, ignorenulls=True).over(w_prev)
+    next_v = F.first("obs_value", ignorenulls=True).over(w_next)
+    next_t = F.first(ot, ignorenulls=True).over(w_next)
+    span = F.unix_timestamp(next_t) - F.unix_timestamp(prev_t)
+    frac = (
+        (F.unix_timestamp("bucket_ts") - F.unix_timestamp(prev_t))
+        / F.when(span > 0, span).otherwise(F.lit(1))
+    )
+    value = F.when(F.col("obs_value").isNotNull(), F.col("obs_value")).otherwise(
+        # trailing gap (no next observation): carry forward
+        F.when(next_v.isNull(), prev_v).otherwise(
+            prev_v + (next_v - prev_v) * frac
         )
-        value = F.when(F.col("obs_value").isNotNull(), F.col("obs_value")).otherwise(
-            # trailing gap (no next observation): carry forward
-            F.when(next_v.isNull(), prev_v).otherwise(
-                prev_v + (next_v - prev_v) * frac
-            )
-        )
+    )
     return joined.select(
         F.col("key").alias(key_col),
         "bucket_ts",

@@ -27,9 +27,12 @@ Metrics: every enabled stage boundary is materialized by ONE action
 that also counts it, and leaves ONE cached copy (chained pin/release —
 exactly one stage pinned at a time). A checkpointed boundary's action
 is its parquet write, counted on the way through (``DataFrame.observe``);
-the pin is the committed files read back. Any other boundary is a
-``persist()`` + ``count()``. The pinning keeps the chain O(stages)
-instead of O(stages^2): the internal actions several stages perform
+the pin is the committed files read back through
+``sources.store.read_parquet`` (footer schema, no inference job). Any
+other boundary is a ``persist()`` + ``count()``. The shard export counts
+``chunks_packed`` on its write the same way; only a chain without an
+``output`` block runs a ``count()`` for it. The pinning keeps the chain
+O(stages) instead of O(stages^2): the internal actions several stages perform
 (the DSIR log-ratio collect, the mixture-plan collect) would otherwise
 each re-execute the whole upstream lineage.
 
@@ -53,6 +56,7 @@ from hrdp_variant_load_pipeline_spark.runtime import release, snapshot
 from hrdp_variant_load_pipeline_spark.sources.store import (
     _fs,
     _jpath,
+    read_parquet,
     write_small_file,
 )
 
@@ -169,7 +173,7 @@ def _ingest(spark: SparkSession, cfg: dict) -> tuple[DataFrame, DataFrame | None
     src = cfg["input"]
     fmt, path = src["format"], src["path"]
     if fmt == "parquet":
-        return spark.read.parquet(path), None
+        return read_parquet(spark, path), None
     if fmt == "jsonl":
         from hrdp_variant_load_pipeline_spark.sources.corpus_io import (
             read_jsonl_docs,
@@ -270,7 +274,7 @@ def run_corpus_pipeline(spark: SparkSession, cfg: dict) -> CorpusResult:
                  "counts_so_far": dict(counts)},
             )
             # disk-backed lineage, cached by the next boundary's action
-            df = spark.read.parquet(path).persist()
+            df = read_parquet(spark, path).persist()
         else:
             df = df.persist()
             counts[stage] = df.count()
@@ -501,7 +505,7 @@ def run_corpus_pipeline(spark: SparkSession, cfg: dict) -> CorpusResult:
                 decontaminate,
             )
 
-            bench = spark.read.parquet(dec["path"])
+            bench = read_parquet(spark, dec["path"])
             if dec.get("report", False):
                 # audit BEFORE dropping: which eval items leak, how badly
                 # (eval-sized output; same broadcast-shingle scan shape).
@@ -571,7 +575,7 @@ def run_corpus_pipeline(spark: SparkSession, cfg: dict) -> CorpusResult:
                 text_col=text_col,
                 n_buckets=int(rdec.get("n_buckets", 64)),
             )
-            bench = spark.read.parquet(rdec["path"])
+            bench = read_parquet(spark, rdec["path"])
             btext = rdec.get("bench_text_col", text_col)
             bid = rdec.get("bench_id_col", id_col)
             # term SET per item (array_distinct): BM25 scores a query
@@ -676,7 +680,7 @@ def run_corpus_pipeline(spark: SparkSession, cfg: dict) -> CorpusResult:
                 docs.select(id_col, text_col), id_col, text_col, vocab,
                 n_docs=n_docs,
             )
-            bench = spark.read.parquet(sdec["path"])
+            bench = read_parquet(spark, sdec["path"])
             btext = sdec.get("bench_text_col", text_col)
             bid = sdec.get("bench_id_col", id_col)
             bv = tfidf_vectors(
@@ -778,7 +782,7 @@ def run_corpus_pipeline(spark: SparkSession, cfg: dict) -> CorpusResult:
                 target = feat.filter(F.col(lang_col) == ds["target_lang"])
                 target_bcol = "_dsir_buckets"
             else:
-                target = spark.read.parquet(ds["target_path"])
+                target = read_parquet(spark, ds["target_path"])
                 target_bcol = None
             lr = bucket_logratio(
                 target, feat, text_col, n_buckets=n_buckets,
@@ -884,7 +888,7 @@ def run_corpus_pipeline(spark: SparkSession, cfg: dict) -> CorpusResult:
 
     # ---- execute ------------------------------------------------------
     if resume_idx >= 0:
-        docs = spark.read.parquet(_ck_path(resume_idx, resumed_from))
+        docs = read_parquet(spark, _ck_path(resume_idx, resumed_from))
         counts.update({k: int(v) for k, v in resume_counts.items()})
     else:
         docs = None
@@ -984,9 +988,9 @@ def _chunk_pack_export(
             # persist the densified frame: its rank window (bucket
             # exchange + per-bucket sort over the whole corpus) would
             # otherwise recompute for EVERY downstream action (the guard
-            # agg, chunks_packed count, shard write). The guard agg
-            # below materializes the pin; the caller releases it with
-            # the stage pins.
+            # agg, then the shard write or the chunks_packed count). The
+            # guard agg below materializes the pin; the caller releases it
+            # with the stage pins.
             docs = densify_ids(
                 docs,
                 id_col,
@@ -1046,18 +1050,16 @@ def _chunk_pack_export(
             order_col="chunk_uid",
             partition_col=part_col,
         )
-        counts["chunks_packed"] = packed.count()
         out = cfg.get("output")
-        if out is not None:
+        if out is None:
+            counts["chunks_packed"] = packed.count()
+        else:
             from hrdp_variant_load_pipeline_spark.sources.corpus_io import (
                 shuffle_key,
             )
 
             shard_dir = out["dir"]
-            manifest = {
-                "config_fingerprint": fingerprint,
-                "counts": dict(counts),
-            }
+            manifest = {"config_fingerprint": fingerprint}
             if "shuffle_seed" in out:
                 # training order: deterministic global shuffle — docs and
                 # languages interleaved, replayable from the seed alone
@@ -1076,13 +1078,16 @@ def _chunk_pack_export(
                     F.col("bin_id").alias("bin"),
                 )
                 order = "chunk_uid"
-            write_shards(
+            # the shard write counts the packed chunks it commits
+            counts["chunks_packed"] = write_shards(
                 packed.withColumn("shard_key", key),
                 shard_dir,
                 "shard_key",
                 n_shards=int(out.get("n_shards", 16)),
                 order_col=order,
-                manifest=manifest,
+                manifest=lambda rows: {
+                    **manifest, "counts": {**counts, "chunks_packed": rows}
+                },
                 format=out.get("format", "parquet"),
             )
 

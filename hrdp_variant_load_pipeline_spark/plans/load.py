@@ -517,6 +517,14 @@ def sample_details(
     columns' ``(sample_id, gender)`` come after it from ``files`` (see
     ``_file_samples``), and the columns explode only then.
 
+    Which of the two happens is Catalyst's size estimate of
+    ``line_variants``. A re-load's matched variants are estimated small and
+    broadcast. A fresh load's come out of ``assign_surrogate_ids_scalable``,
+    whose join to its ``offsets`` local relation is estimated as the product
+    of its inputs (at the ``vcf`` benchmark's seed 1: ~195 MB for ~207 KB
+    ranked), so the fresh load plans a sort-merge join and the lines' text
+    crosses the exchange.
+
     * DP carry-forward: a column whose DP does not parse takes the DP of the
       nearest earlier surviving column of the line (known sample, GT not
       ``0/0`` / ``./.``), as the reference's reused loop variable does — an

@@ -17,6 +17,7 @@ from hrdp_variant_load_pipeline_spark.operators import dedup as DD
 from hrdp_variant_load_pipeline_spark.operators import multimodal as MM
 from hrdp_variant_load_pipeline_spark.operators import similarity as SIM
 from hrdp_variant_load_pipeline_spark.runtime import snapshot
+from hrdp_variant_load_pipeline_spark.sources.store import read_parquet
 from hrdp_variant_load_pipeline_spark.sources.tables import (
     normalize_ts,
     spread_for_cpu,
@@ -1431,7 +1432,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf: str) -> DataFrame:
 
     path = os.path.join(sf, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema  # ts arrives as long (nanos)
+    raw_schema = read_parquet(spark, path).schema  # ts arrives as long (nanos)
     # the file stream source requires a directory: stream the sf dir with a
     # glob pinned to the events table
     stream = (
@@ -1486,7 +1487,7 @@ def streaming_stateful_totals(spark: SparkSession, sf: str) -> DataFrame:
 
     path = os.path.join(sf, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = read_parquet(spark, path).schema
     stream = (
         spark.readStream.schema(raw_schema)
         .format("parquet")
@@ -1524,7 +1525,7 @@ def streaming_dedup_events(spark: SparkSession, sf: str) -> DataFrame:
 
     path = os.path.join(sf, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = read_parquet(spark, path).schema
     stream = (
         spark.readStream.schema(raw_schema)
         .format("parquet")

@@ -1678,7 +1678,7 @@ def iterative_ts_battery(spark: SparkSession, sf: str) -> DataFrame:
         .select("user_id", "ts", "value")
     )
     rs = resample_interpolate(
-        purchases, "user_id", "ts", "value", step="6 hours", how="linear"
+        purchases, "user_id", "ts", "value", step="6 hours"
     ).select(
         F.lit("resample").alias("component"),
         F.col("user_id").cast("long").alias("k"),

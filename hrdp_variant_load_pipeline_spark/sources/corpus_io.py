@@ -11,7 +11,9 @@ preserved for replay after repair.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from hrdp_variant_load_pipeline_spark.runtime import shuffle_partitions
 
@@ -84,9 +86,9 @@ def write_shards(
     shard_col: str,
     n_shards: int | None = None,
     order_col: str | None = None,
-    manifest: dict | None = None,
+    manifest: Callable[[int], dict] | None = None,
     format: str = "parquet",
-) -> None:
+) -> int:
     """Export size-balanced training shards: range-partition on
     ``shard_col`` (e.g. the ``bin_id`` from ``pack_sequences``) so each
     output file holds a contiguous, disjoint shard range, optionally
@@ -94,18 +96,26 @@ def write_shards(
     streams sequentially without a shuffle on its side.
 
     One shuffle (the range exchange), then a straight parquet write.
-    ``n_shards`` defaults to the session's shuffle parallelism.
+    ``n_shards`` defaults to the session's shuffle parallelism. Returns
+    the rows written, counted by the write itself (an unnamed
+    ``Observation``, as ``sources.store.append_to_store`` counts).
 
-    ``manifest`` (optional dict of caller context — counts, config
-    fingerprint, seed) is written AFTER the data as ``_MANIFEST.json``
-    alongside the shards, extended with the output file listing
-    (name + bytes, from one FS metadata pass — no data read): the
-    record a training job pins its data provenance to.
+    ``manifest`` (optional) is called with the rows written and returns
+    the caller's context (counts, config fingerprint, seed). It is written
+    AFTER the data as ``_MANIFEST.json`` alongside the shards, extended
+    with the output file listing (name + bytes, from one FS metadata pass
+    — no data read): the record a training job pins its data provenance
+    to.
     """
     spark = df.sparkSession
     if n_shards is None:
         n_shards = shuffle_partitions(spark)
-    out = df.repartitionByRange(n_shards, shard_col)
+    # observed ABOVE the range exchange: the exchange's sampling job runs
+    # the plan below it, so an observation there would count sampled rows
+    obs = Observation()
+    out = df.repartitionByRange(n_shards, shard_col).observe(
+        obs, F.count(F.lit(1)).alias("rows")
+    )
     out = out.sortWithinPartitions(
         shard_col, *( [order_col] if order_col else [] )
     )
@@ -126,6 +136,7 @@ def write_shards(
         raise ValueError(
             f"write_shards: unknown format {format!r} (parquet | jsonl)"
         )
+    rows = obs.get["rows"]
     if manifest is not None:
         import json
 
@@ -142,7 +153,7 @@ def write_shards(
             for st in fs.listStatus(_jpath(jvm, path))
             if st.getPath().getName().endswith(exts)
         ]
-        payload = dict(manifest)
+        payload = manifest(rows)
         payload["n_shards"] = n_shards
         payload["shard_col"] = shard_col
         payload["files"] = sorted(files, key=lambda f: f["name"])
@@ -151,6 +162,7 @@ def write_shards(
             f"{path.rstrip('/')}/_MANIFEST.json",
             json.dumps(payload, sort_keys=True).encode(),
         )
+    return rows
 
 
 def corpus_report(

@@ -204,8 +204,16 @@ def _blocks(footer) -> list:
 def footer_schema(spark: SparkSession, path: str) -> StructType | None:
     """The schema ``spark.read.parquet(path)`` infers, from the footer of
     the same first data file its inference reads, without the one-task job
-    that inference runs. None when there is no data file, or when the
-    directory holds summary files or subdirectories."""
+    that inference runs. Together with ``read_parquet`` this is the
+    package's one way to learn a parquet path's schema.
+
+    None when the footer cannot speak for the read, so the caller falls
+    back to Spark's inference: no data file (an absent path or a glob),
+    summary files or subdirectories in the directory (partition columns
+    live in directory names), or ``spark.sql.parquet.mergeSchema`` on
+    (inference then merges every footer)."""
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
     fs, jvm = _fs(spark, path)
     files = _data_files(fs, jvm, path)
     if not files:
@@ -218,16 +226,20 @@ def footer_schema(spark: SparkSession, path: str) -> StructType | None:
         files[0].getPath(), next(_footers(spark, files[:1]))
     )
     # Spark's own reader: the schema Spark wrote into the footer's
-    # key-value metadata when present, else the converted parquet schema;
-    # a file relation reads every field as nullable
+    # key-value metadata when present, else the converted parquet schema
+    # (the converter takes the session's conf: nanos-as-long, NTZ
+    # inference); a file relation reads every field as nullable
     jschema = parquet.ParquetFileFormat.readSchemaFromFooter(footer, converter)
     return StructType.fromJson(json.loads(jschema.asNullable().json()))
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` with the schema taken from the footer
-    (``footer_schema``) instead of inferred by a Spark job; the frame is the
-    same."""
+    """The package's one parquet reader: ``spark.read.parquet(path)`` with
+    the schema taken from the footer (``footer_schema``) instead of
+    inferred by a Spark job; the frame is the same. Where ``footer_schema``
+    returns None the reader infers, as a plain ``spark.read.parquet``
+    does, and pays its job. ``tests/test_parquet_reader.py`` fails on a
+    parquet read elsewhere in the package that is not given a schema."""
     reader = spark.read
     if (schema := footer_schema(spark, path)) is not None:
         reader = reader.schema(schema)

@@ -11,6 +11,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hrdp_variant_load_pipeline_spark.sources.store import read_parquet
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -53,11 +55,11 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 
 # (appId, sf_dir, name) -> DataFrame. A DataFrame is an immutable lazy
 # plan, so handing the same one to every caller is safe — and skips the
-# file listing + parquet footer read that spark.read.parquet pays on every
-# call (~0.1 s per query on sub-second analytics jobs; at cluster scale the
-# same reuse keeps the driver from re-listing object-store prefixes per
-# query). Keyed by applicationId so a stopped/recreated session never
-# serves plans bound to a dead SparkContext.
+# work ``read_parquet`` does on the driver per call: two directory listings
+# (its footer lookup and the reader's file index), one footer read and the
+# plan's analysis (at cluster scale the same reuse keeps the driver from
+# re-listing object-store prefixes per query). Keyed by applicationId so a
+# stopped/recreated session never serves plans bound to a dead SparkContext.
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
@@ -85,7 +87,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_ts(df)
     _TABLE_CACHE[key] = df

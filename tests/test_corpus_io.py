@@ -173,10 +173,11 @@ def test_write_shards_jsonl_roundtrip_with_manifest(spark, tmp_path):
         "CAST(NULL AS STRING) AS lang",  # all-null column must survive
     )
     out = str(tmp_path / "js")
-    write_shards(
+    rows = write_shards(
         df, out, "shard", n_shards=4, order_col="uid",
-        manifest={"note": 1}, format="jsonl",
+        manifest=lambda n: {"note": 1, "rows": n}, format="jsonl",
     )
+    assert rows == 200
     back = spark.read.json(out)
     assert back.count() == 200
     assert sorted(r["uid"] for r in back.select("uid").collect()) == list(
@@ -189,7 +190,7 @@ def test_write_shards_jsonl_roundtrip_with_manifest(spark, tmp_path):
     # schema still carries lang, parquet-parity
     assert "lang" in back.columns and row["lang"] is None
     man = json.loads((tmp_path / "js" / "_MANIFEST.json").read_text())
-    assert man["note"] == 1 and man["files"]
+    assert man["note"] == 1 and man["rows"] == 200 and man["files"]
     assert all(f["name"].endswith((".json", ".json.gz")) for f in man["files"])
     import pytest as _pytest
 

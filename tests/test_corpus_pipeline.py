@@ -169,6 +169,57 @@ def test_checkpoint_resume_skips_every_committed_stage(spark, tmp_path):
     r2.unpersist_all()
 
 
+def test_checkpointed_chain_reads_each_stage_from_its_footer(
+    spark, tmp_path, monkeypatch
+):
+    """Every parquet read of a checkpointed chain (the ingest, each
+    stage's read-back, the resume read) is given the schema Spark's
+    inference returns for that path, so none runs the inference job; a
+    resumed rerun still restarts after the last committed stage."""
+    docs_dir = str(tmp_path / "docs")
+    spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
+        F.col("doc_id") % 3 == 0
+    ).write.parquet(docs_dir)
+    ck_dir = tmp_path / "ck"
+    cfg = _ck_cfg(docs_dir, str(ck_dir))
+
+    reader_cls = type(spark.read)
+    real_schema, real_parquet = reader_cls.schema, reader_cls.parquet
+    reads = []
+
+    def schema(self, s):
+        self._given = s
+        return real_schema(self, s)
+
+    def parquet(self, *paths, **kw):
+        reads.append((str(paths[0]).rstrip("/"), getattr(self, "_given", None)))
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(reader_cls, "schema", schema)
+    monkeypatch.setattr(reader_cls, "parquet", parquet)
+    r1 = run_corpus_pipeline(spark, cfg)
+    first = list(reads)
+    ids1 = sorted(r["doc_id"] for r in r1.docs.select("doc_id").collect())
+    r1.unpersist_all()
+    reads.clear()
+    cfg["checkpoint"]["resume"] = True
+    r2 = run_corpus_pipeline(spark, cfg)
+    second = list(reads)
+    monkeypatch.undo()
+
+    stages = [str(ck_dir / n) for n in sorted(os.listdir(ck_dir))]
+    assert [p for p, _ in first] == [docs_dir, *stages]
+    assert r2.resumed_from == "dsir_selected"
+    assert stages[-1].endswith("_dsir_selected")
+    assert [p for p, _ in second] == [stages[-1]]
+    for path, given in first + second:
+        assert given == spark.read.parquet(path).schema, path
+    assert r2.docs.schema == r1.docs.schema
+    assert sorted(r["doc_id"] for r in r2.docs.select("doc_id").collect()) == ids1
+    assert r2.counts == r1.counts
+    r2.unpersist_all()
+
+
 def test_checkpoint_fingerprint_invalidates_on_semantics_change(
     spark, tmp_path
 ):

@@ -77,8 +77,6 @@ KEEP_OPTIONS = {
     # next candidates: only tests use a second value
     "operators.similarity.ivf_topk(centroids)": "the ANN store probe is checked against it",
     "operators.similarity.train_centroids(centroid_round_digits)": "tests train unrounded",
-    "operators.skew.pre_aggregated_join(how)": "tests pin its refusals",
-    "operators.timeseries.resample_interpolate(how)": "tests pin forward fill",
 }
 
 

@@ -45,17 +45,7 @@ def test_linear_interpolation_fills_gaps(spark):
     assert len(b) == 1 and b[0]["value"] == 7.0 and b[0]["observed"]
 
 
-def test_ffill_carries_forward(spark):
-    out = resample_interpolate(
-        _series(spark), "sensor", "ts", "value", step="10 minutes", how="ffill"
-    )
-    a = {r["bucket_ts"].minute: r["value"] for r in out.filter("sensor = 'a'").collect()}
-    assert a[20] == 20.0 and a[30] == 20.0
-
-
-def test_rejects_bad_mode_and_keys_are_isolated(spark):
-    with pytest.raises(ValueError):
-        resample_interpolate(_series(spark), "sensor", "ts", "value", how="spline")
+def test_keys_are_isolated(spark):
     out = resample_interpolate(_series(spark), "sensor", "ts", "value", step="10 minutes")
     # key b's lone bucket never absorbs key a's values
     assert out.filter("sensor = 'b'").count() == 1
