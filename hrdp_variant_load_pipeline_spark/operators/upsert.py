@@ -8,22 +8,21 @@ batch UPDATEs (DAO.java:142-163). Set-oriented Spark equivalents:
 * existence probe → one anti/left join of the whole batch against the
   store (single shuffle or broadcast, not N round trips);
 * ``rgd_ids_seq.nextval`` → window id assignment: ``dense_rank()`` inside
-  order-preserving buckets + the ids of the buckets before + the store's
-  current max id, from one aggregate (parallel, deterministic — NOT
-  ``monotonically_increasing_id``, whose values depend on partitioning);
+  order-preserving buckets + the ids of the buckets before (summed on the
+  driver from one aggregate's bucket counts) + the store's current max id
+  (parallel, deterministic — NOT ``monotonically_increasing_id``, whose
+  values depend on partitioning);
 * keyed UPDATE → MERGE emulation: anti-join the store against the updates,
   union the updated rows back (Delta MERGE when available).
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
-
-from hrdp_variant_load_pipeline_spark.runtime import local_frame
 
 
 def assign_surrogate_ids_scalable(
@@ -46,16 +45,19 @@ def assign_surrogate_ids_scalable(
     rows that tie on ``order_by`` share a bucket. Each row is dense-ranked
     inside its bucket by a window partitioned on the bucket, so no task
     sorts more than its buckets. ONE collect returns every bucket's id
-    count and the number of ids in the buckets before it, computed by a
-    window over the small counts frame (an ``orderBy`` would start a
-    range-sampling job). A row's id is ``base_id + offset + rank``: the
-    same ids as a global ``dense_rank()`` window over ``order_by``, with no
-    single-partition sort.
+    count; the driver sorts the buckets as Spark would and sums the counts
+    of the buckets before each into its offset. A row's id is ``base_id +
+    offset + rank``, its offset a lookup of its bucket in a literal map
+    nested by bucket column (no join, so no broadcast job, and the numbered
+    frame keeps the size estimate of the ranked one): the same ids as a
+    global ``dense_rank()`` window over ``order_by``, with no
+    single-partition sort. The map holds one entry per bucket and ships
+    with every task that numbers rows.
 
     ``totals`` is a one-row frame (an aggregate the caller needs anyway)
     that the same collect returns, as a dict of its columns, so the caller
     runs no job of its own for it; its column names must differ from the
-    allocator's (``__b<i>``, ``__n``, ``__offset``). None without it.
+    allocator's (``__b<i>``, ``__j<i>``, ``__n``). None without it.
 
     With ``cache_registry``, the ranked frame is persisted and appended to
     it, so the counts and the ids read one ranking; the returned frame reads
@@ -63,7 +65,6 @@ def assign_surrogate_ids_scalable(
     it nothing stays persisted and the ranking runs again for the ids,
     which dense ranks make the same ranking.
     """
-    spark = df.sparkSession
     keys = [f"__b{i}" for i in range(len(buckets))]
     ranked = df.withColumns(dict(zip(keys, buckets))).withColumn(
         "__rank", F.dense_rank().over(Window.partitionBy(*keys).orderBy(*order_by))
@@ -71,32 +72,43 @@ def assign_surrogate_ids_scalable(
     if cache_registry is not None:
         ranked = ranked.persist()
         cache_registry.append(ranked)
-    before = Window.orderBy(*keys).rowsBetween(Window.unboundedPreceding, -1)
-    counts = ranked.groupBy(*keys).agg(F.max("__rank").alias("__n"))
-    counts = counts.withColumn(
-        "__offset", F.coalesce(F.sum("__n").over(before), F.lit(0)).cast("long")
+    # the offsets map nests one level per bucket column, keyed by the
+    # column's JSON (to_json drops a null field: null-safe), so a lookup
+    # scans the values of each column, not every bucket
+    levels = [F.to_json(F.struct(k)) for k in keys]
+    counts = ranked.groupBy(*keys).agg(
+        F.max("__rank").alias("__n"), *(c.alias(f"__j{i}") for i, c in enumerate(levels))
     )
     if totals is not None:
         # the totals row is the one without an id count
         counts = counts.unionByName(totals, allowMissingColumns=True)
     rows = counts.collect()
     total = next(({c: r[c] for c in totals.columns} for r in rows if r["__n"] is None), None)
-    rows = [r for r in rows if r["__n"] is not None]
-    offsets = local_frame(
-        spark,
-        [[*(r[k] for k in keys), r["__offset"]] for r in rows],
-        StructType(
-            [StructField(f"__o{i}", counts.schema[k].dataType) for i, k in enumerate(keys)]
-            + [StructField("__offset", LongType())]
-        ),
+    rows = sorted((r for r in rows if r["__n"] is not None), key=lambda r: _ascending(r, keys))
+    offsets, n = {}, 0
+    for r in rows:
+        node = offsets
+        *path, leaf = (r[f"__j{i}"] for i in range(len(keys)))
+        for j in path:
+            node = node.setdefault(j, {})
+        node[leaf] = n
+        n += r["__n"]
+    offset = F.from_json(
+        F.lit(json.dumps(offsets)), "map<string, " * len(keys) + "bigint" + ">" * len(keys)
     )
-    on = [ranked[k].eqNullSafe(offsets[f"__o{i}"]) for i, k in enumerate(keys)]
-    numbered = (
-        ranked.join(F.broadcast(offsets), on)
-        .withColumn(id_col, (F.lit(base_id) + F.col("__offset") + F.col("__rank")).cast("long"))
-        .drop(*keys, *offsets.columns, "__rank")
-    )
-    return numbered, sum(r["__n"] for r in rows), total
+    for c in levels:
+        offset = F.try_element_at(offset, c)
+    numbered = ranked.withColumn(
+        id_col, (F.lit(base_id) + offset + F.col("__rank")).cast("long")
+    ).drop(*keys, "__rank")
+    return numbered, n, total
+
+
+def _ascending(row, keys: Sequence[str]) -> tuple:
+    """Sort key of ``row``'s ``keys`` in Spark's ascending order: nulls
+    first, then values (strings in code-point order, which is the UTF-8
+    byte order Spark compares; numbers by value, NaN not supported)."""
+    return tuple((row[k] is not None, row[k]) for k in keys)
 
 
 def merge_update(

@@ -6,22 +6,27 @@ per line!) → multi-allelic expand → sequence id per new variant → per
 sample-column zygosity rows (JDBC existence probe per variant×sample) →
 batched inserts.
 
-Spark lifecycle: one text scan → narrow transforms (filter / normalize /
-posexplode) → broadcast interval join (genes) → a left join against the
-variant store, persisted as ``matched`` → window id assignment (ranks of
-each new variant's first occurrence inside position buckets + one collect of
-the bucket sizes, ``operators.upsert.assign_surrogate_ids_scalable``; the
-same collect returns the run counters and whether a detail pair can repeat;
-where a variant sits on several lines, a join gives its other rows its id)
-→ the detail build at line grain (``sample_details``: each line's sample
-columns cross one exchange as one string, or none when the line variants
-are broadcast; the columns explode after it) → an anti-join against the
+Spark lifecycle: one text scan, spread over ``spread_for_cpu``'s parts
+when the drop has fewer files (one exchange of the lines per action that
+reads them; none for a drop of as many files) → narrow transforms (filter /
+normalize / posexplode) → broadcast interval join (genes) → a left join
+against the variant store, persisted as ``matched`` → window id assignment
+(ranks of each new variant's first occurrence inside position buckets + one
+collect of the bucket sizes, whose offsets come back as a literal map,
+``operators.upsert.assign_surrogate_ids_scalable``; the same collect returns
+the run counters and whether a detail pair can repeat; where a variant sits
+on several lines, a join gives its other rows its id) → the detail build at
+line grain (``sample_details``: line variants below the broadcast
+threshold are broadcast, so the lines' text crosses no exchange of the
+build; the columns explode after the join) → an anti-join against the
 detail store → two appends, the variant append skipped when the batch has
 no new variant. The two joins against the stores replace ~N JDBC round
-trips — the single biggest algorithmic win, SURVEY.md §4. Each action is a
-few stages over line-grain rows: on the 146-sample benchmark drop a fresh
-load runs 6 Spark jobs and a re-load 6 (small-input profile); a drop where
-variants sit on several lines adds the join's broadcast to a fresh load.
+trips — the single biggest algorithmic win, SURVEY.md §4. Each action is
+a few stages over line-grain rows: on the 146-sample benchmark drop a fresh
+load runs 5 Spark jobs (the genes broadcast, the allocator's collect, the
+line variants' broadcast and the two writes) and a re-load 6 (small-input
+profile); a drop where variants sit on several lines adds the join's
+broadcast to a fresh load.
 
 Faithfully-reproduced quirks (SURVEY.md §1.4, verified against the Java):
 
@@ -79,6 +84,7 @@ from hrdp_variant_load_pipeline_spark.functions.zygosity import zygosity_struct
 from hrdp_variant_load_pipeline_spark.operators.interval_join import with_exists_flag
 from hrdp_variant_load_pipeline_spark.runtime import release
 from hrdp_variant_load_pipeline_spark.sources.store import footer_max
+from hrdp_variant_load_pipeline_spark.sources.tables import spread_for_cpu
 from hrdp_variant_load_pipeline_spark.sources.vcf import vcf_header
 
 #: columns that uniquely identify one VCF data line
@@ -323,6 +329,12 @@ def run_load(
     decides whether a detail pair can repeat, is the only action run here.
     New variants take ids from ``next_rgd_id`` up (``first_free_rgd_id``
     of the store)."""
+    # a drop of fewer files than the spread's parts scans in as few tasks:
+    # spread its lines before the parse, the allocator and the detail build,
+    # each line's sample columns as one string (what the detail build reads)
+    vcf = spread_for_cpu(
+        vcf.withColumn("__cells", F.array_join("sample_cells", "\t")).drop("sample_cells")
+    )
     cand = parse_variants(vcf, genes, map_key)
     matched = _dedup_against_store(cand, variant_store)
 
@@ -511,19 +523,22 @@ def sample_details(
 ) -> DataFrame:
     """One VARIANT_SAMPLE_DETAIL row per (variant, called sample column)
     not yet in ``detail_store`` (HrdpVariants.java:465-490), built at line
-    grain: each line's sample columns cross ONE exchange, as one string, in
-    the join to ``line_variants`` (which carries ``j``, and ``__rgd_lines``
-    when ``may_repeat``), and none when ``line_variants`` is broadcast; the
-    columns' ``(sample_id, gender)`` come after it from ``files`` (see
-    ``_file_samples``), and the columns explode only then.
+    grain from ``vcf``, the lines as ``run_load`` spreads them (each line's
+    sample columns tab-joined in ``__cells``): the lines join
+    ``line_variants`` (which carries ``j``, and ``__rgd_lines`` when
+    ``may_repeat``); the columns' ``(sample_id, gender)`` come after the
+    join from ``files`` (see ``_file_samples``), and the columns explode
+    only then. Each line's sample columns cross an exchange only as that one
+    string: the spread's, on a drop of fewer files than ``spread_for_cpu``'s
+    parts, and the join's, when ``line_variants`` is not broadcast.
 
-    Which of the two happens is Catalyst's size estimate of
-    ``line_variants``. A re-load's matched variants are estimated small and
-    broadcast. A fresh load's come out of ``assign_surrogate_ids_scalable``,
-    whose join to its ``offsets`` local relation is estimated as the product
-    of its inputs (at the ``vcf`` benchmark's seed 1: ~195 MB for ~207 KB
-    ranked), so the fresh load plans a sort-merge join and the lines' text
-    crosses the exchange.
+    Whether the join shuffles is Catalyst's size estimate of
+    ``line_variants``. A re-load's matched variants and a fresh load's
+    numbered ones (``assign_surrogate_ids_scalable`` looks its offsets up in
+    a literal map, so the estimate is the ranked frame's) are estimated
+    small and broadcast: the lines stay in the partitions of their scan, or
+    of the spread. A batch whose line variants exceed the broadcast
+    threshold plans a sort-merge join instead.
 
     * DP carry-forward: a column whose DP does not parse takes the DP of the
       nearest earlier surviving column of the line (known sample, GT not
@@ -554,7 +569,7 @@ def sample_details(
     # text they carry); a line without variants yields no pair
     lines = placed_lines(vcf).select(
         *LINE_KEY,
-        F.array_join("sample_cells", "\t").alias("__cells"),
+        "__cells",
         *([files["repeats"].alias("__file_repeats")] if may_repeat else []),
     )
     lv = line_variants.select(

@@ -480,6 +480,47 @@ def test_allocator_ties_share_one_id_and_totals_ride_the_collect(spark):
         release(*cached)
 
 
+def test_allocator_keys_null_buckets_apart_from_every_value(spark):
+    """Null bucket values (a null ``source_file`` or ``chromosome`` next to
+    non-null ones, and an empty string next to a null) take offsets of their
+    own, nulls first as Spark sorts them: the ids equal a global
+    ``dense_rank()`` over the order, and the numbered frame plans no join."""
+    from pyspark.sql import Window
+
+    from hrdp_variant_load_pipeline_spark.operators.upsert import (
+        assign_surrogate_ids_scalable,
+    )
+    from hrdp_variant_load_pipeline_spark.runtime import release
+
+    files = [None, "", "f\u00e9", "fz", "g"]
+    chroms = [None, "1", "10", "2"]
+    rows = [
+        (files[i % 5], chroms[(i // 5) % 4], (i * 7_919_993) % 3_000_000 + 1)
+        for i in range(240)
+    ]
+    df = spark.createDataFrame(
+        rows, "source_file string, chromosome string, pos long"
+    ).repartition(3)
+    order = ["source_file", "chromosome", "pos"]
+    cached: list = []
+    try:
+        out, n, _ = assign_surrogate_ids_scalable(
+            df,
+            order_by=order,
+            buckets=[F.col("source_file"), F.col("chromosome"), F.expr("pos div 1000000")],
+            base_id=0,
+            cache_registry=cached,
+        )
+        plan = out._jdf.queryExecution().optimizedPlan()
+        assert "Join" not in {node_class(node) for node, _ in plan_nodes(plan)}
+        want = df.withColumn("want", F.dense_rank().over(Window.orderBy(*order)))
+        got = {tuple(r[c] for c in order): r["rgd_id"] for r in out.collect()}
+        assert n == len(rows) and len(got) == len(rows)
+        assert got == {tuple(r[c] for c in order): r["want"] for r in want.collect()}
+    finally:
+        release(*cached)
+
+
 def test_surrogate_ids_query_leaves_nothing_persisted(spark):
     """The ``surrogate_ids`` query passes the allocator no cache registry,
     so nothing stays persisted: three calls leave the persistent-RDD set as
@@ -690,7 +731,12 @@ def _assert_explode_after_one_cell_exchange(nodes):
             assert not _reads_lines(n)
     line_exchanges = [n for n, _ in nodes if node_class(n) == "ShuffleExchangeExec" and _reads_lines(n)]
     assert len(line_exchanges) <= 1
-    if line_exchanges:
+    pair_windows = [
+        n
+        for n, _ in nodes
+        if node_class(n) == "WindowExec" and _window_keys(n) == ["rgd_id", "sample_id"]
+    ]
+    if line_exchanges and pair_windows:
         assert "ReusedExchangeExec" in {node_class(n) for n, _ in nodes}
 
 
@@ -721,6 +767,66 @@ def test_sample_details_explode_after_the_one_cell_exchange(spark, vcf_dir, dims
         assert len(res.new_sample_details.collect()) == 8
     finally:
         res.release()
+
+
+#: nodes that may sit between the lines' scan and the exchange right above it
+_NARROW = {
+    "WholeStageCodegenExec", "InputAdapter", "ProjectExec", "FilterExec", "ColumnarToRowExec"
+}
+
+
+def test_fresh_load_broadcasts_its_line_variants(spark, tmp_path, vcf_dir, dims):
+    """A fresh load's numbered line variants keep the ranked frame's size
+    estimate, so the detail plan joins the lines to them in a
+    ``BroadcastHashJoin`` with the line variants as build side, and plans
+    no ``SortMergeJoin``. Between the lines' scan and the explode: no
+    exchange on a drop of as many files as ``spread_for_cpu``'s parts (4 on
+    the 4-core test session), and on a 1-file drop exactly one, the spread,
+    right above the scan."""
+    from hrdp_variant_load_pipeline_spark.runtime import local_frame
+    from hrdp_variant_load_pipeline_spark.sources.config import samples_dimension
+
+    head, data = VCF_BODY.splitlines()[:3], VCF_BODY.splitlines()[3:]
+    four = tmp_path / "four"
+    four.mkdir()
+    for i in range(4):
+        with gzip.open(four / f"PART{i}_PASS.vcf.gz", "wt") as f:
+            f.write("\n".join(head + data[i::4]) + "\n")
+    for drop, spreads in ((vcf_dir, 1), (str(four), 0)):
+        res = run_load(
+            read_vcf(spark, drop),
+            dims[0],
+            samples_dimension(spark, {"ACI_EurMcwi_2019": 381, "BN_NHsdMcwi_2019": 382}, 372),
+            local_frame(spark, [], VARIANT),
+            local_frame(spark, [], VARIANT_SAMPLE_DETAIL),
+            map_key=372,
+            next_rgd_id=1000,
+        )
+        try:
+            nodes = _nodes_without_aqe(res.new_sample_details)
+            assert "SortMergeJoinExec" not in {node_class(n) for n, _ in nodes}
+            joins = [
+                n for n, _ in nodes if node_class(n) == "BroadcastHashJoinExec" and _reads_lines(n)
+            ]
+            assert len(joins) == 1
+            assert joins[0].buildSide().toString() == "BuildRight"
+            assert not _reads_lines(joins[0].right())
+            paths = [
+                above
+                for g, _ in nodes
+                if node_class(g) == "GenerateExec"
+                for n, above in plan_nodes(g)
+                if node_class(n) == "FileSourceScanExec"
+            ]
+            assert paths
+            for above in paths:
+                kinds = [node_class(a) for a in above]
+                assert kinds.count("ShuffleExchangeExec") == spreads, kinds
+                if spreads:
+                    assert set(kinds[kinds.index("ShuffleExchangeExec") + 1 :]) <= _NARROW, kinds
+            assert len(res.new_sample_details.collect()) == 8
+        finally:
+            res.release()
 
 
 def test_pair_dedup_branches_explode_after_the_one_cell_exchange(spark, tmp_path):
