@@ -131,6 +131,12 @@ def _parse_byte_conf(raw: str, default: int) -> int:
     return int(m.group(1)) * mult[m.group(2).lower()]
 
 
+#: suffixes of the compression codecs Hadoop's codec factory knows that
+#: cannot split a file (bzip2, ``.bz2``, can); a text, CSV or JSON file with
+#: one of them is read whole by one task
+_UNSPLITTABLE = (".gz", ".deflate", ".snappy", ".lz4", ".zst")
+
+
 def _estimated_scan_partitions(df: DataFrame) -> int | None:
     """Estimate the file-scan partition count WITHOUT converting the plan
     to an RDD (`df.rdd` forces a full plan-to-RDD translation per call —
@@ -140,6 +146,10 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
     charged ``size + openCostInBytes`` (Spark's totalBytes), the split
     size is ``min(maxPartitionBytes, max(openCost,
     totalBytes/parallelism))``, and partitions ≈ ceil(total/splitSize).
+    A file compressed with a codec Hadoop cannot split (``_UNSPLITTABLE``:
+    gzip and the other stream codecs, by suffix as Hadoop's codec factory
+    picks them) is one piece however large, as Spark's ``isSplitable``
+    decides: a 1 GB ``.vcf.gz`` scans as one task.
     Only SCAN-STAGE frames qualify — ``inputFiles()`` returns the leaf
     files of EVERY plan input, so a frame containing a join, aggregate,
     window, or explicit repartition would mis-estimate (e.g. a
@@ -202,8 +212,8 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
     # charging openCost per piece and closing a bin when the next piece
     # alone would overflow it
     pieces = []
-    for sz in sizes:
-        while sz > split:
+    for f, sz in zip(files, sizes):
+        while sz > split and not f.endswith(_UNSPLITTABLE):
             pieces.append(split)
             sz -= split
         pieces.append(sz)

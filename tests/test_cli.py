@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import gzip
 import json
 import os
@@ -10,6 +11,47 @@ from hrdp_variant_load_pipeline_spark import schemas
 from hrdp_variant_load_pipeline_spark.cli import cmd_genic_qc, cmd_run_load
 from hrdp_variant_load_pipeline_spark.session import tune_for_input
 from tests.conftest import spark_jobs_of, spark_work_of
+
+
+@contextlib.contextmanager
+def _input_profile(spark, input_dir):
+    """Run the block under the profile ``cli.main`` picks for
+    ``input_dir``, restoring the session's settings afterwards."""
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+    tune_for_input(spark, input_dir)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def _vcfgen_drop(tmp_path, **shape):
+    """A 146-sample drop written by the benchmark's seeded generator
+    (``perfbench/vcfgen.py``) under ``tmp_path / "drop"``, and a function
+    giving the load config over it, with stores named by a tag."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "perfbench"))
+    import vcfgen
+
+    drop = vcfgen.write_drop(tmp_path / "drop", **shape)
+
+    def cfg_for(tag, **extra):
+        return {
+            "map_key": vcfgen.MAP_KEY,
+            "input_dir": str(drop.vcf_dir),
+            "samples": vcfgen.sample_config(),
+            "genes_path": str(drop.genes_path),
+            "variant_store": str(tmp_path / f"variants_{tag}"),
+            "detail_store": str(tmp_path / f"details_{tag}"),
+            **extra,
+        }
+
+    return drop, cfg_for
+
 
 VCF = """##fileformat=VCFv4.2
 #CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1
@@ -573,28 +615,11 @@ def test_cli_146_sample_production_shape(spark, tmp_path):
     while it writes the lines. Through the real CLI functions: a gzip load,
     a restaged load into fresh stores, an idempotent re-load, a genic QC
     repair and a QC fixpoint."""
-    import sys
-    from pathlib import Path
-
     from hrdp_variant_load_pipeline_spark.sources.store import read_store
 
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "perfbench"))
-    import vcfgen
-
-    drop = vcfgen.write_drop(tmp_path / "drop", seed=5, n_lines=120, n_files=2)
+    drop, cfg_for = _vcfgen_drop(tmp_path, seed=5, n_lines=120, n_files=2)
     # the x146 fan-out: about 146 detail rows per line
     assert drop.details > 120 * 80
-
-    def cfg_for(tag, **extra):
-        return {
-            "map_key": vcfgen.MAP_KEY,
-            "input_dir": str(drop.vcf_dir),
-            "samples": vcfgen.sample_config(),
-            "genes_path": str(drop.genes_path),
-            "variant_store": str(tmp_path / f"variants_{tag}"),
-            "detail_store": str(tmp_path / f"details_{tag}"),
-            **extra,
-        }
 
     fresh = {
         "variants_entered": drop.variants,
@@ -658,11 +683,7 @@ def test_cli_load_and_qc_job_counts(spark, tmp_path):
         moved
     )
     qcfg = {**cfg, "genes_path": moved}
-    # the profile cli.main picks for this input, restored afterwards
-    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    saved = {k: spark.conf.get(k) for k in keys}
-    tune_for_input(spark, str(vdir))
-    try:
+    with _input_profile(spark, str(vdir)):
         m, fresh = spark_jobs_of(spark, cmd_run_load, spark, cfg)
         assert (m["variants_entered"], m["sample_details_entered"]) == (2, 2)
         m, reload = spark_jobs_of(spark, cmd_run_load, spark, cfg)
@@ -671,9 +692,6 @@ def test_cli_load_and_qc_job_counts(spark, tmp_path):
         assert q["genic_status_updated"] == 2
         q, fixpoint = spark_jobs_of(spark, cmd_genic_qc, spark, qcfg)
         assert q["genic_status_updated"] == 0
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     jobs = {"load": fresh, "reload": reload, "repair": repair, "fixpoint": fixpoint}
     budget = {"load": 7, "reload": 6, "repair": 5, "fixpoint": 3}
     assert all(jobs[k] <= budget[k] for k in budget), jobs
@@ -687,25 +705,9 @@ def test_cli_fresh_load_of_a_four_file_drop_runs_five_jobs(spark, tmp_path):
     broadcast of them. Four files on 4 cores meet the spread's parts, so
     no job shuffles the lines. The re-load runs 6 jobs. Counted under the
     profile ``cli.main`` picks for this input (AQE off)."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "perfbench"))
-    import vcfgen
-
-    drop = vcfgen.write_drop(tmp_path / "drop", seed=1, n_lines=200, n_files=4)
-    cfg = {
-        "map_key": vcfgen.MAP_KEY,
-        "input_dir": str(drop.vcf_dir),
-        "samples": vcfgen.sample_config(),
-        "genes_path": str(drop.genes_path),
-        "variant_store": str(tmp_path / "variants"),
-        "detail_store": str(tmp_path / "details"),
-    }
-    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    saved = {k: spark.conf.get(k) for k in keys}
-    tune_for_input(spark, str(drop.vcf_dir))
-    try:
+    drop, cfg_for = _vcfgen_drop(tmp_path, seed=1, n_lines=200, n_files=4)
+    cfg = cfg_for("load")
+    with _input_profile(spark, str(drop.vcf_dir)):
         m, fresh = spark_jobs_of(spark, cmd_run_load, spark, cfg)
         assert (m["variants_entered"], m["sample_details_entered"]) == (
             drop.variants,
@@ -713,9 +715,6 @@ def test_cli_fresh_load_of_a_four_file_drop_runs_five_jobs(spark, tmp_path):
         )
         m, reload = spark_jobs_of(spark, cmd_run_load, spark, cfg)
         assert m["existing_matched"] == drop.variants
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     assert (fresh, reload) == (5, 6)
 
 
@@ -725,8 +724,8 @@ def test_cli_load_shuffles_each_line_once(spark, tmp_path):
     146-sample drop shuffle a budget measured from that design, which the
     former per-cell exchanges (a DP window on the line key, then a pair
     window) exceed several times over. No pair of this drop can repeat, so
-    the re-load's detail build reads the drop's text once. Counted under the profile
-    ``cli.main`` picks for this input."""
+    the re-load's detail build reads the drop's text once. Counted under
+    the profile ``cli.main`` picks for this input."""
     import random
 
     rng = random.Random(7)
@@ -758,28 +757,28 @@ def test_cli_load_shuffles_each_line_once(spark, tmp_path):
         "variant_store": str(tmp_path / "variants"),
         "detail_store": str(tmp_path / "details"),
     }
-    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    saved = {k: spark.conf.get(k) for k in keys}
-    tune_for_input(spark, str(vdir))
-    try:
+    with _input_profile(spark, str(vdir)):
         m, fresh = spark_work_of(spark, cmd_run_load, spark, cfg)
         assert m["variants_entered"] == 80
+        details = sorted((tmp_path / "details").rglob("*.parquet"))
         m, reload = spark_work_of(spark, cmd_run_load, spark, cfg)
         assert (m["existing_matched"], m["sample_details_entered"]) == (80, 0)
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     # two files are fewer than the spread's 4 parts on 4 cores, so each load
     # sends the lines' sample columns, as one string, through the one
     # exchange ``run_load`` spreads them with (44,620 bytes of the totals).
     # Measured on 4 cores: 72,409 and 61,489 bytes; the per-cell plan wrote
-    # 409,447 and 182,632
+    # 409,447 and 182,632, and a re-load whose text crossed a second
+    # exchange (a sort-merge join to its line variants) would write ~106,000
     assert fresh["shuffle_bytes"] <= 120_000, fresh
-    assert reload["shuffle_bytes"] <= 120_000, reload
-    # measured on 4 cores: 135,426 bytes read, the drop's 19,385 bytes of
-    # gzip text among them twice (the allocator's collect and the detail
-    # write); a third read of the text (154,811) exceeds the budget, as the
-    # two-branch plan's 192,970 did
+    assert reload["shuffle_bytes"] <= 90_000, reload
+    # the fresh load writes the detail store from the spread's 4 partitions,
+    # which the re-load's anti-join reads back: 24,432 bytes, against
+    # 12,554 for the 2 files a load of unspread lines writes
+    assert len(details) == 4, details
+    # measured on 4 cores: 135,426 bytes read, among them the drop's 19,385
+    # bytes of gzip text twice (the parse into the persisted variants and
+    # the detail build) and that store; a third read of the text (154,811)
+    # exceeds the budget, as the two-branch plan's 192,970 did
     assert reload["scan_bytes"] <= 145_000, reload
 
 

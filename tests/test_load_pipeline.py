@@ -714,12 +714,42 @@ def _reads_lines(node):
     return any(node_class(n) == "FileSourceScanExec" for n, _ in plan_nodes(node))
 
 
+#: nodes that may sit between the lines' scan and the exchange right above it
+_NARROW = {
+    "WholeStageCodegenExec", "InputAdapter", "ProjectExec", "FilterExec", "ColumnarToRowExec"
+}
+
+
+def _spreads_the_scan(exchange):
+    """Whether ``exchange`` sits right above the lines' scan, with only
+    narrow nodes between: ``run_load``'s spread of an under-split drop."""
+    return all(
+        node_class(n) in _NARROW | {"FileSourceScanExec"}
+        for n, _ in plan_nodes(exchange.child())
+    )
+
+
+def _exchanges_over_the_scan(nodes):
+    """For each path of the plan ``nodes`` from an explode of the sample
+    columns (``GenerateExec``) down to the lines' scan, the shuffle
+    exchanges on it."""
+    paths = [
+        [a for a in above if node_class(a) == "ShuffleExchangeExec"]
+        for g, _ in nodes
+        if node_class(g) == "GenerateExec"
+        for n, above in plan_nodes(g)
+        if node_class(n) == "FileSourceScanExec"
+    ]
+    assert paths
+    return paths
+
+
 def _assert_explode_after_one_cell_exchange(nodes):
     """On the detail plan ``nodes`` (``plan_nodes``): no shuffle above the
     explode of the sample columns, no window partitioned on the line key
-    over the lines, and the lines cross at most one exchange, which both
-    branches of the pair dedup, where planned, read (the second through a
-    reused exchange)."""
+    over the lines, and the lines cross at most one exchange: the spread,
+    right above their scan, which both branches of the pair dedup, where
+    planned, read (the second through a reused exchange)."""
     from hrdp_variant_load_pipeline_spark.plans.load import LINE_KEY
 
     generates = [above for n, above in nodes if node_class(n) == "GenerateExec"]
@@ -736,8 +766,10 @@ def _assert_explode_after_one_cell_exchange(nodes):
         for n, _ in nodes
         if node_class(n) == "WindowExec" and _window_keys(n) == ["rgd_id", "sample_id"]
     ]
-    if line_exchanges and pair_windows:
-        assert "ReusedExchangeExec" in {node_class(n) for n, _ in nodes}
+    if line_exchanges:
+        assert _spreads_the_scan(line_exchanges[0])
+        if pair_windows:
+            assert "ReusedExchangeExec" in {node_class(n) for n, _ in nodes}
 
 
 def test_sample_details_explode_after_the_one_cell_exchange(spark, vcf_dir, dims):
@@ -769,12 +801,6 @@ def test_sample_details_explode_after_the_one_cell_exchange(spark, vcf_dir, dims
         res.release()
 
 
-#: nodes that may sit between the lines' scan and the exchange right above it
-_NARROW = {
-    "WholeStageCodegenExec", "InputAdapter", "ProjectExec", "FilterExec", "ColumnarToRowExec"
-}
-
-
 def test_fresh_load_broadcasts_its_line_variants(spark, tmp_path, vcf_dir, dims):
     """A fresh load's numbered line variants keep the ranked frame's size
     estimate, so the detail plan joins the lines to them in a
@@ -782,9 +808,13 @@ def test_fresh_load_broadcasts_its_line_variants(spark, tmp_path, vcf_dir, dims)
     no ``SortMergeJoin``. Between the lines' scan and the explode: no
     exchange on a drop of as many files as ``spread_for_cpu``'s parts (4 on
     the 4-core test session), and on a 1-file drop exactly one, the spread,
-    right above the scan."""
+    right above the scan. Spark reads a gzip file whole, in one task,
+    whatever the split size, and the spread's scan estimate agrees: with
+    splits of a few bytes (a splittable file of the 1-file drop's size
+    would scan as dozens of tasks) the 1-file drop is still spread."""
     from hrdp_variant_load_pipeline_spark.runtime import local_frame
     from hrdp_variant_load_pipeline_spark.sources.config import samples_dimension
+    from hrdp_variant_load_pipeline_spark.sources.tables import _estimated_scan_partitions
 
     head, data = VCF_BODY.splitlines()[:3], VCF_BODY.splitlines()[3:]
     four = tmp_path / "four"
@@ -792,17 +822,24 @@ def test_fresh_load_broadcasts_its_line_variants(spark, tmp_path, vcf_dir, dims)
     for i in range(4):
         with gzip.open(four / f"PART{i}_PASS.vcf.gz", "wt") as f:
             f.write("\n".join(head + data[i::4]) + "\n")
-    for drop, spreads in ((vcf_dir, 1), (str(four), 0)):
-        res = run_load(
-            read_vcf(spark, drop),
-            dims[0],
-            samples_dimension(spark, {"ACI_EurMcwi_2019": 381, "BN_NHsdMcwi_2019": 382}, 372),
-            local_frame(spark, [], VARIANT),
-            local_frame(spark, [], VARIANT_SAMPLE_DETAIL),
-            map_key=372,
-            next_rgd_id=1000,
-        )
+    tiny = {"spark.sql.files.maxPartitionBytes": "64b", "spark.sql.files.openCostInBytes": "1b"}
+    for drop, spreads, conf in ((vcf_dir, 1, {}), (str(four), 0, {}), (vcf_dir, 1, tiny)):
+        saved = {k: spark.conf.get(k) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        res = None
         try:
+            lines = read_vcf(spark, drop)
+            assert _estimated_scan_partitions(lines) == lines.rdd.getNumPartitions()
+            res = run_load(
+                lines,
+                dims[0],
+                samples_dimension(spark, {"ACI_EurMcwi_2019": 381, "BN_NHsdMcwi_2019": 382}, 372),
+                local_frame(spark, [], VARIANT),
+                local_frame(spark, [], VARIANT_SAMPLE_DETAIL),
+                map_key=372,
+                next_rgd_id=1000,
+            )
             nodes = _nodes_without_aqe(res.new_sample_details)
             assert "SortMergeJoinExec" not in {node_class(n) for n, _ in nodes}
             joins = [
@@ -811,22 +848,15 @@ def test_fresh_load_broadcasts_its_line_variants(spark, tmp_path, vcf_dir, dims)
             assert len(joins) == 1
             assert joins[0].buildSide().toString() == "BuildRight"
             assert not _reads_lines(joins[0].right())
-            paths = [
-                above
-                for g, _ in nodes
-                if node_class(g) == "GenerateExec"
-                for n, above in plan_nodes(g)
-                if node_class(n) == "FileSourceScanExec"
-            ]
-            assert paths
-            for above in paths:
-                kinds = [node_class(a) for a in above]
-                assert kinds.count("ShuffleExchangeExec") == spreads, kinds
-                if spreads:
-                    assert set(kinds[kinds.index("ShuffleExchangeExec") + 1 :]) <= _NARROW, kinds
+            for exchanges in _exchanges_over_the_scan(nodes):
+                assert len(exchanges) == spreads, exchanges
+                assert all(_spreads_the_scan(e) for e in exchanges)
             assert len(res.new_sample_details.collect()) == 8
         finally:
-            res.release()
+            if res is not None:
+                res.release()
+            for k, v in saved.items():
+                spark.conf.set(k, v)
 
 
 def test_pair_dedup_branches_explode_after_the_one_cell_exchange(spark, tmp_path):

@@ -263,6 +263,34 @@ def test_spread_for_cpu_file_scan_estimate_matches_rdd(spark):
     assert _estimated_scan_partitions(joined) is None
 
 
+def test_scan_estimate_reads_a_gzip_file_whole(spark, tmp_path):
+    """Spark cannot split a gzip file: one task reads it whatever the split
+    size, and the estimate agrees, while the same text uncompressed cuts
+    into as many splits as the RDD probe counts."""
+    import gzip
+
+    from hrdp_variant_load_pipeline_spark.sources.tables import _estimated_scan_partitions
+
+    text = "".join(f"{i}\t{i * 7_919 % 10_007}\n" for i in range(4_000))
+    (tmp_path / "plain").mkdir()
+    (tmp_path / "gz").mkdir()
+    (tmp_path / "plain" / "lines.txt").write_text(text)
+    with gzip.open(tmp_path / "gz" / "lines.txt.gz", "wt") as f:
+        f.write(text)
+    conf = {"spark.sql.files.maxPartitionBytes": "1k", "spark.sql.files.openCostInBytes": "1b"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        plain = spark.read.text(str(tmp_path / "plain"))
+        gz = spark.read.text(str(tmp_path / "gz"))
+        assert _estimated_scan_partitions(plain) == plain.rdd.getNumPartitions() > 4
+        assert _estimated_scan_partitions(gz) == gz.rdd.getNumPartitions() == 1
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 def test_scan_estimate_allowlist_fails_closed(spark):
     """The estimator qualifies plans by an allowlisted tree walk
     (Project/Filter/SubqueryAlias/View/LogicalRelation): every
